@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 `entry(spark)` runs the flagship query end-to-end through the real engine
-(stable docID assignment → tokenize-count pandas UDF → postings → exhaustive
+(stable docID assignment → Arrow tokenizer (mapInArrow) → postings → exhaustive
 BM25 top-k). `queries()` / `oracle_sql()` expose one gate entry per
 implemented operator group from SURVEY.md §2, each with an equivalent DuckDB
 SQL oracle over the same parquet tables (see
@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: conjunctive BM25 top-10 over sf0.001 documents treated as
     transcripts (conv_id = source, turn ordering by doc_id), via the full
-    engine: docID assignment, tokenizer UDF, postings/lexicon build,
+    engine: docID assignment, Arrow tokenizer, postings/lexicon build,
     broadcast query join, ordered float summation, top-k window."""
     from pyspark.sql import functions as F
 

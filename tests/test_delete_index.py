@@ -280,6 +280,30 @@ def test_purge_guards(spark, deleted_vs_scratch):
         purge_deletes(spark, str(root / "scratch"), str(root / "p2"))
 
 
+def _tree_bytes(d) -> dict[str, bytes]:
+    return {
+        str(f.relative_to(d)): f.read_bytes() for f in sorted(d.rglob("*")) if f.is_file()
+    }
+
+
+def test_purge_validates_before_touching_out_dir(spark, tmp_path):
+    """index_dir / out_dir swapped, with out_dir a live tombstoned index:
+    the purge must refuse on its input checks and leave out_dir's
+    deletes/ sidecar byte-identical (no clear-then-validate)."""
+    live = tmp_path / "live"
+    build_block_index(
+        _tdf(spark, 6), str(live), build_id="f",
+        resume=False, n_buckets=8, num_partitions=4, store_texts=True,
+    )
+    tombstone_delete(spark, str(live), conv_ids=["c001"])
+    before = _tree_bytes(live / "deletes")
+    assert before
+    with pytest.raises(ValueError, match="no tombstones"):
+        purge_deletes(spark, str(tmp_path / "purged"), str(live))
+    assert _tree_bytes(live / "deletes") == before
+    assert has_tombstones(str(live))
+
+
 def test_delete_all_docs_serves_empty_and_purges(spark, tmp_path):
     root = tmp_path
     full_t = _tdf(spark, 6)

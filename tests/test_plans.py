@@ -121,3 +121,54 @@ def test_domain_mix_is_broadcast_rate_join(spark):
     # no exchange on the corpus side: the only shuffle-free wide op allowed
     # is the broadcast exchange itself
     assert plan.count("Exchange") == plan.count("BroadcastExchange")
+
+
+def _node_classes(plan) -> list[str]:
+    out = [plan.getClass().getSimpleName()]
+    kids = plan.children()
+    for i in range(kids.size()):
+        out += _node_classes(kids.apply(i))
+    return out
+
+
+def _logical_index_postings(spark, tdf, tmp_path):
+    from websearchengine_spark.plans.build import build_logical_index
+
+    return build_logical_index(tdf, num_partitions=4, persist=False).postings
+
+
+def _tombstone_rescan(spark, tdf, tmp_path):
+    from websearchengine_spark.plans.block_index import BlockIndexPaths
+    from websearchengine_spark.plans.delete_index import _deleted_postings
+
+    targeted = spark.createDataFrame(
+        [(0, "conv000001", 0)], "doc_id long, conv_id string, turn_idx int"
+    )
+    return _deleted_postings(spark, BlockIndexPaths(str(tmp_path)), targeted, tdf)
+
+
+def _gate_postings(spark, tdf, tmp_path):
+    from websearchengine_spark.plans.gate_queries import _spark_postings
+
+    return _spark_postings(
+        tdf.select(F.monotonically_increasing_id().alias("doc_id"), "text")
+    )
+
+
+@pytest.mark.parametrize(
+    "plan_fn",
+    [_logical_index_postings, _tombstone_rescan, _gate_postings],
+    ids=["build_logical_index", "tombstone_rescan", "gate_postings"],
+)
+def test_tokenize_plans_use_the_arrow_kernel(spark, fixture, tmp_path, plan_fn):
+    """Every production tokenize is one mapInArrow over the Arrow kernel:
+    no pandas crossing (MapInPandas / scalar pandas UDF) and no row-wise
+    Python UDF anywhere in the plan."""
+    tdf = spark.createDataFrame(fixture.transcripts)
+    qe = plan_fn(spark, tdf, tmp_path)._jdf.queryExecution()
+    logical = _node_classes(qe.optimizedPlan())
+    nodes = logical + _node_classes(qe.sparkPlan())
+    # the logical node is PythonMapInArrow on Spark 3.x, MapInArrow on 4.x
+    assert {"MapInArrow", "PythonMapInArrow"} & set(logical), logical
+    for banned in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert not [n for n in nodes if n.startswith(banned)], nodes

@@ -433,6 +433,29 @@ def test_delete_vectors_interrupted_swap_heals(spark, tmp_path):
     shutil.rmtree(root, ignore_errors=True)
 
 
+def test_delete_vectors_sweeps_orphaned_temp_dirs(spark, tmp_path):
+    """A deleter killed before its finally-cleanup leaves a wse_vec_del_*
+    temp dir beside vectors/: the next delete_vectors heal pass removes
+    it and leaves the index intact."""
+    import os
+
+    from websearchengine_spark.plans.ann_index import build_ann_index, delete_vectors
+
+    emb = spark.createDataFrame(
+        [(i, [float((i * 7 + j) % 5) - 2.0 for j in range(8)]) for i in range(40)],
+        "vec_id long, embedding array<float>",
+    )
+    root = str(tmp_path / "ann")
+    build_ann_index(emb, root, n_planes=3)
+    orphan = os.path.join(root, "wse_vec_del_dead1234")
+    os.makedirs(os.path.join(orphan, "vectors", "sig=0"))
+    open(os.path.join(orphan, "vectors", "sig=0", "part-0.parquet"), "wb").close()
+    m = delete_vectors(spark, root, [3])
+    assert m["n_deleted"] == 1
+    assert not os.path.exists(orphan)
+    assert sorted(os.listdir(root)) == ["meta", "vectors"]
+
+
 def test_delete_all_vectors_services_answer_empty(spark, tmp_path):
     import numpy as np
 

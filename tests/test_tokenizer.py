@@ -1,19 +1,22 @@
-"""Tokenizer parity: vectorized regex path == character-level spec port
-(reference is_al_num, main.cpp:175-212), on targeted edges + fuzzed Unicode."""
+"""Tokenizer parity: the single-string regex path and the Arrow batch kernel
+== the character-level spec port (reference is_al_num, main.cpp:175-212), on
+targeted edges + fuzzed Unicode."""
 
 from __future__ import annotations
 
 import random
+from collections import Counter
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 import pytest
 
+from websearchengine_spark.functions.codec import encode_ids, encode_tfs
 from websearchengine_spark.functions.tokenizer import (
     clean_query,
-    doc_length_series,
     tokenize,
-    tokenize_count_series,
-    tokenize_series,
+    tokenize_postings_batch,
+    tokenize_runs_arrays,
     tokenize_spec,
 )
 
@@ -69,17 +72,6 @@ def test_ascii_only_lowercase():
     assert tokenize("ABC École СТРАНА Ｆｕｌｌ") == ["abc", "École", "СТРАНА", "Ｆｕｌｌ"]
 
 
-def test_series_paths_agree():
-    s = pd.Series(EDGES, dtype=object)
-    assert list(tokenize_series(s)) == [tokenize_spec(t) for t in EDGES]
-    counted = tokenize_count_series(s)
-    for lst, text in zip(counted, EDGES):
-        toks = tokenize_spec(text)
-        assert sum(d["tf"] for d in lst) == len(toks)
-        assert {d["term"] for d in lst} == set(toks)
-    assert list(doc_length_series(s)) == [len(tokenize_spec(t)) for t in EDGES]
-
-
 def test_clean_query():
     assert clean_query("  Apple apple  PIE banana ") == ["apple", "banana", "pie"]
     assert clean_query("zebra apple") == ["apple", "zebra"]
@@ -87,25 +79,7 @@ def test_clean_query():
     assert clean_query("") == []
 
 
-def _runs_sig(terms, ns, tfs, ids_vb, tfs_vb, dls_vb):
-    return sorted(
-        (t, int(a), int(b), bytes(c), bytes(d), bytes(e))
-        for t, a, b, c, d, e in zip(terms, ns, tfs, ids_vb, tfs_vb, dls_vb)
-    )
-
-
-def test_arrow_runs_bit_identical_to_pandas_twin():
-    """The Arrow-native build kernel (RE2 split + ascii_lower +
-    dictionary_encode) must emit byte-identical runs and doc lengths to the
-    pandas/factorize twin on edges + fuzzed Unicode."""
-    import numpy as np
-    import pyarrow as pa
-
-    from websearchengine_spark.functions.tokenizer import (
-        tokenize_runs_arrays,
-        tokenize_runs_frame,
-    )
-
+def _fuzz_corpus():
     rng = random.Random(11)
     fuzz = [
         "".join(chr(rng.choice([rng.randrange(32, 128), rng.randrange(0x80, 0x800),
@@ -114,29 +88,83 @@ def test_arrow_runs_bit_identical_to_pandas_twin():
                 for _ in range(rng.randrange(0, 40)))
         for _ in range(200)
     ]
-    texts = EDGES + [None, ""] + fuzz + ["the data " * 30, "spark SPARK Spark"]
+    return EDGES + [None, ""] + fuzz + ["the data " * 30, "spark SPARK Spark"]
+
+
+def _spec_counts(texts):
+    """Per-doc (term → tf) and kept-token length, from the char-level spec."""
+    toks = [tokenize_spec(t or "") for t in texts]
+    return [Counter(t) for t in toks], [len(t) for t in toks]
+
+
+def test_arrow_runs_bit_identical_to_spec_oracle():
+    """The Arrow build kernel (RE2 split + ascii_lower + dictionary_encode)
+    must emit runs byte-identical to ones encoded straight from the
+    character-level spec: per term, doc-ascending postings as
+    delta+varbyte ids / varbyte tfs / varbyte doc lengths."""
+    texts = _fuzz_corpus()
     doc_ids = np.arange(1000, 1000 + len(texts), dtype=np.int64)
+    counts, lens_spec = _spec_counts(texts)
+    postings: dict[str, list] = {}
+    for d, c, dl in zip(doc_ids, counts, lens_spec):
+        for t, tf in c.items():
+            postings.setdefault(t, []).append((d, tf, dl))
+    expected = sorted(
+        (t, len(p), sum(tf for _, tf, _ in p),
+         encode_ids(np.array([d for d, _, _ in p])),
+         encode_tfs(np.array([tf for _, tf, _ in p], dtype=np.uint64)),
+         encode_tfs(np.array([dl for _, _, dl in p], dtype=np.uint64)))
+        for t, p in postings.items()
+    )
 
     terms, ns, tfs, iv, tv, dv, lens = tokenize_runs_arrays(
         pa.array(texts, type=pa.string()), doc_ids
     )
-    old = tokenize_runs_frame(pd.DataFrame({"doc_id": doc_ids, "text": texts}), [])
-    runs = old[old["term"].notna()]
-    assert _runs_sig(
-        terms.to_pylist(), ns, tfs, iv.to_pylist(), tv.to_pylist(), dv.to_pylist()
-    ) == _runs_sig(
-        runs["term"], runs["n"], runs["tf_sum"],
-        runs["ids_vb"], runs["tfs_vb"], runs["dls_vb"],
+    got = sorted(
+        (t, int(n), int(tf), bytes(a), bytes(b), bytes(c))
+        for t, n, tf, a, b, c in zip(
+            terms.to_pylist(), ns, tfs, iv.to_pylist(), tv.to_pylist(), dv.to_pylist()
+        )
     )
-    assert list(lens) == list(old[old["term"].isna()]["dl"].astype(int))
+    assert got == expected
+    assert list(lens) == lens_spec
+
+
+def test_postings_batch_matches_spec_oracle():
+    """The flat postings emitter: (doc_id, term, tf, dl) posting rows equal
+    to the spec's per-doc counts, then exactly one term-NULL doc row per
+    input doc in input order (NULL-text and tokenless docs included) with
+    the meta columns passed through and typed nulls on posting rows."""
+    texts = _fuzz_corpus()
+    n = len(texts)
+    doc_ids = np.arange(7, 7 + 3 * n, 3, dtype=np.int64)
+    conv = [f"c{i % 5}" for i in range(n)]
+    turn = pa.array(range(n), type=pa.int32())
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array(doc_ids), pa.array(texts, type=pa.string()), pa.array(conv), turn],
+        names=["doc_id", "text", "conv_id", "turn_idx"],
+    )
+    out = tokenize_postings_batch(rb, ["conv_id", "turn_idx"])
+    assert out.schema.names == ["doc_id", "term", "tf", "dl", "conv_id", "turn_idx"]
+    assert out.schema.field("turn_idx").type == pa.int32()
+    rows = out.to_pylist()
+    post = [r for r in rows if r["term"] is not None]
+    docs = rows[len(post):]
+    assert all(r["term"] is None for r in docs)
+    counts, lens_spec = _spec_counts(texts)
+    dl_of = dict(zip(doc_ids.tolist(), lens_spec))
+    assert sorted((r["doc_id"], r["term"], r["tf"], r["dl"]) for r in post) == sorted(
+        (int(d), t, tf, dl_of[int(d)])
+        for d, c in zip(doc_ids, counts) for t, tf in c.items()
+    )
+    assert all(r["conv_id"] is None and r["turn_idx"] is None for r in post)
+    assert [(r["doc_id"], r["tf"], r["dl"], r["conv_id"], r["turn_idx"]) for r in docs] == [
+        (int(d), 0, dl, cv, i) for i, (d, dl, cv) in enumerate(zip(doc_ids, lens_spec, conv))
+    ]
+    assert 0 in [r["dl"] for r in docs]  # tokenless + NULL docs are present
 
 
 def test_arrow_runs_empty_and_tokenless():
-    import numpy as np
-    import pyarrow as pa
-
-    from websearchengine_spark.functions.tokenizer import tokenize_runs_arrays
-
     terms, ns, tfs, iv, tv, dv, lens = tokenize_runs_arrays(
         pa.array([], type=pa.string()), np.empty(0, dtype=np.int64)
     )

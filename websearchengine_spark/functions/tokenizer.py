@@ -15,22 +15,27 @@ create_index.cpp:49-65/201-223, main.cpp:175-212, evaluation.cpp:203-240):
 - ASCII letters are lowercased (main.cpp:508-510); non-ASCII is NEVER
   case-folded.
 
-Three implementations, all of the same spec:
+Three forms, all of the same spec:
 
-- :func:`is_word_char` / :func:`tokenize_spec` — character-level port used as
-  the property-test oracle (mirrors is_al_num, main.cpp:196-212).
-- :func:`tokenize_series` / :func:`tokenize_count_series` — vectorized pandas
-  versions used inside pandas UDFs (the production path).
-- :data:`BOUNDARY_RE` — the boundary regex shared by both.
+- Spec oracle: :func:`is_word_char` / :func:`tokenize_spec` — character-level
+  port of is_al_num (main.cpp:196-212), the property-test oracle.
+- Single string: :func:`tokenize` / :func:`clean_query` — the
+  :data:`WORD_RE` regex path, for queries, snippets and the Python oracle.
+- Arrow batch kernel: :func:`_doc_term_counts` (``ascii_lower`` + RE2 split
+  on :data:`BOUNDARY_RE` + ``dictionary_encode`` + one fused ``np.unique``)
+  under two ``mapInArrow`` emitters — :func:`tokenize_runs_batch`
+  (compressed posting runs, the block build) and
+  :func:`tokenize_postings_batch` (flat posting + doc rows, every other
+  Spark plan). No text becomes a Python string on the batch path.
 """
 
 from __future__ import annotations
 
 import re
-from collections import Counter
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 # Maximal-run word-character class. After ASCII-only lowercasing, A-Z no
 # longer occur; every other uppercase codepoint (e.g. À, Ａ) is a word char
@@ -84,273 +89,53 @@ def tokenize(text: str) -> list[str]:
     return [t.translate(ASCII_LOWER) for t in WORD_RE.findall(text)]
 
 
-def tokenize_series(texts: pd.Series) -> pd.Series:
-    """Vectorized: Series[str] → Series[list[str]] (pandas UDF body)."""
-    lowered = texts.fillna("").str.translate(ASCII_LOWER)
-    return lowered.map(WORD_RE.findall)
+def _doc_term_counts(arr):
+    """The Arrow batch kernel: texts → per-(doc, term) tf + per-doc length.
 
+    The text column never becomes Python strings: ``ascii_lower`` (exactly
+    the reference's ASCII-only tolower — non-ASCII untouched), RE2
+    ``split_pattern_regex`` on :data:`BOUNDARY_RE` (empty tokens at split
+    edges are masked out, restoring findall semantics), C++
+    ``dictionary_encode`` for term codes, then one ``np.unique`` over fused
+    (row, code) int64 keys. NULL text tokenizes like "".
 
-def tokenize_count_series(texts: pd.Series) -> pd.Series:
-    """Series[str] → Series[list[dict(term, tf)]], pre-aggregated per doc.
-
-    Emitting per-(doc, term) rows instead of per-token rows cuts the
-    postings-build shuffle volume by ~the average in-document tf. The
-    first-occurrence/tf-count logic mirrors create_index.cpp:355,378-386.
-    """
-    out = []
-    findall = WORD_RE.findall
-    for text in texts.fillna("").str.translate(ASCII_LOWER):
-        counts = Counter(findall(text))
-        out.append([{"term": t, "tf": c} for t, c in counts.items()])
-    return pd.Series(out, index=texts.index)
-
-
-def tokenize_postings_frame(pdf: pd.DataFrame, meta_cols: list[str]) -> pd.DataFrame:
-    """Vectorized batch tokenizer for the build hot path (mapInPandas body).
-
-    In: a batch of docs with at least (doc_id, text) + ``meta_cols``.
-    Out: flat rows of two kinds —
-      posting rows: (doc_id, term, tf, dl) with meta cols null;
-      doc rows:     (doc_id, term=NULL, tf=0, dl) with meta cols set
-                    (one per doc, including token-less docs).
-
-    No per-row Python in the counting path: one C-level regex findall per
-    text, then a single pandas groupby over the flattened (row, term) frame
-    — no Counter, no per-term dicts, no nested Arrow structs. This is ~10×
-    the throughput of the list[struct] scalar-UDF path at build scale.
-    """
-    from itertools import chain
-
-    n = len(pdf)
-    findall = WORD_RE.findall
-    lowered = pdf["text"].fillna("").str.translate(ASCII_LOWER)
-    toks = [findall(s) for s in lowered]
-    lens = np.fromiter((len(t) for t in toks), np.int64, n)
-    doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-
-    if lens.sum() > 0:
-        # (row, term) → tf entirely in C: factorize terms to int codes, fuse
-        # (row, code) into one int64 key, np.unique(counts). No pandas
-        # groupby over object strings (≈10× slower), no per-row Counter.
-        rows = np.repeat(np.arange(n, dtype=np.int64), lens)
-        codes, uniques = pd.factorize(
-            np.asarray(list(chain.from_iterable(toks)), dtype=object)
-        )
-        key = rows * np.int64(len(uniques)) + codes
-        uk, counts = np.unique(key, return_counts=True)
-        r_idx = (uk // len(uniques)).astype(np.int64)
-        k = len(uk)
-        post_doc = doc_ids[r_idx]
-        post_term = np.asarray(uniques, dtype=object)[uk % len(uniques)]
-        post_tf = counts.astype(np.int64)
-        post_dl = lens[r_idx]
-    else:
-        k = 0
-        post_doc = post_term = post_tf = post_dl = np.empty(0, dtype=np.int64)
-
-    # one frame, columns typed so the Arrow conversion stays on fast paths:
-    # object-of-(str|None) for strings, nullable Int32 for ints, datetime64
-    # with NaT for timestamps. Mixed-object columns (None + Timestamp) are
-    # the slow path — they force per-element type inference.
-    out = {
-        "doc_id": np.concatenate([post_doc, doc_ids]),
-        "term": np.concatenate([post_term, np.full(n, None, dtype=object)]),
-        "tf": np.concatenate([post_tf, np.zeros(n, dtype=np.int64)]),
-        "dl": np.concatenate([post_dl, lens]),
-    }
-    frame = pd.DataFrame(out)
-    for c in meta_cols:
-        src = pdf[c]
-        if str(src.dtype).startswith("datetime"):
-            vals = np.full(k + n, np.datetime64("NaT"), dtype="datetime64[ns]")
-            vals[k:] = src.to_numpy(dtype="datetime64[ns]")
-            frame[c] = vals
-        elif pd.api.types.is_integer_dtype(src.dtype):
-            vals = np.concatenate(
-                [np.zeros(k, dtype=np.int64), src.to_numpy(dtype=np.int64)]
-            )
-            mask = np.concatenate([np.ones(k, bool), np.zeros(n, bool)])
-            frame[c] = pd.arrays.IntegerArray(vals, mask)
-        else:
-            vals = np.full(k + n, None, dtype=object)
-            vals[k:] = src.to_numpy(dtype=object)
-            frame[c] = vals
-    return frame
-
-
-def tokenize_runs_frame(pdf: pd.DataFrame, meta_cols: list[str]) -> pd.DataFrame:
-    """Batch tokenizer emitting COMPRESSED POSTING RUNS (mapInPandas body).
-
-    The Spark-first analogue of the reference's create_index spill runs
-    (create_index.cpp:116-150: per-chunk sorted (term, docID, tf) runs on
-    disk, merged by merge_index.cpp's k-way heap): each batch of docs
-    yields one row per distinct term holding that term's postings for the
-    batch, already doc-sorted and delta+varbyte encoded —
-
-      run rows: (term, n, tf_sum, ids_vb, tfs_vb, dls_vb), ~1-3 bytes per
-                posting on the wire instead of a ~40-byte shuffle row;
-      doc rows: (term=NULL, n=1, dl, doc_id + ``meta_cols``), one per doc.
-
-    Downstream the (term, salt) exchange then moves compressed runs, not
-    posting rows — at 100 TB the posting shuffle is the build's dominant
-    data movement, and runs cut its volume ~20×. df/cf aggregate from the
-    (n, tf_sum) columns without decoding. Runs are doc-ascending because
-    batches are doc-ascending; the reducer concatenates runs in partition/
-    batch order, so the merge is a concatenation, not a heap.
-
-    Vectorized exactly like :func:`tokenize_postings_frame` (one factorize,
-    one np.unique, no per-token Python), plus one lexsort to flip the
-    unique (doc, term) entries term-major and one whole-array vb encode."""
-    from itertools import chain
-
-    from websearchengine_spark.functions.codec import vb_blocked
-
-    n = len(pdf)
-    findall = WORD_RE.findall
-    lowered = pdf["text"].fillna("").str.translate(ASCII_LOWER)
-    toks = [findall(s) for s in lowered]
-    lens = np.fromiter((len(t) for t in toks), np.int64, n)
-    doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-
-    if lens.sum() > 0:
-        rows = np.repeat(np.arange(n, dtype=np.int64), lens)
-        codes, uniques = pd.factorize(
-            np.asarray(list(chain.from_iterable(toks)), dtype=object)
-        )
-        V = np.int64(len(uniques))
-        key = rows * V + codes
-        uk, counts = np.unique(key, return_counts=True)
-        r_idx = (uk // V).astype(np.int64)
-        c_idx = (uk % V).astype(np.int64)
-        # term-major, doc-ascending: one sort of the (doc, term) uniques
-        order = np.lexsort((r_idx, c_idx))
-        c_s, r_s, tf_s = c_idx[order], r_idx[order], counts[order].astype(np.int64)
-        post_doc = doc_ids[r_s]
-        post_dl = lens[r_s]
-        rchg = np.nonzero(c_s[1:] != c_s[:-1])[0] + 1
-        rstarts = np.concatenate(([0], rchg))
-        rends = np.concatenate((rchg, [len(c_s)]))
-        run_n = rends - rstarts
-        run_tf = np.add.reduceat(tf_s, rstarts)
-        u = post_doc.astype(np.uint64)
-        gaps = np.empty_like(u)
-        gaps[0] = u[0]
-        np.subtract(u[1:], u[:-1], out=gaps[1:])
-        gaps[rstarts] = u[rstarts]
-        ids_vb = vb_blocked(gaps, rstarts, rends)
-        tfs_vb = vb_blocked(tf_s.astype(np.uint64), rstarts, rends)
-        dls_vb = vb_blocked(post_dl.astype(np.uint64), rstarts, rends)
-        run_terms = np.asarray(uniques, dtype=object)[c_s[rstarts]]
-        k = len(rstarts)
-    else:
-        k = 0
-        run_n = run_tf = np.empty(0, dtype=np.int64)
-        ids_vb = tfs_vb = dls_vb = []
-        run_terms = np.empty(0, dtype=object)
-
-    none_runs = np.full(k, None, dtype=object)
-    out = {
-        "doc_id": pd.arrays.IntegerArray(
-            np.concatenate([np.zeros(k, dtype=np.int64), doc_ids]),
-            np.concatenate([np.ones(k, bool), np.zeros(n, bool)]),
-        ),
-        "term": np.concatenate([run_terms, np.full(n, None, dtype=object)]),
-        "n": np.concatenate([run_n, np.ones(n, dtype=np.int64)]),
-        "tf_sum": np.concatenate([run_tf, np.zeros(n, dtype=np.int64)]),
-        "dl": pd.arrays.IntegerArray(
-            np.concatenate([np.zeros(k, dtype=np.int64), lens]),
-            np.concatenate([np.ones(k, bool), np.zeros(n, bool)]),
-        ),
-        "ids_vb": np.concatenate(
-            [np.asarray(ids_vb, dtype=object), np.full(n, None, dtype=object)]
-        )
-        if k
-        else np.full(n, None, dtype=object),
-        "tfs_vb": np.concatenate(
-            [np.asarray(tfs_vb, dtype=object), np.full(n, None, dtype=object)]
-        )
-        if k
-        else np.full(n, None, dtype=object),
-        "dls_vb": np.concatenate(
-            [np.asarray(dls_vb, dtype=object), np.full(n, None, dtype=object)]
-        )
-        if k
-        else np.full(n, None, dtype=object),
-    }
-    frame = pd.DataFrame(out)
-    for c in meta_cols:
-        src = pdf[c]
-        if str(src.dtype).startswith("datetime"):
-            vals = np.full(k + n, np.datetime64("NaT"), dtype="datetime64[ns]")
-            vals[k:] = src.to_numpy(dtype="datetime64[ns]")
-            frame[c] = vals
-        elif pd.api.types.is_integer_dtype(src.dtype):
-            vals = np.concatenate(
-                [np.zeros(k, dtype=np.int64), src.to_numpy(dtype=np.int64)]
-            )
-            mask = np.concatenate([np.ones(k, bool), np.zeros(n, bool)])
-            frame[c] = pd.arrays.IntegerArray(vals, mask)
-        else:
-            vals = np.full(k + n, None, dtype=object)
-            vals[k:] = src.to_numpy(dtype=object)
-            frame[c] = vals
-    return frame
+    In: Arrow string array of texts. Out: (rows, codes, tf, lens, uniques)
+    — one entry per distinct (doc row, term) in row-major order with
+    ``uniques[codes]`` the term, plus each doc's kept-token count (the BM25
+    length, create_index.cpp:376) for every input row."""
+    n = len(arr)
+    toks = pc.split_pattern_regex(
+        pc.ascii_lower(pc.fill_null(arr, "")), BOUNDARY_RE.pattern
+    )
+    if isinstance(toks, pa.ChunkedArray):
+        toks = toks.combine_chunks()
+    keep = pc.binary_length(toks.values).to_numpy() > 0
+    rows0 = np.repeat(np.arange(n, dtype=np.int64), np.diff(toks.offsets.to_numpy()))
+    lens = np.bincount(rows0, weights=keep, minlength=n).astype(np.int64)
+    d = pc.dictionary_encode(toks.values)
+    V = np.int64(max(len(d.dictionary), 1))
+    key = rows0[keep] * V + d.indices.to_numpy()[keep].astype(np.int64)
+    uk, counts = np.unique(key, return_counts=True)
+    return uk // V, uk % V, counts.astype(np.int64), lens, d.dictionary.cast(pa.string())
 
 
 def tokenize_runs_arrays(arr, doc_ids: np.ndarray):
-    """Arrow-native run builder — the build's hot kernel, zero Python text.
-
-    Same spec and bit-identical output payloads as
-    :func:`tokenize_runs_frame` (pytest-asserted), but the text column
-    never becomes Python strings: ``ascii_lower`` (exactly the reference's
-    ASCII-only tolower — non-ASCII untouched), RE2 ``split_pattern_regex``
-    on the same boundary class (empty tokens at split edges are masked
-    out, restoring findall semantics), and C++ ``dictionary_encode``
-    replacing pd.factorize. Everything after is the same int-array
-    machinery (fused (row, code) keys → np.unique → term-major lexsort →
-    segmented delta+varbyte).
+    """Run builder over :func:`_doc_term_counts` — the build's hot kernel.
 
     In: Arrow string array of texts + int64 docIDs (one per text).
     Out: (run_terms StringArray, run_n, run_tf, ids_vb, tfs_vb, dls_vb,
     lens) — one run per distinct term with that term's postings for the
-    batch, plus per-doc token counts."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
+    batch (term-major lexsort → segmented delta+varbyte), plus per-doc
+    token counts."""
     from websearchengine_spark.functions.codec import vb_blocked_arrow
 
-    n = len(arr)
-    lowered = pc.ascii_lower(pc.fill_null(arr, ""))
-    toks = pc.split_pattern_regex(lowered, BOUNDARY_RE.pattern)
-    if isinstance(toks, pa.ChunkedArray):
-        toks = toks.combine_chunks()
-    lens0 = np.diff(toks.offsets.to_numpy())
-    values = toks.values
-    nobin = pa.array([], type=pa.binary())
-    if len(values) == 0:
+    r_idx, c_idx, counts, lens, uniques = _doc_term_counts(arr)
+    if len(counts) == 0:  # no tokens in the batch
         empty = np.empty(0, dtype=np.int64)
-        return (
-            pa.array([], type=pa.string()), empty, empty, nobin, nobin, nobin,
-            np.zeros(n, dtype=np.int64),
-        )
-    keep = pc.binary_length(values).to_numpy() > 0
-    rows0 = np.repeat(np.arange(n, dtype=np.int64), lens0)
-    d = pc.dictionary_encode(values)
-    uniques = d.dictionary
-    rows = rows0[keep]
-    codes = d.indices.to_numpy()[keep].astype(np.int64)
-    # per-doc BM25 length = kept-token count (create_index.cpp:376)
-    lens = np.bincount(rows0, weights=keep, minlength=n).astype(np.int64)
-    V = np.int64(max(len(uniques), 1))
-    key = rows * V + codes
-    uk, counts = np.unique(key, return_counts=True)
-    if len(uk) == 0:  # every split piece was an empty edge token
-        empty = np.empty(0, dtype=np.int64)
+        nobin = pa.array([], type=pa.binary())
         return pa.array([], type=pa.string()), empty, empty, nobin, nobin, nobin, lens
-    r_idx = (uk // V).astype(np.int64)
-    c_idx = (uk % V).astype(np.int64)
     order = np.lexsort((r_idx, c_idx))  # term-major, doc-ascending
-    c_s, r_s, tf_s = c_idx[order], r_idx[order], counts[order].astype(np.int64)
+    c_s, r_s, tf_s = c_idx[order], r_idx[order], counts[order]
     post_doc = doc_ids[r_s]
     post_dl = lens[r_s]
     rchg = np.nonzero(c_s[1:] != c_s[:-1])[0] + 1
@@ -366,21 +151,25 @@ def tokenize_runs_arrays(arr, doc_ids: np.ndarray):
     ids_vb = vb_blocked_arrow(gaps, rstarts, rends)
     tfs_vb = vb_blocked_arrow(tf_s.astype(np.uint64), rstarts, rends)
     dls_vb = vb_blocked_arrow(post_dl.astype(np.uint64), rstarts, rends)
-    run_terms = pc.take(uniques, pa.array(c_s[rstarts], type=pa.int64())).cast(
-        pa.string()
-    )
+    run_terms = uniques.take(pa.array(c_s[rstarts], type=pa.int64()))
     return run_terms, run_n, run_tf, ids_vb, tfs_vb, dls_vb, lens
 
 
+def _with_meta(cols: dict, rb, meta_cols, k: int):
+    """``cols`` plus each meta column as k typed Arrow nulls (the posting or
+    run rows) followed by the batch's own values (the doc rows)."""
+    for c in meta_cols:
+        col = rb.column(c)
+        cols[c] = pa.concat_arrays([pa.nulls(k, col.type), col])
+    return pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols))
+
+
 def tokenize_runs_batch(rb, meta_cols: list[str], doc_id_start: int, run_pos: int):
-    """One mapInArrow batch → the flat runs+docs RecordBatch.
-
-    Layout matches :func:`tokenize_runs_frame`'s frame (k run rows, then n
-    doc rows) with typed Arrow nulls — no pandas object columns on either
-    side of the crossing. ``doc_id_start`` is the partition-local id of the
-    batch's first doc; ``run_pos`` tags every row of the batch."""
-    import pyarrow as pa
-
+    """One mapInArrow batch → the flat runs+docs RecordBatch: k run rows
+    (term, n, tf_sum, *_vb), then n doc rows (term=NULL, n=1, dl, doc_id +
+    ``meta_cols``), typed Arrow nulls elsewhere. ``doc_id_start`` is the
+    partition-local id of the batch's first doc; ``run_pos`` tags every row
+    of the batch."""
     n = rb.num_rows
     doc_ids = np.arange(doc_id_start, doc_id_start + n, dtype=np.int64)
     run_terms, run_n, run_tf, ids_vb, tfs_vb, dls_vb, lens = tokenize_runs_arrays(
@@ -390,10 +179,7 @@ def tokenize_runs_batch(rb, meta_cols: list[str], doc_id_start: int, run_pos: in
     i64 = pa.int64()
     cols = {
         "doc_id": pa.concat_arrays([pa.nulls(k, i64), pa.array(doc_ids, type=i64)]),
-        "term": pa.concat_arrays(
-            [run_terms.combine_chunks() if isinstance(run_terms, pa.ChunkedArray)
-             else run_terms, pa.nulls(n, pa.string())]
-        ),
+        "term": pa.concat_arrays([run_terms, pa.nulls(n, pa.string())]),
         "n": pa.array(np.concatenate([run_n, np.ones(n, dtype=np.int64)]), type=i64),
         "tf_sum": pa.array(
             np.concatenate([run_tf, np.zeros(n, dtype=np.int64)]), type=i64
@@ -404,20 +190,27 @@ def tokenize_runs_batch(rb, meta_cols: list[str], doc_id_start: int, run_pos: in
         "dls_vb": pa.concat_arrays([dls_vb, pa.nulls(n, pa.binary())]),
         "run_pos": pa.array(np.full(k + n, run_pos, dtype=np.int64), type=i64),
     }
-    arrays = list(cols.values())
-    names = list(cols.keys())
-    for c in meta_cols:
-        col = rb.column(c)
-        arrays.append(pa.concat_arrays([pa.nulls(k, col.type), col]))
-        names.append(c)
-    return pa.RecordBatch.from_arrays(arrays, names=names)
+    return _with_meta(cols, rb, meta_cols, k)
 
 
-def doc_length_series(texts: pd.Series) -> pd.Series:
-    """Series[str] → Series[int64]: BM25 doc length = total token count
-    (create_index.cpp:376)."""
-    lowered = texts.fillna("").str.translate(ASCII_LOWER)
-    return lowered.map(lambda s: len(WORD_RE.findall(s))).astype(np.int64)
+def tokenize_postings_batch(rb, meta_cols):
+    """One mapInArrow batch of (doc_id, text, *meta_cols) → the flat
+    postings+docs RecordBatch: k posting rows (doc_id, term, tf, dl) with
+    typed-null meta, then one term-NULL doc row per input doc (tf=0, dl,
+    meta set) — tokenless and NULL-text docs included."""
+    n = rb.num_rows
+    doc_ids = rb.column("doc_id").to_numpy()
+    r_idx, c_idx, tf, lens, uniques = _doc_term_counts(rb.column("text"))
+    i64 = pa.int64()
+    cols = {
+        "doc_id": pa.array(np.concatenate([doc_ids[r_idx], doc_ids]), type=i64),
+        "term": pa.concat_arrays(
+            [uniques.take(pa.array(c_idx)), pa.nulls(n, pa.string())]
+        ),
+        "tf": pa.array(np.concatenate([tf, np.zeros(n, dtype=np.int64)]), type=i64),
+        "dl": pa.array(np.concatenate([lens[r_idx], lens]), type=i64),
+    }
+    return _with_meta(cols, rb, meta_cols, len(tf))
 
 
 def clean_query(query: str) -> list[str]:

@@ -13,8 +13,9 @@ a non-starter at 10^12 rows. Instead: two-level numbering.
    (one shuffle — the same shuffle any global sort needs);
 2. count rows per partition (cheap aggregate over the persisted shuffle
    output) → prefix-sum offsets on the driver (num_partitions values);
-3. mapInPandas adds ``offset[pid] + local_row_number`` — embarrassingly
-   parallel, no second shuffle.
+3. mapInArrow appends ``offset[pid] + local_row_number`` — embarrassingly
+   parallel, no second shuffle, and the row columns pass through as Arrow
+   (no pandas round-trip of the text).
 
 The assigned ID equals the rank of (conv_id, turn_idx) in the total order,
 so it is deterministic and stable across reruns/resumes regardless of
@@ -27,7 +28,7 @@ import os
 from collections.abc import Iterator, Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark import StorageLevel, TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -43,7 +44,7 @@ def ordered_partitions(
     partitioned frame plus per-partition docID offsets (prefix sums).
 
     Exposed separately so callers can FUSE the ID-assignment into their own
-    mapInPandas stage (e.g. the index build fuses ids+tokenize into one
+    mapInArrow stage (e.g. the index build fuses ids+tokenize into one
     Python crossing — at 100 TB each extra Arrow round-trip of the text
     column is a full extra scan's worth of serialization)."""
     spark = df.sparkSession
@@ -102,16 +103,19 @@ def assign_doc_ids(
 
     schema = T.StructType(df.schema.fields + [T.StructField(id_col, T.LongType(), False)])
 
-    def add_ids(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def add_ids(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        # the input columns already carry the Arrow types of df.schema, so
+        # passing them through matches the declared schema exactly
         pid = TaskContext.get().partitionId()
         seen = offsets.get(pid, 0)
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[id_col] = np.arange(seen, seen + len(pdf), dtype=np.int64)
-            seen += len(pdf)
-            yield pdf
+        for rb in batches:
+            ids = np.arange(seen, seen + rb.num_rows, dtype=np.int64)
+            seen += rb.num_rows
+            yield pa.RecordBatch.from_arrays(
+                rb.columns + [pa.array(ids)], names=rb.schema.names + [id_col]
+            )
 
-    out = part.mapInPandas(add_ids, schema)
+    out = part.mapInArrow(add_ids, schema)
     if return_release:
         return out, part.unpersist
     return out

@@ -53,7 +53,11 @@ import pyarrow.parquet as pq
 
 from websearchengine_spark.functions.codec import vb_decode
 from websearchengine_spark.functions.tokenizer import clean_query
-from websearchengine_spark.plans.block_index import BlockIndexPaths, term_bucket
+from websearchengine_spark.plans.block_index import (
+    BlockIndexPaths,
+    live_deletes_dir,
+    term_bucket,
+)
 
 # BM25 parameters and THE shared tf-component expression (plans/build.py):
 # every scorer here (per-posting ``contrib``, TAAT, range-sharded TAAT, the
@@ -454,17 +458,9 @@ class BlockIndexReader:
         self._deleted: np.ndarray | None = None
         self._df_corr: dict[str, int] = {}
         self._bf_hi = self._bf_lo = 1.0
-        # trust deletes/ when present, else the crash-recovery
-        # deletes.prev/ left by a writer killed mid-swap (the old complete
-        # state — see delete_index.tombstone_delete's swap protocol)
-        ddir = self.paths.deletes
-        if not os.path.isdir(os.path.join(ddir, "meta")) and os.path.isdir(
-            os.path.join(ddir + ".prev", "meta")
-        ):
-            ddir = ddir + ".prev"
-        dmeta = os.path.join(ddir, "meta")
-        if os.path.isdir(dmeta):
-            dm = pq.read_table(dmeta).to_pylist()[0]
+        ddir = live_deletes_dir(self.paths.root)
+        if ddir is not None:
+            dm = pq.read_table(os.path.join(ddir, "meta")).to_pylist()[0]
             n_del = int(dm["n_deleted"])
             if n_del:
                 self._deleted = np.sort(
@@ -1049,31 +1045,30 @@ class BlockIndexReader:
             total += len(ids)
         if not per:
             return []
-        n_terms = len(per)
-        if self._flat_ok(total):
-            score = np.zeros(self.n_docs)
-            cnt = np.zeros(self.n_docs, dtype=np.int16)
-            for ids, contrib in per:  # sorted-term order fixes summation order
-                score[ids] += contrib  # each doc appears once per term: no races
-                cnt[ids] += 1
-            cand = np.nonzero(cnt == n_terms if conjunctive else cnt > 0)[0]
-            s = score[cand]
-        else:
-            cand = np.unique(np.concatenate([ids for ids, _ in per]))
-            s = np.zeros(len(cand))
-            cnt = np.zeros(len(cand), dtype=np.int16)
-            for ids, contrib in per:  # sorted-term order, same float tree
-                ix = np.searchsorted(cand, ids)
-                s[ix] += contrib
-                cnt[ix] += 1
-            if conjunctive:
-                m = cnt == n_terms
-                cand, s = cand[m], s[m]
+        cand, s = self._accumulate(per, len(per), conjunctive, self._flat_ok(total))
         cand, s = self._topk_arrays(cand, s, k)
         return [
             (i + 1, int(d), float(v))
             for i, (d, v) in enumerate(zip(cand.tolist(), s.tolist()))
         ]
+
+    def _accumulate(self, per, need: int, conjunctive: bool, flat: bool):
+        """The one TAAT accumulator: sum each doc's per-term contributions
+        ``per`` = [(ids, contrib)] in list (= sorted-term = oracle float
+        summation) order → (cand, s). Conjunctive keeps docs hit by ``need``
+        terms. ``flat`` scatters into O(n_docs) arrays (no sort; docIDs are
+        dense [0, n_docs)); otherwise the candidate ids are compressed first
+        (np.unique) so peak memory is O(Σ postings), independent of n_docs."""
+        cand = None if flat else np.unique(np.concatenate([ids for ids, _ in per]))
+        size = self.n_docs if flat else len(cand)
+        s = np.zeros(size)
+        cnt = np.zeros(size, dtype=np.int16)
+        for ids, contrib in per:
+            ix = ids if flat else np.searchsorted(cand, ids)
+            s[ix] += contrib  # each doc appears once per term: no races
+            cnt[ix] += 1
+        keep = cnt == need if conjunctive else cnt > 0
+        return (np.nonzero(keep)[0] if flat else cand[keep]), s[keep]
 
     @staticmethod
     def _topk_arrays(cand: np.ndarray, s: np.ndarray, k: int):
@@ -1207,18 +1202,9 @@ class BlockIndexReader:
             per.append((ids, idf * _tf_component(tfs, dls, self.avg_dl)))
         if not per:
             return empty
-        cand = np.unique(np.concatenate([ids for ids, _ in per]))
-        s = np.zeros(len(cand))
-        cnt = np.zeros(len(cand), dtype=np.int16)
-        for ids, contrib in per:
-            ix = np.searchsorted(cand, ids)
-            s[ix] += contrib
-            cnt[ix] += 1
-        if conjunctive:
-            # a doc must carry ALL present terms GLOBALLY; terms with no
-            # postings in this shard make that impossible for its docs
-            m = cnt == len(present) if len(per) == len(present) else cnt < 0
-            cand, s = cand[m], s[m]
+        # a doc must carry ALL present terms GLOBALLY: a term with no
+        # postings in this shard leaves cnt < len(present) for its docs
+        cand, s = self._accumulate(per, len(present), conjunctive, False)
         return self._topk_arrays(cand, s, k)
 
     def _search_wand_blocks(self, present, lex, k):

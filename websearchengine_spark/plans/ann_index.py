@@ -153,6 +153,7 @@ def delete_vectors(spark: SparkSession, index_dir: str, vec_ids) -> dict:
     a crash left parked — survivors are never silently lost (the same
     park-then-rename protocol as the text index's tombstone sidecar).
     Returns {n_deleted, partitions_rewritten, partitions_removed}."""
+    import glob
     import shutil
     import tempfile
 
@@ -177,6 +178,10 @@ def delete_vectors(spark: SparkSession, index_dir: str, vec_ids) -> dict:
             else:
                 os.rename(src, dst)
         shutil.rmtree(swap, ignore_errors=True)
+    # and drop the temp dirs of dead deleters (the swap above already
+    # restored whatever they had parked)
+    for tmp in glob.glob(os.path.join(index_dir, "wse_vec_del_*")):
+        shutil.rmtree(tmp, ignore_errors=True)
     out = {"n_deleted": 0, "partitions_rewritten": 0, "partitions_removed": 0}
     if int(meta["n_vectors"]) == 0:
         return out

@@ -156,6 +156,24 @@ class BlockIndexPaths:
         return self._child("deletes")
 
 
+def live_deletes_dir(root: str) -> str | None:
+    """The sidecar directory a READER should trust right now: ``deletes/``
+    when present, else the crash-recovery ``deletes.prev/`` (a process
+    killed between the two renames of the tombstone swap leaves the old
+    complete state there — see delete_index.tombstone_delete), else None.
+    Read-only; the next tombstone_delete physically heals the rename. The
+    one owner of this trust rule: the serving reader, delete, merge and
+    purge all resolve the sidecar through it."""
+    if is_table_identifier(root):
+        return None
+    d = BlockIndexPaths(root).deletes
+    if os.path.isdir(os.path.join(d, "meta")):
+        return d
+    if os.path.isdir(os.path.join(d + ".prev", "meta")):
+        return d + ".prev"
+    return None
+
+
 def _clear_stale_deletes(paths: BlockIndexPaths) -> None:
     """Remove a leftover tombstone sidecar (plans/delete_index.py) before
     writing a NEW index into ``paths.root``. Every data table is written

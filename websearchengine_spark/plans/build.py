@@ -3,7 +3,7 @@
 This is the DataFrame ("logical index") pipeline — the Spark-first rewrite of
 the reference's create_index pass (create_index.cpp:292-427). The hand-rolled
 spill-when-full hash aggregation and the external k-way merge of merge_index
-collapse into one Catalyst plan: tokenize-count pandas UDF → explode →
+collapse into one Catalyst plan: Arrow tokenize (mapInArrow) →
 shuffle-by-term. Spark's hash aggregate spills automatically; the shuffle IS
 the merge.
 
@@ -17,29 +17,42 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.pandas.functions import pandas_udf
 
-from websearchengine_spark.functions.tokenizer import (
-    doc_length_series,
-    tokenize_count_series,
-    tokenize_series,
-)
+from websearchengine_spark.functions.tokenizer import tokenize_postings_batch
 from websearchengine_spark.operators.docids import assign_doc_ids
 
-TOKEN_COUNTS_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("term", T.StringType(), False),
-            T.StructField("tf", T.LongType(), False),
-        ]
-    )
-)
+# declared Spark types of the per-doc columns the postings emitter passes
+# through (the transcripts contract, FIXTURES.md)
+META_TYPES = {
+    "conv_id": "string", "turn_idx": "int", "role": "string",
+    "tool": "string", "ts": "timestamp",
+}
 
-# Vectorized pandas UDFs (Arrow-batched; no per-row Python UDFs anywhere).
-tokenize_udf = pandas_udf(tokenize_series, T.ArrayType(T.StringType()))
-tokenize_count_udf = pandas_udf(tokenize_count_series, TOKEN_COUNTS_TYPE)
-doc_length_udf = pandas_udf(doc_length_series, T.LongType())
+
+def tokenize_postings(docs: DataFrame, meta_cols: tuple[str, ...] = ()) -> DataFrame:
+    """(doc_id, text, *meta_cols) → the flat frame of
+    :func:`~websearchengine_spark.functions.tokenizer.tokenize_postings_batch`
+    via mapInArrow: posting rows (doc_id, term, tf, dl) plus one term-NULL
+    doc row per doc carrying ``dl`` and the meta columns.
+
+    The casts pin every passed-through column to its declared type:
+    mapInArrow does not check the yielded batches against the schema, so
+    e.g. a natural int64 ``turn_idx`` under a declared ``int`` would only
+    fail later, when the persisted frame is projected (see
+    plans/block_index). Catalyst elides the no-op casts."""
+    types = {"doc_id": "long", "text": "string"}
+    types |= {c: META_TYPES[c] for c in meta_cols}
+    schema = "doc_id long, term string, tf long, dl long" + "".join(
+        f", {c} {META_TYPES[c]}" for c in meta_cols
+    )
+
+    def _tokenize(batches):
+        for rb in batches:
+            yield tokenize_postings_batch(rb, meta_cols)
+
+    return docs.select(
+        *[F.col(c).cast(t).alias(c) for c, t in types.items()]
+    ).mapInArrow(_tokenize, schema)
 
 K1 = 0.9  # BM25 parameters, reference main.cpp:250
 B = 0.4
@@ -104,23 +117,9 @@ def build_logical_index(
         transcripts, num_partitions=num_partitions, return_release=True
     )
 
-    # tokenize ONCE via the vectorized flat mapInPandas (see
-    # functions.tokenizer.tokenize_postings_frame): posting rows + term-NULL
-    # doc-stat rows in one pass — no nested Arrow structs, no explode, no
-    # per-row Python, and doc_stats needs no join.
-    from websearchengine_spark.functions.tokenizer import tokenize_postings_frame
-
-    meta_cols = ["conv_id", "turn_idx", "role", "tool", "ts"]
-    flat_schema = (
-        "doc_id long, term string, tf long, dl long, "
-        "conv_id string, turn_idx int, role string, tool string, ts timestamp"
-    )
-
-    def _tokenize_batches(batches):
-        for pdf in batches:
-            yield tokenize_postings_frame(pdf, meta_cols)
-
-    flat = docs.mapInPandas(_tokenize_batches, flat_schema)
+    # tokenize ONCE: posting rows + term-NULL doc-stat rows in one Arrow
+    # pass — no explode, no per-row Python, and doc_stats needs no join
+    flat = tokenize_postings(docs, tuple(META_TYPES))
     if persist:
         flat = flat.persist()
 

@@ -72,7 +72,9 @@ from websearchengine_spark.plans.block_index import (
     BlockIndexPaths,
     BuildMetrics,
     _clear_stale_deletes,
+    live_deletes_dir,
 )
+from websearchengine_spark.plans.build import tokenize_postings
 from websearchengine_spark.plans.merge_index import (
     DOC_STATS_SCHEMA,
     LEXICON_READ_SCHEMA,
@@ -104,22 +106,6 @@ def delete_paths(paths: BlockIndexPaths, base: str | None = None) -> tuple[str, 
     return os.path.join(d, "ids"), os.path.join(d, "df_corr"), os.path.join(d, "meta")
 
 
-def live_deletes_dir(root: str) -> str | None:
-    """The sidecar directory a READER should trust right now: ``deletes/``
-    when present, else the crash-recovery ``deletes.prev/`` (a process
-    killed between the two renames of the tombstone swap leaves the old
-    complete state there — see tombstone_delete), else None. Read-only;
-    the next tombstone_delete physically heals the rename."""
-    if is_table_identifier(root):
-        return None
-    d = BlockIndexPaths(root).deletes
-    if os.path.isdir(os.path.join(d, "meta")):
-        return d
-    if os.path.isdir(os.path.join(d + ".prev", "meta")):
-        return d + ".prev"
-    return None
-
-
 def has_tombstones(root: str) -> bool:
     """True iff ``root`` carries a tombstone sidecar with ≥1 deleted doc.
     Cheap (reads one tiny meta table) — used by merge/compaction guards."""
@@ -147,6 +133,40 @@ def _heal_deletes_swap(paths: BlockIndexPaths) -> None:
             os.rename(prev, paths.deletes)
     for tmp in glob.glob(paths.deletes + ".tmp*"):
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _deleted_postings(
+    spark: SparkSession,
+    paths: BlockIndexPaths,
+    targeted: DataFrame,
+    corpus: DataFrame | None,
+) -> DataFrame:
+    """The tombstone rescan: the ``targeted`` docs' texts — from ``corpus``
+    when given, else the index's texts sidecar — through the Arrow
+    postings kernel (plans/build.tokenize_postings)."""
+    if corpus is not None:
+        # broadcast-semi filters the corpus scan down to the deleted
+        # turns (narrow); both sides of the id-attach join are then
+        # O(deleted) — the corpus never shuffles
+        deleted_turns = corpus.select("conv_id", "turn_idx", "text").join(
+            F.broadcast(targeted.select("conv_id", "turn_idx")),
+            ["conv_id", "turn_idx"],
+            "left_semi",
+        )
+        texts = targeted.select("doc_id", "conv_id", "turn_idx").join(
+            F.broadcast(deleted_turns), ["conv_id", "turn_idx"]
+        ).select("doc_id", "text")
+    else:
+        if not os.path.isdir(paths.texts):
+            raise ValueError(
+                "index has no texts sidecar: pass corpus= (the "
+                "transcripts frame) so the exact df corrections can be "
+                "derived, or rebuild with store_texts=True"
+            )
+        texts = read_table(spark, paths.texts, schema=TEXTS_SCHEMA).join(
+            F.broadcast(targeted.select("doc_id")), "doc_id", "left_semi"
+        )
+    return tokenize_postings(texts)
 
 
 @dataclass
@@ -248,39 +268,9 @@ def tombstone_delete(
             )
 
         # deleted docs' text → exact per-term corrections (ddf = docs lost,
-        # dcf = collection frequency lost), via the SAME tokenizer as the
-        # build (functions/tokenizer.py — create_index.cpp:96-115 semantics)
-        if corpus is not None:
-            # broadcast-semi filters the corpus scan down to the deleted
-            # turns (narrow); both sides of the id-attach join are then
-            # O(deleted) — the corpus never shuffles
-            deleted_turns = corpus.select("conv_id", "turn_idx", "text").join(
-                F.broadcast(targeted.select("conv_id", "turn_idx")),
-                ["conv_id", "turn_idx"],
-                "left_semi",
-            )
-            texts = targeted.select("doc_id", "conv_id", "turn_idx").join(
-                F.broadcast(deleted_turns), ["conv_id", "turn_idx"]
-            ).select("doc_id", "text")
-        else:
-            if not os.path.isdir(paths.texts):
-                raise ValueError(
-                    "index has no texts sidecar: pass corpus= (the "
-                    "transcripts frame) so the exact df corrections can be "
-                    "derived, or rebuild with store_texts=True"
-                )
-            texts = read_table(spark, paths.texts, schema=TEXTS_SCHEMA).join(
-                F.broadcast(targeted.select("doc_id")), "doc_id", "left_semi"
-            )
-        from websearchengine_spark.functions.tokenizer import (
-            tokenize_postings_frame,
-        )
-
-        def _tok(batches):
-            for pdf in batches:
-                yield tokenize_postings_frame(pdf, [])
-
-        flat = texts.mapInPandas(_tok, "doc_id long, term string, tf long, dl long")
+        # dcf = collection frequency lost), via the SAME tokenizer kernel as
+        # the build (functions/tokenizer.py — create_index.cpp:96-115)
+        flat = _deleted_postings(spark, paths, targeted, corpus)
         n_texts = flat.filter(F.col("term").isNull()).count()
         if n_texts != n_new:
             raise ValueError(
@@ -472,7 +462,6 @@ def purge_deletes(
         )
     paths = BlockIndexPaths(index_dir)
     out_p = BlockIndexPaths(out_dir)
-    _clear_stale_deletes(out_p)  # reused out_dir: see block_index note
     if not has_tombstones(index_dir):
         raise ValueError(
             f"index at {index_dir} has no tombstones to purge "
@@ -491,6 +480,9 @@ def purge_deletes(
     block_size = int(meta["block_size"])
     n_buckets = int(meta["n_buckets"])
     n_live = int(meta["n_docs"]) - n_deleted
+    # inputs validated: only now touch out_dir (a reused out_dir may hold a
+    # stale sidecar — see the block_index note)
+    _clear_stale_deletes(out_p)
     # exact: the same integer sums / single float division a from-scratch
     # build on the surviving corpus performs
     avg_dl = ((total_dl - deleted_dl) / n_live) if n_live else 0.0

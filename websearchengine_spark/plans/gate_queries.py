@@ -3,7 +3,7 @@
 Each operator from SURVEY.md §2 that is SQL-expressible gets a (spark_fn,
 oracle_sql) pair over the driver's parquet tables (documents / embeddings —
 pre-registered as DuckDB views by the driver). The Spark side uses the real
-engine pieces (tokenizer UDF, docID assignment, BM25 expression); the SQL
+engine pieces (Arrow tokenizer, docID assignment, BM25 expression); the SQL
 side re-derives the same values independently.
 
 Exactness rules (the driver hashes values):
@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from websearchengine_spark.functions.tokenizer import clean_query
 from websearchengine_spark.pipeline.hashing import sql_h60
-from websearchengine_spark.plans.build import tokenize_count_udf
+from websearchengine_spark.plans.build import tokenize_postings
 
 # ---------------------------------------------------------------------------
 # shared fragments
@@ -86,21 +86,14 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _spark_postings(docs: DataFrame) -> DataFrame:
-    toks = docs.select("doc_id", tokenize_count_udf(F.col("text")).alias("tcs"))
-    return toks.select("doc_id", F.explode("tcs").alias("tc")).select(
-        F.col("tc.term").alias("term"), "doc_id", F.col("tc.tf").alias("tf")
-    )
+    flat = tokenize_postings(docs)
+    return flat.filter(F.col("term").isNotNull()).select("term", "doc_id", "tf")
 
 
 def _spark_doclen(docs: DataFrame) -> DataFrame:
-    return docs.select(
-        "doc_id",
-        F.aggregate(
-            tokenize_count_udf(F.col("text")),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x["tf"],
-        ).alias("dl"),
-    )
+    # the doc rows carry each doc's kept-token count, NULL/empty text → 0
+    flat = tokenize_postings(docs)
+    return flat.filter(F.col("term").isNull()).select("doc_id", "dl")
 
 
 def _spark_bm25_scores(

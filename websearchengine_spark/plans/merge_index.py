@@ -66,6 +66,7 @@ from websearchengine_spark.plans.block_index import (
     BuildMetrics,
     _clear_stale_deletes,
     _make_stream_encoder,
+    live_deletes_dir,
 )
 from websearchengine_spark.sources.catalog import (
     is_table_identifier,
@@ -453,7 +454,6 @@ def merge_many_block_indexes(
         _remap_doc_ids,
         delete_paths,
         has_tombstones,
-        live_deletes_dir,
     )
 
     if not purge_tombstones:
@@ -470,9 +470,6 @@ def merge_many_block_indexes(
                 )
     in_ps = [BlockIndexPaths(d) for d in input_dirs]
     out_p = BlockIndexPaths(out_dir)
-    _clear_stale_deletes(out_p)  # a reused out_dir may hold a previous
-    #                              index's tombstone sidecar — stale ids
-    #                              would silently mask the merged axis
     metas = [read_table(spark, p.meta).collect()[0].asDict() for p in in_ps]
     for m, d in zip(metas, input_dirs):
         if int(m.get("block_format", 1)) != 3:
@@ -549,6 +546,10 @@ def merge_many_block_indexes(
                 "snippet serving from the merged index"
             )
         emit_texts = True
+    # inputs validated: only now touch out_dir — a reused out_dir may hold
+    # a previous index's tombstone sidecar, whose stale ids would silently
+    # mask the merged axis
+    _clear_stale_deletes(out_p)
 
     # exact avg_dl: integer dl sums from doc_stats — the same number a
     # from-scratch build computes (total_dl / n_docs in one float division)
