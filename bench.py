@@ -246,6 +246,11 @@ def _delete_suite(spark, results: dict, idx_dir: str, corpus) -> None:
     dm = tombstone_delete(spark, idx_dir, conv_ids=dead, corpus=corpus)
     t_tomb = time.time() - t0
     results["delete_tombstone_1pct"] = round(t_tomb, 3)
+    if dm.n_deleted_total == 0:
+        # nothing tombstoned → no sidecar, and purge_deletes would refuse
+        # the index ("no tombstones"); there is no deletion cost to measure
+        results["_delete"] = {"skipped": "selector matched no conversations"}
+        return
     lex = (
         pds.dataset(os.path.join(idx_dir, "lexicon"), partitioning="hive")
         .to_table(columns=["term", "df"])

@@ -52,7 +52,7 @@ def reader(index_dir, request):
       pool — the dense-cold-query scale path);
     - wand: block-at-a-time block-max WAND for disjunctive (taat_threshold=0
       routes everything there; dense_docs_max=0 disables the TAAT bail-out
-      so pruning logic is fully exercised) + galloping conjunctive."""
+      so pruning logic is fully exercised) + lead-driven conjunctive."""
     if request.param == "taat":
         r = BlockIndexReader(index_dir)
     elif request.param == "taat_sparse":
@@ -616,11 +616,14 @@ def test_wand_metadata_fetch_is_bounded_on_hot_term(spark, tmp_path_factory):
     assert wand.leaf_rows_fetched < 0.5 * n_leaf_blocks, wand.leaf_rows_fetched
 
 
-def test_conjunctive_cursor_fetch_is_bounded(spark, tmp_path_factory):
-    """Galloping conjunctive over (rare AND hot): the two-level cursors must
-    fetch the hot term's leaf data only for superblocks the rare lead's
-    docIDs actually land in — never the hot term's whole posting list."""
+def test_conjunctive_cursor_fetch_is_bounded(spark, tmp_path_factory, monkeypatch):
+    """Lead-driven conjunctive over (rare AND hot): the hot term's leaf data
+    must be fetched only for superblocks the rare lead's docIDs land in,
+    and decoded only for the leaf blocks covering them — never the hot
+    term's whole posting list."""
     import pandas as pd
+
+    from websearchengine_spark.operators import wand
 
     n_docs, bs = 32768, 8
     rows = []
@@ -638,7 +641,17 @@ def test_conjunctive_cursor_fetch_is_bounded(spark, tmp_path_factory):
     build_block_index(tdf, out, resume=False, n_buckets=4, num_partitions=4,
                       block_size=bs, hot_df_threshold=10**9)
     r = BlockIndexReader(out)
+    decoded = []  # values per vb_decode call (the perfbench tracer's hook)
+    real_decode = wand.vb_decode
+
+    def counting_decode(buf):
+        vals = real_decode(buf)
+        decoded.append(len(vals))
+        return vals
+
+    monkeypatch.setattr(wand, "vb_decode", counting_decode)
     got = r.search("rare hot", conjunctive=True, k=10)
+    monkeypatch.undo()
     assert {d for _, d, _ in got} == rare_at
     # exact-match check vs the exhaustive scorer
     taat = BlockIndexReader(out, dense_docs_max=1 << 26)
@@ -647,6 +660,10 @@ def test_conjunctive_cursor_fetch_is_bounded(spark, tmp_path_factory):
     # hot term: 32768 postings = 4096 leaf blocks = ~32 superblocks; the
     # 3 lead docs land in ≤ 3+ a few of them. rare term: 1 superblock.
     assert r.leaf_rows_fetched <= 6 * 128, r.leaf_rows_fetched
+    # decode bound, all three columns: the lead's 3 postings plus the 3
+    # covering hot blocks of 8 (24 postings) — the hot term's whole list
+    # would be 3 * 32768 values
+    assert sum(decoded) < 3 * 128, decoded
 
 
 def test_texts_sidecar_matches_transcripts_fallback(spark, fixture, tmp_path_factory):

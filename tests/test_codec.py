@@ -9,6 +9,7 @@ import random
 import numpy as np
 
 from websearchengine_spark.functions.codec import (
+    block_ids,
     decode_ids,
     delta_decode,
     delta_encode,
@@ -61,3 +62,31 @@ def test_delta_monotone_gap_sizes():
     ids = np.array([5, 6, 10, 1000], dtype=np.uint64)
     gaps = delta_encode(ids)
     assert list(gaps) == [5, 1, 4, 990]
+
+
+def test_block_ids_matches_per_block_formula():
+    """block_ids (one segmented prefix sum over concatenated leaf blocks)
+    equals decoding each block on its own with the block-format-3 rule
+    that test_block_index's layout check spells out:
+    doc_lo - 1 + cumsum(vb_decode(ids_vb)). Head gaps include multi-byte
+    values (a base below the block's first id), and doc_lo 0 is covered."""
+    empty = block_ids(vb_decode(b""), np.empty(0, dtype=np.int64), [])
+    assert empty.dtype == np.int64 and empty.size == 0
+    rng = np.random.default_rng(13)
+    for _ in range(30):
+        nb = int(rng.integers(1, 12))
+        ns = rng.integers(1, 40, nb)
+        los = rng.integers(0, 2**40, nb)
+        los[0] = 0
+        blobs = []
+        for n in ns:
+            g = rng.integers(1, 300, n).astype(np.uint64)
+            g[0] = rng.choice([1, 127, 128, 200, 2**20, 2**35])
+            blobs.append(vb_encode(g))
+        want = np.concatenate([
+            np.int64(lo) - 1 + np.cumsum(vb_decode(b)).astype(np.int64)
+            for lo, b in zip(los, blobs)
+        ])
+        got = block_ids(vb_decode(b"".join(blobs)), ns, los)
+        assert got.dtype == np.int64
+        assert np.array_equal(got, want)

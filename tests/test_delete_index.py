@@ -4,7 +4,7 @@ Two invariants, both against an honest FROM-SCRATCH build on the
 surviving corpus:
 - tombstone_delete: the untouched index + sidecar must serve rankings
   with BITWISE-equal BM25 scores on every serving path (TAAT dense +
-  sparse, block-max WAND, galloping conjunctive, parallel decode) — the
+  sparse, block-max WAND, lead-driven conjunctive, parallel decode) — the
   sidecar carries exact integer corrections, so N / avg_dl / df come out
   identical to the rebuild's;
 - purge_deletes: the physical rewrite must be CONTENT-IDENTICAL (payload
@@ -41,9 +41,9 @@ WORDS = ["spark", "delete", "index", "query", "the", "data", "block", "live"]
 
 def _tdf(spark, n_convs: int, n_turns: int = 4, long_every: int = 0):
     """Deterministic corpus. Every turn contains "the"; term mix rotates;
-    conv c000 turn 0 carries the unique rare term "tombstone" (gallop
-    lead). ``long_every``: every long_every-th conv gets much longer docs
-    (for the avg_dl-drift test)."""
+    conv c000 turn 0 carries the unique rare term "tombstone" (the
+    conjunctive lead). ``long_every``: every long_every-th conv gets much
+    longer docs (for the avg_dl-drift test)."""
     rows = []
     for c in range(n_convs):
         for t in range(n_turns):
@@ -96,7 +96,7 @@ QUERIES = [
     ("the data", False),
     ("the data", True),
     ("spark block query", False),
-    ("tombstone the", True),   # rare lead → galloping intersection
+    ("tombstone the", True),   # rare lead → lead-driven intersection
     ("delete live", True),
     ("absent the", False),
 ]
@@ -541,9 +541,9 @@ def test_search_full_with_snippets_on_tombstoned_index(deleted_vs_scratch):
 
 
 def test_gallop_cursor_survives_fully_tombstoned_tail_blocks(spark, tmp_path):
-    """next_geq landing in a block whose every posting (and every later
-    block) is tombstoned must exhaust the cursor (INF), not crash on the
-    searchsorted of a None ids array."""
+    """A lead docID landing in a block whose every posting (and every
+    later block) is tombstoned must yield no match for that term, not a
+    crash on an empty decode."""
     rows = []
     for c in range(200):
         text = "marker words only" if c == 150 else "common filler words"
@@ -557,8 +557,8 @@ def test_gallop_cursor_survives_fully_tombstoned_tail_blocks(spark, tmp_path):
     dead = [f"c{c:03d}" for c in range(128, 200) if c != 150]
     tombstone_delete(spark, str(root / "full"), conv_ids=dead)
     r = BlockIndexReader(str(root / "full"))
-    # conjunctive gallop: lead "marker" (df 1, doc 150) forces
-    # common.next_geq(150) into the fully-deleted block
+    # conjunctive lead route: lead "marker" (df 1, doc 150) sends
+    # "common" into its fully-deleted covering block
     assert r.search("marker common", conjunctive=True) == []
     # scratch agreement on the same query set
     build_block_index(

@@ -149,6 +149,22 @@ def vb_decode(buf) -> np.ndarray:
     return out
 
 
+def block_ids(gaps: np.ndarray, ns, los) -> np.ndarray:
+    """Absolute int64 docIDs of concatenated leaf blocks from their decoded
+    ``ids_vb`` gaps: a segmented prefix sum over blocks of ``ns`` postings,
+    each block's head gap measured from its ``doc_lo - 1`` (block format 3,
+    plans/block_index.py). The one owner of that base rule for every
+    decode site (serving reader, merge, purge). Blocks are non-empty."""
+    ns = np.asarray(ns, dtype=np.int64)
+    starts = np.cumsum(ns) - ns
+    c = np.cumsum(gaps, dtype=np.uint64)
+    # per-block offset: the prefix sum before the block minus its
+    # doc_lo - 1 base; uint64 wraparound in the intermediate is exact
+    # under mod-2^64
+    off = c[starts] - gaps[starts] + np.uint64(1) - np.asarray(los).astype(np.uint64)
+    return (c - np.repeat(off, ns)).astype(np.int64)
+
+
 def delta_encode(sorted_ids: np.ndarray) -> np.ndarray:
     """Strictly-increasing uint64 ids → [first, gap, gap, ...]."""
     ids = np.ascontiguousarray(sorted_ids, dtype=np.uint64)

@@ -9,8 +9,12 @@ upgraded from decode-everything-then-full-sort (main.cpp:584-630) to:
   the lexicon-offset fseek, main.cpp:120-173);
 - lazy per-block varbyte+delta decode with an LRU posting cache
   (main.cpp:466 posting cache analogue);
-- galloping (searchsorted) posting-list intersection for conjunctive mode
-  (main.cpp:599-607's std::set_intersection, now with block skip pointers);
+- lead-driven vectorized intersection for selective conjunctive queries
+  (main.cpp:599-607's std::set_intersection): the rarest term's postings
+  are decoded once, every other term decodes only the leaf blocks whose
+  doc range covers a lead docID (superblock → leaf skip by searchsorted
+  over doc_hi), and the shared accumulator keeps the docs hit by every
+  term;
 - vectorized term-at-a-time scoring with a **candidate-bounded accumulator**
   for machine-reasonable posting volumes: memory is O(Σ candidate postings),
   never O(n_docs) (a flat dense accumulator is used only while n_docs is
@@ -41,7 +45,6 @@ import math
 import os
 import threading
 import time
-from bisect import bisect_left
 from collections import OrderedDict
 from dataclasses import dataclass
 
@@ -51,7 +54,7 @@ import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 
-from websearchengine_spark.functions.codec import vb_decode
+from websearchengine_spark.functions.codec import block_ids, vb_decode
 from websearchengine_spark.functions.tokenizer import clean_query
 from websearchengine_spark.plans.block_index import (
     BlockIndexPaths,
@@ -66,8 +69,6 @@ from websearchengine_spark.plans.block_index import (
 # strict bound < θ pruning hold at ulp boundaries only while the float
 # expression tree is literally identical everywhere.
 from websearchengine_spark.plans.build import B, K1, tf_component as _tf_component
-
-INF = 1 << 62
 
 
 class _BucketRGs:
@@ -268,157 +269,21 @@ class _Leaf:
     dls_vb: list
 
 
-class TermCursor:
-    """Two-level cursor over one term's ordered posting blocks: superblock
-    skip (bisect over ~128-block summaries) → leaf-block skip (bisect within
-    the superblock) → lazy varbyte decode of the one landing block. Leaf
-    metadata + payloads are fetched per SUPERBLOCK on demand through the
-    reader (LRU-shared across queries), so a cursor over a 10^9-posting
-    stopword term materializes O(df / 16384) superblock rows up front and
-    only the leaf data its skips actually land in — never the whole list.
-    Used by the galloping conjunctive path (selective queries); the
-    disjunctive paths are block/array-vectorized and bypass cursors."""
+def _decode_blocks(los, ns, ids_vb, tfs_vb, dls_vb):
+    """Leaf blocks (doc_lo, n and raw varbyte payloads, in doc order) →
+    concatenated (ids:int64, tfs:f64, dls:f64). The one serving decode
+    site: one segmented vb_decode per column (per-call fixed cost is
+    ~10 µs, so blocks are never decoded one call each); codec.block_ids
+    folds the block-head ``doc_lo - 1`` base back in."""
+    ids = block_ids(vb_decode(b"".join(ids_vb)), ns, los)
+    tfs = vb_decode(b"".join(tfs_vb)).astype(np.float64)
+    dls = vb_decode(b"".join(dls_vb)).astype(np.float64)
+    return ids, tfs, dls
 
-    __slots__ = ("term", "df", "idf", "avg_dl", "reader", "sb_los", "sb_his",
-                 "sbi", "leaf", "bi", "pos", "ids", "tfs", "dls")
 
-    def __init__(self, term: str, df: int, idf: float, avg_dl: float,
-                 reader: "BlockIndexReader", sbm):
-        self.term = term
-        self.df = df
-        self.idf = idf
-        self.avg_dl = avg_dl
-        self.reader = reader
-        self.sb_los, self.sb_his = sbm[0], sbm[1]
-        # LAZY: no leaf data is fetched until a skip actually lands in a
-        # superblock — a cursor that galloping immediately jumps past its
-        # first superblocks never touches their leaf blocks at all
-        self.sbi = 0
-        self.leaf = None
-        self.ids = None
-        self.bi = 0
-        self.pos = 0
-
-    def _enter_sb(self, sbi: int):
-        if sbi >= len(self.sb_his):
-            self.sbi = len(self.sb_his)
-            self.ids = None
-            return
-        self.sbi = sbi
-        self.leaf = self.reader._leaf_for(self.term, sbi)
-        self.bi = 0
-        self.pos = 0
-        self._decode()
-
-    def _decode(self):
-        # loop, not recursion: consecutive blocks (or whole superblocks)
-        # fully emptied by tombstones are skipped iteratively
-        while True:
-            leaf = self.leaf
-            if self.bi >= len(leaf.his):
-                # past the superblock's last block → first of the next
-                sbi = self.sbi + 1
-                if sbi >= len(self.sb_his):
-                    self.sbi = sbi
-                    self.ids = None
-                    return
-                self.sbi = sbi
-                self.leaf = self.reader._leaf_for(self.term, sbi)
-                self.bi = 0
-                self.pos = 0
-                continue
-            i = self.bi
-            # ids_vb holds gaps with the block head measured from doc_lo - 1
-            ids = (
-                np.int64(leaf.los[i] - 1)
-                + np.cumsum(
-                    vb_decode(leaf.ids_vb[i]), dtype=np.uint64
-                ).astype(np.int64)
-            )
-            keep = self.reader._del_mask(ids)
-            if keep is None:
-                self.ids = ids
-                self.tfs = vb_decode(leaf.tfs_vb[i])
-                self.dls = vb_decode(leaf.dls_vb[i])
-                return
-            ids = ids[keep]
-            if len(ids) == 0:  # block fully tombstoned → skip
-                self.bi += 1
-                continue
-            self.ids = ids
-            self.tfs = vb_decode(leaf.tfs_vb[i])[keep]
-            self.dls = vb_decode(leaf.dls_vb[i])[keep]
-            return
-
-    def cur_doc(self) -> int:
-        if self.sbi >= len(self.sb_his):
-            return INF
-        if self.ids is None:
-            self._enter_sb(self.sbi)
-            if self.ids is None:
-                return INF
-        return int(self.ids[self.pos])
-
-    def next_geq(self, target: int) -> int:
-        """Advance to the first posting with doc_id ≥ target (galloping:
-        bisect superblock doc_hi pointers — WITHOUT loading skipped
-        superblocks — then leaf doc_hi pointers, then searchsorted inside
-        the one decoded block)."""
-        if self.sbi >= len(self.sb_his):
-            return INF
-        if self.ids is not None and target <= int(self.ids[self.pos]):
-            return int(self.ids[self.pos])
-        if target > self.sb_his[self.sbi]:
-            sbi = bisect_left(self.sb_his, target, lo=self.sbi + 1)
-            if sbi >= len(self.sb_his):
-                self.sbi = len(self.sb_his)
-                self.ids = None
-                return INF
-            self.sbi = sbi
-            self.leaf = None
-            self.ids = None
-            self.bi = 0
-            self.pos = 0
-        if self.ids is None:
-            self._enter_sb(self.sbi)
-            if self.ids is None:
-                return INF
-        bi = bisect_left(self.leaf.his, target, lo=self.bi)
-        if bi >= len(self.leaf.his):  # safety: gap at superblock tail
-            self._enter_sb(self.sbi + 1)
-            return self.cur_doc()
-        if bi != self.bi:
-            self.bi = bi
-            self._decode()
-            self.pos = 0
-            if self.ids is None:  # landing block + every later one fully
-                return INF        # tombstoned → term exhausted
-        self.pos = int(np.searchsorted(self.ids, target, side="left"))
-        if self.pos >= len(self.ids):  # gap between blocks
-            self.bi += 1
-            self.pos = 0
-            self._decode()
-            if self.ids is None:
-                return INF
-        return int(self.ids[self.pos])
-
-    def advance(self) -> int:
-        return self.next_geq(self.cur_doc() + 1)
-
-    def contrib(self) -> float:
-        """Exact BM25 contribution at the current posting — identical float
-        expression tree to the oracle (main.cpp:446-450)."""
-        tf = float(self.tfs[self.pos])
-        dl = float(self.dls[self.pos])
-        return self.idf * _tf_component(tf, dl, self.avg_dl)
-
-    def block_ub(self) -> float:
-        i = self.bi
-        r = self.reader  # tombstone avg_dl drift factors (1.0 when none)
-        return max(
-            self.idf * self.leaf.max_tfc[i] * r._bf_hi,
-            self.idf * self.leaf.min_tfc[i] * r._bf_lo,
-        )
+def _ranked(cand: np.ndarray, s: np.ndarray) -> list[tuple[int, int, float]]:
+    """Top-k arrays in rank order → [(rank, doc_id, score)]."""
+    return [(i + 1, d, v) for i, (d, v) in enumerate(zip(cand.tolist(), s.tolist()))]
 
 
 class BlockIndexReader:
@@ -541,8 +406,8 @@ class BlockIndexReader:
         self._pool_lock = threading.Lock()
         self.last_parallel = False  # instrumentation for tests/bench
         # postings decoded+scored by the LAST block-max WAND evaluation;
-        # -1 = the last query did not complete on the WAND path (TAAT
-        # routing, gallop, cache hit, or bail-out) — reset per search()
+        # -1 = the last query did not complete on the WAND path (TAAT or
+        # lead routing, cache hit, or bail-out) — reset per search()
         self.last_wand_scored = -1
         # terms with at most this many superblocks are leaf-prefetched WHOLE
         # in the first read that touches them (≤ 8·16384 ≈ 128k postings —
@@ -799,7 +664,7 @@ class BlockIndexReader:
 
     def _leaf_for(self, term: str, sb_idx: int) -> _Leaf:
         """The leaf blocks of one (term, superblock) — LRU hit or a single
-        on-demand fetch (cursors prefetch in batches; this is the miss
+        on-demand fetch (callers prefetch in batches; this is the miss
         path). Loop, not a single try: under concurrent readers another
         thread may have fetched the slot between our miss and our fetch
         (its presence makes our fetch a no-op), then an eviction can take
@@ -858,7 +723,7 @@ class BlockIndexReader:
         out: dict[str, tuple] = {}
         tcol = tbl.column("term").to_pylist()
         lo = tbl.column("doc_lo").to_numpy()
-        ns_all = tbl.column("n").to_numpy()
+        ns = tbl.column("n").to_numpy()
         ids_vb = tbl.column("ids_vb").to_pylist()
         tfs_vb = tbl.column("tfs_vb").to_pylist()
         dls_vb = tbl.column("dls_vb").to_pylist()
@@ -870,21 +735,12 @@ class BlockIndexReader:
             idxs = sorted(per.get(t, []), key=lambda i: lo[i])
             if not idxs:
                 continue
-            ns = ns_all[idxs].astype(np.int64)
-            starts = np.concatenate(([0], np.cumsum(ns)[:-1]))
-            raw = vb_decode(b"".join(ids_vb[i] for i in idxs))
-            cs = np.cumsum(raw, dtype=np.uint64)
-            # block-head gaps are measured from (doc_lo - 1), so the
-            # per-block offset folds the metadata base back in; uint64
-            # wraparound in the intermediate is exact under mod-2^64
-            offsets = (
-                cs[starts] - raw[starts]
-                + np.uint64(1)
-                - lo[idxs].astype(np.uint64)
+            ids, tfs, dls = _decode_blocks(
+                lo[idxs], ns[idxs],
+                [ids_vb[i] for i in idxs],
+                [tfs_vb[i] for i in idxs],
+                [dls_vb[i] for i in idxs],
             )
-            ids = (cs - np.repeat(offsets, ns)).astype(np.int64)
-            tfs = vb_decode(b"".join(tfs_vb[i] for i in idxs)).astype(np.float64)
-            dls = vb_decode(b"".join(dls_vb[i] for i in idxs)).astype(np.float64)
             keep = self._del_mask(ids)
             if keep is not None:
                 ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
@@ -893,61 +749,87 @@ class BlockIndexReader:
             out[t] = (ids, tfs, dls)
         return out
 
-    def _cursors(self, terms: list[str]) -> list[TermCursor]:
-        """Two-level cursors with lead-driven prefetch. The galloping
-        intersection only ever calls ``next_geq(d)`` for docIDs ``d`` of the
-        LEAD (rarest) term, so the exact set of superblocks every other
-        cursor will touch is known up front: the covering superblock of each
-        lead posting. Prefetching them in ONE batched read replaces what
-        would otherwise be O(superblocks-touched) round trips — and the
-        dense terms' untouched superblocks (the overwhelming majority at
-        stopword df) are never read at all, metadata or payload."""
-        lex = self.lexicon_rows(terms)
-        present = [t for t in terms if t in lex]  # OOV silently skipped
+    def _decode_covering(self, term: str, sis, docs) -> tuple:
+        """Decoded (ids, tfs, dls) of ``term``'s leaf blocks in superblocks
+        ``sis`` (ascending), tombstoned postings masked. With sorted
+        ``docs``, only the blocks whose [doc_lo, doc_hi] holds one of them
+        are decoded (leaf skip: searchsorted over doc_hi); None decodes
+        every block. ``sis`` must be non-empty."""
+        leaves = [self._leaf_for(term, si) for si in sis]
+        llos = np.concatenate([lf.los for lf in leaves])
+        lns = np.concatenate([lf.ns for lf in leaves])
+        if docs is None:
+            bi = np.arange(len(llos))
+        else:
+            bi = np.searchsorted(
+                np.concatenate([lf.his for lf in leaves]), docs, side="left"
+            )
+            ok = bi < len(llos)
+            bi = bi[ok]
+            bi = np.unique(bi[llos[bi] <= docs[ok]])
+        sizes = [len(lf.los) for lf in leaves]
+        owner = np.repeat(np.arange(len(leaves)), sizes)[bi]
+        js = bi - (np.cumsum(sizes) - sizes)[owner]
+        blocks = [(leaves[o], j) for o, j in zip(owner.tolist(), js.tolist())]
+        ids, tfs, dls = _decode_blocks(
+            llos[bi], lns[bi],
+            [lf.ids_vb[j] for lf, j in blocks],
+            [lf.tfs_vb[j] for lf, j in blocks],
+            [lf.dls_vb[j] for lf, j in blocks],
+        )
+        keep = self._del_mask(ids)
+        if keep is not None:
+            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
+        return ids, tfs, dls
+
+    def _search_lead(self, present, lex, k) -> list[tuple[int, int, float]]:
+        """Selective conjunctive scorer driven by the LEAD (rarest) term.
+        The lead's postings are decoded once (bounded by min_df — the
+        router only picks this path when that is small) and are the only
+        candidates. Every other term fetches just the superblocks covering
+        a lead docID, all terms in ONE batched read (a term with at most
+        ``prefetch_sbs`` superblocks is fetched whole), and decodes just the
+        leaf blocks covering one — a dense term's other superblocks are
+        never read, metadata or payload. Scoring is the shared accumulator
+        keeping docs hit by every term (per-doc sums from 0.0 in sorted-
+        term = oracle order) and the shared top-k comparator, so results
+        are rank- and score-identical to TAAT."""
         sbms = self._fetch_superblocks(present)
         present = [t for t in present if t in sbms]
         if not present:
             return []
         lead = min(present, key=lambda t: int(lex[t]))
         l_los, l_his = sbms[lead][0], sbms[lead][1]
-        wants = [
-            (lead, i, int(l_los[i]), int(l_his[i])) for i in range(len(l_los))
-        ]
-        self._fetch_leaf_batch(wants)
-        # the lead's docIDs, decoded once (bounded by min_df — the router
-        # only picks the gallop path when that is small)
-        lead_ids = []
-        for i in range(len(l_los)):
-            leaf = self._leaf_for(lead, i)
-            for j in range(len(leaf.los)):
-                lead_ids.append(
-                    np.int64(leaf.los[j] - 1)
-                    + np.cumsum(
-                        vb_decode(leaf.ids_vb[j]), dtype=np.uint64
-                    ).astype(np.int64)
-                )
-        if lead_ids:
-            lead_docs = np.concatenate(lead_ids)
-            wants = []
-            for t in present:
-                if t == lead:
-                    continue
-                los, his = sbms[t][0], sbms[t][1]
-                if len(his) <= self.prefetch_sbs:
-                    sis = range(len(his))
-                else:
-                    cover = np.unique(np.searchsorted(his, lead_docs, side="left"))
-                    sis = cover[cover < len(his)].tolist()
-                for si in sis:
-                    wants.append((t, si, int(los[si]), int(his[si])))
-            self._fetch_leaf_batch(wants)
-        cursors = []
+        self._fetch_leaf_batch(
+            [(lead, i, int(l_los[i]), int(l_his[i])) for i in range(len(l_los))]
+        )
+        lead_arr = self._decode_covering(lead, range(len(l_los)), None)
+        lead_docs = lead_arr[0]
+        if len(lead_docs) == 0:
+            return []
+        covers: dict[str, list[int]] = {}
+        wants = []
         for t in present:
-            df = int(lex[t])
-            cursors.append(
-                TermCursor(t, df, self._idf(df), self.avg_dl, self, sbms[t])
+            if t == lead:
+                continue
+            los, his = sbms[t][0], sbms[t][1]
+            cover = np.unique(np.searchsorted(his, lead_docs, side="left"))
+            covers[t] = cover[cover < len(his)].tolist()
+            if not covers[t]:  # every lead doc lies past this term's list
+                return []
+            grab = range(len(his)) if len(his) <= self.prefetch_sbs else covers[t]
+            wants.extend((t, si, int(los[si]), int(his[si])) for si in grab)
+        self._fetch_leaf_batch(wants)
+        per = []
+        for t in sorted(present):  # sorted-term order = oracle summation order
+            ids, tfs, dls = (
+                lead_arr if t == lead
+                else self._decode_covering(t, covers[t], lead_docs)
             )
-        return cursors  # every present term has ≥1 superblock by construction
+            idf = self._idf(int(lex[t]))
+            per.append((ids, idf * _tf_component(tfs, dls, self.avg_dl)))
+        cand, s = self._accumulate(per, len(present), True, False)
+        return _ranked(*self._topk_arrays(cand, s, k))
 
     def _idf(self, df: int) -> float:
         # N = LIVE docs: with tombstones pending this is the same integer a
@@ -980,25 +862,27 @@ class BlockIndexReader:
             self._result_cache.put(cache_key, [])
             return []
         # path routing (all paths are rank-identical; this is cost only):
-        # - conjunctive with a rare lead term → galloping intersection:
-        #   candidates bounded by min_df, ~5 µs per Python-loop step;
+        # - conjunctive with a rare lead term → lead-driven intersection:
+        #   decodes the lead's postings plus only the other terms' leaf
+        #   blocks covering a lead docID (≤ min_df blocks per term);
         # - TAAT while total postings are machine-reasonable (~25 ns/posting
         #   vectorized; memory O(candidates) via the compressed accumulator);
         # - block-at-a-time WAND above that (skips whole blocks without
         #   decode; bails back to TAAT when block bounds cannot prune).
         total_df = sum(lex[t] for t in present)
         min_df = min(lex[t] for t in present)
-        gallop_cost = min_df * len(present) * 5e-6
+        # 5 µs per candidate·term is the calibration of the doc-at-a-time
+        # cursor loop that once served this route; it is kept (not retuned
+        # for the vectorized scorer) so the lead-vs-TAAT split is unchanged
+        lead_cost = min_df * len(present) * 5e-6
         taat_cost = total_df * 2.5e-8 + (
             self.n_docs * 1e-8 if self._flat_ok(total_df) else total_df * 6e-8
         )
         if conjunctive:
-            # gallop iff the rarest list is small enough that Python-loop
-            # candidate stepping beats decoding every posting; a dense
-            # conjunction (min_df in the millions) MUST go vectorized —
-            # an unconditional gallop above the TAAT threshold measured
-            # 45-55 s/query on a 5M-doc dense corpus
-            path = "gallop" if gallop_cost < taat_cost else "taat"
+            # lead iff the rarest list is small; a dense conjunction (min_df
+            # in the millions) MUST go TAAT — the cursor loop measured
+            # 45-55 s/query there on a 5M-doc dense corpus
+            path = "lead" if lead_cost < taat_cost else "taat"
         elif total_df <= self.taat_threshold:
             path = "taat"
         else:
@@ -1010,14 +894,7 @@ class BlockIndexReader:
             if out is None:  # block bounds don't prune → vectorized TAAT
                 out = self._taat_route(present, lex, k, False, total_df)
         else:
-            cursors = self._cursors(present)
-            if not cursors:
-                self._result_cache.put(cache_key, [])
-                return []
-            heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap, ≤ k
-            self._search_conjunctive(cursors, k, heap)
-            ranked = sorted(((-s, -nd) for s, nd in heap))
-            out = [(i + 1, d, -negs) for i, (negs, d) in enumerate(ranked)]
+            out = self._search_lead(present, lex, k)
         self._result_cache.put(cache_key, out)
         return out
 
@@ -1046,11 +923,7 @@ class BlockIndexReader:
         if not per:
             return []
         cand, s = self._accumulate(per, len(per), conjunctive, self._flat_ok(total))
-        cand, s = self._topk_arrays(cand, s, k)
-        return [
-            (i + 1, int(d), float(v))
-            for i, (d, v) in enumerate(zip(cand.tolist(), s.tolist()))
-        ]
+        return _ranked(*self._topk_arrays(cand, s, k))
 
     def _accumulate(self, per, need: int, conjunctive: bool, flat: bool):
         """The one TAAT accumulator: sum each doc's per-term contributions
@@ -1157,11 +1030,7 @@ class BlockIndexReader:
             return []
         cand = np.concatenate(docs)
         s = np.concatenate([p[1] for p in parts if len(p[0])])
-        cand, s = self._topk_arrays(cand, s, k)
-        return [
-            (i + 1, int(d), float(v))
-            for i, (d, v) in enumerate(zip(cand.tolist(), s.tolist()))
-        ]
+        return _ranked(*self._topk_arrays(cand, s, k))
 
     def _taat_range_topk(self, terms, k, conjunctive, doc_lo, doc_hi):
         """One shard's exact TAAT top-k over docIDs in [doc_lo, doc_hi):
@@ -1424,36 +1293,19 @@ class BlockIndexReader:
                         if (int(sb_of[ci]), int(j_of[ci])) not in dec
                     ]
                     if miss:
-                        # ONE concatenated vb_decode per column for all
-                        # missing blocks (per-block decode calls have
-                        # ~10 µs fixed cost)
-                        mparts = [
-                            self._leaf_for(t, int(sb_of[ci])) for ci in miss
+                        # one _decode_blocks call for all missing blocks
+                        mb = [
+                            (self._leaf_for(t, int(sb_of[ci])), int(j_of[ci]))
+                            for ci in miss
                         ]
-                        mjs = [int(j_of[ci]) for ci in miss]
-                        mns = np.array(
-                            [int(pt.ns[j]) for pt, j in zip(mparts, mjs)],
-                            dtype=np.int64,
+                        mns = np.array([pt.ns[j] for pt, j in mb], dtype=np.int64)
+                        st = np.cumsum(mns) - mns
+                        ids_all, tfs, dls = _decode_blocks(
+                            [pt.los[j] for pt, j in mb], mns,
+                            [pt.ids_vb[j] for pt, j in mb],
+                            [pt.tfs_vb[j] for pt, j in mb],
+                            [pt.dls_vb[j] for pt, j in mb],
                         )
-                        st = np.concatenate(([0], np.cumsum(mns)[:-1]))
-                        raw = vb_decode(
-                            b"".join(pt.ids_vb[j] for pt, j in zip(mparts, mjs))
-                        )
-                        cs = np.cumsum(raw, dtype=np.uint64)
-                        mlos = np.array(
-                            [int(pt.los[j]) for pt, j in zip(mparts, mjs)],
-                            dtype=np.uint64,
-                        )
-                        # block-head gap is from (doc_lo - 1) — fold the
-                        # base back in
-                        off = cs[st] - raw[st] + np.uint64(1) - mlos
-                        ids_all = (cs - np.repeat(off, mns)).astype(np.int64)
-                        tfs = vb_decode(
-                            b"".join(pt.tfs_vb[j] for pt, j in zip(mparts, mjs))
-                        ).astype(np.float64)
-                        dls = vb_decode(
-                            b"".join(pt.dls_vb[j] for pt, j in zip(mparts, mjs))
-                        ).astype(np.float64)
                         contrib_all = idf * _tf_component(tfs, dls, self.avg_dl)
                         dkeep = self._del_mask(ids_all)
                         for jj, ci in enumerate(miss):
@@ -1503,36 +1355,6 @@ class BlockIndexReader:
             heapq.heappush(heap, item)
         elif item > heap[0]:
             heapq.heapreplace(heap, item)
-
-    @staticmethod
-    def _exact_score(at_doc: list[TermCursor]) -> float:
-        # sorted-term float summation order (main.cpp:574)
-        score = 0.0
-        for c in sorted(at_doc, key=lambda c: c.term):
-            score += c.contrib()
-        return score
-
-    def _search_conjunctive(self, cursors, k, heap):
-        cursors.sort(key=lambda c: c.df)  # rarest first → fewest candidates
-        lead = cursors[0]
-        d = lead.cur_doc()
-        while d < INF:
-            aligned = True
-            for c in cursors[1:]:
-                got = c.next_geq(d)
-                if got != d:
-                    d = lead.next_geq(got)
-                    aligned = False
-                    break
-            if aligned:
-                # block-max prune: skip exact scoring if even the bound loses
-                if len(heap) == k:
-                    ub = sum(c.block_ub() for c in cursors)
-                    if ub < heap[0][0]:
-                        d = lead.advance()
-                        continue
-                self._push(heap, k, self._exact_score(cursors), d)
-                d = lead.advance()
 
     # ---- result assembly (the reference's primary user surface) -----------
     def match_count(self, query: str, conjunctive: bool = True) -> int:

@@ -64,6 +64,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from websearchengine_spark.functions.codec import (
+    block_ids,
     concat_binary_column,
     vb_blocked_arrow,
     vb_decode,
@@ -360,13 +361,10 @@ def _blocks_to_purged_runs(bc_deleted, shift: int = 0):
                 continue
             ns = t.column("n").to_numpy().astype(np.int64)
             los = t.column("doc_lo").to_numpy().astype(np.int64)
-            vals = vb_decode(concat_binary_column(t.column("ids_vb")))
-            n = len(vals)
-            starts = np.concatenate(([0], np.cumsum(ns)[:-1]))
-            c = np.cumsum(vals, dtype=np.uint64)
-            base = (c - vals)[starts]
-            rel = (c - np.repeat(base, ns)).astype(np.int64)
-            ids = rel + np.repeat(los - 1, ns)  # absolute docIDs
+            ids = block_ids(
+                vb_decode(concat_binary_column(t.column("ids_vb"))), ns, los
+            )
+            n = len(ids)
             j = np.searchsorted(dels, ids)
             hit = np.zeros(n, dtype=bool)
             ok = j < len(dels)

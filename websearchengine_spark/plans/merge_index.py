@@ -56,6 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from websearchengine_spark.functions.codec import (
+    block_ids,
     concat_binary_column,
     vb_blocked_arrow,
     vb_decode,
@@ -128,7 +129,7 @@ def _blocks_to_runs(shift: int):
 
     Only the ids payload is rewritten (its head gap is block-relative);
     tfs/dls payloads pass through untouched. One vectorized vb_decode +
-    segmented cumsum + re-encode per batch — the same primitives the block
+    segmented cumsum (codec.block_ids) + re-encode per batch — the same primitives the block
     encoder itself uses (plans.block_index._make_stream_encoder)."""
     import pyarrow as pa
 
@@ -143,13 +144,7 @@ def _blocks_to_runs(shift: int):
             n = len(vals)
             starts = np.concatenate(([0], np.cumsum(ns)[:-1]))
             ends = np.concatenate((starts[1:], [n]))
-            # within-block cumsum of gaps; head gap is measured from
-            # (doc_lo - 1), so absolute id = rel + doc_lo - 1
-            c = np.cumsum(vals, dtype=np.uint64)
-            base = (c - vals)[starts]
-            rel = (c - np.repeat(base, ns)).astype(np.int64)
-            ids = rel + np.repeat(los - 1 + shift, ns)
-            u = ids.astype(np.uint64)
+            u = (block_ids(vals, ns, los) + shift).astype(np.uint64)
             gaps = np.empty(n, dtype=np.uint64)
             if n:
                 gaps[0] = u[0]
