@@ -710,3 +710,156 @@ def test_texts_sidecar_matches_transcripts_fallback(spark, fixture, tmp_path_fac
         assert ahi < blo
     n_docs = sum(hi - lo + 1 for lo, hi in ranges)
     assert n_docs == reader.n_docs
+
+
+@pytest.fixture(scope="module")
+def sidecar_lifecycle(spark, tmp_path_factory):
+    """store_texts indexes from every sidecar writer: two builds (4
+    partitions each, so a doc_stats file holds ~1,450 rows — past the
+    row-group bound), their merge, and the purge of that merge after a
+    tombstone. The merge has 8 sidecar files, more than the session's 4
+    cores, which is where Spark packs several files into one scan task.
+    Plus the raw transcripts for the fallback fetch."""
+    from websearchengine_spark.fixtures import generate_fixture
+    from websearchengine_spark.plans.delete_index import (
+        purge_deletes,
+        tombstone_delete,
+    )
+    from websearchengine_spark.plans.merge_index import merge_block_indexes
+
+    t = generate_fixture(n_convs=600, seed=7).transcripts
+    convs = sorted(t["conv_id"].unique())
+    root = str(tmp_path_factory.mktemp("sidecars"))
+    kw = dict(resume=False, n_buckets=4, num_partitions=4, store_texts=True)
+    half = t["conv_id"].isin(convs[: len(convs) // 2])
+    build_block_index(spark.createDataFrame(t[half]), f"{root}/a",
+                      build_id="a", **kw)
+    build_block_index(spark.createDataFrame(t[~half]), f"{root}/b",
+                      build_id="b", **kw)
+    merge_block_indexes(spark, f"{root}/a", f"{root}/b", f"{root}/merged")
+    tombstone_delete(spark, f"{root}/merged", conv_ids=convs[::7])
+    purge_deletes(spark, f"{root}/merged", f"{root}/purged")
+    tpath = f"{root}/transcripts"
+    spark.createDataFrame(t).write.mode("overwrite").parquet(tpath)
+    return {"build": f"{root}/a", "merge": f"{root}/merged",
+            "purge": f"{root}/purged", "transcripts": tpath}
+
+
+@pytest.mark.parametrize("stage", ["build", "merge", "purge"])
+@pytest.mark.parametrize("table", ["doc_stats", "texts"])
+def test_doc_sidecars_are_clustered_with_bounded_row_groups(
+    sidecar_lifecycle, stage, table
+):
+    """Every sidecar writer (build, merge, purge) leaves doc_stats and
+    texts doc_id-ascending per file over disjoint file ranges, cut into
+    row groups of at most SIDECAR_BLOCK_BYTES: result assembly decodes
+    whole row groups, so the group size is the rows a k-result page
+    reads per result."""
+    import pyarrow.parquet as pq_
+    from websearchengine_spark.plans.block_index import SIDECAR_BLOCK_BYTES
+
+    d = os.path.join(sidecar_lifecycle[stage], table)
+    ranges, n_rows, multi = [], 0, 0
+    for fn in sorted(os.listdir(d)):
+        if not fn.endswith(".parquet"):
+            continue
+        pf = pq_.ParquetFile(os.path.join(d, fn))
+        ids = pf.read(columns=["doc_id"])["doc_id"].to_numpy()
+        if len(ids) == 0:
+            continue
+        assert np.all(np.diff(ids) > 0), fn
+        ranges.append((int(ids[0]), int(ids[-1])))
+        n_rows += len(ids)
+        md = pf.metadata
+        groups = [md.row_group(i) for i in range(md.num_row_groups)]
+        for rg in groups:
+            # parquet-mr first checks a group's size at 100 rows, so a
+            # group may pass the bound by up to 100 of its rows
+            over = rg.total_byte_size - SIDECAR_BLOCK_BYTES
+            assert over <= 100 * rg.total_byte_size / rg.num_rows, (
+                fn, rg.num_rows, rg.total_byte_size
+            )
+        if sum(rg.total_byte_size for rg in groups) > SIDECAR_BLOCK_BYTES:
+            assert len(groups) > 1, (fn, len(ids))
+            multi += 1
+    ranges.sort()
+    for (_, ahi), (blo, _) in zip(ranges, ranges[1:]):
+        assert ahi < blo
+    assert n_rows == BlockIndexReader(sidecar_lifecycle[stage]).n_docs
+    assert multi  # the fixture reaches the bound in every table
+
+
+@pytest.mark.parametrize("stage", ["build", "merge", "purge"])
+def test_doc_sidecar_fetch_reads_at_most_k_row_groups(
+    sidecar_lifecycle, stage, monkeypatch
+):
+    """A k-doc meta_for / texts_for decodes at most k row groups per
+    table (the O(k) page-table seek), and returns what the transcripts
+    fallback and a full doc_stats read return."""
+    import pyarrow.parquet as pq_
+    from websearchengine_spark.operators.snippets import SnippetService
+
+    idx = sidecar_lifecycle[stage]
+    n = BlockIndexReader(idx).n_docs
+    doc_ids = sorted({0, n - 1, *range(3, n, max(n // 9, 1))})
+    k = len(doc_ids)
+    fast = SnippetService(os.path.join(idx, "doc_stats"),
+                          texts_path=os.path.join(idx, "texts"))
+    slow = SnippetService(os.path.join(idx, "doc_stats"),
+                          sidecar_lifecycle["transcripts"])
+    groups = []
+    real = pq_.ParquetFile.read_row_groups
+
+    def counting(self, row_groups, *a, **kw):
+        groups.append(len(row_groups))
+        return real(self, row_groups, *a, **kw)
+
+    monkeypatch.setattr(pq_.ParquetFile, "read_row_groups", counting)
+    meta = fast.meta_for(doc_ids)
+    meta_groups, groups[:] = sum(groups), []
+    texts = fast.texts_for(doc_ids)
+    text_groups = sum(groups)
+    monkeypatch.undo()
+    assert 0 < meta_groups <= k and 0 < text_groups <= k
+    assert texts == slow.texts_for(doc_ids)
+    full = pq_.read_table(os.path.join(idx, "doc_stats")).to_pylist()
+    assert meta == {
+        r["doc_id"]: {c: r[c] for c in ("conv_id", "turn_idx", "role")}
+        for r in full if r["doc_id"] in set(doc_ids)
+    }
+    assert sorted(meta) == doc_ids
+
+
+def test_doc_id_rgs_reads_groups_without_statistics(tmp_path):
+    """Row groups without doc_id min/max statistics are read on every
+    fetch (a superset, never a wrong answer), next to stat-pruned groups
+    and under the overlapping-range fallback."""
+    import pyarrow as pa_
+    import pyarrow.parquet as pq_
+    from websearchengine_spark.operators.snippets import _DocIdRGs
+
+    def table(ids):
+        return pa_.table({"doc_id": pa_.array(ids, type=pa_.int64()),
+                          "text": [f"t{i}" for i in ids]})
+
+    d = tmp_path / "side"
+    d.mkdir()
+    pq_.write_table(table(range(0, 1000)), d / "a.parquet",
+                    row_group_size=100, write_statistics=False)
+    pq_.write_table(table(range(1000, 2000)), d / "b.parquet",
+                    row_group_size=100)
+    r = _DocIdRGs(str(d))
+    assert len(r.no_stats) == 10 and len(r.lo) == 10 and r.disjoint
+    want = [5, 505, 999, 1500, 5000]
+    got = r.read(want, ["doc_id", "text"]).to_pylist()
+    assert got == [{"doc_id": i, "text": f"t{i}"} for i in want[:4]]
+    assert r.read([], ["doc_id"]).num_rows == 0
+    # unclustered file: group ranges overlap, every group is range-tested
+    e = tmp_path / "unclustered.parquet"
+    ids = list(range(0, 1000, 2)) + list(range(1, 1000, 2))
+    pq_.write_table(table(ids), e, row_group_size=100)
+    u = _DocIdRGs(str(e))
+    assert not u.disjoint
+    assert sorted(u.read([1, 2, 997], ["doc_id"])["doc_id"].to_pylist()) == [
+        1, 2, 997
+    ]

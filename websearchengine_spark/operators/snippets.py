@@ -35,8 +35,12 @@ page-table byte offsets into the corpus file, main.cpp:63-69, 498).
 from __future__ import annotations
 
 import os
+from itertools import groupby
+from operator import itemgetter
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import Column
@@ -44,18 +48,28 @@ from pyspark.sql import functions as F
 
 
 class _DocIdRGs:
-    """Row-group-pruned point reads over a doc_id-sorted parquet table
-    (the text sidecar / doc_stats). pyarrow's dataset Scanner does NOT
-    prune parquet row groups from filter expressions (measured in
-    operators/wand._BucketRGs — the same 80%-of-query-time finding), so a
-    ``doc_id isin`` over a multi-GB sidecar decodes the WHOLE table. This
-    reads each file's footer once (O(row groups) metadata, no data pages)
-    and serves a k-doc fetch via ``read_row_groups`` on exactly the groups
-    whose doc_id min/max can contain a wanted id — the reference's
-    page-table ``begin/end`` byte seek (main.cpp:498) for parquet. Missing
-    statistics degrade to reading that group (superset, never wrong)."""
+    """Point reads over a doc_id-clustered parquet sidecar (doc_stats,
+    texts) — the reference's page-table ``begin/end`` byte seek
+    (main.cpp:498) for parquet. pyarrow's dataset Scanner does NOT prune
+    parquet row groups from filter expressions (measured in
+    operators/wand._BucketRGs), so a ``doc_id isin`` over a multi-GB
+    sidecar would decode the WHOLE table.
 
-    __slots__ = ("parts", "stats")
+    The footers are read once into numpy arrays (doc_id min/max plus the
+    (file, row group) address: 24 B per row group, no data pages; the open
+    ``ParquetFile`` handles also keep each parsed footer, ~270 B per row
+    group of a two-column table). The sidecar writer
+    (plans/block_index.write_doc_sidecar) bounds each row group to
+    ``SIDECAR_BLOCK_BYTES``, so the groups are disjoint doc_id ranges of
+    ~100-500 rows, and a k-doc fetch ``searchsorted``s the k ids into
+    them — O(k log R) for R row groups — and decodes at most k groups.
+    Superset reads only, never a wrong answer: a group without min/max
+    statistics is read on every fetch, and a sidecar whose groups overlap
+    (one written before the bound, e.g. by a purge whose scan packed
+    several files into one task) falls back to testing every group's
+    range."""
+
+    __slots__ = ("parts", "lo", "hi", "fi", "ri", "no_stats", "disjoint")
 
     def __init__(self, path: str):
         files = (
@@ -68,48 +82,60 @@ class _DocIdRGs:
             else [path]
         )
         self.parts = [pq.ParquetFile(p) for p in files]
-        self.stats: list[list[tuple[int, int] | None]] = []
-        for pf in self.parts:
+        lo, hi, fi, ri = [], [], [], []
+        self.no_stats: list[tuple[int, int]] = []
+        for f, pf in enumerate(self.parts):
             md = pf.metadata
-            rgs: list[tuple[int, int] | None] = []
-            for ri in range(md.num_row_groups):
-                rg = md.row_group(ri)
-                st = None
-                for ci in range(rg.num_columns):
-                    col = rg.column(ci)
-                    if col.path_in_schema == "doc_id":
-                        s = col.statistics
-                        if s is not None and s.has_min_max:
-                            st = (int(s.min), int(s.max))
-                        break
-                rgs.append(st)
-            self.stats.append(rgs)
+            col = md.schema.names.index("doc_id")
+            for r in range(md.num_row_groups):
+                st = md.row_group(r).column(col).statistics
+                if st is not None and st.has_min_max:
+                    lo.append(st.min)
+                    hi.append(st.max)
+                    fi.append(f)
+                    ri.append(r)
+                else:
+                    self.no_stats.append((f, r))
+        order = np.argsort(np.asarray(lo, dtype=np.int64), kind="stable")
+        self.lo = np.asarray(lo, dtype=np.int64)[order]
+        self.hi = np.asarray(hi, dtype=np.int64)[order]
+        self.fi = np.asarray(fi, dtype=np.int32)[order]
+        self.ri = np.asarray(ri, dtype=np.int32)[order]
+        # sorted by min, disjoint ⇒ only the last group with min <= id can
+        # hold id
+        self.disjoint = bool(np.all(self.lo[1:] > self.hi[:-1]))
 
     def read(self, doc_ids: list[int], columns: list[str]) -> "pa.Table":
-        import bisect
-
-        wanted = sorted(set(doc_ids))
-        out = []
-        for pf, rgs in zip(self.parts, self.stats):
-            sel = [
-                ri
-                for ri, st in enumerate(rgs)
-                if st is None
-                or (
-                    (i := bisect.bisect_left(wanted, st[0])) < len(wanted)
-                    and wanted[i] <= st[1]
-                )
-            ]
-            if sel:
-                out.append(pf.read_row_groups(sel, columns=columns))
+        wanted = np.unique(np.asarray(doc_ids, dtype=np.int64))
+        if self.disjoint or not len(wanted):
+            g = np.searchsorted(self.lo, wanted, side="right") - 1
+            ok = g >= 0
+            g = g[ok]
+            g = g[wanted[ok] <= self.hi[g]]
+        else:
+            i = np.searchsorted(wanted, self.lo)
+            g = np.flatnonzero(
+                (i < len(wanted))
+                & (wanted[np.minimum(i, len(wanted) - 1)] <= self.hi)
+            )
+        sel = sorted(
+            set(zip(self.fi[g].tolist(), self.ri[g].tolist()))
+            | set(self.no_stats)
+        )
+        # one read per file, groups in file order (the order a full scan
+        # would return the rows in)
+        out = [
+            self.parts[f].read_row_groups(
+                [r for _, r in grp], columns=columns, use_threads=False
+            )
+            for f, grp in groupby(sel, key=itemgetter(0))
+        ]
         if not out:
             schema = self.parts[0].schema_arrow
             return pa.table(
                 {c: pa.array([], type=schema.field(c).type) for c in columns}
             )
         tbl = pa.concat_tables(out)
-        import pyarrow.compute as pc
-
         return tbl.filter(
             pc.is_in(tbl.column("doc_id"), value_set=pa.array(wanted))
         )
@@ -258,8 +284,9 @@ class SnippetService:
     ``texts_path`` (the index's doc_id-clustered text sidecar, written by
     ``build_block_index(store_texts=True)``) is the scale path: it is the
     reference's O(1) ``begin/end`` byte seek into docs.txt (main.cpp:498,
-    create_index.cpp:152-156) — a doc_id isin filter over a doc_id-sorted
-    table prunes to the k row groups holding the k results. Without it the
+    create_index.cpp:152-156) — the k results' ids are searchsorted into
+    the sidecar's bounded row groups, so a fetch decodes at most k of them
+    (:class:`_DocIdRGs`; doc_stats is read the same way). Without it the
     fallback filters the raw transcripts by conv_id, which at corpus scale
     is a scan unless the table happens to be clustered by conv_id."""
 

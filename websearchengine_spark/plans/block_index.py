@@ -138,8 +138,9 @@ class BlockIndexPaths:
         """Optional doc_id-clustered text sidecar (``store_texts=True``) —
         the reference's page-table byte-offset seek into docs.txt
         (main.cpp:498, create_index.cpp:152-156) as a parquet table whose
-        files/row-groups are contiguous doc_id ranges: a snippet fetch for
-        k doc_ids reads k row groups, never the corpus."""
+        files/row-groups are contiguous doc_id ranges (written by
+        :func:`write_doc_sidecar`): a snippet fetch for k doc_ids reads at
+        most k bounded row groups, never the corpus."""
         return self._child("texts")
 
     @property
@@ -189,6 +190,35 @@ def _clear_stale_deletes(paths: BlockIndexPaths) -> None:
     # crash-recovery sibling of the tombstone swap (delete_index.py)
     shutil.rmtree(paths.deletes + ".prev", ignore_errors=True)
 
+
+# Row-group byte bound of the lexicon (term-clustered, bucketed): build and
+# merge/purge write it with the same layout.
+LEXICON_BLOCK_BYTES = 256 << 10
+
+# Row-group byte bound of the doc_id-clustered sidecars (doc_stats, texts).
+# The serving result assembly (operators/snippets._DocIdRGs) decodes whole
+# row groups, so this bounds the rows a k-result page reads: at most k
+# groups per table. On the perfbench serve index (50k turns) 32 KiB gives
+# ~160 turns of text and ~495 doc_stats rows per group, versus ~1,250 turns
+# (texts at 256 KiB) and ~6,250 rows (doc_stats at parquet's 128 MB
+# default, one group per file). Measured there, meta + texts fetch per
+# 10-result page: 16 KiB 2.3 ms, 32 KiB 3.1 ms, 64 KiB 4.3 ms. 16 KiB
+# would save ~0.8 ms more but doubles the doc_stats row groups (the reader
+# keeps every footer) and grows doc_stats 20 % on disk; parquet-mr first
+# checks a group's size at 100 rows, so texts stop shrinking there anyway.
+SIDECAR_BLOCK_BYTES = 32 << 10
+
+
+def write_doc_sidecar(df: DataFrame, path: str) -> None:
+    """Write one of the index's doc_id-clustered sidecars (doc_stats,
+    texts) with row groups bounded by :data:`SIDECAR_BLOCK_BYTES` — the
+    one writer of both for build, merge and purge. ``df`` must already be
+    doc_id-ascending within each partition; the row groups' doc_id
+    min/max statistics are then the page table ``_DocIdRGs`` searches."""
+    write_table(
+        df, path, mode="overwrite",
+        options={"parquet.block.size": SIDECAR_BLOCK_BYTES},
+    )
 
 def _make_stream_encoder(
     avg_dl: float,
@@ -715,11 +745,11 @@ def build_block_index(
             paths.lexicon,
             mode="overwrite",
             partition_by=("bucket",),
-            options={"parquet.block.size": 256 << 10},
+            options={"parquet.block.size": LEXICON_BLOCK_BYTES},
         )
 
     def _write_doc_stats():
-        write_table(doc_stats, paths.doc_stats, mode="overwrite")
+        write_doc_sidecar(doc_stats, paths.doc_stats)
 
     def _write_meta():
         write_table(
@@ -740,10 +770,9 @@ def build_block_index(
 
     def _write_texts():
         # flat's partitions are contiguous docID ranges with doc-ascending
-        # rows, so writing directly (no shuffle, no sort) yields files whose
-        # row groups are contiguous doc_id ranges — parquet min/max stats
-        # make a k-doc snippet fetch read k row groups (the page-table seek)
-        write_table(
+        # rows, so writing directly (no shuffle, no sort) yields files of
+        # contiguous doc_id ranges, cut into bounded row groups
+        write_doc_sidecar(
             flat.filter(F.col("term").isNull())
             .withColumn("pid", F.shiftright("run_pos", 32).cast("int"))
             .join(
@@ -757,8 +786,6 @@ def build_block_index(
             )
             .select((F.col("doc_id") + F.col("_off")).alias("doc_id"), "text"),
             paths.texts,
-            mode="overwrite",
-            options={"parquet.block.size": 256 << 10},
         )
 
     writers = [_write_lexicon, _write_doc_stats, _write_meta] + (

@@ -74,6 +74,7 @@ from websearchengine_spark.plans.block_index import (
     BuildMetrics,
     _clear_stale_deletes,
     live_deletes_dir,
+    write_doc_sidecar,
 )
 from websearchengine_spark.plans.build import tokenize_postings
 from websearchengine_spark.plans.merge_index import (
@@ -83,6 +84,7 @@ from websearchengine_spark.plans.merge_index import (
     TEXTS_SCHEMA,
     _finalize_metrics,
     _leaf_blocks,
+    _one_file_per_task,
     _salt_encode_write_blocks,
     _write_lexicon,
     _write_meta,
@@ -516,15 +518,15 @@ def purge_deletes(
         num_partitions, avg_dl, block_size, n_buckets, out_p,
     )
     _write_lexicon(lexicon, out_p, n_buckets)
-    write_table(
-        _remap_doc_ids(
-            read_table(spark, paths.doc_stats, schema=DOC_STATS_SCHEMA),
-            bc,
-            DOC_STATS_SCHEMA,
-        ),
-        out_p.doc_stats,
-        mode="overwrite",
-    )
+    with _one_file_per_task(spark):
+        write_doc_sidecar(
+            _remap_doc_ids(
+                read_table(spark, paths.doc_stats, schema=DOC_STATS_SCHEMA),
+                bc,
+                DOC_STATS_SCHEMA,
+            ),
+            out_p.doc_stats,
+        )
     # preserve the staging-id-space watermark across the purge: n_docs
     # shrinks to the live count, but the batches this index has ABSORBED
     # don't change — compact_incremental keys its new-batch detection on
@@ -538,16 +540,15 @@ def purge_deletes(
     if os.path.isdir(paths.texts):
         # filtered + remapped sidecar: the monotone remap preserves each
         # file's doc_id clustering, so row-group pruning still holds
-        write_table(
-            _remap_doc_ids(
-                read_table(spark, paths.texts, schema=TEXTS_SCHEMA),
-                bc,
-                TEXTS_SCHEMA,
-            ),
-            out_p.texts,
-            mode="overwrite",
-            options={"parquet.block.size": 256 << 10},
-        )
+        with _one_file_per_task(spark):
+            write_doc_sidecar(
+                _remap_doc_ids(
+                    read_table(spark, paths.texts, schema=TEXTS_SCHEMA),
+                    bc,
+                    TEXTS_SCHEMA,
+                ),
+                out_p.texts,
+            )
 
     metrics = _finalize_metrics(
         spark, out_p, build_id, fingerprint, n_live, avg_dl, t0

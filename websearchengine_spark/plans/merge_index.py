@@ -48,6 +48,7 @@ from __future__ import annotations
 
 import os
 import time
+from contextlib import contextmanager
 from typing import NamedTuple
 
 import numpy as np
@@ -64,10 +65,12 @@ from websearchengine_spark.functions.codec import (
 from websearchengine_spark.plans.block_index import (
     BLOCK_SCHEMA,
     BlockIndexPaths,
+    LEXICON_BLOCK_BYTES,
     BuildMetrics,
     _clear_stale_deletes,
     _make_stream_encoder,
     live_deletes_dir,
+    write_doc_sidecar,
 )
 from websearchengine_spark.sources.catalog import (
     is_table_identifier,
@@ -248,6 +251,25 @@ def _salt_encode_write_blocks(
         spark.conf.set(batch_key, prev_batch)
 
 
+@contextmanager
+def _one_file_per_task(spark: SparkSession):
+    """Scan each input file as its own task (a file above the split size
+    as contiguous splits of it) while a sidecar is rewritten from sidecar
+    files. Spark otherwise packs several small files into one task,
+    largest first, so the rewritten doc_id-clustered sidecar gets files
+    that are neither doc_id-ascending nor disjoint (observed on the purge
+    of an 8-file merged index) and row groups whose doc_id range spans
+    other files. An open cost equal to the split size leaves room for one
+    file per task."""
+    key = "spark.sql.files.openCostInBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
 def _write_lexicon(lexicon, out_p: BlockIndexPaths, n_buckets: int) -> None:
     """Bucketed lexicon write (same layout as build_block_index)."""
     write_table(
@@ -259,7 +281,7 @@ def _write_lexicon(lexicon, out_p: BlockIndexPaths, n_buckets: int) -> None:
         out_p.lexicon,
         mode="overwrite",
         partition_by=("bucket",),
-        options={"parquet.block.size": 256 << 10},
+        options={"parquet.block.size": LEXICON_BLOCK_BYTES},
     )
 
 
@@ -621,7 +643,8 @@ def merge_many_block_indexes(
         ds_union = ds_union.unionByName(
             _input_ds(ds, st, shift, DOC_STATS_SCHEMA)
         )
-    write_table(ds_union, out_p.doc_stats, mode="overwrite")
+    with _one_file_per_task(spark):
+        write_doc_sidecar(ds_union, out_p.doc_stats)
     # staged_hwm: the cumulative STAGING-id-space watermark this index has
     # absorbed — Σ of each input's watermark (its own staged_hwm, else its
     # n_docs: for an index that never purged, the docID axis IS the
@@ -637,12 +660,12 @@ def merge_many_block_indexes(
         staged_hwm,
     )
     # texts sidecar: policy (emit_texts) was validated eagerly above; the
-    # write happens here so the sidecar lands after the data tables. Row
-    # groups stay contiguous docID ranges because the union preserves each
-    # side's clustering and each index's shifted ids all sort after the
-    # previous index's. Even when every input is empty the (fileless)
-    # sidecar dir is written: it is the carrier of the store_texts decision
-    # that compact_incremental infers the next delta's build from.
+    # write happens here so the sidecar lands after the data tables. Files
+    # stay contiguous docID ranges because each task scans one input file
+    # and each index's shifted ids all sort after the previous index's.
+    # Even when every input is empty the (fileless) sidecar dir is written:
+    # it is the carrier of the store_texts decision that
+    # compact_incremental infers the next delta's build from.
     if not is_table_identifier(out_dir):
         if emit_texts:
             with_texts = [
@@ -659,12 +682,8 @@ def merge_many_block_indexes(
                     TEXTS_SCHEMA,
                 )
                 texts = part if texts is None else texts.unionByName(part)
-            write_table(
-                texts,
-                out_p.texts,
-                mode="overwrite",
-                options={"parquet.block.size": 256 << 10},
-            )
+            with _one_file_per_task(spark):
+                write_doc_sidecar(texts, out_p.texts)
         else:
             # a reused out_dir may hold a PREVIOUS merge's sidecar; every
             # other table is mode="overwrite", so a textless (or
