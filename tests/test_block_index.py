@@ -268,11 +268,81 @@ def test_rg_pruning_keeps_block_straddling_range_lo():
             kind=0,
             terms=["t"],
             ranges_by_term={"t": [(15, 44)]},
-        )
-        los = sorted(got.column("doc_lo").to_pylist())
+        )["t"]
+        los = got.column("doc_lo").to_pylist()
+        assert los == sorted(los)
         assert 10 in los, f"straddling block pruned away: {los}"
         # the fully-below block [0,9] may legitimately be pruned
         assert set(los) >= {10, 20, 30, 40}
+
+
+def _blocks_table(rows):
+    import pyarrow as pa
+
+    kind, term, lo = zip(*rows)
+    return pa.table({
+        "kind": pa.array(kind, type=pa.int32()),
+        "term": list(term),
+        "doc_lo": pa.array(lo, type=pa.int64()),
+        "doc_hi": pa.array([x + 4 for x in lo], type=pa.int64()),
+    })
+
+
+@pytest.mark.parametrize("cached", [False, True], ids=["rg_cache0", "rg_cache"])
+def test_bucket_rgs_slices_exact_term_runs(tmp_path, cached):
+    """_BucketRGs.read returns exactly each wanted term's rows of the
+    wanted kind, in doc_lo order: a term spanning two row groups, a kind
+    boundary inside one group, a file written without statistics (its
+    run of a term lands between the other file's), and an absent term —
+    with and without the row-group LRU (a second read serves from it)."""
+    import pyarrow.parquet as pq
+
+    from websearchengine_spark.operators.wand import _LRU, _BucketRGs
+
+    # groups of 3: [a0 a10 b0] [b10 b20 b30] [c5 | a0' b0'] [c0']
+    pq.write_table(_blocks_table([
+        (0, "a", 0), (0, "a", 10), (0, "b", 0), (0, "b", 10), (0, "b", 20),
+        (0, "b", 30), (0, "c", 5), (1, "a", 0), (1, "b", 0), (1, "c", 0),
+    ]), tmp_path / "part-0.parquet", row_group_size=3)
+    pq.write_table(_blocks_table([(0, "b", 15), (0, "d", 7), (1, "d", 0)]),
+                   tmp_path / "part-1.parquet", write_statistics=False)
+    rgs = _BucketRGs(str(tmp_path), rg_cache=_LRU(16) if cached else None)
+    assert rgs.stats[1][0]["term"] is None  # the no-statistics file
+
+    def los(kind, terms):
+        got = rgs.read(["doc_hi"], terms, kind=kind)
+        for t, tbl in got.items():
+            assert set(tbl.column("term").to_pylist()) == {t}
+            assert set(tbl.column("kind").to_pylist()) == {kind}
+        return {t: tbl.column("doc_lo").to_pylist() for t, tbl in got.items()}
+
+    for _ in range(2):
+        assert los(0, ["b", "bb", "c", "d"]) == {
+            "b": [0, 10, 15, 20, 30], "c": [5], "d": [7]
+        }
+        assert los(1, ["a", "b", "bb", "c", "d"]) == {
+            "a": [0], "b": [0], "c": [0], "d": [0]
+        }
+        assert los(0, ["a"]) == {"a": [0, 10]}
+        assert los(0, ["zz"]) == {}
+
+
+@pytest.mark.parametrize("broken", ["kind", "term", "doc_lo"])
+def test_bucket_rgs_rejects_unsorted_row_group(tmp_path, broken):
+    """Slicing is exact only on (kind, term, doc_lo)-sorted groups, so a
+    group out of that order fails loudly instead of returning wrong rows."""
+    import pyarrow.parquet as pq
+
+    from websearchengine_spark.operators.wand import _BucketRGs
+
+    rows = {
+        "kind": [(1, "a", 0), (0, "b", 0)],
+        "term": [(0, "b", 0), (0, "a", 0)],
+        "doc_lo": [(0, "a", 10), (0, "a", 0)],
+    }[broken]
+    pq.write_table(_blocks_table(rows), tmp_path / "part-0.parquet")
+    with pytest.raises(ValueError, match="not clustered"):
+        _BucketRGs(str(tmp_path)).read(["doc_hi"], ["a", "b"])
 
 
 def test_shard_cuts_inside_blocks_with_tiny_row_groups(index_dir, fixture):
@@ -496,6 +566,240 @@ def test_match_count_and_result_freqs(reader, oracle, fixture):
         assert fl == sorted(fl)
         for t, tf in fl:
             assert oracle.postings[t][d] == tf
+
+
+_ROUTES = ("_search_lead", "_search_taat", "_search_wand_blocks",
+           "_search_taat_parallel")
+
+
+def _spy_routes(monkeypatch) -> dict:
+    """Count the scorer each search() call runs."""
+    hits = dict.fromkeys(_ROUTES, 0)
+    for name in _ROUTES:
+        real = getattr(BlockIndexReader, name)
+
+        def spy(self, *a, _real=real, _name=name, **kw):
+            hits[_name] += 1
+            return _real(self, *a, **kw)
+
+        monkeypatch.setattr(BlockIndexReader, name, spy)
+    return hits
+
+
+def _assert_full_matches_cross_check(r, queries, k=10):
+    """search_full's count and freqs equal the independent match_count /
+    result_freqs, on the first pass and on a result-cache hit."""
+    from websearchengine_spark.functions.tokenizer import clean_query
+
+    seen = set()
+    for q in queries:
+        for conj in (True, False):
+            for _ in range(2):
+                key = (tuple(clean_query(q)), conj)
+                res = r.search_full(q, conjunctive=conj, n_results=k)
+                assert res["cached"] == (key in seen), (q, conj)
+                seen.add(key)
+                ranked = r.search(q, conjunctive=conj, k=k)
+                if not ranked:
+                    assert res["count"] == 0 and res["data"] == []
+                    continue
+                assert res["count"] == r.match_count(q, conjunctive=conj), (
+                    q, conj
+                )
+                freqs = r.result_freqs(q, [d for _, d, _ in ranked])
+                assert [it["freqs"] for it in res["data"]] == [
+                    [list(p) for p in freqs[d]] for _, d, _ in ranked
+                ], (q, conj)
+
+
+# the scorers each reader fixture must reach through search_full
+_FIXTURE_ROUTES = {
+    "taat": {"_search_lead", "_search_taat"},
+    "taat_sparse": {"_search_lead", "_search_taat"},
+    "taat_parallel": {"_search_lead", "_search_taat_parallel"},
+    "wand": {"_search_lead", "_search_taat", "_search_wand_blocks"},
+}
+
+
+def test_search_full_count_and_freqs_on_every_route(
+    reader, fixture, request, monkeypatch
+):
+    """The TAAT (flat and compressed) and lead routes return count and
+    freqs from the pass that ranked; WAND and parallel TAAT fill them from
+    match_count / result_freqs. Either way they must equal the cross-
+    check, single-term queries and OOV terms included."""
+    reader._result_cache.clear()
+    routes = _spy_routes(monkeypatch)
+    queries = list(fixture.queries["query"]) + [
+        "the", "data", "the data value", "nosuchterm the",
+    ]
+    _assert_full_matches_cross_check(reader, queries)
+    want = _FIXTURE_ROUTES[request.node.callspec.params["reader"]]
+    assert {n for n, c in routes.items() if c} == want, routes
+
+
+def test_search_full_count_and_freqs_after_wand_bail_out(
+    index_dir, fixture, monkeypatch
+):
+    """WAND that bails out to TAAT (block bounds don't prune) returns the
+    TAAT pass's count and freqs."""
+    r = BlockIndexReader(index_dir, taat_threshold=0)
+    routes = _spy_routes(monkeypatch)
+    bailed = []
+    real = BlockIndexReader._search_wand_blocks
+
+    def watch(self, *a, **kw):
+        out = real(self, *a, **kw)
+        bailed.append(out is None)
+        return out
+
+    monkeypatch.setattr(BlockIndexReader, "_search_wand_blocks", watch)
+    queries = list(fixture.queries["query"]) + ["the", "the data value"]
+    _assert_full_matches_cross_check(r, queries)
+    assert any(bailed) and routes["_search_taat"], (bailed, routes)
+
+
+@pytest.fixture(scope="module")
+def ghost_index(index_dir):
+    """index_dir plus a lexicon row for a term with no posting rows (a
+    partially written index): the lexicon says present, the blocks have
+    nothing to fetch."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from websearchengine_spark.plans.block_index import term_bucket
+
+    out = index_dir + "_ghost"
+    if not os.path.isdir(out):
+        shutil.copytree(index_dir, out)
+        bdir = os.path.join(out, "lexicon", f"bucket={term_bucket('zzghost', 8)}")
+        fn = sorted(f for f in os.listdir(bdir) if f.endswith(".parquet"))[0]
+        path = os.path.join(bdir, fn)
+        tbl = pq.read_table(path)
+        ghost = pa.table(
+            {"term": ["zzghost"], "df": [1], "cf": [1]}
+        ).cast(tbl.schema)
+        tbl = pa.concat_tables([tbl, ghost]).sort_by("term")
+        pq.write_table(tbl, path)
+    return out
+
+
+@pytest.mark.parametrize(
+    "kw", [{}, dict(dense_docs_max=0), dict(taat_threshold=0, dense_docs_max=0)],
+    ids=["taat", "taat_sparse", "wand"],
+)
+def test_search_full_counts_with_a_lexicon_term_without_postings(
+    ghost_index, kw, monkeypatch
+):
+    """A lexicon term that fetches no posting rows drops out of every
+    route (it is absent from the intersection match_count takes), and the
+    count and freqs the scorer returns agree with the cross-check."""
+    r = BlockIndexReader(ghost_index, **kw)
+    assert "zzghost" in r.lexicon_rows(["zzghost"])
+    routes = _spy_routes(monkeypatch)
+    queries = ["zzghost the data", "zzghost data", "zzghost the"]
+    _assert_full_matches_cross_check(r, queries)
+    # df 1 makes the ghost the rarest term: conjunctive queries take the
+    # lead route, disjunctive ones TAAT or WAND
+    assert routes["_search_lead"]
+    assert routes["_search_taat"] + routes["_search_wand_blocks"]
+    for q in queries:
+        assert r.search_full(q, conjunctive=True)["count"] > 0, q
+
+
+def test_search_full_cache_hit_decodes_nothing(reader, fixture, monkeypatch):
+    """A result-cache hit answers count and freqs from the cached result:
+    no row-group read and no varbyte decode, on every route."""
+    import pyarrow.parquet as pq
+
+    from websearchengine_spark.operators import wand
+
+    reader._result_cache.clear()
+    queries = list(fixture.queries["query"])[:8] + ["the", "the data value"]
+    for q in queries:
+        for conj in (True, False):
+            reader.search_full(q, conjunctive=conj)
+    calls = {"rg": 0, "vb": 0}
+    real_rg, real_vb = pq.ParquetFile.read_row_groups, wand.vb_decode
+
+    def rg(self, *a, **kw):
+        calls["rg"] += 1
+        return real_rg(self, *a, **kw)
+
+    def vb(buf):
+        calls["vb"] += 1
+        return real_vb(buf)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", rg)
+    monkeypatch.setattr(wand, "vb_decode", vb)
+    for q in queries:
+        for conj in (True, False):
+            assert reader.search_full(q, conjunctive=conj)["cached"]
+    assert calls == {"rg": 0, "vb": 0}
+
+
+def test_serving_reads_never_filter_rows(index_dir, fixture, monkeypatch):
+    """Block and lexicon reads slice each term's run out of the sorted
+    row groups; no per-row membership filter runs."""
+    from websearchengine_spark.operators import wand
+
+    def boom(*a, **kw):
+        raise AssertionError("pc.is_in called on the serving read path")
+
+    monkeypatch.setattr(wand.pc, "is_in", boom)
+    for kw in ({}, dict(taat_threshold=0, dense_docs_max=0),
+               dict(rg_cache=0)):
+        r = BlockIndexReader(index_dir, **kw)
+        for q in list(fixture.queries["query"]) + ["the data value"]:
+            for conj in (True, False):
+                r.search_full(q, conjunctive=conj)
+
+
+def test_search_full_16_threads_match_single_thread(index_dir, fixture):
+    """16 threads share one reader (the ThreadingHTTPServer shape) over
+    mixed conjunctive/disjunctive queries; every response — count and
+    freqs included — equals the single-threaded one. Small caches keep
+    evictions racing; lazily filled WAND counts race on shared cached
+    results."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    queries = list(fixture.queries["query"]) + ["the", "the data value"]
+    kws = (dict(result_cache=8, posting_cache=8, rg_cache=2),
+           dict(result_cache=8, posting_cache=64, taat_threshold=0))
+
+    def strip(res):
+        return {k: v for k, v in res.items() if k not in ("time", "cached")}
+
+    for kw in kws:
+        solo = BlockIndexReader(index_dir, **kw)
+        want = {
+            (q, conj): strip(solo.search_full(q, conjunctive=conj))
+            for q in queries
+            for conj in (True, False)
+        }
+        shared = BlockIndexReader(index_dir, **kw)
+
+        def worker(offset):
+            bad = []
+            for i in range(2 * len(queries)):
+                q = queries[(i + offset) % len(queries)]
+                conj = (i + offset) % 2 == 0
+                got = strip(shared.search_full(q, conjunctive=conj))
+                if got != want[(q, conj)]:
+                    bad.append((q, conj))
+            return bad
+
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)  # switch threads as often as possible
+        try:
+            with ThreadPoolExecutor(max_workers=16) as pool:
+                results = list(pool.map(worker, range(16), timeout=300))
+        finally:
+            sys.setswitchinterval(interval)
+        assert all(not b for b in results), (kw, [b[:1] for b in results if b])
 
 
 def test_hot_term_salt_scales_to_wide_vocab(spark, tmp_path_factory):
@@ -863,3 +1167,28 @@ def test_doc_id_rgs_reads_groups_without_statistics(tmp_path):
     assert sorted(u.read([1, 2, 997], ["doc_id"])["doc_id"].to_pylist()) == [
         1, 2, 997
     ]
+
+
+@pytest.mark.parametrize("stage", ["build", "merge", "purge"])
+@pytest.mark.parametrize("table", ["blocks", "lexicon"])
+def test_index_row_groups_are_sorted(sidecar_lifecycle, stage, table):
+    """Every writer (build, merge, purge) leaves each blocks row group
+    sorted by (kind, term, doc_lo) and each lexicon row group by term —
+    the order the serving reader's run slicing is exact under."""
+    import pyarrow.parquet as pq_
+
+    keys = ["kind", "term", "doc_lo"] if table == "blocks" else ["term"]
+    root = os.path.join(sidecar_lifecycle[stage], table)
+    n_groups = 0
+    for bdir in sorted(os.listdir(root)):
+        full = os.path.join(root, bdir)
+        if not os.path.isdir(full):
+            continue
+        for fn in sorted(f for f in os.listdir(full) if f.endswith(".parquet")):
+            pf = pq_.ParquetFile(os.path.join(full, fn))
+            for ri in range(pf.metadata.num_row_groups):
+                rows = pf.read_row_group(ri, columns=keys).to_pylist()
+                key = [tuple(r[c] for c in keys) for r in rows]
+                assert key == sorted(key), (bdir, fn, ri)
+                n_groups += 1
+    assert n_groups

@@ -159,6 +159,34 @@ def test_tombstone_rankings_bitwise_equal_scratch(deleted_vs_scratch, mode):
         rs.close()
 
 
+@pytest.mark.parametrize("mode", ["taat", "taat_sparse", "wand", "parallel"])
+def test_tombstone_search_full_count_and_freqs_match_cross_check(
+    deleted_vs_scratch, mode
+):
+    """On a tombstoned index, the count and freqs search_full takes from
+    the ranking pass (TAAT, lead) or fills afterwards (WAND, parallel
+    TAAT) equal match_count / result_freqs, first pass and cache hit."""
+    root, _t, _m = deleted_vs_scratch
+    r = _reader(str(root / "full"), mode)
+    try:
+        for q in dict.fromkeys(q for q, _ in QUERIES + [("the", 0)]):
+            for conj in (True, False):
+                for cached in (False, True):
+                    res = r.search_full(q, conjunctive=conj, n_results=10)
+                    assert res["cached"] == cached
+                    ranked = r.search(q, conjunctive=conj, k=10)
+                    if not ranked:
+                        assert res["count"] == 0
+                        continue
+                    assert res["count"] == r.match_count(q, conjunctive=conj)
+                    freqs = r.result_freqs(q, [d for _, d, _ in ranked])
+                    assert [it["freqs"] for it in res["data"]] == [
+                        [list(p) for p in freqs[d]] for _, d, _ in ranked
+                    ], (mode, q, conj)
+    finally:
+        r.close()
+
+
 def test_tombstone_search_full_and_freqs(deleted_vs_scratch):
     root, _t, _m = deleted_vs_scratch
     full, scratch = str(root / "full"), str(root / "scratch")

@@ -127,12 +127,21 @@ def test_snippet_service_roundtrip(spark, tmp_path):
         spark.read.parquet(tpath), out, resume=False, n_buckets=2, num_partitions=2
     )
     svc = sn.SnippetService(os.path.join(out, "doc_stats"), tpath)
-    snips = svc.snippets("fox box", [0, 1, 2], snippet_len=12)
-    assert set(snips) == {0, 1, 2}
-    assert snips[0][0] == 17  # " fox" at 1-based 17 in "the quick brown fox"
-    assert "fox" in snips[0][1] or snips[0][1]  # window includes the hit
-    freqs = svc.result_freqs("fox box", [2])
-    assert freqs[2] == [("box", 1), ("fox", 1)]  # sorted-term order
+    texts = svc.texts_for([0, 1, 2])
+    assert set(texts) == {0, 1, 2}
+    # gate-column snippet semantics over the fetched texts
+    terms = ["box", "fox"]
+    pos = sn.first_match_pos(texts[0], terms)
+    assert pos == 17  # " fox" at 1-based 17 in "the quick brown fox"
+    assert "fox" in sn.make_snippet(texts[0], pos, 12)  # window includes the hit
+    # freqs oracle: tf of each query term in the text, sorted-term order
+    toks = texts[2].split()
+    want = [(t, toks.count(t)) for t in terms if t in toks]
+    assert want == [("box", 1), ("fox", 1)]
+    # ... which the index's freqs (the search_full field) reproduce
+    from websearchengine_spark.operators.wand import BlockIndexReader
+
+    assert BlockIndexReader(out).result_freqs("fox box", [2])[2] == want
 
 
 def test_remap_qrels_natural_keys_to_dense_ids(spark):

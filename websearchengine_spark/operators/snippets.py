@@ -1,5 +1,6 @@
-"""Snippet extraction (reference P13, main.cpp:498-547) + per-result term
-frequencies (J3, main.cpp:610-612 — the `freqs` pairs in the JSON results).
+"""Snippet extraction (reference P13, main.cpp:498-547). The per-result
+term frequencies (J3, main.cpp:610-612 — the `freqs` pairs in the JSON
+results) come from the index postings, in operators/wand.py.
 
 Reference behavior (ported exactly — see :func:`reference_snippet`):
 
@@ -145,7 +146,6 @@ from websearchengine_spark.functions.tokenizer import (
     WORD_RE,
     clean_query,
     is_word_char,
-    tokenize,
 )
 
 
@@ -350,31 +350,3 @@ class SnippetService:
             d: reference_snippet(text, terms, snippet_len)
             for d, text in texts.items()
         }
-
-    def snippets(
-        self, query: str, doc_ids: list[int], snippet_len: int = 120
-    ) -> dict[int, tuple[int, str]]:
-        """doc_id → (match_pos, snippet) under the gate-column semantics
-        (ASCII corpora); use :meth:`reference_snippets` for the byte-exact
-        reference behavior."""
-        terms = clean_query(query)
-        texts = self.texts_for(doc_ids)
-        out = {}
-        for d, text in texts.items():
-            pos = first_match_pos(text, terms)
-            out[d] = (pos, make_snippet(text, pos, snippet_len))
-        return out
-
-    def result_freqs(self, query: str, doc_ids: list[int]) -> dict[int, list[tuple[str, int]]]:
-        """doc_id → [(term, tf)...] in sorted-term order — the reference's
-        `freqs` result field (readme.md:205-223), recomputed from text."""
-        terms = clean_query(query)
-        texts = self.texts_for(doc_ids)
-        out = {}
-        for d, text in texts.items():
-            counts: dict[str, int] = {}
-            for tok in tokenize(text):
-                if tok in terms:
-                    counts[tok] = counts.get(tok, 0) + 1
-            out[d] = [(t, counts[t]) for t in terms if t in counts]
-        return out

@@ -4,9 +4,10 @@ The low-latency counterpart of the exhaustive DataFrame scorer — the rebuild
 of the reference's interactive query processor (main.cpp Searcher, 465-553),
 upgraded from decode-everything-then-full-sort (main.cpp:584-630) to:
 
-- partition-pruned block fetch: only the query terms' buckets/blocks are read
-  (pyarrow dataset over the hive-partitioned blocks table — the analogue of
-  the lexicon-offset fseek, main.cpp:120-173);
+- partition-pruned, run-sliced block fetch: only the query terms' buckets
+  and row groups are read, and each term's rows are sliced out of the
+  sorted groups by bisection — no row filter (the analogue of the
+  lexicon-offset fseek, main.cpp:120-173);
 - lazy per-block varbyte+delta decode with an LRU posting cache
   (main.cpp:466 posting cache analogue);
 - lead-driven vectorized intersection for selective conjunctive queries
@@ -35,16 +36,20 @@ upgraded from decode-everything-then-full-sort (main.cpp:584-630) to:
   (main.cpp:78-110, 424-430);
 - :meth:`BlockIndexReader.search_full` — the reference's assembled result
   object {cached, time, count, data:[{rank, score, freqs, …, snippet}]}
-  (main.cpp:465-553, JSON shape readme.md:205-223).
+  (main.cpp:465-553, JSON shape readme.md:205-223), in one index pass:
+  the TAAT and lead scorers return the match count and the top-k's
+  (term, tf) pairs with the ranking (main.cpp:487, 599-618).
 """
 
 from __future__ import annotations
 
 import heapq
 import math
+import operator
 import os
 import threading
 import time
+from bisect import bisect_left, bisect_right
 from collections import OrderedDict
 from dataclasses import dataclass
 
@@ -54,7 +59,11 @@ import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 
-from websearchengine_spark.functions.codec import block_ids, vb_decode
+from websearchengine_spark.functions.codec import (
+    block_ids,
+    concat_binary_column,
+    vb_decode,
+)
 from websearchengine_spark.functions.tokenizer import clean_query
 from websearchengine_spark.plans.block_index import (
     BlockIndexPaths,
@@ -68,38 +77,45 @@ from websearchengine_spark.plans.block_index import (
 # for its stored bounds — cross-path rank identity and the exactness of
 # strict bound < θ pruning hold at ulp boundaries only while the float
 # expression tree is literally identical everywhere.
-from websearchengine_spark.plans.build import B, K1, tf_component as _tf_component
+from websearchengine_spark.plans.build import tf_component as _tf_component
+
+
+# bisection key over an Arrow string array: compares element values
+# without copying the column into Python objects
+_as_py = operator.methodcaller("as_py")
 
 
 class _BucketRGs:
-    """Row-group-pruned reads over one bucket directory of a hive-
-    partitioned index table.
+    """Row-group-pruned, run-sliced reads over one bucket directory of a
+    hive-partitioned index table.
 
     pyarrow's dataset Scanner does NOT prune parquet row groups from the
     filter expression on these reads (measured at 480k docs: every
     filtered ``to_table`` decoded the bucket's whole payload region —
     ~10 ms per serving fetch, 80% of warm conjunctive query time). The
-    bucket files are written sorted by (kind, term, doc_lo), so per-row-
-    group min/max statistics identify exactly the groups a (kind, term,
-    doc-range) request can touch. This class reads each file's FOOTER once
-    (O(row groups) metadata, no data pages — scale-safe at any corpus
-    size) and serves requests via ``read_row_groups`` on the selected
-    groups; callers apply the exact residual row filter afterwards, so
-    selection only has to be a superset (missing statistics degrade to
-    "read everything", never to wrong answers). This is the reference's
-    page-table byte seek (main.cpp:498) re-expressed for parquet.
+    writers sort every bucket file by (kind, term, doc_lo) (blocks) or
+    term (lexicon), so per-row-group min/max statistics identify the
+    groups a (kind, term, doc-range) request can touch (a superset:
+    missing statistics degrade to "read the group"), and inside a group
+    each term's rows are one contiguous run. This class reads each file's
+    FOOTER once (O(row groups) metadata — scale-safe at any corpus size),
+    reads the selected groups, and bisects each for the kind run and then
+    each wanted term's run, returning zero-copy slices. The slicing is
+    exact only while the sort order holds, so each group's order is
+    checked once, vectorized, when it enters the reader. This is the
+    reference's page-table byte seek (main.cpp:498) for parquet.
 
     ``rg_cache``: optional LRU of decoded row-group tables keyed
     (file, group, columns) — the analogue of the reference's mmap + OS
     page cache (hot row groups stay decoded, cold ones are re-read);
     bounded, so reader memory stays O(cache) at any corpus size."""
 
-    __slots__ = ("parts", "stats", "rg_cache", "_dir")
+    __slots__ = ("files", "parts", "stats", "keys", "rg_cache", "_dir")
 
     def __init__(self, bucket_dir: str, rg_cache: "_LRU | None" = None):
         self.rg_cache = rg_cache
         self._dir = bucket_dir
-        files = (
+        self.files = files = (
             sorted(
                 os.path.join(bucket_dir, f)
                 for f in os.listdir(bucket_dir)
@@ -109,6 +125,10 @@ class _BucketRGs:
             else []
         )
         self.parts = [pq.ParquetFile(p) for p in files]
+        # the writers' sort key, as far as this table has its columns:
+        # (kind, term, doc_lo) for blocks, (term,) for the lexicon
+        names = self.parts[0].schema_arrow.names if self.parts else []
+        self.keys = [c for c in ("kind", "term", "doc_lo") if c in names]
         # per (file, rg): {col: (min, max) or None}
         self.stats: list[list[dict]] = []
         for pf in self.parts:
@@ -136,79 +156,114 @@ class _BucketRGs:
             return True  # no statistics → conservative
         return not (st[1] < lo or st[0] > hi)
 
+    def _group(self, fi: int, ri: int, cols: list[str]) -> pa.Table:
+        """One decoded row group, order-checked when it enters the reader
+        (read from disk, or into the rg LRU)."""
+        pf = self.parts[fi]
+        key = ("rg", self._dir, id(pf), ri, tuple(cols))
+        if self.rg_cache is not None:
+            tbl = self.rg_cache.get_(key)
+            if tbl is not None:
+                return tbl
+        tbl = pf.read_row_groups([ri], columns=cols).combine_chunks()
+        n = tbl.num_rows
+        if n > 1:
+            # rows i and i+1 out of key order ⇔ at the first key column
+            # where they differ, row i+1 is smaller
+            bad = tie = None
+            for c in self.keys:
+                a, b = tbl.column(c).slice(0, n - 1), tbl.column(c).slice(1)
+                lt = pc.less(b, a)
+                bad = lt if bad is None else pc.or_(bad, pc.and_(tie, lt))
+                eq = pc.equal(b, a)
+                tie = eq if tie is None else pc.and_(tie, eq)
+            if bad is not None and pc.any(bad).as_py():
+                raise ValueError(
+                    f"index row group not clustered — rebuild: "
+                    f"{self.files[fi]} row group {ri} is not sorted by "
+                    f"{tuple(self.keys)}"
+                )
+        if self.rg_cache is not None:
+            self.rg_cache.put(key, tbl)
+        return tbl
+
     def read(
         self,
         columns: list[str],
+        terms: list[str],
         kind: int | None = None,
-        terms: list[str] | None = None,
         ranges_by_term: dict[str, list[tuple[int, int]]] | None = None,
-    ) -> pa.Table:
-        """Concatenated rows of every row group whose statistics can
-        contain the request. ``ranges_by_term`` further prunes by doc_lo
-        (only meaningful with per-term ranges; conservative across terms
-        sharing a group)."""
-        out = []
-        want_cols = columns
-        for pf, rgs in zip(self.parts, self.stats):
-            sel = []
+    ) -> dict[str, pa.Table]:
+        """term → its rows (``columns`` plus the sort-key columns) from
+        every row group whose statistics can contain the request, in
+        doc_lo order; terms without rows are absent. ``ranges_by_term``
+        further prunes groups by doc range (only meaningful with per-term
+        ranges; conservative across terms sharing a group) — rows of a
+        wanted term outside its ranges can still ride along."""
+        cols = list(dict.fromkeys([*self.keys, *columns]))
+        runs: dict[str, list[pa.Table]] = {}
+        for fi, rgs in enumerate(self.stats):
             for ri, st in enumerate(rgs):
                 if kind is not None and not self._overlaps(
                     st.get("kind"), kind, kind
                 ):
                     continue
-                if terms is not None:
-                    tst = st.get("term")
-                    if tst is not None and not any(
-                        tst[0] <= t <= tst[1] for t in terms
+                tst = st.get("term")
+                want = (
+                    terms if tst is None
+                    else [t for t in terms if tst[0] <= t <= tst[1]]
+                )
+                if not want:
+                    continue
+                if ranges_by_term is not None and tst is not None:
+                    lst = st.get("doc_lo")
+                    hst = st.get("doc_hi")
+                    # doc stats prune only when the group holds a single
+                    # term (group entirely inside one term). A group can
+                    # contain a block POSTING-overlapping [lo, hi] iff
+                    # min(doc_lo) <= hi and max(doc_hi) >= lo — the
+                    # doc_hi side matters for callers whose range cuts
+                    # fall INSIDE a block (the parallel-decode shards):
+                    # the straddling block can be the last row of a
+                    # group whose every doc_lo < lo. Missing statistics
+                    # degrade to "can't prune" on that side.
+                    if (
+                        tst[0] == tst[1]
+                        and tst[0] in ranges_by_term
+                        and not any(
+                            not (
+                                (hst is not None and hst[1] < lo)
+                                or (lst is not None and lst[0] > hi)
+                            )
+                            for lo, hi in ranges_by_term[tst[0]]
+                        )
                     ):
                         continue
-                    if ranges_by_term is not None and tst is not None:
-                        lst = st.get("doc_lo")
-                        hst = st.get("doc_hi")
-                        # doc stats prune only when the group holds a single
-                        # term (group entirely inside one term). A group can
-                        # contain a block POSTING-overlapping [lo, hi] iff
-                        # min(doc_lo) <= hi and max(doc_hi) >= lo — the
-                        # doc_hi side matters for callers whose range cuts
-                        # fall INSIDE a block (the parallel-decode shards):
-                        # the straddling block can be the last row of a
-                        # group whose every doc_lo < lo. Missing statistics
-                        # degrade to "can't prune" on that side.
-                        if (
-                            tst[0] == tst[1]
-                            and tst[0] in ranges_by_term
-                            and not any(
-                                not (
-                                    (hst is not None and hst[1] < lo)
-                                    or (lst is not None and lst[0] > hi)
-                                )
-                                for lo, hi in ranges_by_term[tst[0]]
-                            )
-                        ):
-                            continue
-                sel.append(ri)
-            if not sel:
-                continue
-            if self.rg_cache is None:
-                out.append(pf.read_row_groups(sel, columns=want_cols))
-                continue
-            ckey_cols = tuple(want_cols)
-            for ri in sel:
-                key = ("rg", self._dir, id(pf), ri, ckey_cols)
-                tbl = self.rg_cache.get_(key)
-                if tbl is None:
-                    tbl = pf.read_row_groups([ri], columns=want_cols)
-                    self.rg_cache.put(key, tbl)
-                out.append(tbl)
-        if not out:
-            schema = (
-                self.parts[0].schema_arrow if self.parts else pa.schema([])
-            )
-            fields = [schema.field(c) for c in want_cols] if self.parts else []
-            return pa.table(
-                {f.name: pa.array([], type=f.type) for f in fields}
-            )
-        return pa.concat_tables(out)
+                tbl = self._group(fi, ri, cols)
+                lo, hi = 0, tbl.num_rows
+                if hi and kind is not None:
+                    kc = tbl.column("kind").chunk(0).to_numpy()
+                    lo = int(np.searchsorted(kc, kind, side="left"))
+                    hi = int(np.searchsorted(kc, kind, side="right"))
+                if hi <= lo:
+                    continue
+                tc = tbl.column("term").chunk(0)
+                for t in want:
+                    a = bisect_left(tc, t, lo, hi, key=_as_py)
+                    b = bisect_right(tc, t, a, hi, key=_as_py)
+                    if b > a:
+                        runs.setdefault(t, []).append(tbl.slice(a, b - a))
+        out = {}
+        for t, parts in runs.items():
+            tbl = parts[0] if len(parts) == 1 else pa.concat_tables(parts)
+            if len(parts) > 1 and "doc_lo" in self.keys:
+                # groups of one file are in doc_lo order already; runs
+                # from several files need not be
+                los = tbl.column("doc_lo").to_numpy()
+                if (np.diff(los) < 0).any():
+                    tbl = tbl.take(np.argsort(los, kind="stable"))
+            out[t] = tbl
+        return out
 
 
 class _LRU(OrderedDict):
@@ -270,20 +325,49 @@ class _Leaf:
 
 
 def _decode_blocks(los, ns, ids_vb, tfs_vb, dls_vb):
-    """Leaf blocks (doc_lo, n and raw varbyte payloads, in doc order) →
-    concatenated (ids:int64, tfs:f64, dls:f64). The one serving decode
-    site: one segmented vb_decode per column (per-call fixed cost is
-    ~10 µs, so blocks are never decoded one call each); codec.block_ids
-    folds the block-head ``doc_lo - 1`` base back in."""
-    ids = block_ids(vb_decode(b"".join(ids_vb)), ns, los)
-    tfs = vb_decode(b"".join(tfs_vb)).astype(np.float64)
-    dls = vb_decode(b"".join(dls_vb)).astype(np.float64)
+    """Leaf blocks (doc_lo, n and each column's varbyte payloads joined
+    in doc order, as bytes or a uint8 array) → concatenated (ids:int64,
+    tfs:f64, dls:f64). The one serving decode site: one segmented
+    vb_decode per column (per-call fixed cost is ~10 µs, so blocks are
+    never decoded one call each); codec.block_ids folds the block-head
+    ``doc_lo - 1`` base back in."""
+    ids = block_ids(vb_decode(ids_vb), ns, los)
+    tfs = vb_decode(tfs_vb).astype(np.float64)
+    dls = vb_decode(dls_vb).astype(np.float64)
     return ids, tfs, dls
+
+
+_META = (("doc_lo", np.int64), ("doc_hi", np.int64), ("n", np.int64),
+         ("max_tfc", np.float64), ("min_tfc", np.float64))
+_NO_LEAF_ROWS = pa.table(
+    {c: pa.array([], type=pa.int64()) for c, _ in _META}
+    | {c: pa.array([], type=pa.binary()) for c in ("ids_vb", "tfs_vb", "dls_vb")}
+)
+
+
+def _meta_arrays(tbl: pa.Table) -> tuple:
+    """(los, his, ns, max_tfc, min_tfc) of block rows, as copies: a cached
+    value must not pin its row group's buffers."""
+    return tuple(tbl.column(c).to_numpy().astype(dt) for c, dt in _META)
 
 
 def _ranked(cand: np.ndarray, s: np.ndarray) -> list[tuple[int, int, float]]:
     """Top-k arrays in rank order → [(rank, doc_id, score)]."""
     return [(i + 1, d, v) for i, (d, v) in enumerate(zip(cand.tolist(), s.tolist()))]
+
+
+class _Hits(list):
+    """search()'s ranked top-k [(rank, doc_id, score)], as the result cache
+    holds it, plus the exact match ``count`` and the top-k's ``freqs``
+    {doc_id: [(term, tf), ...]} (sorted-term order). TAAT and lead fill
+    both; WAND and parallel TAAT leave None for search_full to fill."""
+
+    __slots__ = ("count", "freqs")
+
+    def __init__(self, ranked=(), count=None, freqs=None):
+        super().__init__(ranked)
+        self.count = count
+        self.freqs = freqs
 
 
 class BlockIndexReader:
@@ -434,15 +518,15 @@ class BlockIndexReader:
         columns: list[str],
         kind: int | None = None,
         ranges_by_term: dict | None = None,
-    ):
-        """Row-group-pruned read across the buckets of ``terms``, with the
-        exact residual row filter (kind equality + term membership) applied
-        — the drop-in replacement for the filtered dataset scans (see
-        _BucketRGs for why the Scanner path is not usable here)."""
+    ) -> dict[str, pa.Table]:
+        """term → its rows (``kind`` only, doc_lo order) across the
+        buckets of ``terms``: the row-group-pruned, run-sliced replacement
+        for the filtered dataset scans (see _BucketRGs for why the Scanner
+        path is not usable here). Terms without rows are absent."""
         by_bucket: dict[int, list[str]] = {}
         for t in terms:
             by_bucket.setdefault(term_bucket(t, self.n_buckets), []).append(t)
-        parts = []
+        out: dict[str, pa.Table] = {}
         for b in sorted(by_bucket):
             rgs = rgs_cache.get(b)
             if rgs is None:
@@ -450,68 +534,56 @@ class BlockIndexReader:
                     os.path.join(table_root, f"bucket={b}"),
                     rg_cache=self._rg_cache,
                 )
-            tbl = rgs.read(
-                columns,
-                kind=kind,
-                terms=sorted(by_bucket[b]),
-                ranges_by_term=ranges_by_term,
+            out.update(
+                rgs.read(
+                    columns,
+                    sorted(by_bucket[b]),
+                    kind=kind,
+                    ranges_by_term=ranges_by_term,
+                )
             )
-            if tbl.num_rows:
-                parts.append(tbl)
-        if not parts:
-            return None
-        tbl = pa.concat_tables(parts)
-        mask = pc.is_in(
-            tbl.column("term"), value_set=pa.array(terms, type=pa.string())
-        )
-        if kind is not None:
-            mask = pc.and_(mask, pc.equal(tbl.column("kind"), kind))
-        tbl = tbl.filter(mask)
-        return tbl if tbl.num_rows else None
+        return out
 
-    def lexicon_rows(self, terms: list[str]) -> dict[str, int]:
-        if self._lex_ds is None:
-            return {}
-        # Collect values as DIRECT references; never read back through the
-        # cache after a put. A put may evict another query term's entry (a
-        # cache-hit probe does not refresh LRU recency), and a read-back
-        # would then silently treat that term as OOV and drop it from the
-        # query — observed as history-dependent wrong rankings at 367k-query
-        # eviction pressure. With direct references the LRU is a pure
-        # optimization: eviction can only cost a refetch, never an answer.
-        vals: dict[str, int | None] = {}
+    def _cached(self, slot: str, terms: list[str], fetch) -> dict:
+        """term → value through the posting LRU's ``slot`` entries;
+        ``fetch(missing)`` → {term: value} reads the misses (a term it
+        omits is cached as None = absent). Values are collected as DIRECT
+        references; never read back through the cache after a put. A put
+        may evict another query term's entry (a cache-hit probe does not
+        refresh LRU recency), and a read-back would then silently treat
+        that term as absent and drop it from the query — observed as
+        history-dependent wrong rankings at 367k-query eviction pressure.
+        With direct references the LRU is a pure optimization: eviction
+        can only cost a refetch, never an answer."""
+        vals: dict = {}
         for t in terms:
-            hit, v = self._posting_cache.get2(("lex", t))
+            hit, v = self._posting_cache.get2((slot, t))
             if hit:
                 vals[t] = v
         missing = [t for t in terms if t not in vals]
         if missing:
-            tbl = self._pruned_read(
-                self._lex_rgs, self.paths.lexicon, missing, ["term", "df"]
-            )
-            found = (
-                dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
-                if tbl is not None
-                else {}
-            )
+            got = fetch(missing)
             for t in missing:
-                v = found.get(t)
-                self._posting_cache.put(("lex", t), v)
-                vals[t] = v
+                v = vals[t] = got.get(t)
+                self._posting_cache.put((slot, t), v)
+        return {t: v for t in terms if (v := vals.get(t)) is not None}
+
+    def lexicon_rows(self, terms: list[str]) -> dict[str, int]:
+        if self._lex_ds is None:
+            return {}
+        vals = self._cached("lex", terms, lambda missing: {
+            t: tbl.column("df")[-1].as_py()
+            for t, tbl in self._pruned_read(
+                self._lex_rgs, self.paths.lexicon, missing, ["df"]
+            ).items()
+        })
         if self._df_corr:
             # tombstone df corrections: the cache keeps RAW dfs (sidecar
             # state is fixed per reader instance); a term whose every doc
             # is deleted becomes OOV, exactly as a rebuilt index drops it
-            out: dict[str, int] = {}
-            for t in terms:
-                v = vals.get(t)
-                if v is None:
-                    continue
-                v -= self._df_corr.get(t, 0)
-                if v > 0:
-                    out[t] = v
-            return out
-        return {t: v for t in terms if (v := vals.get(t)) is not None}
+            vals = {t: v - self._df_corr.get(t, 0) for t, v in vals.items()}
+            return {t: v for t, v in vals.items() if v > 0}
+        return vals
 
     def _del_mask(self, ids: np.ndarray):
         """Keep-mask for decoded docIDs against the tombstone set — None
@@ -531,50 +603,18 @@ class BlockIndexReader:
         """term → (los, his, ns, max_tfc, min_tfc) superblock arrays sorted
         by doc_lo (kind=1 rows — O(df / (block_size · SUPERBLOCK_FACTOR))
         rows per term, the ONLY per-term-proportional metadata a query ever
-        loads eagerly). LRU-cached; values are collected as direct
-        references (see lexicon_rows: a put may evict another query term's
-        entry, so a read-back-after-put can silently drop a term)."""
-        vals: dict[str, tuple | None] = {}
-        for t in terms:
-            hit, v = self._posting_cache.get2(("sbm", t))
-            if hit:
-                vals[t] = v
-        missing = [t for t in terms if t not in vals]
-        if missing:
-            tbl = self._pruned_read(
+        loads eagerly). LRU-cached (see _cached)."""
+
+        def fetch(missing):
+            runs = self._pruned_read(
                 self._block_rgs, self.paths.blocks, missing,
-                ["kind", "term", "doc_lo", "doc_hi", "n", "max_tfc", "min_tfc"],
+                ["doc_hi", "n", "max_tfc", "min_tfc"],
                 kind=1,
             )
-            if tbl is None:
-                for t in missing:
-                    self._posting_cache.put(("sbm", t), None)
-                    vals[t] = None
-                return {t: v for t in terms if (v := vals.get(t)) is not None}
-            self.sb_rows_fetched += tbl.num_rows
-            tcol = tbl.column("term").to_pylist()
-            lo = tbl.column("doc_lo").to_numpy()
-            hi = tbl.column("doc_hi").to_numpy()
-            ns = tbl.column("n").to_numpy()
-            mx = tbl.column("max_tfc").to_numpy()
-            mn = tbl.column("min_tfc").to_numpy()
-            per: dict[str, list[int]] = {t: [] for t in missing}
-            for i, t in enumerate(tcol):
-                per[t].append(i)
-            for t in missing:
-                idxs = per.get(t, [])
-                if not idxs:
-                    self._posting_cache.put(("sbm", t), None)
-                    vals[t] = None
-                    continue
-                o = np.array(idxs)[np.argsort(lo[idxs], kind="stable")]
-                v = (
-                    lo[o].astype(np.int64), hi[o].astype(np.int64),
-                    ns[o].astype(np.int64), mx[o], mn[o],
-                )
-                self._posting_cache.put(("sbm", t), v)
-                vals[t] = v
-        return {t: v for t in terms if (v := vals.get(t)) is not None}
+            self.sb_rows_fetched += sum(t.num_rows for t in runs.values())
+            return {t: _meta_arrays(tbl) for t, tbl in runs.items()}
+
+        return self._cached("sbm", terms, fetch)
 
     def _fetch_leaf_batch(
         self, wants: list[tuple[str, int, int, int]]
@@ -598,65 +638,32 @@ class BlockIndexReader:
         # row groups are pruned by (kind, term, wanted doc ranges); rows of
         # a wanted term OUTSIDE its wanted ranges can ride along from shared
         # groups — the per-superblock searchsorted slicing below drops them
-        tbl = self._pruned_read(
+        runs = self._pruned_read(
             self._block_rgs, self.paths.blocks, sorted(by_term),
-            [
-                "kind", "term", "doc_lo", "doc_hi", "n",
-                "max_tfc", "min_tfc", "ids_vb", "tfs_vb", "dls_vb",
-            ],
+            ["doc_hi", "n", "max_tfc", "min_tfc", "ids_vb", "tfs_vb", "dls_vb"],
             kind=0,
             ranges_by_term={
                 t: [(lo_, hi_) for _si, lo_, hi_ in ranges]
                 for t, ranges in by_term.items()
             },
         )
-        if tbl is None:
-            for t, ranges in by_term.items():
-                for si, _lo, _hi in ranges:
-                    empty = _Leaf(
-                        np.array([], dtype=np.int64),
-                        np.array([], dtype=np.int64),
-                        np.array([], dtype=np.int64),
-                        np.array([]), np.array([]), [], [], [],
-                    )
-                    self._posting_cache.put(("leaf", t, si), empty)
-                    fetched[(t, si)] = empty
-            return fetched
-        tcol = tbl.column("term").to_pylist()
-        lo = tbl.column("doc_lo").to_numpy()
-        hi = tbl.column("doc_hi").to_numpy()
-        ns = tbl.column("n").to_numpy()
-        mx = tbl.column("max_tfc").to_numpy()
-        mn = tbl.column("min_tfc").to_numpy()
-        ids_vb = tbl.column("ids_vb").to_pylist()
-        tfs_vb = tbl.column("tfs_vb").to_pylist()
-        dls_vb = tbl.column("dls_vb").to_pylist()
-        per: dict[str, list[int]] = {t: [] for t in by_term}
-        for i, t in enumerate(tcol):
-            per[t].append(i)
         for t, ranges in by_term.items():
-            idxs = per.get(t, [])
-            o = (
-                np.array(idxs)[np.argsort(lo[idxs], kind="stable")]
-                if idxs
-                else np.array([], dtype=np.int64)
+            tbl = runs.get(t, _NO_LEAF_ROWS)
+            lo, hi, ns, mx, mn = _meta_arrays(tbl)
+            ids_vb, tfs_vb, dls_vb = (
+                tbl.column(c).to_pylist() for c in ("ids_vb", "tfs_vb", "dls_vb")
             )
-            slos = lo[o] if len(o) else np.array([], dtype=np.int64)
             for si, sb_lo, sb_hi in ranges:
-                a = int(np.searchsorted(slos, sb_lo, side="left"))
-                b = int(np.searchsorted(slos, sb_hi, side="right"))
-                sel = o[a:b]
+                a = int(np.searchsorted(lo, sb_lo, side="left"))
+                b = int(np.searchsorted(lo, sb_hi, side="right"))
                 # the counter measures leaf rows MATERIALIZED into slots —
                 # rows of a wanted term that ride along from shared row
                 # groups are sliced away here and not counted (the row-
                 # group selection above is what bounds the IO itself)
-                self.leaf_rows_fetched += len(sel)
+                self.leaf_rows_fetched += b - a
                 leaf = _Leaf(
-                    lo[sel].astype(np.int64), hi[sel].astype(np.int64),
-                    ns[sel].astype(np.int64), mx[sel], mn[sel],
-                    [ids_vb[i] for i in sel],
-                    [tfs_vb[i] for i in sel],
-                    [dls_vb[i] for i in sel],
+                    lo[a:b], hi[a:b], ns[a:b], mx[a:b], mn[a:b],
+                    ids_vb[a:b], tfs_vb[a:b], dls_vb[a:b],
                 )
                 self._posting_cache.put(("leaf", t, si), leaf)
                 fetched[(t, si)] = leaf
@@ -683,63 +690,36 @@ class BlockIndexReader:
 
     def _fetch_arrays(self, terms: list[str]) -> dict[str, tuple]:
         """term → decoded (ids:int64, tfs:f64, dls:f64) full posting arrays,
-        LRU-cached. Columnar fetch — no per-block Python objects (building a
-        _Block per row costs more than decoding for dense lists), one
-        segmented vb_decode per column. Values are collected as direct
-        references (see lexicon_rows: a put may evict another query term's
-        entry, so a read-back-after-put can silently drop a term)."""
-        vals: dict[str, tuple | None] = {}
-        for t in terms:
-            hit, v = self._posting_cache.get2(("arr", t))
-            if hit:
-                vals[t] = v
-        missing = [t for t in terms if t not in vals]
-        if missing:
-            tbl = self._pruned_read(
+        LRU-cached (see _cached). Columnar fetch — no per-block Python
+        objects, one segmented vb_decode per column."""
+
+        def fetch(missing):
+            runs = self._pruned_read(
                 self._block_rgs, self.paths.blocks, missing,
-                ["kind", "term", "doc_lo", "n", "ids_vb", "tfs_vb", "dls_vb"],
+                ["n", "ids_vb", "tfs_vb", "dls_vb"],
                 kind=0,
             )
-            if tbl is None:
-                for t in missing:
-                    self._posting_cache.put(("arr", t), None)
-                    vals[t] = None
-                return {t: v for t in terms if (v := vals.get(t)) is not None}
-            self.leaf_rows_fetched += tbl.num_rows
-            decoded = self._decode_posting_table(tbl, missing)
-            for t in missing:
-                v = decoded.get(t)
-                self._posting_cache.put(("arr", t), v)
-                vals[t] = v
-        return {t: v for t in terms if (v := vals.get(t)) is not None}
+            self.leaf_rows_fetched += sum(t.num_rows for t in runs.values())
+            return self._decode_posting_table(runs)
 
-    def _decode_posting_table(self, tbl: pa.Table, terms: list[str]) -> dict[str, tuple]:
+        return self._cached("arr", terms, fetch)
+
+    def _decode_posting_table(self, runs: dict[str, pa.Table]) -> dict[str, tuple]:
         """term → decoded (ids:int64, tfs:f64, dls:f64) posting arrays from
-        leaf block rows (columns term, doc_lo, n, ids_vb, tfs_vb, dls_vb),
-        with tombstoned postings masked out. Columnar: one segmented
-        vb_decode per column per term, no per-block Python objects. No
-        caching — callers cache (or are one-shot range workers). Terms
-        with no (surviving) rows are simply absent from the result."""
+        each term's leaf block rows (columns doc_lo, n, ids_vb, tfs_vb,
+        dls_vb, in doc_lo order), with tombstoned postings masked out.
+        Columnar: one segmented vb_decode per column per term over the
+        payload column's own data buffer. No caching — callers cache (or
+        are one-shot range workers). Terms with no (surviving) rows are
+        simply absent from the result."""
         out: dict[str, tuple] = {}
-        tcol = tbl.column("term").to_pylist()
-        lo = tbl.column("doc_lo").to_numpy()
-        ns = tbl.column("n").to_numpy()
-        ids_vb = tbl.column("ids_vb").to_pylist()
-        tfs_vb = tbl.column("tfs_vb").to_pylist()
-        dls_vb = tbl.column("dls_vb").to_pylist()
-        per: dict[str, list[int]] = {t: [] for t in terms}
-        for i, t in enumerate(tcol):
-            if t in per:
-                per[t].append(i)
-        for t in terms:
-            idxs = sorted(per.get(t, []), key=lambda i: lo[i])
-            if not idxs:
-                continue
+        for t, tbl in runs.items():
             ids, tfs, dls = _decode_blocks(
-                lo[idxs], ns[idxs],
-                [ids_vb[i] for i in idxs],
-                [tfs_vb[i] for i in idxs],
-                [dls_vb[i] for i in idxs],
+                tbl.column("doc_lo").to_numpy(),
+                tbl.column("n").to_numpy(),
+                concat_binary_column(tbl.column("ids_vb")),
+                concat_binary_column(tbl.column("tfs_vb")),
+                concat_binary_column(tbl.column("dls_vb")),
             )
             keep = self._del_mask(ids)
             if keep is not None:
@@ -773,9 +753,9 @@ class BlockIndexReader:
         blocks = [(leaves[o], j) for o, j in zip(owner.tolist(), js.tolist())]
         ids, tfs, dls = _decode_blocks(
             llos[bi], lns[bi],
-            [lf.ids_vb[j] for lf, j in blocks],
-            [lf.tfs_vb[j] for lf, j in blocks],
-            [lf.dls_vb[j] for lf, j in blocks],
+            b"".join([lf.ids_vb[j] for lf, j in blocks]),
+            b"".join([lf.tfs_vb[j] for lf, j in blocks]),
+            b"".join([lf.dls_vb[j] for lf, j in blocks]),
         )
         keep = self._del_mask(ids)
         if keep is not None:
@@ -793,11 +773,13 @@ class BlockIndexReader:
         never read, metadata or payload. Scoring is the shared accumulator
         keeping docs hit by every term (per-doc sums from 0.0 in sorted-
         term = oracle order) and the shared top-k comparator, so results
-        are rank- and score-identical to TAAT."""
+        are rank- and score-identical to TAAT. Every doc in the intersection
+        is a lead doc and each other term decoded the block covering it, so
+        the intersection — hence the count and the top-k's tfs — is exact."""
         sbms = self._fetch_superblocks(present)
         present = [t for t in present if t in sbms]
         if not present:
-            return []
+            return _Hits(count=0, freqs={})
         lead = min(present, key=lambda t: int(lex[t]))
         l_los, l_his = sbms[lead][0], sbms[lead][1]
         self._fetch_leaf_batch(
@@ -806,7 +788,7 @@ class BlockIndexReader:
         lead_arr = self._decode_covering(lead, range(len(l_los)), None)
         lead_docs = lead_arr[0]
         if len(lead_docs) == 0:
-            return []
+            return _Hits(count=0, freqs={})
         covers: dict[str, list[int]] = {}
         wants = []
         for t in present:
@@ -816,20 +798,16 @@ class BlockIndexReader:
             cover = np.unique(np.searchsorted(his, lead_docs, side="left"))
             covers[t] = cover[cover < len(his)].tolist()
             if not covers[t]:  # every lead doc lies past this term's list
-                return []
+                return _Hits(count=0, freqs={})
             grab = range(len(his)) if len(his) <= self.prefetch_sbs else covers[t]
             wants.extend((t, si, int(los[si]), int(his[si])) for si in grab)
         self._fetch_leaf_batch(wants)
-        per = []
-        for t in sorted(present):  # sorted-term order = oracle summation order
-            ids, tfs, dls = (
-                lead_arr if t == lead
-                else self._decode_covering(t, covers[t], lead_docs)
-            )
-            idf = self._idf(int(lex[t]))
-            per.append((ids, idf * _tf_component(tfs, dls, self.avg_dl)))
-        cand, s = self._accumulate(per, len(present), True, False)
-        return _ranked(*self._topk_arrays(cand, s, k))
+        arrays = {
+            t: lead_arr if t == lead
+            else self._decode_covering(t, covers[t], lead_docs)
+            for t in present
+        }
+        return self._scored(arrays, lex, k, True, False)
 
     def _idf(self, df: int) -> float:
         # N = LIVE docs: with tombstones pending this is the same integer a
@@ -846,7 +824,9 @@ class BlockIndexReader:
     def search(
         self, query: str, conjunctive: bool = True, k: int = 10
     ) -> list[tuple[int, int, float]]:
-        """→ [(rank, doc_id, score)] — rank-identical to the oracle."""
+        """→ [(rank, doc_id, score)] — rank-identical to the oracle. The
+        list is a :class:`_Hits` that also carries the match count and
+        the top-k's freqs wherever the route computed them."""
         terms = clean_query(query)
         cache_key = (" ".join(terms), conjunctive, k)
         # reset BEFORE the cache check: a hit decodes nothing, so the
@@ -859,8 +839,9 @@ class BlockIndexReader:
         lex = self.lexicon_rows(terms)
         present = [t for t in terms if t in lex]  # OOV silently skipped
         if not present:
-            self._result_cache.put(cache_key, [])
-            return []
+            out = _Hits(count=0, freqs={})
+            self._result_cache.put(cache_key, out)
+            return out
         # path routing (all paths are rank-identical; this is cost only):
         # - conjunctive with a rare lead term → lead-driven intersection:
         #   decodes the lead's postings plus only the other terms' leaf
@@ -913,17 +894,35 @@ class BlockIndexReader:
         (np.unique) and accumulation happens in the compressed domain:
         peak memory O(Σ candidate postings), independent of n_docs."""
         arrays = self._fetch_arrays(present)
+        total = sum(len(a[0]) for a in arrays.values())
+        return self._scored(arrays, lex, k, conjunctive, self._flat_ok(total))
+
+    def _scored(self, arrays, lex, k, conjunctive, flat) -> _Hits:
+        """The whole answer from each term's decoded (ids, tfs, dls):
+        BM25 contributions accumulated in sorted-term (= oracle float
+        summation) order, the shared top-k, count = every accumulated
+        candidate, and each top-k doc's (term, tf) pairs by one
+        searchsorted of the k ids per term. A conjunctive doc must hold
+        every term that has arrays — the terms match_count intersects."""
+        if not arrays:
+            return _Hits(count=0, freqs={})
         per = []
-        total = 0
         for t in sorted(arrays):
             ids, tfs, dls = arrays[t]
             idf = self._idf(int(lex[t]))
             per.append((ids, idf * _tf_component(tfs, dls, self.avg_dl)))
-            total += len(ids)
-        if not per:
-            return []
-        cand, s = self._accumulate(per, len(per), conjunctive, self._flat_ok(total))
-        return _ranked(*self._topk_arrays(cand, s, k))
+        cand, s = self._accumulate(per, len(per), conjunctive, flat)
+        top, ts = self._topk_arrays(cand, s, k)
+        freqs: dict[int, list[tuple[str, int]]] = {d: [] for d in top.tolist()}
+        for t in sorted(arrays):
+            ids, tfs, _dls = arrays[t]
+            if len(ids) == 0:
+                continue
+            j = np.minimum(np.searchsorted(ids, top), len(ids) - 1)
+            hit = ids[j] == top
+            for d, tf in zip(top[hit].tolist(), tfs[j[hit]].tolist()):
+                freqs[d].append((t, int(tf)))
+        return _Hits(_ranked(top, ts), len(cand), freqs)
 
     def _accumulate(self, per, need: int, conjunctive: bool, flat: bool):
         """The one TAAT accumulator: sum each doc's per-term contributions
@@ -1027,10 +1026,10 @@ class BlockIndexReader:
         parts = pool.map(_parallel_taat_worker, args)
         docs = [p[0] for p in parts if len(p[0])]
         if not docs:
-            return []
+            return _Hits(count=0, freqs={})
         cand = np.concatenate(docs)
         s = np.concatenate([p[1] for p in parts if len(p[0])])
-        return _ranked(*self._topk_arrays(cand, s, k))
+        return _Hits(_ranked(*self._topk_arrays(cand, s, k)))
 
     def _taat_range_topk(self, terms, k, conjunctive, doc_lo, doc_hi):
         """One shard's exact TAAT top-k over docIDs in [doc_lo, doc_hi):
@@ -1043,22 +1042,24 @@ class BlockIndexReader:
         empty = (np.empty(0, dtype=np.int64), np.empty(0))
         if not present:
             return empty
-        tbl = self._pruned_read(
+        runs = self._pruned_read(
             self._block_rgs, self.paths.blocks, present,
-            ["kind", "term", "doc_lo", "doc_hi", "n", "ids_vb", "tfs_vb", "dls_vb"],
+            ["doc_hi", "n", "ids_vb", "tfs_vb", "dls_vb"],
             kind=0,
             ranges_by_term={t: [(doc_lo, doc_hi - 1)] for t in present},
         )
-        if tbl is None:
-            return empty
-        mask = pc.and_(
-            pc.less_equal(tbl.column("doc_lo"), doc_hi - 1),
-            pc.greater_equal(tbl.column("doc_hi"), doc_lo),
-        )
-        tbl = tbl.filter(mask)
-        if tbl.num_rows == 0:
-            return empty
-        arrays = self._decode_posting_table(tbl, present)
+        for t, tbl in list(runs.items()):
+            # a term's blocks are doc-ordered and disjoint, so the blocks
+            # overlapping [doc_lo, doc_hi) are one contiguous slice
+            a = int(np.searchsorted(tbl.column("doc_hi").to_numpy(), doc_lo))
+            b = int(np.searchsorted(
+                tbl.column("doc_lo").to_numpy(), doc_hi - 1, side="right"
+            ))
+            if b > a:
+                runs[t] = tbl.slice(a, b - a)
+            else:
+                del runs[t]
+        arrays = self._decode_posting_table(runs)
         per = []
         for t in sorted(arrays):  # sorted-term order = oracle summation order
             ids, tfs, dls = arrays[t]
@@ -1131,7 +1132,7 @@ class BlockIndexReader:
                 ns,
             ))
         if not metas:
-            return []
+            return _Hits(count=0, freqs={})
         bounds = np.unique(
             np.concatenate([np.concatenate((m[2], m[3] + 1)) for m in metas])
         )
@@ -1302,9 +1303,9 @@ class BlockIndexReader:
                         st = np.cumsum(mns) - mns
                         ids_all, tfs, dls = _decode_blocks(
                             [pt.los[j] for pt, j in mb], mns,
-                            [pt.ids_vb[j] for pt, j in mb],
-                            [pt.tfs_vb[j] for pt, j in mb],
-                            [pt.dls_vb[j] for pt, j in mb],
+                            b"".join([pt.ids_vb[j] for pt, j in mb]),
+                            b"".join([pt.tfs_vb[j] for pt, j in mb]),
+                            b"".join([pt.dls_vb[j] for pt, j in mb]),
                         )
                         contrib_all = idf * _tf_component(tfs, dls, self.avg_dl)
                         dkeep = self._del_mask(ids_all)
@@ -1346,7 +1347,7 @@ class BlockIndexReader:
         # vs the query's total df — the measure of block-max pruning
         self.last_wand_scored = scored_postings
         ranked = sorted(((-s, -nd) for s, nd in heap))
-        return [(i + 1, d, -negs) for i, (negs, d) in enumerate(ranked)]
+        return _Hits((i + 1, d, -negs) for i, (negs, d) in enumerate(ranked))
 
     @staticmethod
     def _push(heap, k, score, doc_id):
@@ -1359,9 +1360,11 @@ class BlockIndexReader:
     # ---- result assembly (the reference's primary user surface) -----------
     def match_count(self, query: str, conjunctive: bool = True) -> int:
         """Exact total match count (main.cpp:487: `count` = ALL matched
-        docs, not n_results). Enumerates the query terms' postings — the
-        same work the reference does (it scores every candidate); decoded
-        arrays are LRU-shared with the TAAT scorer."""
+        docs, not n_results), from the query terms' whole posting lists:
+        the independent cross-check of the count the TAAT and lead routes
+        return with their ranking, and search_full's fallback for the
+        WAND and parallel-TAAT routes, which cannot count from their own
+        state. Decoded arrays are LRU-shared with the TAAT scorer."""
         terms = clean_query(query)
         lex = self.lexicon_rows(terms)
         present = [t for t in terms if t in lex]
@@ -1381,7 +1384,9 @@ class BlockIndexReader:
     def result_freqs(self, query: str, doc_ids: list[int]) -> dict[int, list[tuple[str, int]]]:
         """doc_id → [(term, tf)...] in sorted-term order, present terms only
         — the reference's `freqs` pairs (main.cpp:610-618), looked up in the
-        index postings (no text re-read)."""
+        index postings (no text re-read). Like match_count: the cross-check
+        of the freqs the TAAT and lead routes return, and search_full's
+        fallback for the WAND and parallel-TAAT routes."""
         terms = clean_query(query)
         lex = self.lexicon_rows(terms)
         present = sorted(t for t in terms if t in lex)
@@ -1415,8 +1420,12 @@ class BlockIndexReader:
               conv_id, turn_idx, role,            # the `url` analogue (§1.5)
               snippet}, ...]}
 
-        ``count`` = TOTAL matched docs (main.cpp:487). ``snippets`` is an
-        optional :class:`operators.snippets.SnippetService`; without it the
+        ``count`` = TOTAL matched docs (main.cpp:487). As in the reference
+        (main.cpp:487, 599-618), count and freqs come with the ranking
+        (:class:`_Hits`; a WAND or parallel-TAAT result runs match_count /
+        result_freqs once) and are cached with it: a hit decodes nothing.
+        ``snippets`` is an optional
+        :class:`operators.snippets.SnippetService`; without it the
         doc-metadata/snippet fields are omitted (index-only assembly).
         Reference quirk reproduced: a result whose body contains no query
         term is dropped from ``data``, and if data ends up empty, count is
@@ -1440,9 +1449,15 @@ class BlockIndexReader:
         result = {"cached": hit, "time": elapsed_us, "count": 0, "data": []}
         if not ranked:
             return result
-        result["count"] = self.match_count(query, conjunctive=conjunctive)
         doc_ids = [d for _, d, _ in ranked]
-        freqs = self.result_freqs(query, doc_ids)
+        # each read once: a concurrent caller may fill the same cached
+        # result, with the same values
+        count, freqs = ranked.count, ranked.freqs
+        if count is None:
+            count = ranked.count = self.match_count(query, conjunctive=conjunctive)
+        if freqs is None:
+            freqs = ranked.freqs = self.result_freqs(query, doc_ids)
+        result["count"] = count
         meta = snippets.meta_for(doc_ids) if snippets is not None else {}
         snips = (
             snippets.reference_snippets(query, doc_ids, snippet_len)
