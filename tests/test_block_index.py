@@ -264,7 +264,6 @@ def test_rg_pruning_keeps_block_straddling_range_lo():
         pq.write_table(tbl, f"{d}/part-0.parquet", row_group_size=2)
         rgs = _BucketRGs(d)
         got = rgs.read(
-            ["term", "doc_lo", "doc_hi"],
             kind=0,
             terms=["t"],
             ranges_by_term={"t": [(15, 44)]},
@@ -310,7 +309,7 @@ def test_bucket_rgs_slices_exact_term_runs(tmp_path, cached):
     assert rgs.stats[1][0]["term"] is None  # the no-statistics file
 
     def los(kind, terms):
-        got = rgs.read(["doc_hi"], terms, kind=kind)
+        got = rgs.read(terms, kind=kind)
         for t, tbl in got.items():
             assert set(tbl.column("term").to_pylist()) == {t}
             assert set(tbl.column("kind").to_pylist()) == {kind}
@@ -342,7 +341,23 @@ def test_bucket_rgs_rejects_unsorted_row_group(tmp_path, broken):
     }[broken]
     pq.write_table(_blocks_table(rows), tmp_path / "part-0.parquet")
     with pytest.raises(ValueError, match="not clustered"):
-        _BucketRGs(str(tmp_path)).read(["doc_hi"], ["a", "b"])
+        _BucketRGs(str(tmp_path)).read(["a", "b"])
+
+
+def test_bucket_rgs_decodes_each_group_once(index_dir, monkeypatch):
+    """With the rg LRU on, a term's superblock read, leaf-batch read and
+    whole-term read share one decoded copy of each row group: every group
+    is read from disk once, whichever read touches it first."""
+    r = BlockIndexReader(index_dir, rg_cache=128)
+    lex = r.lexicon_rows(["data", "spark", "the"])
+    assert lex
+    calls = _count_row_group_reads(monkeypatch)
+    for t in sorted(lex):
+        sbm = r._fetch_superblocks([t])[t]
+        r._fetch_leaf_batch([(t, 0, int(sbm[0][0]), int(sbm[1][0]))])
+        r._fetch_arrays([t])
+    assert calls and all(len(g) == 1 for _, g in calls)
+    assert len(calls) == len(set(calls))
 
 
 def test_shard_cuts_inside_blocks_with_tiny_row_groups(index_dir, fixture):
@@ -1031,7 +1046,8 @@ def sidecar_lifecycle(spark, tmp_path_factory):
     )
     from websearchengine_spark.plans.merge_index import merge_block_indexes
 
-    t = generate_fixture(n_convs=600, seed=7).transcripts
+    fx = generate_fixture(n_convs=600, seed=7)
+    t = fx.transcripts
     convs = sorted(t["conv_id"].unique())
     root = str(tmp_path_factory.mktemp("sidecars"))
     kw = dict(resume=False, n_buckets=4, num_partitions=4, store_texts=True)
@@ -1046,7 +1062,8 @@ def sidecar_lifecycle(spark, tmp_path_factory):
     tpath = f"{root}/transcripts"
     spark.createDataFrame(t).write.mode("overwrite").parquet(tpath)
     return {"build": f"{root}/a", "merge": f"{root}/merged",
-            "purge": f"{root}/purged", "transcripts": tpath}
+            "purge": f"{root}/purged", "transcripts": tpath,
+            "queries": list(fx.queries["query"])}
 
 
 @pytest.mark.parametrize("stage", ["build", "merge", "purge"])
@@ -1134,39 +1151,199 @@ def test_doc_sidecar_fetch_reads_at_most_k_row_groups(
     assert sorted(meta) == doc_ids
 
 
+def _sidecar_cache(cap=1 << 20):
+    from operator import itemgetter
+
+    from websearchengine_spark.operators.wand import _LRU
+
+    return _LRU(cap, weigh=itemgetter(2))
+
+
+def _text_sidecar(ids, text=lambda i: f"t{i}"):
+    import pyarrow as pa_
+
+    return pa_.table({"doc_id": pa_.array(ids, type=pa_.int64()),
+                      "text": [text(i) for i in ids]})
+
+
+def _count_row_group_reads(monkeypatch) -> list:
+    """Patch ParquetFile.read_row_groups to log (file, groups) per call."""
+    import pyarrow.parquet as pq_
+
+    calls = []
+    real = pq_.ParquetFile.read_row_groups
+
+    def counting(self, row_groups, *a, **kw):
+        calls.append((id(self), tuple(row_groups)))
+        return real(self, row_groups, *a, **kw)
+
+    monkeypatch.setattr(pq_.ParquetFile, "read_row_groups", counting)
+    return calls
+
+
+def test_threaded_serving_with_sidecar_evictions(sidecar_lifecycle, monkeypatch):
+    """16 threads sharing one ServingEngine (the ThreadingHTTPServer
+    deployment shape of scripts/serve_http.py) over a store_texts index,
+    with the sidecar cache bounded to a few groups so that evictions
+    race: every response equals the single-threaded one, meta and
+    snippets included."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from websearchengine_spark.operators.query_api import QueryType
+    from websearchengine_spark.operators.serving import ServingEngine
+    from websearchengine_spark.plans import block_index
+
+    monkeypatch.setattr(block_index, "SIDECAR_CACHE_BYTES", 3 * 32 << 10)
+    idx = sidecar_lifecycle["merge"]
+    queries = [
+        (q, qt)
+        for q in sidecar_lifecycle["queries"]
+        for qt in (QueryType.CONJUNCTIVE, QueryType.DISJUNCTIVE)
+    ]
+
+    def answer(engine, q, qt):
+        res = engine.search(q, qt, n_results=10, snippet_len=60)
+        return {k: v for k, v in res.items() if k != "time"}
+
+    expected = [answer(ServingEngine(idx, result_cache=0), q, qt)
+                for q, qt in queries]
+    assert sum(len(e["data"]) for e in expected) > len(queries)
+    engine = ServingEngine(idx, result_cache=0)
+    calls = _count_row_group_reads(monkeypatch)
+
+    def worker(offset):
+        n = len(queries)
+        return [
+            i for i in ((j + offset) % n for j in range(n))
+            if answer(engine, *queries[i]) != expected[i]
+        ]
+
+    with ThreadPoolExecutor(16) as pool:
+        bad = [i for got in pool.map(worker, range(0, 16 * 7, 7)) for i in got]
+    assert bad == []
+    svc = engine.snippets
+    assert svc._texts.cache.held <= svc._texts.cache.cap
+    side = {id(pf) for pf in svc._texts.parts + svc._doc_stats.parts}
+    reads = [(f, r) for f, g in calls if f in side for r in g]
+    assert len(reads) > len(set(reads))  # groups were evicted and re-read
+
+
 def test_doc_id_rgs_reads_groups_without_statistics(tmp_path):
     """Row groups without doc_id min/max statistics are read on every
     fetch (a superset, never a wrong answer), next to stat-pruned groups
     and under the overlapping-range fallback."""
-    import pyarrow as pa_
     import pyarrow.parquet as pq_
     from websearchengine_spark.operators.snippets import _DocIdRGs
 
-    def table(ids):
-        return pa_.table({"doc_id": pa_.array(ids, type=pa_.int64()),
-                          "text": [f"t{i}" for i in ids]})
-
     d = tmp_path / "side"
     d.mkdir()
-    pq_.write_table(table(range(0, 1000)), d / "a.parquet",
+    pq_.write_table(_text_sidecar(range(0, 1000)), d / "a.parquet",
                     row_group_size=100, write_statistics=False)
-    pq_.write_table(table(range(1000, 2000)), d / "b.parquet",
+    pq_.write_table(_text_sidecar(range(1000, 2000)), d / "b.parquet",
                     row_group_size=100)
-    r = _DocIdRGs(str(d))
+    r = _DocIdRGs(str(d), ("text",), _sidecar_cache())
     assert len(r.no_stats) == 10 and len(r.lo) == 10 and r.disjoint
     want = [5, 505, 999, 1500, 5000]
-    got = r.read(want, ["doc_id", "text"]).to_pylist()
-    assert got == [{"doc_id": i, "text": f"t{i}"} for i in want[:4]]
-    assert r.read([], ["doc_id"]).num_rows == 0
+    got = r.lookup(want)
+    assert list(got.items()) == [(i, (f"t{i}",)) for i in want[:4]]
+    assert r.lookup([]) == {}
     # unclustered file: group ranges overlap, every group is range-tested
     e = tmp_path / "unclustered.parquet"
     ids = list(range(0, 1000, 2)) + list(range(1, 1000, 2))
-    pq_.write_table(table(ids), e, row_group_size=100)
-    u = _DocIdRGs(str(e))
+    pq_.write_table(_text_sidecar(ids), e, row_group_size=100)
+    u = _DocIdRGs(str(e), ("text",), _sidecar_cache())
     assert not u.disjoint
-    assert sorted(u.read([1, 2, 997], ["doc_id"])["doc_id"].to_pylist()) == [
-        1, 2, 997
-    ]
+    assert sorted(u.lookup([1, 2, 997])) == [1, 2, 997]
+
+
+def test_doc_id_rgs_sorts_unsorted_groups_on_entry(tmp_path):
+    """A group unsorted inside itself (a pre-bound purge sidecar) enters
+    the cache doc_id-sorted, so searchsorted lookups stay exact — cold
+    and warm, for ids inside, between and outside its range."""
+    import random
+
+    import pyarrow.parquet as pq_
+    from websearchengine_spark.operators.snippets import _DocIdRGs
+
+    ids = list(range(0, 600, 3))
+    random.Random(3).shuffle(ids)
+    pq_.write_table(_text_sidecar(ids), tmp_path / "a.parquet",
+                    row_group_size=50)
+    r = _DocIdRGs(str(tmp_path), ("text",), _sidecar_cache())
+    want = [0, 1, 3, 299, 300, 597, 598, 1000, -1]
+    for _ in range(2):
+        assert r.lookup(want) == {i: (f"t{i}",) for i in want if i in ids}
+
+
+def test_doc_id_rgs_reads_each_file_once_and_caches(tmp_path, monkeypatch):
+    """A cold k-id lookup makes one read_row_groups call per file touched
+    (its missed groups batched), reading only the selected groups; a
+    repeat lookup is served from the cache with no read at all."""
+    import pyarrow.parquet as pq_
+    from websearchengine_spark.operators.snippets import _DocIdRGs
+
+    for i, lo in enumerate((0, 1000, 2000)):
+        pq_.write_table(_text_sidecar(range(lo, lo + 1000)),
+                        tmp_path / f"part-{i}.parquet", row_group_size=100)
+    r = _DocIdRGs(str(tmp_path), ("text",), _sidecar_cache())
+    want = [5, 250, 999, 2100, 2101, 2900]  # files 0 and 2, five groups
+    calls = _count_row_group_reads(monkeypatch)
+    assert r.lookup(want) == {i: (f"t{i}",) for i in want}
+    assert len(calls) == 2
+    assert sorted(len(g) for _, g in calls) == [2, 3]
+    calls.clear()
+    assert r.lookup(want) == {i: (f"t{i}",) for i in want}
+    assert r.lookup(want[1:3]) == {i: (f"t{i}",) for i in want[1:3]}
+    assert calls == []
+
+
+def test_sidecar_cache_holds_at_most_its_bound(tmp_path, monkeypatch):
+    """With SIDECAR_CACHE_BYTES set to a few groups, the decoded groups
+    the service holds never exceed it in bytes, and a group larger than
+    the bound is served but not held."""
+    import pyarrow as pa_
+    import pyarrow.parquet as pq_
+    from websearchengine_spark.operators.snippets import SnippetService
+    from websearchengine_spark.plans import block_index
+
+    (tmp_path / "texts").mkdir()
+    (tmp_path / "doc_stats").mkdir()
+    n = 1000
+    pq_.write_table(
+        _text_sidecar(range(n), lambda i: "x" * (20_000 if i == 555 else 20)),
+        tmp_path / "texts" / "a.parquet", row_group_size=50,
+    )
+    pq_.write_table(pa_.table({
+        "doc_id": pa_.array(range(n), type=pa_.int64()),
+        "conv_id": [f"c{i // 10}" for i in range(n)],
+        "turn_idx": pa_.array([i % 10 for i in range(n)], type=pa_.int32()),
+        "role": ["user"] * n,
+    }), tmp_path / "doc_stats" / "a.parquet", row_group_size=50)
+    bound = 6_000
+    monkeypatch.setattr(block_index, "SIDECAR_CACHE_BYTES", bound)
+    svc = SnippetService(str(tmp_path / "doc_stats"),
+                         texts_path=str(tmp_path / "texts"))
+    cache = svc._texts.cache
+    assert cache is svc._doc_stats.cache and cache.cap == bound
+    for lo in range(0, n, 70):
+        want = [lo, lo + 7, lo + 133, 555]
+        texts = svc.texts_for(want)
+        meta = svc.meta_for(want)
+        assert texts == {
+            i: "x" * (20_000 if i == 555 else 20) for i in want if i < n
+        }
+        assert meta == {
+            i: {"conv_id": f"c{i // 10}", "turn_idx": i % 10, "role": "user"}
+            for i in want if i < n
+        }
+        assert cache.held == sum(e[2] for e in cache.values()) <= bound
+        assert len(cache) >= 2
+        # doc 555's texts group (file 0, group 11) decodes past the bound:
+        # served, neither held nor pushing anything out
+        assert (str(tmp_path / "texts"), 0, 11) not in cache
+        before = list(cache)
+        assert svc.texts_for([555]) == {555: "x" * 20_000}
+        assert list(cache) == before
 
 
 @pytest.mark.parametrize("stage", ["build", "merge", "purge"])

@@ -1,6 +1,6 @@
 """Reference-exact snippet semantics (main.cpp:498-547): the production
-implementation (regex tokenizer + byte-offset map + byte window) must match
-an independent character-at-a-time spec port on fuzzed Unicode, and both
+implementation (find + word-boundary test + byte window) must match an
+independent character-at-a-time spec port on fuzzed Unicode, and both
 must reproduce the reference's sorted-term priority and UTF-8 edge rules.
 Also the golden test for the unified search_full result assembly
 (main.cpp:465-553, JSON shape readme.md:205-223)."""
@@ -14,18 +14,65 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from websearchengine_spark.functions.tokenizer import clean_query, tokenize_spec
-from websearchengine_spark.operators.snippets import (
-    reference_snippet,
-    reference_snippet_spec,
+from websearchengine_spark.functions.tokenizer import (
+    WORD_RE,
+    clean_query,
+    is_word_char,
+    tokenize_spec,
+)
+from websearchengine_spark.operators.snippets import _cut_window, reference_snippet
+
+# alphabet that exercises every tokenizer class: ASCII alnum/punct, ASCII
+# upper case, 2-byte (incl. À Ñ, upper case that ASCII-only lowering must
+# leave alone), General Punctuation (boundary), CJK punct + Hiragana-quirk block
+# (boundary), 3-byte word chars, 4-byte astral chars, and the case-fold
+# traps whose str.lower()/upper() maps to or from ASCII: Kelvin sign K,
+# long s ſ, dotted İ (lowers to two chars), fullwidth Ａ
+ALPHABET = (
+    "ab z09.,! \t\nABZéßñÀÑ–†、あゅ世界語\U0001F600\U00010334"
+    "\u212aſİＡ"
 )
 
-# alphabet that exercises every tokenizer class: ASCII alnum/punct, 2-byte,
-# General Punctuation (boundary), CJK punct + Hiragana-quirk block
-# (boundary), 3-byte word chars, 4-byte astral chars
-ALPHABET = (
-    "ab z09.,! \t\néßñ–†、あゅ世界語\U0001F600\U00010334"
-)
+
+def reference_snippet_spec(text: str, terms: list[str], snippet_len: int) -> str | None:
+    """Independent spec port: character-at-a-time is_word_char scan
+    (mirroring the C++ byte state machine) into (token, byte offset)
+    pairs, then the first token equal to the first sorted term present;
+    shares only the window cutter with production."""
+    toks = []
+    cur: list[str] = []
+    cur_start = 0
+    boff = 0
+    for ch in text:
+        blen = len(ch.encode("utf-8"))
+        if is_word_char(ord(ch)):
+            if not cur:
+                cur_start = boff
+            o = ord(ch)
+            cur.append(chr(o + 32) if 0x41 <= o <= 0x5A else ch)
+        elif cur:
+            toks.append(("".join(cur), cur_start))
+            cur = []
+        boff += blen
+    if cur:
+        toks.append(("".join(cur), cur_start))
+    for term in terms:
+        for tok, off in toks:
+            if tok == term:
+                return _cut_window(text.encode("utf-8"), off, snippet_len)
+    return None
+
+
+@st.composite
+def text_and_own_query(draw):
+    """A text and a query drawn from the text's own tokens (so the fuzz
+    hits, not just misses), upper-cased half the time, plus noise."""
+    text = draw(st.text(alphabet=ALPHABET, max_size=120))
+    toks = WORD_RE.findall(text)
+    words = draw(st.lists(st.sampled_from(toks), max_size=3)) if toks else []
+    noise = draw(st.text(alphabet=ALPHABET, max_size=6))
+    query = " ".join([*words, noise])
+    return text, query.upper() if draw(st.booleans()) else query
 
 
 @given(
@@ -35,6 +82,16 @@ ALPHABET = (
 )
 @settings(max_examples=400, deadline=None)
 def test_reference_snippet_production_matches_spec(text, raw_query, snippet_len):
+    terms = clean_query(raw_query)
+    assert reference_snippet(text, terms, snippet_len) == reference_snippet_spec(
+        text, terms, snippet_len
+    )
+
+
+@given(text_and_own_query(), st.integers(min_value=0, max_value=64))
+@settings(max_examples=400, deadline=None)
+def test_reference_snippet_matches_spec_on_own_tokens(text_query, snippet_len):
+    text, raw_query = text_query
     terms = clean_query(raw_query)
     assert reference_snippet(text, terms, snippet_len) == reference_snippet_spec(
         text, terms, snippet_len

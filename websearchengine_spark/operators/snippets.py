@@ -4,8 +4,10 @@ results) come from the index postings, in operators/wand.py.
 
 Reference behavior (ported exactly — see :func:`reference_snippet`):
 
-- after ranking, the doc body is re-tokenized with the FULL tokenizer
-  (same is_al_num/ASCII-tolower state machine the index build uses);
+- after ranking, the reference re-tokenizes the doc body (is_al_num +
+  ASCII tolower); a cleaned term is a run of word characters, so its first
+  token is its first ``str.find`` hit in the ASCII-lowercased body whose
+  neighbour characters are not word characters — no tokenizing;
 - query terms are probed in **sorted query_list order** (main.cpp:520:
   ``for (const auto &term: query_list)``) — the FIRST sorted term that
   occurs anywhere in the body wins, and its first occurrence becomes the
@@ -25,31 +27,40 @@ Gate/DataFrame path: on the gate corpus (pure ``[a-z0-9 ]``) these
 semantics reduce to column expressions — sorted-term-priority first match
 + the centered character window — mirrored 1:1 in the DuckDB oracle
 (plans/gate_queries.py). The full-Unicode byte semantics are pytest
-property-tested against an independent character-level spec port.
+property-tested against an independent character-level spec port
+(tests/test_snippets_ref.py).
 
 Serving path: :class:`SnippetService` resolves doc_id → (conv_id,
-turn_idx, role) through the index's doc_stats table and fetches turn text
-from the transcripts parquet via pyarrow (the analogue of the reference's
-page-table byte offsets into the corpus file, main.cpp:63-69, 498).
+turn_idx, role) and the turn text through the index's doc_stats and texts
+sidecars (or the raw transcripts) — the reference's page-table byte
+offsets into the OS-cached corpus file (main.cpp:63-69, 498). Sidecar row
+groups are decoded once and held in a byte-bounded LRU.
 """
 
 from __future__ import annotations
 
 import os
+import re
 from itertools import groupby
 from operator import itemgetter
 
 import numpy as np
-import pyarrow as pa
-import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from websearchengine_spark.functions.tokenizer import (
+    _WORD_CLASS,
+    ASCII_LOWER,
+    clean_query,
+)
+from websearchengine_spark.operators.wand import _LRU
+from websearchengine_spark.plans import block_index
+
 
 class _DocIdRGs:
-    """Point reads over a doc_id-clustered parquet sidecar (doc_stats,
+    """Point lookups over a doc_id-clustered parquet sidecar (doc_stats,
     texts) — the reference's page-table ``begin/end`` byte seek
     (main.cpp:498) for parquet. pyarrow's dataset Scanner does NOT prune
     parquet row groups from filter expressions (measured in
@@ -62,26 +73,29 @@ class _DocIdRGs:
     group of a two-column table). The sidecar writer
     (plans/block_index.write_doc_sidecar) bounds each row group to
     ``SIDECAR_BLOCK_BYTES``, so the groups are disjoint doc_id ranges of
-    ~100-500 rows, and a k-doc fetch ``searchsorted``s the k ids into
-    them — O(k log R) for R row groups — and decodes at most k groups.
-    Superset reads only, never a wrong answer: a group without min/max
-    statistics is read on every fetch, and a sidecar whose groups overlap
-    (one written before the bound, e.g. by a purge whose scan packed
-    several files into one task) falls back to testing every group's
-    range."""
+    ~100-500 rows, and a k-doc lookup ``searchsorted``s the k ids into
+    them — O(k log R) for R row groups — and touches at most k groups.
+    Superset selection only, never a wrong answer: a group without
+    min/max statistics is selected on every lookup, and a sidecar whose
+    groups overlap (one written before the bound, e.g. by a purge whose
+    scan packed several files into one task) falls back to testing every
+    group's range.
 
-    __slots__ = ("parts", "lo", "hi", "fi", "ri", "no_stats", "disjoint")
+    ``columns`` is the fixed value set served. Groups are decoded into
+    ``cache`` (byte-bounded LRU keyed (table, file, group)) with one
+    ``read_row_groups`` per file for a lookup's misses, each group entering
+    as its own doc_id-sorted copy (a pre-bound purge sidecar can be
+    unsorted inside a group; the copy keeps a held group from pinning the
+    rest of its read). A hit is one ``searchsorted`` per wanted id."""
 
-    def __init__(self, path: str):
-        files = (
-            sorted(
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            )
-            if os.path.isdir(path)
-            else [path]
-        )
+    __slots__ = ("parts", "lo", "hi", "fi", "ri", "no_stats", "disjoint",
+                 "columns", "cache", "_path")
+
+    def __init__(self, path: str, columns: tuple[str, ...], cache: _LRU):
+        self.columns, self.cache, self._path = columns, cache, path
+        files = (sorted(os.path.join(path, f) for f in os.listdir(path)
+                        if f.endswith(".parquet"))
+                 if os.path.isdir(path) else [path])
         self.parts = [pq.ParquetFile(p) for p in files]
         lo, hi, fi, ri = [], [], [], []
         self.no_stats: list[tuple[int, int]] = []
@@ -106,68 +120,74 @@ class _DocIdRGs:
         # hold id
         self.disjoint = bool(np.all(self.lo[1:] > self.hi[:-1]))
 
-    def read(self, doc_ids: list[int], columns: list[str]) -> "pa.Table":
-        wanted = np.unique(np.asarray(doc_ids, dtype=np.int64))
-        if self.disjoint or not len(wanted):
+    def _select(self, wanted: np.ndarray) -> dict[tuple[int, int], list[int]]:
+        """(file, group) → the sorted ``wanted`` ids in its range, for every
+        group that can hold one, in file order."""
+        if self.disjoint:
             g = np.searchsorted(self.lo, wanted, side="right") - 1
-            ok = g >= 0
-            g = g[ok]
-            g = g[wanted[ok] <= self.hi[g]]
+            g = np.unique(g[g >= 0])
         else:
-            i = np.searchsorted(wanted, self.lo)
-            g = np.flatnonzero(
-                (i < len(wanted))
-                & (wanted[np.minimum(i, len(wanted) - 1)] <= self.hi)
-            )
-        sel = sorted(
-            set(zip(self.fi[g].tolist(), self.ri[g].tolist()))
-            | set(self.no_stats)
-        )
-        # one read per file, groups in file order (the order a full scan
-        # would return the rows in)
-        out = [
-            self.parts[f].read_row_groups(
-                [r for _, r in grp], columns=columns, use_threads=False
-            )
-            for f, grp in groupby(sel, key=itemgetter(0))
-        ]
-        if not out:
-            schema = self.parts[0].schema_arrow
-            return pa.table(
-                {c: pa.array([], type=schema.field(c).type) for c in columns}
-            )
-        tbl = pa.concat_tables(out)
-        return tbl.filter(
-            pc.is_in(tbl.column("doc_id"), value_set=pa.array(wanted))
-        )
+            g = np.arange(len(self.lo))
+        a = np.searchsorted(wanted, self.lo[g])
+        b = np.searchsorted(wanted, self.hi[g], side="right")
+        g, a, b = g[b > a], a[b > a], b[b > a]
+        keys = wanted.tolist()
+        sel = {
+            (f, r): keys[i:j]
+            for f, r, i, j in zip(self.fi[g].tolist(), self.ri[g].tolist(),
+                                  a.tolist(), b.tolist())
+        }
+        sel.update(dict.fromkeys(self.no_stats, keys))
+        return dict(sorted(sel.items()))
 
-from websearchengine_spark.functions.tokenizer import (
-    ASCII_LOWER,
-    WORD_RE,
-    clean_query,
-    is_word_char,
-)
+    def _decoded(self, sel: list[tuple[int, int]]) -> list[tuple]:
+        """(sorted doc_ids, [column arrays], nbytes) of each selected
+        group: cache hits, then one read per file for the misses."""
+        got = {}
+        for g in sel:
+            hit = self.cache.get_((self._path, *g))
+            if hit is not None:
+                got[g] = hit
+        cols = ["doc_id", *self.columns]
+        miss = (g for g in sel if g not in got)
+        for f, grp in groupby(miss, key=itemgetter(0)):
+            rs = [r for _, r in grp]
+            md = self.parts[f].metadata
+            tbl = self.parts[f].read_row_groups(rs, columns=cols, use_threads=False)
+            ns = [md.row_group(r).num_rows for r in rs]
+            for r, off, n in zip(rs, np.cumsum([0, *ns]).tolist(), ns):
+                part = tbl.slice(off, n)
+                ids = part.column("doc_id").to_numpy()
+                order = np.argsort(ids, kind="stable")
+                part = part.take(order)
+                got[(f, r)] = entry = (
+                    ids[order],
+                    [part.column(c).combine_chunks() for c in self.columns],
+                    part.nbytes,
+                )
+                self.cache.put((self._path, f, r), entry)
+        return [got[g] for g in sel]
+
+    def lookup(self, doc_ids: list[int]) -> dict[int, tuple]:
+        """doc_id → its ``columns`` values, for every wanted id present."""
+        wanted = np.unique(np.asarray(doc_ids, dtype=np.int64))
+        if not len(wanted):
+            return {}
+        sel = self._select(wanted)
+        out = {}
+        for (ids, vals, _), cand in zip(self._decoded(list(sel)), sel.values()):
+            for d in cand:
+                x = int(ids.searchsorted(d))
+                if x < len(ids) and ids[x] == d:
+                    out[d] = tuple(v[x].as_py() for v in vals)
+        return out
 
 
 # ---------------------------------------------------------------------------
 # reference-exact byte-level snippet (serving path, full Unicode)
 
-def _token_byte_offsets(text: str):
-    """[(lowered_token, byte_offset_of_token_start)] via the production
-    tokenizer (regex + ASCII translate). Byte offsets computed from a
-    codepoint→byte prefix map (O(n), ASCII fast path)."""
-    out = []
-    if text.isascii():
-        for m in WORD_RE.finditer(text):
-            out.append((m.group().translate(ASCII_LOWER), m.start()))
-        return out
-    # codepoint index → byte offset of that codepoint
-    offsets = [0]
-    for ch in text:
-        offsets.append(offsets[-1] + len(ch.encode("utf-8")))
-    for m in WORD_RE.finditer(text):
-        out.append((m.group().translate(ASCII_LOWER), offsets[m.start()]))
-    return out
+# one word character of the tokenizer's class (is_al_num, main.cpp:196-212)
+_WORD_CHAR = re.compile(f"[{_WORD_CLASS}]")
 
 
 def _cut_window(data: bytes, anchor: int, snippet_len: int) -> str:
@@ -192,39 +212,17 @@ def reference_snippet(text: str, terms: list[str], snippet_len: int) -> str | No
     """Production port of main.cpp:498-547. ``terms`` must be the cleaned
     (deduped, sorted) query list. None ⇔ no term occurs in the body (the
     reference emits no result item then)."""
-    toks = _token_byte_offsets(text)
+    ascii_ = text.isascii()
+    # ASCII-only lowercase, char for char (never .lower() on non-ASCII)
+    low = text.lower() if ascii_ else text.translate(ASCII_LOWER)
     for term in terms:  # sorted query_list order — FIRST sorted term wins
-        for tok, boff in toks:
-            if tok == term:
+        p = low.find(term)
+        while p >= 0:
+            e = p + len(term)
+            if not (p and _WORD_CHAR.match(low, p - 1) or _WORD_CHAR.match(low, e)):
+                boff = p if ascii_ else len(text[:p].encode("utf-8"))
                 return _cut_window(text.encode("utf-8"), boff, snippet_len)
-    return None
-
-
-def reference_snippet_spec(text: str, terms: list[str], snippet_len: int) -> str | None:
-    """Independent spec port for property tests: character-at-a-time
-    is_word_char scan (mirroring the C++ byte state machine) instead of the
-    regex path, sharing only the window cutter."""
-    toks = []
-    cur: list[str] = []
-    cur_start = 0
-    boff = 0
-    for ch in text:
-        blen = len(ch.encode("utf-8"))
-        if is_word_char(ord(ch)):
-            if not cur:
-                cur_start = boff
-            o = ord(ch)
-            cur.append(chr(o + 32) if 0x41 <= o <= 0x5A else ch)
-        elif cur:
-            toks.append(("".join(cur), cur_start))
-            cur = []
-        boff += blen
-    if cur:
-        toks.append(("".join(cur), cur_start))
-    for term in terms:
-        for tok, off in toks:
-            if tok == term:
-                return _cut_window(text.encode("utf-8"), off, snippet_len)
+            p = low.find(term, p + 1)
     return None
 
 
@@ -285,10 +283,12 @@ class SnippetService:
     ``build_block_index(store_texts=True)``) is the scale path: it is the
     reference's O(1) ``begin/end`` byte seek into docs.txt (main.cpp:498,
     create_index.cpp:152-156) — the k results' ids are searchsorted into
-    the sidecar's bounded row groups, so a fetch decodes at most k of them
-    (:class:`_DocIdRGs`; doc_stats is read the same way). Without it the
-    fallback filters the raw transcripts by conv_id, which at corpus scale
-    is a scan unless the table happens to be clustered by conv_id."""
+    the sidecar's bounded row groups, so a fetch touches at most k of them
+    (:class:`_DocIdRGs`; doc_stats is read the same way). Both share one
+    LRU of decoded row groups bounded at ``SIDECAR_CACHE_BYTES`` — the OS
+    page cache the reference's seek lands in. Without the texts sidecar
+    the fallback filters the raw transcripts by conv_id, which at corpus
+    scale is a scan unless the table happens to be clustered by conv_id."""
 
     def __init__(
         self,
@@ -296,48 +296,38 @@ class SnippetService:
         transcripts_path: str | None = None,
         texts_path: str | None = None,
     ):
-        self._doc_stats = _DocIdRGs(doc_stats_path)
+        cache = _LRU(block_index.SIDECAR_CACHE_BYTES, weigh=itemgetter(2))
+        self._doc_stats = _DocIdRGs(
+            doc_stats_path, ("conv_id", "turn_idx", "role"), cache
+        )
         self._transcripts = (
             ds.dataset(transcripts_path) if transcripts_path is not None else None
         )
-        self._texts = _DocIdRGs(texts_path) if texts_path is not None else None
+        self._texts = (_DocIdRGs(texts_path, ("text",), cache)
+                       if texts_path is not None else None)
         if self._texts is None and self._transcripts is None:
             raise ValueError("need texts_path (sidecar) or transcripts_path")
 
     def meta_for(self, doc_ids: list[int]) -> dict[int, dict]:
         """doc_id → {conv_id, turn_idx, role} — the `url` analogue of the
         result items (SURVEY.md §1.5)."""
-        rows = self._doc_stats.read(
-            doc_ids, ["doc_id", "conv_id", "turn_idx", "role"]
-        ).to_pylist()
         return {
-            r["doc_id"]: {
-                "conv_id": r["conv_id"],
-                "turn_idx": r["turn_idx"],
-                "role": r["role"],
-            }
-            for r in rows
+            d: {"conv_id": c, "turn_idx": t, "role": r}
+            for d, (c, t, r) in self._doc_stats.lookup(doc_ids).items()
         }
 
     def texts_for(self, doc_ids: list[int]) -> dict[int, str]:
         if self._texts is not None:
-            rows = self._texts.read(doc_ids, ["doc_id", "text"]).to_pylist()
-            return {r["doc_id"]: r["text"] for r in rows}
-        keys = self._doc_stats.read(
-            doc_ids, ["doc_id", "conv_id", "turn_idx"]
-        ).to_pylist()
+            return {d: t for d, (t,) in self._texts.lookup(doc_ids).items()}
+        keys = self._doc_stats.lookup(doc_ids)
         if not keys:
             return {}
-        convs = [r["conv_id"] for r in keys]
         rows = self._transcripts.to_table(
-            filter=ds.field("conv_id").isin(convs),
+            filter=ds.field("conv_id").isin([c for c, _, _ in keys.values()]),
             columns=["conv_id", "turn_idx", "text"],
         ).to_pylist()
         by_key = {(r["conv_id"], r["turn_idx"]): r["text"] for r in rows}
-        return {
-            r["doc_id"]: by_key.get((r["conv_id"], r["turn_idx"]), "")
-            for r in keys
-        }
+        return {d: by_key.get((c, t), "") for d, (c, t, _) in keys.items()}
 
     def reference_snippets(
         self, query: str, doc_ids: list[int], snippet_len: int = 120
@@ -345,8 +335,5 @@ class SnippetService:
         """doc_id → reference-exact snippet (None ⇔ no query term in the
         body ⇒ the result item is dropped, main.cpp:520-546)."""
         terms = clean_query(query)
-        texts = self.texts_for(doc_ids)
-        return {
-            d: reference_snippet(text, terms, snippet_len)
-            for d, text in texts.items()
-        }
+        return {d: reference_snippet(text, terms, snippet_len)
+                for d, text in self.texts_for(doc_ids).items()}

@@ -106,9 +106,12 @@ class _BucketRGs:
     reference's page-table byte seek (main.cpp:498) for parquet.
 
     ``rg_cache``: optional LRU of decoded row-group tables keyed
-    (file, group, columns) — the analogue of the reference's mmap + OS
-    page cache (hot row groups stay decoded, cold ones are re-read);
-    bounded, so reader memory stays O(cache) at any corpus size."""
+    (dir, file, group) — the analogue of the reference's mmap + OS page
+    cache (hot row groups stay decoded, cold ones are re-read); bounded,
+    so reader memory stays O(cache) at any corpus size. A group is read
+    with every column, so the superblock, leaf-batch and whole-term reads
+    of one group share one decoded copy (superblock rows carry empty
+    payloads, so superblock-only reads decode little extra)."""
 
     __slots__ = ("files", "parts", "stats", "keys", "rg_cache", "_dir")
 
@@ -156,16 +159,15 @@ class _BucketRGs:
             return True  # no statistics → conservative
         return not (st[1] < lo or st[0] > hi)
 
-    def _group(self, fi: int, ri: int, cols: list[str]) -> pa.Table:
-        """One decoded row group, order-checked when it enters the reader
-        (read from disk, or into the rg LRU)."""
-        pf = self.parts[fi]
-        key = ("rg", self._dir, id(pf), ri, tuple(cols))
+    def _group(self, fi: int, ri: int) -> pa.Table:
+        """One decoded row group (every column), order-checked when it
+        enters the reader (read from disk, or into the rg LRU)."""
+        key = (self._dir, fi, ri)
         if self.rg_cache is not None:
             tbl = self.rg_cache.get_(key)
             if tbl is not None:
                 return tbl
-        tbl = pf.read_row_groups([ri], columns=cols).combine_chunks()
+        tbl = self.parts[fi].read_row_groups([ri]).combine_chunks()
         n = tbl.num_rows
         if n > 1:
             # rows i and i+1 out of key order ⇔ at the first key column
@@ -189,18 +191,16 @@ class _BucketRGs:
 
     def read(
         self,
-        columns: list[str],
         terms: list[str],
         kind: int | None = None,
         ranges_by_term: dict[str, list[tuple[int, int]]] | None = None,
     ) -> dict[str, pa.Table]:
-        """term → its rows (``columns`` plus the sort-key columns) from
-        every row group whose statistics can contain the request, in
-        doc_lo order; terms without rows are absent. ``ranges_by_term``
-        further prunes groups by doc range (only meaningful with per-term
-        ranges; conservative across terms sharing a group) — rows of a
-        wanted term outside its ranges can still ride along."""
-        cols = list(dict.fromkeys([*self.keys, *columns]))
+        """term → its rows (every column) from every row group whose
+        statistics can contain the request, in doc_lo order; terms
+        without rows are absent. ``ranges_by_term`` further prunes groups
+        by doc range (only meaningful with per-term ranges; conservative
+        across terms sharing a group) — rows of a wanted term outside its
+        ranges can still ride along."""
         runs: dict[str, list[pa.Table]] = {}
         for fi, rgs in enumerate(self.stats):
             for ri, st in enumerate(rgs):
@@ -239,7 +239,7 @@ class _BucketRGs:
                         )
                     ):
                         continue
-                tbl = self._group(fi, ri, cols)
+                tbl = self._group(fi, ri)
                 lo, hi = 0, tbl.num_rows
                 if hi and kind is not None:
                     kc = tbl.column("kind").chunk(0).to_numpy()
@@ -274,11 +274,16 @@ class _LRU(OrderedDict):
     OrderedDict's links mid-``move_to_end``/``popitem``. Values are safe
     to share because fetch helpers collect DIRECT references and never
     read back through the cache (see lexicon_rows) — a racing eviction
-    costs a duplicate fetch, never a wrong answer."""
+    costs a duplicate fetch, never a wrong answer.
 
-    def __init__(self, cap: int):
+    ``cap`` bounds the entries, or with ``weigh`` (value → size) the
+    summed sizes (``held``); a value larger than ``cap`` is never held."""
+
+    def __init__(self, cap: int, weigh=None):
         super().__init__()
         self.cap = cap
+        self.weigh = weigh
+        self.held = 0
         self._lock = threading.Lock()
 
     def get_(self, key):
@@ -301,11 +306,16 @@ class _LRU(OrderedDict):
             return False, None
 
     def put(self, key, value):
+        size = self.weigh or (lambda v: 1)
         with self._lock:
+            if key in self:
+                self.held -= size(self.pop(key))
+            if size(value) > self.cap:
+                return
             self[key] = value
-            self.move_to_end(key)
-            if len(self) > self.cap:
-                self.popitem(last=False)
+            self.held += size(value)
+            while self.held > self.cap:
+                self.held -= size(self.popitem(last=False)[1])
 
 
 @dataclass
@@ -515,7 +525,6 @@ class BlockIndexReader:
         rgs_cache: dict,
         table_root: str,
         terms: list[str],
-        columns: list[str],
         kind: int | None = None,
         ranges_by_term: dict | None = None,
     ) -> dict[str, pa.Table]:
@@ -536,7 +545,6 @@ class BlockIndexReader:
                 )
             out.update(
                 rgs.read(
-                    columns,
                     sorted(by_bucket[b]),
                     kind=kind,
                     ranges_by_term=ranges_by_term,
@@ -574,7 +582,7 @@ class BlockIndexReader:
         vals = self._cached("lex", terms, lambda missing: {
             t: tbl.column("df")[-1].as_py()
             for t, tbl in self._pruned_read(
-                self._lex_rgs, self.paths.lexicon, missing, ["df"]
+                self._lex_rgs, self.paths.lexicon, missing
             ).items()
         })
         if self._df_corr:
@@ -607,9 +615,7 @@ class BlockIndexReader:
 
         def fetch(missing):
             runs = self._pruned_read(
-                self._block_rgs, self.paths.blocks, missing,
-                ["doc_hi", "n", "max_tfc", "min_tfc"],
-                kind=1,
+                self._block_rgs, self.paths.blocks, missing, kind=1
             )
             self.sb_rows_fetched += sum(t.num_rows for t in runs.values())
             return {t: _meta_arrays(tbl) for t, tbl in runs.items()}
@@ -640,7 +646,6 @@ class BlockIndexReader:
         # groups — the per-superblock searchsorted slicing below drops them
         runs = self._pruned_read(
             self._block_rgs, self.paths.blocks, sorted(by_term),
-            ["doc_hi", "n", "max_tfc", "min_tfc", "ids_vb", "tfs_vb", "dls_vb"],
             kind=0,
             ranges_by_term={
                 t: [(lo_, hi_) for _si, lo_, hi_ in ranges]
@@ -695,9 +700,7 @@ class BlockIndexReader:
 
         def fetch(missing):
             runs = self._pruned_read(
-                self._block_rgs, self.paths.blocks, missing,
-                ["n", "ids_vb", "tfs_vb", "dls_vb"],
-                kind=0,
+                self._block_rgs, self.paths.blocks, missing, kind=0
             )
             self.leaf_rows_fetched += sum(t.num_rows for t in runs.values())
             return self._decode_posting_table(runs)
@@ -1044,7 +1047,6 @@ class BlockIndexReader:
             return empty
         runs = self._pruned_read(
             self._block_rgs, self.paths.blocks, present,
-            ["doc_hi", "n", "ids_vb", "tfs_vb", "dls_vb"],
             kind=0,
             ranges_by_term={t: [(doc_lo, doc_hi - 1)] for t in present},
         )

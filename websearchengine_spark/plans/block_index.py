@@ -208,6 +208,10 @@ LEXICON_BLOCK_BYTES = 256 << 10
 # checks a group's size at 100 rows, so texts stop shrinking there anyway.
 SIDECAR_BLOCK_BYTES = 32 << 10
 
+# Table.nbytes bound of the decoded sidecar row groups a SnippetService
+# holds; the perfbench serve index's doc_stats + texts decode to ~11 MB.
+SIDECAR_CACHE_BYTES = 32 << 20
+
 
 def write_doc_sidecar(df: DataFrame, path: str) -> None:
     """Write one of the index's doc_id-clustered sidecars (doc_stats,
