@@ -38,3 +38,36 @@ def spark_index(spark, fixture):
 
     tdf = spark.createDataFrame(fixture.transcripts)
     return build_logical_index(tdf, num_partitions=8)
+
+
+@pytest.fixture
+def kernel_spy(monkeypatch) -> dict:
+    """Counts of the branch each BlockIndexReader._scored call takes:
+    "intersect", "flat_cut", or _accumulate as ("conj"|"disj",
+    "flat"|"compressed")."""
+    from websearchengine_spark.operators.wand import BlockIndexReader
+
+    hits: dict = {}
+    real_i = BlockIndexReader._intersect
+    real_c = BlockIndexReader._flat_cut
+    real_a = BlockIndexReader._accumulate
+
+    def note(key):
+        hits[key] = hits.get(key, 0) + 1
+
+    def intersect(per):
+        note("intersect")
+        return real_i(per)
+
+    def flat_cut(self, per, k):
+        note("flat_cut")
+        return real_c(self, per, k)
+
+    def accumulate(self, per, need, conjunctive, flat):
+        note(("conj" if conjunctive else "disj", "flat" if flat else "compressed"))
+        return real_a(self, per, need, conjunctive, flat)
+
+    monkeypatch.setattr(BlockIndexReader, "_intersect", staticmethod(intersect))
+    monkeypatch.setattr(BlockIndexReader, "_flat_cut", flat_cut)
+    monkeypatch.setattr(BlockIndexReader, "_accumulate", accumulate)
+    return hits

@@ -326,6 +326,26 @@ def test_bucket_rgs_slices_exact_term_runs(tmp_path, cached):
         assert los(0, ["zz"]) == {}
 
 
+def test_term_keys_match_scalar_keys_and_order():
+    """The vectorized row-group term keys equal the scalar lookup keys,
+    on sliced and large-offset arrays, and are sorted wherever the terms
+    are (byte order), prefix-sharing and multi-byte terms included."""
+    import pyarrow as pa
+
+    from websearchengine_spark.operators.wand import _key8, _term_keys
+
+    words = sorted(
+        ["", "a", "ab", "abcdefgh", "abcdefghi", "abcdefgz", "ü", "日本語テキスト長い",
+         "w1", "w10", "w100000000", "zz"],
+        key=str.encode,
+    )
+    for arr in (pa.array(words), pa.array(words).slice(3),
+                pa.array(words, pa.large_string())):
+        keys = _term_keys(arr)
+        assert keys.tolist() == [_key8(w) for w in arr.to_pylist()]
+        assert (np.diff(keys.astype(object)) >= 0).all()
+
+
 @pytest.mark.parametrize("broken", ["kind", "term", "doc_lo"])
 def test_bucket_rgs_rejects_unsorted_row_group(tmp_path, broken):
     """Slicing is exact only on (kind, term, doc_lo)-sorted groups, so a
@@ -753,6 +773,185 @@ def test_search_full_cache_hit_decodes_nothing(reader, fixture, monkeypatch):
         for conj in (True, False):
             assert reader.search_full(q, conjunctive=conj)["cached"]
     assert calls == {"rg": 0, "vb": 0}
+
+
+def brute_scored(arrays, k, conjunctive):
+    """Reference answer from {term: (ids, tfs, contrib)}: each doc's score
+    summed from 0.0 in sorted-term order, (score DESC, doc_id ASC)
+    top-k, match count, and the top-k's (term, tf) pairs."""
+    score: dict = {}
+    hits: dict = {}
+    freqs: dict = {}
+    terms = sorted(arrays)
+    for t in terms:
+        ids, tfs, contrib = arrays[t]
+        for d, tf, c in zip(ids.tolist(), tfs.tolist(), contrib.tolist()):
+            score[d] = score.get(d, 0.0) + c
+            hits[d] = hits.get(d, 0) + 1
+            freqs.setdefault(d, []).append((t, int(tf)))
+    docs = [d for d in score if not conjunctive or hits[d] == len(terms)]
+    top = sorted(docs, key=lambda d: (-score[d], d))[:k]
+    return (
+        [(i + 1, d, score[d]) for i, d in enumerate(top)],
+        len(docs),
+        {d: freqs[d] for d in top},
+    )
+
+
+def assert_scored_exact(r, arrays, k, conjunctive, flat, what):
+    out = r._scored(arrays, k, conjunctive, flat)
+    ranked, count, freqs = brute_scored(arrays, k, conjunctive)
+    assert list(out) == ranked, what  # scores bitwise-equal
+    assert out.count == count, what
+    assert out.freqs == freqs, what
+
+
+def _postings(ids, contrib, tf=1):
+    """(ids, tfs, contrib) of a term whose postings all carry one tf and
+    one contribution."""
+    ids = np.asarray(ids, dtype=np.int64)
+    n = len(ids)
+    return ids, np.full(n, tf, dtype=np.uint32), np.full(n, contrib, dtype=np.float64)
+
+
+# adversarial inputs for every kernel branch (n_docs = 64); each case
+# lists the k values it is scored at
+_KERNEL_CASES = {
+    # 30 docs tie at the 12th score (1.0); the tie-break is doc_id ASC
+    "tie_plateau": (
+        {"a": _postings(range(40), 1.0), "b": _postings(range(20, 30), 0.5)},
+        (10, 12, 25),
+    ),
+    # df > N/2: every hit doc scores below an unhit doc's 0.0
+    "negative_idf": (
+        {"neg": _postings(range(50), -0.3), "pos": _postings(range(40, 46), 1.0, 3)},
+        (1, 5, 8),
+    ),
+    "negative_idf_alone": ({"neg": _postings(range(2, 60), -0.25)}, (1, 5)),
+    # no list holds k docs; k above every candidate count
+    "k_above_candidates": (
+        {"a": _postings([3, 9, 17], 0.7), "b": _postings([9, 17, 40, 63], 0.2)},
+        (5, 10),
+    ),
+    "empty_intersection": (
+        {"a": _postings(range(10), 0.4), "b": _postings(range(10, 20), 0.9)},
+        (1, 10),
+    ),
+    # the shortest list runs past the end of the other
+    "lead_past_end": (
+        {"a": _postings([5, 60, 63], 0.4), "b": _postings(range(30), 0.9)},
+        (1, 10),
+    ),
+}
+
+
+def test_scored_branches_match_brute_force(kernel_spy):
+    """Every side of the kernel's size-based choices (conjunctive
+    intersect-first vs flat scatter; disjunctive lower-bound cut vs
+    compressed vs flat without a k-sized list) equals the brute-force
+    answer bitwise, count and freqs included, on ties at the k-th score,
+    negative-IDF terms, k above the candidate count and an empty
+    intersection."""
+    r = BlockIndexReader.__new__(BlockIndexReader)
+    r.n_docs = 64
+    hits = kernel_spy
+    took = {}
+    for name, (arrays, ks) in _KERNEL_CASES.items():
+        for conj in (True, False):
+            for flat in (True, False):
+                for k in ks:
+                    before = dict(hits)
+                    assert_scored_exact(r, arrays, k, conj, flat, (name, conj, flat, k))
+                    took[(name, conj, flat, k)] = [
+                        b for b in hits if hits[b] != before.get(b, 0)
+                    ]
+    assert took[("tie_plateau", False, True, 12)] == ["flat_cut"]
+    assert took[("negative_idf", False, True, 5)] == ["flat_cut"]
+    assert took[("negative_idf_alone", False, True, 5)] == ["flat_cut"]
+    assert took[("tie_plateau", True, True, 10)] == [("conj", "flat")]
+    assert took[("k_above_candidates", True, True, 10)] == ["intersect"]
+    assert took[("empty_intersection", True, False, 10)] == ["intersect"]
+    assert took[("k_above_candidates", False, True, 10)] == [("disj", "flat")]
+    assert took[("tie_plateau", False, False, 12)] == [("disj", "compressed")]
+
+
+@pytest.mark.parametrize(
+    "kw", [{}, dict(dense_docs_max=0)], ids=["taat", "taat_sparse"]
+)
+def test_kernel_branches_on_the_index_match_oracle(
+    index_dir, oracle, fixture, kw, kernel_spy
+):
+    """On the built index, the TAAT scorer's branches rank like the oracle
+    and score like the brute-force sum of the fetched contributions
+    (bitwise), for k from 1 to above every candidate count; the queries
+    include a negative-IDF term (df > N/2)."""
+    from websearchengine_spark.functions.tokenizer import clean_query
+
+    r = BlockIndexReader(index_dir, **kw)
+    hits = kernel_spy
+    queries = list(fixture.queries["query"]) + [
+        "term00000", "term00000 the", "term00000 term01522", "the data",
+    ]
+    negative = False
+    for q in queries:
+        lex = r.lexicon_rows(clean_query(q))
+        present = [t for t in clean_query(q) if t in lex]
+        if not present:
+            continue
+        negative |= any(r._idf(lex[t]) < 0 for t in present)
+        arrays = r._fetch_arrays(present)
+        for conj in (True, False):
+            n_match = len(oracle.search(q, conjunctive=conj, k=10**9))
+            for k in (1, 10, 2000):
+                out = r._search_taat(present, lex, k, conj)
+                exp = oracle.search(q, conjunctive=conj, k=k)
+                assert [(a, d) for a, d, _ in out] == [(a, d) for a, d, _ in exp], (
+                    q, conj, k,
+                )
+                for (_, _, es), (_, _, got) in zip(exp, out):
+                    assert math.isclose(es, got, rel_tol=1e-9, abs_tol=1e-12)
+                assert out.count == n_match, (q, conj, k)
+                ranked, count, freqs = brute_scored(arrays, k, conj)
+                assert (list(out), out.count, out.freqs) == (ranked, count, freqs)
+    assert negative
+    if kw:  # no flat accumulator at all
+        assert set(hits) == {"intersect", ("disj", "compressed")}, hits
+    else:  # every branch (selective queries still compress)
+        assert set(hits) == {
+            "intersect", ("conj", "flat"), "flat_cut", ("disj", "flat"),
+            ("disj", "compressed"),
+        }, hits
+
+
+@pytest.mark.parametrize(
+    "kw", [{}, dict(dense_docs_max=0)], ids=["taat", "taat_sparse"]
+)
+def test_posting_cache_hit_computes_no_contributions(index_dir, fixture, kw, monkeypatch):
+    """A whole-term posting-cache hit scores from the cached per-posting
+    contributions: re-answering TAAT queries after a result-cache clear
+    evaluates the BM25 tf component zero times."""
+    from websearchengine_spark.operators import wand
+
+    r = BlockIndexReader(index_dir, **kw)
+    queries = list(fixture.queries["query"]) + ["the", "the data value"]
+    want = {q: r.search(q, conjunctive=False) for q in queries}
+    calls = {"tfc": 0}
+    real = wand._tf_component
+
+    def tfc(*a):
+        calls["tfc"] += 1
+        return real(*a)
+
+    monkeypatch.setattr(wand, "_tf_component", tfc)
+    r._result_cache.clear()
+    for q in queries:
+        assert r.search(q, conjunctive=False) == want[q], q
+    assert calls == {"tfc": 0}
+    r._result_cache.clear()
+    r._posting_cache.clear()
+    for q in queries:
+        assert r.search(q, conjunctive=False) == want[q], q
+    assert calls["tfc"] > 0  # the counter sees a cold fetch
 
 
 def test_serving_reads_never_filter_rows(index_dir, fixture, monkeypatch):

@@ -187,6 +187,36 @@ def test_tombstone_search_full_count_and_freqs_match_cross_check(
         r.close()
 
 
+@pytest.mark.parametrize("mode", ["taat", "taat_sparse"])
+def test_tombstone_kernel_branches_bitwise_equal_scratch(
+    deleted_vs_scratch, mode, kernel_spy
+):
+    """Every TAAT kernel branch skips tombstoned postings: scored on the
+    tombstoned index, each (query, k) ranks and scores bitwise like the
+    scratch rebuild, with the same count, whichever branch ran."""
+    from websearchengine_spark.functions.tokenizer import clean_query
+
+    root, _t, _m = deleted_vs_scratch
+    full, scratch = str(root / "full"), str(root / "scratch")
+    rf, rs = _reader(full, mode), _reader(scratch, mode)
+    for q, conj in QUERIES + [("the", False), ("tombstone", False)]:
+        for k in (1, 3, 10, 500):
+            out = []
+            for r in (rf, rs):
+                lex = r.lexicon_rows(clean_query(q))
+                present = [t for t in clean_query(q) if t in lex]
+                out.append(r._search_taat(present, lex, k, conj) if present else [])
+            got, want = out
+            assert _keyed(full, got) == _keyed(scratch, want), (mode, q, conj, k)
+            assert getattr(got, "count", 0) == getattr(want, "count", 0)
+    if mode == "taat":
+        assert set(kernel_spy) >= {
+            "intersect", ("conj", "flat"), "flat_cut", ("disj", "flat"),
+        }, kernel_spy
+    else:
+        assert set(kernel_spy) == {"intersect", ("disj", "compressed")}, kernel_spy
+
+
 def test_tombstone_search_full_and_freqs(deleted_vs_scratch):
     root, _t, _m = deleted_vs_scratch
     full, scratch = str(root / "full"), str(root / "scratch")

@@ -14,12 +14,15 @@ upgraded from decode-everything-then-full-sort (main.cpp:584-630) to:
   (main.cpp:599-607's std::set_intersection): the rarest term's postings
   are decoded once, every other term decodes only the leaf blocks whose
   doc range covers a lead docID (superblock → leaf skip by searchsorted
-  over doc_hi), and the shared accumulator keeps the docs hit by every
-  term;
-- vectorized term-at-a-time scoring with a **candidate-bounded accumulator**
-  for machine-reasonable posting volumes: memory is O(Σ candidate postings),
-  never O(n_docs) (a flat dense accumulator is used only while n_docs is
-  driver-RAM-sized — the 10^12-doc scale path is the compressed one);
+  over doc_hi), and the lists are intersected before any doc is scored;
+- vectorized term-at-a-time scoring that **scores only what can rank**:
+  each cached posting list carries its per-posting BM25 contributions
+  (computed once per reader), conjunctions intersect first and sum only
+  the survivors, and a flat disjunctive top-k is cut at a proven lower
+  bound on the k-th score before the exact sort. Memory is
+  O(Σ candidate postings), never O(n_docs) (a flat dense accumulator is
+  used only while n_docs is driver-RAM-sized — the 10^12-doc scale path
+  is the compressed one);
 - **block-at-a-time block-max WAND** for large disjunctions: candidate
   blocks are selected from block-max metadata and scored as whole numpy
   batches — no doc-at-a-time Python loop. Exact under the reference's
@@ -80,9 +83,46 @@ from websearchengine_spark.plans.block_index import (
 from websearchengine_spark.plans.build import tf_component as _tf_component
 
 
+# a conjunction whose shortest list holds more than this share of a
+# flat-accumulator-sized corpus is scored by the flat scatter: searching
+# every lead id in the other lists costs more there (measured crossover)
+_INTERSECT_MAX_SHARE = 0.1
+
 # bisection key over an Arrow string array: compares element values
 # without copying the column into Python objects
 _as_py = operator.methodcaller("as_py")
+
+
+def _key8(term: str) -> int:
+    """A term's first 8 UTF-8 bytes, zero-padded, as a big-endian int: the
+    row-group term key (scalar form, for the few terms a read looks up)."""
+    return int.from_bytes(term.encode()[:8].ljust(8, b"\0"), "big")
+
+
+def _term_keys(arr: pa.Array) -> np.ndarray:
+    """uint64 :func:`_key8` of every string of ``arr``, vectorized over
+    its offset and data buffers: built once per row group, never per
+    lookup (its fixed per-call cost outweighs a few scalar keys — measured
+    +0.4 ms per serve query when used per read). Byte order is the
+    writers' string order, so the keys of a sorted column are sorted, and
+    a term's rows are among the rows sharing its key (longer terms can
+    share a prefix)."""
+    n = len(arr)
+    if n == 0:
+        return np.zeros(0, dtype=np.uint64)
+    wide = pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type)
+    _valid, offs, data = arr.buffers()
+    offs = np.frombuffer(offs, dtype=np.int64 if wide else np.int32)
+    offs = offs[arr.offset: arr.offset + n + 1].astype(np.int64)
+    data = np.frombuffer(data, dtype=np.uint8) if data is not None else None
+    starts, lens = offs[:-1], np.diff(offs)
+    out = np.zeros(n, dtype=np.uint64)
+    for j in range(8):
+        has = np.flatnonzero(lens > j)
+        if len(has) == 0:
+            break
+        out[has] |= data[starts[has] + j].astype(np.uint64) << np.uint64(56 - 8 * j)
+    return out
 
 
 class _BucketRGs:
@@ -99,19 +139,23 @@ class _BucketRGs:
     missing statistics degrade to "read the group"), and inside a group
     each term's rows are one contiguous run. This class reads each file's
     FOOTER once (O(row groups) metadata — scale-safe at any corpus size),
-    reads the selected groups, and bisects each for the kind run and then
-    each wanted term's run, returning zero-copy slices. The slicing is
-    exact only while the sort order holds, so each group's order is
-    checked once, vectorized, when it enters the reader. This is the
-    reference's page-table byte seek (main.cpp:498) for parquet.
+    reads the selected groups, and cuts each to the kind run and then each
+    wanted term's run, returning zero-copy slices. The slicing is exact
+    only while the sort order holds, so each group's order is checked
+    once, vectorized, when it enters the reader; its kind runs and term
+    keys (:func:`_term_keys`) are built then too, so a read finds every
+    wanted term's rows with one searchsorted per group and a bisection
+    of the few rows sharing its 8-byte key. This is the reference's
+    page-table byte seek (main.cpp:498) for parquet.
 
-    ``rg_cache``: optional LRU of decoded row-group tables keyed
-    (dir, file, group) — the analogue of the reference's mmap + OS page
-    cache (hot row groups stay decoded, cold ones are re-read); bounded,
-    so reader memory stays O(cache) at any corpus size. A group is read
-    with every column, so the superblock, leaf-batch and whole-term reads
-    of one group share one decoded copy (superblock rows carry empty
-    payloads, so superblock-only reads decode little extra)."""
+    ``rg_cache``: optional LRU of decoded row groups (table, kind runs,
+    term keys) keyed (dir, file, group) — the analogue of the reference's
+    mmap + OS page cache (hot row groups stay decoded, cold ones are
+    re-read); bounded, so reader memory stays O(cache) at any corpus
+    size. A group is read with every column, so the superblock, leaf-batch
+    and whole-term reads of one group share one decoded copy (superblock
+    rows carry empty payloads, so superblock-only reads decode little
+    extra)."""
 
     __slots__ = ("files", "parts", "stats", "keys", "rg_cache", "_dir")
 
@@ -159,14 +203,16 @@ class _BucketRGs:
             return True  # no statistics → conservative
         return not (st[1] < lo or st[0] > hi)
 
-    def _group(self, fi: int, ri: int) -> pa.Table:
-        """One decoded row group (every column), order-checked when it
-        enters the reader (read from disk, or into the rg LRU)."""
+    def _group(self, fi: int, ri: int) -> tuple:
+        """One decoded row group (every column) as (table, kind → its
+        (lo, hi) rows or None without a kind column, uint64 term keys),
+        order-checked and indexed when it enters the reader (read from
+        disk, or into the rg LRU)."""
         key = (self._dir, fi, ri)
         if self.rg_cache is not None:
-            tbl = self.rg_cache.get_(key)
-            if tbl is not None:
-                return tbl
+            got = self.rg_cache.get_(key)
+            if got is not None:
+                return got
         tbl = self.parts[fi].read_row_groups([ri]).combine_chunks()
         n = tbl.num_rows
         if n > 1:
@@ -185,9 +231,19 @@ class _BucketRGs:
                     f"{self.files[fi]} row group {ri} is not sorted by "
                     f"{tuple(self.keys)}"
                 )
+        kinds = None
+        if "kind" in self.keys:
+            kc = tbl.column("kind").to_numpy()
+            cut = np.flatnonzero(kc[1:] != kc[:-1]) + 1
+            lo, hi = np.concatenate(([0], cut)), np.concatenate((cut, [n]))
+            kinds = {
+                int(kc[a]): (int(a), int(b))
+                for a, b in zip(lo.tolist(), hi.tolist()) if b > a
+            }
+        got = (tbl, kinds, _term_keys(tbl.column("term").combine_chunks()))
         if self.rg_cache is not None:
-            self.rg_cache.put(key, tbl)
-        return tbl
+            self.rg_cache.put(key, got)
+        return got
 
     def read(
         self,
@@ -239,18 +295,21 @@ class _BucketRGs:
                         )
                     ):
                         continue
-                tbl = self._group(fi, ri)
-                lo, hi = 0, tbl.num_rows
-                if hi and kind is not None:
-                    kc = tbl.column("kind").chunk(0).to_numpy()
-                    lo = int(np.searchsorted(kc, kind, side="left"))
-                    hi = int(np.searchsorted(kc, kind, side="right"))
+                tbl, kinds, tkeys = self._group(fi, ri)
+                lo, hi = (
+                    (0, tbl.num_rows) if kind is None
+                    else kinds.get(kind, (0, 0))
+                )
                 if hi <= lo:
                     continue
+                wk = np.array([_key8(t) for t in want], dtype=np.uint64)
+                a0 = (np.searchsorted(tkeys[lo:hi], wk, side="left") + lo).tolist()
+                b0 = (np.searchsorted(tkeys[lo:hi], wk, side="right") + lo).tolist()
                 tc = tbl.column("term").chunk(0)
-                for t in want:
-                    a = bisect_left(tc, t, lo, hi, key=_as_py)
-                    b = bisect_right(tc, t, a, hi, key=_as_py)
+                for t, a, b in zip(want, a0, b0):
+                    if b > a:  # the rows sharing t's key hold t's whole run
+                        a = bisect_left(tc, t, a, b, key=_as_py)
+                        b = bisect_right(tc, t, a, b, key=_as_py)
                     if b > a:
                         runs.setdefault(t, []).append(tbl.slice(a, b - a))
         out = {}
@@ -510,14 +569,6 @@ class BlockIndexReader:
         # stopword term at 10^10+ docs has thousands of superblocks and
         # stays on the lazy path)
         self.prefetch_sbs = 8
-        # warm the pyarrow scan machinery once (thread pools, filesystem,
-        # codec init): the reference's startup similarly pre-loads its
-        # lexicon/page table (main.cpp:338-373) — without this the FIRST
-        # query pays ~100+ ms of one-time infrastructure cost that has
-        # nothing to do with query evaluation
-        if self._lex_ds is not None:
-            self._lex_ds.head(1)
-            self._blocks_ds.head(1)
 
     # ---- index access -----------------------------------------------------
     def _pruned_read(
@@ -694,8 +745,12 @@ class BlockIndexReader:
                 return got
 
     def _fetch_arrays(self, terms: list[str]) -> dict[str, tuple]:
-        """term → decoded (ids:int64, tfs:f64, dls:f64) full posting arrays,
-        LRU-cached (see _cached). Columnar fetch — no per-block Python
+        """term → its whole posting list as (ids:int64, tfs:uint32,
+        contrib:f64), LRU-cached (see _cached). ``contrib`` is the term's
+        BM25 contribution per posting (idf · tf_component), computed once
+        per fetch: it depends only on the reader's live N, df corrections
+        and avg_dl, which are fixed for the reader's life, so a cache hit
+        scores with no arithmetic. Columnar fetch — no per-block Python
         objects, one segmented vb_decode per column."""
 
         def fetch(missing):
@@ -703,18 +758,31 @@ class BlockIndexReader:
                 self._block_rgs, self.paths.blocks, missing, kind=0
             )
             self.leaf_rows_fetched += sum(t.num_rows for t in runs.values())
-            return self._decode_posting_table(runs)
+            return self._decode_posting_table(runs, self.lexicon_rows(missing))
 
         return self._cached("arr", terms, fetch)
 
-    def _decode_posting_table(self, runs: dict[str, pa.Table]) -> dict[str, tuple]:
-        """term → decoded (ids:int64, tfs:f64, dls:f64) posting arrays from
+    def _with_contrib(self, df: int, ids, tfs, dls) -> tuple:
+        """Decoded postings of a term with document frequency ``df`` →
+        (ids, tfs:uint32, contrib:f64): the BM25 contribution per posting
+        through THE shared float expression tree (see _tf_component), so
+        every scorer sums identical values; tfs shrink to uint32 (they
+        only feed freqs; a tf of 2^32 would need a 4G-token document) to
+        keep the cached triple at the size of the decoded one."""
+        contrib = self._idf(df) * _tf_component(tfs, dls, self.avg_dl)
+        return ids, tfs.astype(np.uint32), contrib
+
+    def _decode_posting_table(
+        self, runs: dict[str, pa.Table], lex: dict[str, int]
+    ) -> dict[str, tuple]:
+        """term → (ids:int64, tfs:uint32, contrib:f64) posting arrays from
         each term's leaf block rows (columns doc_lo, n, ids_vb, tfs_vb,
-        dls_vb, in doc_lo order), with tombstoned postings masked out.
-        Columnar: one segmented vb_decode per column per term over the
-        payload column's own data buffer. No caching — callers cache (or
-        are one-shot range workers). Terms with no (surviving) rows are
-        simply absent from the result."""
+        dls_vb, in doc_lo order), with tombstoned postings masked out and
+        contributions from the (corrected) df in ``lex``. Columnar: one
+        segmented vb_decode per column per term over the payload column's
+        own data buffer. No caching — callers cache (or are one-shot range
+        workers). Terms with no (surviving) rows are simply absent from
+        the result."""
         out: dict[str, tuple] = {}
         for t, tbl in runs.items():
             ids, tfs, dls = _decode_blocks(
@@ -729,15 +797,15 @@ class BlockIndexReader:
                 ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
                 if len(ids) == 0:
                     continue
-            out[t] = (ids, tfs, dls)
+            out[t] = self._with_contrib(int(lex[t]), ids, tfs, dls)
         return out
 
-    def _decode_covering(self, term: str, sis, docs) -> tuple:
-        """Decoded (ids, tfs, dls) of ``term``'s leaf blocks in superblocks
-        ``sis`` (ascending), tombstoned postings masked. With sorted
-        ``docs``, only the blocks whose [doc_lo, doc_hi] holds one of them
-        are decoded (leaf skip: searchsorted over doc_hi); None decodes
-        every block. ``sis`` must be non-empty."""
+    def _decode_covering(self, term: str, df: int, sis, docs) -> tuple:
+        """(ids, tfs, contrib) of ``term``'s (document frequency ``df``)
+        leaf blocks in superblocks ``sis`` (ascending), tombstoned postings
+        masked. With sorted ``docs``, only the blocks whose [doc_lo,
+        doc_hi] holds one of them are decoded (leaf skip: searchsorted over
+        doc_hi); None decodes every block. ``sis`` must be non-empty."""
         leaves = [self._leaf_for(term, si) for si in sis]
         llos = np.concatenate([lf.los for lf in leaves])
         lns = np.concatenate([lf.ns for lf in leaves])
@@ -763,7 +831,7 @@ class BlockIndexReader:
         keep = self._del_mask(ids)
         if keep is not None:
             ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        return ids, tfs, dls
+        return self._with_contrib(df, ids, tfs, dls)
 
     def _search_lead(self, present, lex, k) -> list[tuple[int, int, float]]:
         """Selective conjunctive scorer driven by the LEAD (rarest) term.
@@ -788,7 +856,9 @@ class BlockIndexReader:
         self._fetch_leaf_batch(
             [(lead, i, int(l_los[i]), int(l_his[i])) for i in range(len(l_los))]
         )
-        lead_arr = self._decode_covering(lead, range(len(l_los)), None)
+        lead_arr = self._decode_covering(
+            lead, int(lex[lead]), range(len(l_los)), None
+        )
         lead_docs = lead_arr[0]
         if len(lead_docs) == 0:
             return _Hits(count=0, freqs={})
@@ -807,10 +877,10 @@ class BlockIndexReader:
         self._fetch_leaf_batch(wants)
         arrays = {
             t: lead_arr if t == lead
-            else self._decode_covering(t, covers[t], lead_docs)
+            else self._decode_covering(t, int(lex[t]), covers[t], lead_docs)
             for t in present
         }
-        return self._scored(arrays, lex, k, True, False)
+        return self._scored(arrays, k, True, False)
 
     def _idf(self, df: int) -> float:
         # N = LIVE docs: with tombstones pending this is the same integer a
@@ -883,57 +953,117 @@ class BlockIndexReader:
         return out
 
     def _search_taat(self, present, lex, k, conjunctive) -> list[tuple[int, int, float]]:
-        """Vectorized term-at-a-time scorer: full-list columnar decode
-        (cached), per-term numpy BM25 contribution with the SAME float
-        expression tree as the oracle, accumulation in sorted-term order
-        (= the oracle's float summation order, main.cpp:574), exact
-        (score DESC, doc_id ASC) top-k.
-
-        Accumulator: docIDs are dense [0, n_docs) by construction
-        (operators/docids.py), so while n_docs is driver-RAM-sized a flat
-        array is the fastest accumulator (O(Σ postings) scatter-adds, no
-        sort). Past ``dense_docs_max`` — or for queries too selective to
-        amortize the zero-fill — the candidate ids are compressed first
-        (np.unique) and accumulation happens in the compressed domain:
-        peak memory O(Σ candidate postings), independent of n_docs."""
+        """Vectorized term-at-a-time scorer over whole posting lists, whose
+        decoded arrays and per-posting BM25 contributions are LRU-cached
+        (see _fetch_arrays); _scored does the rest."""
         arrays = self._fetch_arrays(present)
         total = sum(len(a[0]) for a in arrays.values())
-        return self._scored(arrays, lex, k, conjunctive, self._flat_ok(total))
+        return self._scored(arrays, k, conjunctive, self._flat_ok(total))
 
-    def _scored(self, arrays, lex, k, conjunctive, flat) -> _Hits:
-        """The whole answer from each term's decoded (ids, tfs, dls):
-        BM25 contributions accumulated in sorted-term (= oracle float
-        summation) order, the shared top-k, count = every accumulated
-        candidate, and each top-k doc's (term, tf) pairs by one
+    def _scored(self, arrays, k, conjunctive, flat) -> _Hits:
+        """The whole answer from each term's (ids, tfs, contrib): per-doc
+        contributions summed from 0.0 in sorted-term (= oracle float
+        summation, main.cpp:574) order, the shared exact top-k, count =
+        every matching doc, and each top-k doc's (term, tf) pairs by one
         searchsorted of the k ids per term. A conjunctive doc must hold
-        every term that has arrays — the terms match_count intersects."""
+        every term that has arrays — the terms match_count intersects.
+
+        Only docs that can rank are scored:
+        - conjunctive: the lists are intersected first and only the
+          survivors' contributions are gathered (main.cpp:599-607). A
+          dense conjunction (shortest list over ``_INTERSECT_MAX_SHARE``
+          of a flat-sized corpus) scatters into the flat accumulator
+          instead, where searching every lead id costs more than the
+          scatter;
+        - disjunctive, flat: after the scatter, the k-th best score among
+          the docs of the shortest list holding at least k docs is a lower
+          bound L on the true k-th score (those docs' scores are complete,
+          and k of them reach L), so only hit docs scoring >= L (every
+          tie kept) go to the exact top-k. With no such list the whole
+          hit set does;
+        - disjunctive, compressed: the candidate-compressed accumulator
+          (memory O(Σ postings), independent of n_docs)."""
         if not arrays:
             return _Hits(count=0, freqs={})
-        per = []
-        for t in sorted(arrays):
-            ids, tfs, dls = arrays[t]
-            idf = self._idf(int(lex[t]))
-            per.append((ids, idf * _tf_component(tfs, dls, self.avg_dl)))
-        cand, s = self._accumulate(per, len(per), conjunctive, flat)
+        terms = sorted(arrays)
+        per = [(arrays[t][0], arrays[t][2]) for t in terms]
+        count = None
+        if conjunctive and not (
+            flat
+            and min(len(ids) for ids, _ in per) > _INTERSECT_MAX_SHARE * self.n_docs
+        ):
+            cand, s = self._intersect(per)
+        elif not conjunctive and flat and k > 0 and any(
+            len(ids) >= k for ids, _ in per
+        ):
+            cand, s, count = self._flat_cut(per, k)
+        else:
+            cand, s = self._accumulate(per, len(per), conjunctive, flat)
         top, ts = self._topk_arrays(cand, s, k)
         freqs: dict[int, list[tuple[str, int]]] = {d: [] for d in top.tolist()}
-        for t in sorted(arrays):
-            ids, tfs, _dls = arrays[t]
+        for t in terms:
+            ids, tfs, _contrib = arrays[t]
             if len(ids) == 0:
                 continue
             j = np.minimum(np.searchsorted(ids, top), len(ids) - 1)
             hit = ids[j] == top
             for d, tf in zip(top[hit].tolist(), tfs[j[hit]].tolist()):
                 freqs[d].append((t, int(tf)))
-        return _Hits(_ranked(top, ts), len(cand), freqs)
+        return _Hits(_ranked(top, ts), len(cand) if count is None else count, freqs)
+
+    @staticmethod
+    def _intersect(per):
+        """Conjunctive (cand, s) from [(ids, contrib)] in sorted-term
+        order: cut the shortest list's ids to those found (searchsorted
+        hits) in every other list, shortest first, keeping each list's
+        hit positions; then gather every list's contributions at the
+        survivors, summed from 0.0 in list order — the flat accumulator's
+        exact float sums, over the intersection only."""
+        order = sorted(range(len(per)), key=lambda i: len(per[i][0]))
+        cand = per[order[0]][0]
+        pos = {order[0]: np.arange(len(cand))}
+        for i in order[1:]:
+            ids = per[i][0]  # never shorter than cand: never empty here
+            j = np.searchsorted(ids, cand)
+            np.minimum(j, len(ids) - 1, out=j)
+            hit = ids[j] == cand
+            if not hit.all():
+                cand = cand[hit]
+                pos = {t: p[hit] for t, p in pos.items()}
+                j = j[hit]
+            pos[i] = j
+        s = np.zeros(len(cand))
+        for i, (_ids, contrib) in enumerate(per):
+            s += contrib[pos[i]]
+        return cand, s
+
+    def _flat_cut(self, per, k: int):
+        """Disjunctive flat accumulation cut at a proven lower bound →
+        (cand, s, count). Every doc's score is complete after the scatter,
+        so the k-th largest score L among the docs of the shortest list
+        holding at least k docs is <= the true k-th score: only hit docs
+        with s >= L can rank (``>=`` keeps every tie; ``seen`` keeps an
+        unhit doc's 0.0 out under negative IDF). count = all hit docs."""
+        s = np.zeros(self.n_docs)
+        seen = np.zeros(self.n_docs, dtype=bool)
+        for ids, contrib in per:
+            s[ids] += contrib  # each doc appears once per term: no races
+            seen[ids] = True
+        lead = min((ids for ids, _ in per if len(ids) >= k), key=len)
+        v = s[lead]
+        low = np.partition(v, len(v) - k)[len(v) - k]
+        cand = np.nonzero(seen & (s >= low))[0]
+        return cand, s[cand], int(np.count_nonzero(seen))
 
     def _accumulate(self, per, need: int, conjunctive: bool, flat: bool):
-        """The one TAAT accumulator: sum each doc's per-term contributions
+        """The scatter accumulator: sum each doc's per-term contributions
         ``per`` = [(ids, contrib)] in list (= sorted-term = oracle float
         summation) order → (cand, s). Conjunctive keeps docs hit by ``need``
         terms. ``flat`` scatters into O(n_docs) arrays (no sort; docIDs are
         dense [0, n_docs)); otherwise the candidate ids are compressed first
-        (np.unique) so peak memory is O(Σ postings), independent of n_docs."""
+        (np.unique) so peak memory is O(Σ postings), independent of n_docs.
+        Serves dense conjunctions, disjunctions _flat_cut cannot bound, and
+        the range-sharded TAAT."""
         cand = None if flat else np.unique(np.concatenate([ids for ids, _ in per]))
         size = self.n_docs if flat else len(cand)
         s = np.zeros(size)
@@ -1061,17 +1191,14 @@ class BlockIndexReader:
                 runs[t] = tbl.slice(a, b - a)
             else:
                 del runs[t]
-        arrays = self._decode_posting_table(runs)
+        arrays = self._decode_posting_table(runs, lex)
         per = []
         for t in sorted(arrays):  # sorted-term order = oracle summation order
-            ids, tfs, dls = arrays[t]
+            ids, _tfs, contrib = arrays[t]
             a = int(np.searchsorted(ids, doc_lo, side="left"))
             b = int(np.searchsorted(ids, doc_hi, side="left"))
-            if a == b:
-                continue
-            ids, tfs, dls = ids[a:b], tfs[a:b], dls[a:b]
-            idf = self._idf(int(lex[t]))
-            per.append((ids, idf * _tf_component(tfs, dls, self.avg_dl)))
+            if a < b:
+                per.append((ids[a:b], contrib[a:b]))
         if not per:
             return empty
         # a doc must carry ALL present terms GLOBALLY: a term with no
