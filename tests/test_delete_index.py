@@ -727,3 +727,35 @@ def test_compact_watermark_survives_purge(spark, tmp_path):
     t = pds.dataset(f"{tmp_path}/m2/doc_stats").to_table()
     keys = list(zip(t.column("conv_id").to_pylist(), t.column("turn_idx").to_pylist()))
     assert len(keys) == len(set(keys))
+
+
+@pytest.mark.parametrize("writer", ["build", "merge", "purge"])
+def test_reused_root_drops_stale_texts(spark, tmp_path, writer):
+    """A textless index written into a root that held another index's
+    texts/ sidecar must not keep it: those rows are keyed by the old
+    docID axis, and serving would return them as the new docs'
+    snippets."""
+    from pyspark.sql import functions as F
+
+    from websearchengine_spark.operators.serving import ServingEngine
+
+    out = tmp_path / "out"
+    kw = dict(resume=False, n_buckets=8, num_partitions=4)
+    stale = _tdf(spark, 6).withColumn("text", F.concat(F.lit("STALE "), "text"))
+    build_block_index(stale, str(out), build_id="old", store_texts=True, **kw)
+    assert (out / "texts").is_dir()
+
+    t = _tdf(spark, 6)
+    if writer == "build":
+        build_block_index(t, str(out), build_id="new", **kw)
+    else:
+        base, delta = str(tmp_path / "base"), str(tmp_path / "delta")
+        build_block_index(t.filter("conv_id < 'c003'"), base, build_id="b", **kw)
+        build_block_index(t.filter("conv_id >= 'c003'"), delta, build_id="d", **kw)
+        if writer == "merge":
+            merge_block_indexes(spark, base, delta, str(out))
+        else:
+            tombstone_delete(spark, delta, conv_ids=["c004"], corpus=t)
+            purge_deletes(spark, delta, str(out))
+    assert not (out / "texts").exists()
+    assert ServingEngine(str(out)).snippets is None

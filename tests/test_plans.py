@@ -172,3 +172,72 @@ def test_tokenize_plans_use_the_arrow_kernel(spark, fixture, tmp_path, plan_fn):
     assert {"MapInArrow", "PythonMapInArrow"} & set(logical), logical
     for banned in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
         assert not [n for n in nodes if n.startswith(banned)], nodes
+
+
+@pytest.fixture(scope="module")
+def rewrite_inputs(spark, fixture, tmp_path_factory):
+    """Two disjoint texts-carrying block indexes over the fixture's
+    conversations; the second carries a tombstone."""
+    from websearchengine_spark.plans.block_index import build_block_index
+    from websearchengine_spark.plans.delete_index import tombstone_delete
+
+    root = tmp_path_factory.mktemp("rewrite")
+    t = fixture.transcripts
+    convs = sorted(t["conv_id"].unique())
+    kw = dict(resume=False, n_buckets=4, num_partitions=2, store_texts=True)
+    dirs = []
+    for name, part in (("a", convs[:30]), ("b", convs[30:])):
+        d = str(root / name)
+        build_block_index(
+            spark.createDataFrame(t[t["conv_id"].isin(part)]), d,
+            build_id=name, **kw,
+        )
+        dirs.append(d)
+    tombstone_delete(spark, dirs[1], conv_ids=[convs[31]])
+    return root, dirs
+
+
+@pytest.mark.parametrize(
+    "kind, hash_exchanges",
+    # the two-input merge adds the lexicon groupBy exchange (under the
+    # persisted lexicon); a one-input purge reuses its lexicon as is
+    [("purge", 2), ("merge", 3)],
+)
+def test_rewrite_blocks_plan(
+    spark, rewrite_inputs, monkeypatch, kind, hash_exchanges
+):
+    """The index rewrite (purge = one-input purging merge, and the k-way
+    merge) moves posting runs through exactly one (term, salt) exchange
+    plus the bucket exchange of the write, joins the hot-term salt frame
+    by broadcast, and never scans a text column."""
+    import re
+
+    from websearchengine_spark.plans import merge_index
+    from websearchengine_spark.plans.delete_index import purge_deletes
+
+    root, (a, b) = rewrite_inputs
+    plans = []
+    write_table = merge_index.write_table
+
+    def spy(df, path, **kw):
+        if path.endswith("blocks"):  # explained as executed: lexicon cached
+            plans.append(explain_str(df))
+        return write_table(df, path, **kw)
+
+    monkeypatch.setattr(merge_index, "write_table", spy)
+    out = str(root / f"out_{kind}")
+    if kind == "purge":
+        purge_deletes(spark, b, out)
+    else:
+        merge_index.merge_many_block_indexes(
+            spark, [a, b], out, purge_tombstones=True
+        )
+    assert len(plans) == 1
+    plan = plans[0]
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+    assert len(re.findall(r"hashpartitioning\(term#\d+, salt#\d+", plan)) == 1
+    assert len(re.findall(r"hashpartitioning\(bucket#\d+", plan)) == 1
+    assert plan.count("hashpartitioning(") == hash_exchanges, plan
+    schemas = re.findall(r"ReadSchema: (.*)", plan)
+    assert schemas and not [s for s in schemas if "text" in s], schemas

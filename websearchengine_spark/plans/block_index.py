@@ -89,6 +89,15 @@ BLOCK_SCHEMA = T.StructType(
     ]
 )
 
+# BLOCK_SCHEMA as Spark reads the blocks table back: ``bucket`` is the
+# hive partition column (nullable, last). Explicit, because an index over
+# an empty input has a data-less blocks dir that schema inference cannot
+# read.
+BLOCK_READ_SCHEMA = T.StructType(
+    [f for f in BLOCK_SCHEMA.fields if f.name != "bucket"]
+    + [T.StructField("bucket", T.IntegerType(), True)]
+)
+
 # leaf blocks summarized per superblock row (~128 · 128 = 16384 postings)
 SUPERBLOCK_FACTOR = 128
 
@@ -175,20 +184,51 @@ def live_deletes_dir(root: str) -> str | None:
     return None
 
 
+# tombstone sidecar layout under <index_root>/deletes/ (written by
+# plans/delete_index.tombstone_delete; read by the serving reader and the
+# purging merge). Filesystem only — the tombstone mask is a SERVING
+# structure and the pyarrow reader requires the filesystem layout anyway.
+DEL_IDS_SCHEMA = "doc_id long"
+DEL_DF_SCHEMA = "term string, ddf long, dcf long"
+DEL_META_SCHEMA = "n_deleted long, deleted_dl long, total_dl long"
+
+
+def delete_paths(paths: BlockIndexPaths, base: str | None = None) -> tuple[str, str, str]:
+    """(ids, df_corr, meta) table dirs of the tombstone sidecar."""
+    d = base if base is not None else paths.deletes
+    return os.path.join(d, "ids"), os.path.join(d, "df_corr"), os.path.join(d, "meta")
+
+
+def has_tombstones(root: str) -> bool:
+    """True iff ``root`` carries a tombstone sidecar with ≥1 deleted doc.
+    Cheap (reads one tiny meta table) — used by merge/compaction guards."""
+    d = live_deletes_dir(root)
+    if d is None:
+        return False
+    import pyarrow.dataset as ds
+
+    t = ds.dataset(os.path.join(d, "meta")).to_table()
+    return t.num_rows > 0 and int(t.column("n_deleted")[0].as_py()) > 0
+
+
 def _clear_stale_deletes(paths: BlockIndexPaths) -> None:
-    """Remove a leftover tombstone sidecar (plans/delete_index.py) before
-    writing a NEW index into ``paths.root``. Every data table is written
-    mode=overwrite, but the sidecar belongs to the index that previously
-    lived here — left in place it would mask the OLD corpus's doc_ids
-    against the NEW docID axis (arbitrary live docs silently dropped from
-    every query). Called by build/merge/purge on their output root."""
+    """Remove the optional sidecars of the index that previously lived at
+    ``paths.root`` before a NEW index is written there: the tombstone
+    sidecar (``deletes/`` plus its crash-recovery ``deletes.prev/``) and
+    the texts sidecar. Every data table is written mode=overwrite, but
+    these exist only for some indexes — a stale ``deletes/`` would mask
+    the OLD corpus's doc_ids against the NEW docID axis (arbitrary live
+    docs silently dropped from every query), and a stale ``texts/`` would
+    serve the old corpus's text as the new docs' snippets. A writer that
+    keeps texts writes them again afterwards. The one sweep of build,
+    merge and purge, called on their output root after input validation
+    and before any write."""
     if is_table_identifier(paths.root):
         return
     import shutil
 
-    shutil.rmtree(paths.deletes, ignore_errors=True)
-    # crash-recovery sibling of the tombstone swap (delete_index.py)
-    shutil.rmtree(paths.deletes + ".prev", ignore_errors=True)
+    for d in (paths.deletes, paths.deletes + ".prev", paths.texts):
+        shutil.rmtree(d, ignore_errors=True)
 
 
 # Row-group byte bound of the lexicon (term-clustered, bucketed): build and
@@ -800,13 +840,9 @@ def build_block_index(
 
     # ---- per-partition (bucket) checkpoints with lineage + metrics
     wall_s = time.time() - t0
-    # explicit schema: an empty corpus writes a data-less directory that
-    # schema inference cannot read
-    read_schema = T.StructType(
-        [f for f in BLOCK_SCHEMA.fields if f.name != "bucket"]
-        + [T.StructField("bucket", T.IntegerType(), True)]  # partition col
-    )
-    built_blocks = read_table(spark, paths.blocks, schema=read_schema).filter(
+    built_blocks = read_table(
+        spark, paths.blocks, schema=BLOCK_READ_SCHEMA
+    ).filter(
         (F.col("bucket").isin(build_buckets) if build_buckets else F.lit(False))
         & (F.col("kind") == 0)  # leaf rows only: superblock summaries would
         #                         double-count postings in the metrics

@@ -25,7 +25,8 @@ tombstone-then-compact shape (Lucene's liveDocs + merge):
    negative IDF) keeps block-max WAND pruning exact.
 
 2. :func:`purge_deletes` — the physical rewrite, run at the next natural
-   compaction. Re-uses the incremental-merge machinery
+   compaction. It IS the one-input purging merge,
+   ``merge_many_block_indexes([index_dir], purge_tombstones=True)``
    (plans/merge_index.py): every leaf block becomes a compressed run with
    deleted postings dropped and surviving docIDs REMAPPED to dense ranks
    (id' = id - |{deleted < id}|, one vectorized searchsorted against the
@@ -59,66 +60,29 @@ import shutil
 import time
 from dataclasses import dataclass
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from websearchengine_spark.functions.codec import (
-    block_ids,
-    concat_binary_column,
-    vb_blocked_arrow,
-    vb_decode,
-)
 from websearchengine_spark.plans.block_index import (
+    DEL_DF_SCHEMA,
+    DEL_IDS_SCHEMA,
+    DEL_META_SCHEMA,
     BlockIndexPaths,
     BuildMetrics,
-    _clear_stale_deletes,
-    live_deletes_dir,
-    write_doc_sidecar,
+    delete_paths,
+    has_tombstones,
 )
 from websearchengine_spark.plans.build import tokenize_postings
 from websearchengine_spark.plans.merge_index import (
     DOC_STATS_SCHEMA,
-    LEXICON_READ_SCHEMA,
-    RUNS_SCHEMA,
     TEXTS_SCHEMA,
-    _finalize_metrics,
-    _leaf_blocks,
-    _one_file_per_task,
-    _salt_encode_write_blocks,
-    _write_lexicon,
-    _write_meta,
+    merge_many_block_indexes,
 )
 from websearchengine_spark.sources.catalog import (
     is_table_identifier,
     read_table,
     write_table,
 )
-
-# sidecar layout under <index_root>/deletes/ (filesystem only — the
-# tombstone mask is a SERVING structure and the pyarrow reader requires
-# the filesystem layout anyway)
-DEL_IDS_SCHEMA = "doc_id long"
-DEL_DF_SCHEMA = "term string, ddf long, dcf long"
-DEL_META_SCHEMA = "n_deleted long, deleted_dl long, total_dl long"
-
-
-def delete_paths(paths: BlockIndexPaths, base: str | None = None) -> tuple[str, str, str]:
-    """(ids, df_corr, meta) table dirs of the tombstone sidecar."""
-    d = base if base is not None else paths.deletes
-    return os.path.join(d, "ids"), os.path.join(d, "df_corr"), os.path.join(d, "meta")
-
-
-def has_tombstones(root: str) -> bool:
-    """True iff ``root`` carries a tombstone sidecar with ≥1 deleted doc.
-    Cheap (reads one tiny meta table) — used by merge/compaction guards."""
-    d = live_deletes_dir(root)
-    if d is None:
-        return False
-    import pyarrow.dataset as ds
-
-    t = ds.dataset(os.path.join(d, "meta")).to_table()
-    return t.num_rows > 0 and int(t.column("n_deleted")[0].as_py()) > 0
 
 
 def _heal_deletes_swap(paths: BlockIndexPaths) -> None:
@@ -344,98 +308,6 @@ def tombstone_delete(
         targeted.unpersist()
 
 
-def _blocks_to_purged_runs(bc_deleted, shift: int = 0):
-    """mapInArrow body: leaf block rows → compressed runs with deleted
-    postings DROPPED and surviving docIDs remapped to dense ranks
-    (id' = id - |{deleted < id}| + shift). Same vectorized
-    decode/re-encode primitives as merge_index._blocks_to_runs, plus the
-    tf/dl payloads are re-encoded too (their values survive unchanged but
-    their block segmentation shifts with the drops). ``shift`` is the
-    arrival-block offset when purging inline inside a k-way merge
-    (merge_many_block_indexes(purge_tombstones=True))."""
-    import pyarrow as pa
-
-    def to_runs(batches):
-        dels = bc_deleted.value  # sorted int64, ≥1 entries
-        for rb in batches:
-            t = pa.Table.from_batches([rb])
-            if t.num_rows == 0:
-                continue
-            ns = t.column("n").to_numpy().astype(np.int64)
-            los = t.column("doc_lo").to_numpy().astype(np.int64)
-            ids = block_ids(
-                vb_decode(concat_binary_column(t.column("ids_vb"))), ns, los
-            )
-            n = len(ids)
-            j = np.searchsorted(dels, ids)
-            hit = np.zeros(n, dtype=bool)
-            ok = j < len(dels)
-            hit[ok] = dels[j[ok]] == ids[ok]
-            keep = ~hit
-            new_ids = (ids - j)[keep] + shift  # dense survivor rank + block offset
-            tfs = vb_decode(concat_binary_column(t.column("tfs_vb")))[keep]
-            dls = vb_decode(concat_binary_column(t.column("dls_vb")))[keep]
-            block_of = np.repeat(np.arange(len(ns)), ns)[keep]
-            kept = np.bincount(block_of, minlength=len(ns))
-            nz = np.nonzero(kept)[0]
-            if len(nz) == 0:
-                continue
-            new_ns = kept[nz]
-            nstarts = np.concatenate(([0], np.cumsum(new_ns)[:-1]))
-            nends = np.concatenate((nstarts[1:], [int(new_ns.sum())]))
-            u = new_ids.astype(np.uint64)
-            gaps = np.empty(len(u), dtype=np.uint64)
-            if len(u):
-                gaps[0] = u[0]
-                np.subtract(u[1:], u[:-1], out=gaps[1:])
-            gaps[nstarts] = u[nstarts]  # absolute heads (global runs)
-            terms = t.column("term").combine_chunks().take(pa.array(nz))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    terms,
-                    pa.array(new_ids[nstarts], type=pa.int64()),  # run_pos:
-                    #   remapped doc_lo — monotone remap keeps per-term
-                    #   run order == docID order
-                    pa.array(new_ns, type=pa.int64()),
-                    vb_blocked_arrow(gaps, nstarts, nends),
-                    vb_blocked_arrow(tfs, nstarts, nends),
-                    vb_blocked_arrow(dls, nstarts, nends),
-                ],
-                names=["term", "run_pos", "n", "ids_vb", "tfs_vb", "dls_vb"],
-            )
-
-    return to_runs
-
-
-def _remap_doc_ids(df: DataFrame, bc_deleted, schema) -> DataFrame:
-    """Drop tombstoned rows and remap ``doc_id`` to dense survivor ranks —
-    one narrow mapInArrow, no join, no shuffle."""
-    import pyarrow as pa
-
-    def remap(batches):
-        dels = bc_deleted.value
-        for rb in batches:
-            t = pa.Table.from_batches([rb])
-            if t.num_rows == 0:
-                continue
-            ids = t.column("doc_id").to_numpy().astype(np.int64)
-            j = np.searchsorted(dels, ids)
-            hit = np.zeros(len(ids), dtype=bool)
-            ok = j < len(dels)
-            hit[ok] = dels[j[ok]] == ids[ok]
-            keep = ~hit
-            if not keep.any():
-                continue
-            t = t.filter(pa.array(keep))
-            new = pa.array(
-                (ids - j)[keep].astype(np.int64), type=pa.int64()
-            )
-            i = t.schema.get_field_index("doc_id")
-            yield from t.set_column(i, "doc_id", new).to_batches()
-
-    return df.mapInArrow(remap, schema)
-
-
 def purge_deletes(
     spark: SparkSession,
     index_dir: str,
@@ -451,8 +323,9 @@ def purge_deletes(
     compaction half of the two-phase delete. Content-identical (payload
     bytes included) to a from-scratch build on the surviving corpus; the
     output carries NO deletes sidecar. ``out_dir`` must be a new location
-    (write-sibling-then-swap, same rule as the merge)."""
-    t0 = time.time()
+    (write-sibling-then-swap, same rule as the merge). After its input
+    checks this is the one-input purging merge,
+    ``merge_many_block_indexes([index_dir], purge_tombstones=True)``."""
     if is_table_identifier(index_dir) or is_table_identifier(out_dir):
         raise ValueError("purge_deletes requires filesystem index roots")
     if os.path.realpath(out_dir) == os.path.realpath(index_dir):
@@ -460,99 +333,18 @@ def purge_deletes(
             "out_dir must be a NEW location: the purge reads the input "
             "while writing the output (write to a sibling dir, then swap)"
         )
-    paths = BlockIndexPaths(index_dir)
-    out_p = BlockIndexPaths(out_dir)
     if not has_tombstones(index_dir):
         raise ValueError(
             f"index at {index_dir} has no tombstones to purge "
             "(tombstone_delete first, or just copy the index)"
         )
-    ids_p, dfc_p, meta_p = delete_paths(
-        paths, base=live_deletes_dir(index_dir)
+    return merge_many_block_indexes(
+        spark,
+        [index_dir],
+        out_dir,
+        build_id=build_id,
+        hot_df_threshold=hot_df_threshold,
+        target_group_size=target_group_size,
+        num_partitions=num_partitions,
+        purge_tombstones=True,
     )
-    dm = read_table(spark, meta_p, schema=DEL_META_SCHEMA).collect()[0]
-    n_deleted, deleted_dl, total_dl = (
-        int(dm["n_deleted"]), int(dm["deleted_dl"]), int(dm["total_dl"])
-    )
-    meta = read_table(spark, paths.meta).collect()[0].asDict()
-    if int(meta.get("block_format", 1)) != 3:
-        raise ValueError("purge requires a block_format-3 index")
-    block_size = int(meta["block_size"])
-    n_buckets = int(meta["n_buckets"])
-    n_live = int(meta["n_docs"]) - n_deleted
-    # inputs validated: only now touch out_dir (a reused out_dir may hold a
-    # stale sidecar — see the block_index note)
-    _clear_stale_deletes(out_p)
-    # exact: the same integer sums / single float division a from-scratch
-    # build on the surviving corpus performs
-    avg_dl = ((total_dl - deleted_dl) / n_live) if n_live else 0.0
-
-    del_arr = np.sort(
-        read_table(spark, ids_p, schema=DEL_IDS_SCHEMA)
-        .toPandas()["doc_id"]
-        .to_numpy()
-        .astype(np.int64)
-    )
-    bc = spark.sparkContext.broadcast(del_arr)
-
-    # corrected lexicon: df/cf minus the sidecar's exact corrections
-    lexicon = (
-        read_table(spark, paths.lexicon, schema=LEXICON_READ_SCHEMA)
-        .select("term", "df", "cf")
-        .join(read_table(spark, dfc_p, schema=DEL_DF_SCHEMA), "term", "left")
-        .select(
-            "term",
-            (F.col("df") - F.coalesce(F.col("ddf"), F.lit(0))).alias("df"),
-            (F.col("cf") - F.coalesce(F.col("dcf"), F.lit(0))).alias("cf"),
-        )
-        .filter(F.col("df") > 0)
-    ).persist()
-
-    runs = _leaf_blocks(spark, paths).mapInArrow(
-        _blocks_to_purged_runs(bc), RUNS_SCHEMA
-    )
-    # hot-term salting + (term, salt) exchange + streaming encoder +
-    # bucketed writes — the same shared tail as the k-way merge
-    _salt_encode_write_blocks(
-        spark, runs, lexicon, n_live, hot_df_threshold, target_group_size,
-        num_partitions, avg_dl, block_size, n_buckets, out_p,
-    )
-    _write_lexicon(lexicon, out_p, n_buckets)
-    with _one_file_per_task(spark):
-        write_doc_sidecar(
-            _remap_doc_ids(
-                read_table(spark, paths.doc_stats, schema=DOC_STATS_SCHEMA),
-                bc,
-                DOC_STATS_SCHEMA,
-            ),
-            out_p.doc_stats,
-        )
-    # preserve the staging-id-space watermark across the purge: n_docs
-    # shrinks to the live count, but the batches this index has ABSORBED
-    # don't change — compact_incremental keys its new-batch detection on
-    # staged_hwm (see merge_index.py), and deriving it from the purged
-    # n_docs would re-absorb (duplicate) batches in the purged gap
-    staged_hwm = int(meta.get("staged_hwm") or meta["n_docs"])
-    fingerprint = _write_meta(
-        spark, out_p, build_id, n_live, avg_dl, block_size, n_buckets,
-        staged_hwm,
-    )
-    if os.path.isdir(paths.texts):
-        # filtered + remapped sidecar: the monotone remap preserves each
-        # file's doc_id clustering, so row-group pruning still holds
-        with _one_file_per_task(spark):
-            write_doc_sidecar(
-                _remap_doc_ids(
-                    read_table(spark, paths.texts, schema=TEXTS_SCHEMA),
-                    bc,
-                    TEXTS_SCHEMA,
-                ),
-                out_p.texts,
-            )
-
-    metrics = _finalize_metrics(
-        spark, out_p, build_id, fingerprint, n_live, avg_dl, t0
-    )
-    lexicon.unpersist()
-    bc.unpersist()
-    return metrics

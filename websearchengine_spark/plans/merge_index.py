@@ -5,16 +5,20 @@ open EVERY partial index in a directory, k-way heap-merge their sorted
 runs) for the case a live deployment actually hits: an index already
 serves queries and NEW batches of turns arrive.
 :func:`merge_many_block_indexes` is the N-input entry point;
-:func:`merge_block_indexes` is the common base+delta special case.
-Rebuilding from scratch re-tokenizes and re-shuffles the whole corpus;
-this module instead treats the input indexes' posting BLOCKS as pre-sorted
+:func:`merge_block_indexes` is the common base+delta special case, and
+plans/delete_index.purge_deletes is the one-input purging case: this is
+the one index rewrite path. Rebuilding from scratch re-tokenizes and
+re-shuffles the whole corpus; this module instead treats the input indexes' posting BLOCKS as pre-sorted
 compressed runs and re-runs only the (term, salt) exchange + block encode:
 
-1. each leaf block row becomes one compressed RUN — the varbyte payloads
-   are reused as-is except the docID head gap, which is rewritten from
-   block-relative (gap from ``doc_lo - 1``) to absolute, with delta docIDs
-   shifted by ``base.n_docs`` (one vectorized decode + re-encode per Arrow
-   batch, no per-row Python);
+1. each leaf block row becomes one compressed RUN (:func:`_blocks_to_runs`)
+   — the varbyte payloads are reused as-is except the docID head gap,
+   which is rewritten from block-relative (gap from ``doc_lo - 1``) to
+   absolute, with delta docIDs shifted by ``base.n_docs`` (one vectorized
+   decode + re-encode per Arrow batch, no per-row Python). With
+   ``purge_tombstones=True`` the same pass drops tombstoned postings and
+   renumbers survivors densely; only batches that lost postings re-encode
+   their tf/dl payloads;
 2. the runs take the SAME path as a fresh build's runs: hot-term salting
    (from the merged lexicon's dfs), a (term, salt) repartition + run_pos
    sort, and the streaming run merger/encoder of plans.block_index — the
@@ -52,7 +56,7 @@ from contextlib import contextmanager
 from typing import NamedTuple
 
 import numpy as np
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -63,12 +67,18 @@ from websearchengine_spark.functions.codec import (
     vb_decode,
 )
 from websearchengine_spark.plans.block_index import (
+    BLOCK_READ_SCHEMA,
     BLOCK_SCHEMA,
+    DEL_DF_SCHEMA,
+    DEL_IDS_SCHEMA,
+    DEL_META_SCHEMA,
     BlockIndexPaths,
     LEXICON_BLOCK_BYTES,
     BuildMetrics,
     _clear_stale_deletes,
     _make_stream_encoder,
+    delete_paths,
+    has_tombstones,
     live_deletes_dir,
     write_doc_sidecar,
 )
@@ -83,15 +93,6 @@ RUNS_SCHEMA = (
     "dls_vb binary"
 )
 
-
-class _DelState(NamedTuple):
-    """One input's tombstone-sidecar state (purge_tombstones=True)."""
-
-    ids_bc: object            # broadcast of the sorted deleted doc_ids
-    df_corr: object           # DataFrame (term, ddf, dcf)
-    n_deleted: int
-    deleted_dl: int
-    total_dl: int
 
 # explicit read schemas for the sidecar tables (the layouts
 # plans.block_index writes): an index built over an EMPTY input — a quiet
@@ -126,44 +127,126 @@ TEXTS_SCHEMA = T.StructType(
 )
 
 
-def _blocks_to_runs(shift: int):
-    """mapInArrow body: leaf block rows → compressed runs with ABSOLUTE
-    docID heads, shifted by ``shift``.
+class _DelState(NamedTuple):
+    """One input's tombstone-sidecar state (purge_tombstones=True)."""
 
-    Only the ids payload is rewritten (its head gap is block-relative);
-    tfs/dls payloads pass through untouched. One vectorized vb_decode +
-    segmented cumsum (codec.block_ids) + re-encode per batch — the same primitives the block
-    encoder itself uses (plans.block_index._make_stream_encoder)."""
+    ids_bc: object            # broadcast of the sorted deleted doc_ids
+    df_corr: DataFrame        # (term, ddf, dcf)
+    n_deleted: int
+    deleted_dl: int
+    total_dl: int
+
+
+def _load_del_state(spark: SparkSession, root: str) -> _DelState | None:
+    """The tombstone sidecar of the index at ``root`` (None without one):
+    the deleted ids collected, sorted and broadcast, plus the sidecar's
+    exact df/cf/dl corrections."""
+    if not has_tombstones(root):
+        return None
+    ids_p, dfc_p, meta_p = delete_paths(
+        BlockIndexPaths(root), base=live_deletes_dir(root)
+    )
+    dm = read_table(spark, meta_p, schema=DEL_META_SCHEMA).collect()[0]
+    ids = np.sort(
+        read_table(spark, ids_p, schema=DEL_IDS_SCHEMA)
+        .toPandas()["doc_id"]
+        .to_numpy()
+        .astype(np.int64)
+    )
+    return _DelState(
+        spark.sparkContext.broadcast(ids),
+        read_table(spark, dfc_p, schema=DEL_DF_SCHEMA),
+        int(dm["n_deleted"]),
+        int(dm["deleted_dl"]),
+        int(dm["total_dl"]),
+    )
+
+
+def _survivors(dels: np.ndarray, ids: np.ndarray):
+    """(keep mask, dense survivor ranks ``id - |{deleted < id}|``) of
+    ``ids`` against the sorted, non-empty tombstone array ``dels`` — one
+    vectorized searchsorted; the remap is monotone, so doc_id order and
+    per-term docID order survive it."""
+    j = np.searchsorted(dels, ids)
+    # j == len(dels) clips to the last tombstone, which is < id there
+    return np.take(dels, j, mode="clip") != ids, ids - j
+
+
+def _blocks_to_runs(shift: int, bc_deleted=None):
+    """mapInArrow body: leaf block rows → compressed runs with ABSOLUTE
+    docID heads, shifted by ``shift`` (the input's arrival-block offset).
+
+    With ``bc_deleted`` (a broadcast of the input's sorted tombstoned
+    ids) deleted postings are DROPPED and survivors renumbered to dense
+    ranks before the shift (see :func:`_survivors`). The ids payload is
+    always rewritten (its head gap is block-relative). A batch that drops
+    no posting passes its tfs/dls payloads through untouched; a batch
+    that drops postings re-encodes them, because its block segmentation
+    changes. One vectorized vb_decode + segmented cumsum (codec.block_ids)
+    + re-encode per batch — the primitives of the block encoder itself
+    (plans.block_index._make_stream_encoder)."""
     import pyarrow as pa
 
     def to_runs(batches):
+        dels = bc_deleted.value if bc_deleted is not None else None
         for rb in batches:
             t = pa.Table.from_batches([rb])
             if t.num_rows == 0:
                 continue
             ns = t.column("n").to_numpy().astype(np.int64)
-            los = t.column("doc_lo").to_numpy().astype(np.int64)
-            vals = vb_decode(concat_binary_column(t.column("ids_vb")))
-            n = len(vals)
+            ids = block_ids(
+                vb_decode(concat_binary_column(t.column("ids_vb"))),
+                ns,
+                t.column("doc_lo").to_numpy().astype(np.int64),
+            )
+            keep = None
+            if dels is not None:
+                keep, ids = _survivors(dels, ids)
+                if keep.all():
+                    keep = None
+                else:
+                    ids = ids[keep]
+                    kept = np.bincount(
+                        np.repeat(np.arange(len(ns)), ns)[keep],
+                        minlength=len(ns),
+                    )
+                    blocks = np.nonzero(kept)[0]
+                    if len(blocks) == 0:
+                        continue
+                    ns = kept[blocks]
+            ids = ids + shift
             starts = np.concatenate(([0], np.cumsum(ns)[:-1]))
-            ends = np.concatenate((starts[1:], [n]))
-            u = (block_ids(vals, ns, los) + shift).astype(np.uint64)
-            gaps = np.empty(n, dtype=np.uint64)
-            if n:
-                gaps[0] = u[0]
-                np.subtract(u[1:], u[:-1], out=gaps[1:])
+            ends = np.concatenate((starts[1:], [len(ids)]))
+            terms = t.column("term").combine_chunks()
+            if keep is None:
+                tfs_vb, dls_vb = (
+                    t.column(c).combine_chunks() for c in ("tfs_vb", "dls_vb")
+                )
+            else:
+                terms = terms.take(pa.array(blocks))
+                tfs_vb, dls_vb = (
+                    vb_blocked_arrow(
+                        vb_decode(concat_binary_column(t.column(c)))[keep],
+                        starts,
+                        ends,
+                    )
+                    for c in ("tfs_vb", "dls_vb")
+                )
+            u = ids.astype(np.uint64)
+            gaps = np.diff(u, prepend=np.uint64(0))
             gaps[starts] = u[starts]  # absolute heads (encoder gets no
             #                           pid_offsets — runs are global)
             yield pa.RecordBatch.from_arrays(
                 [
-                    t.column("term").combine_chunks(),
-                    pa.array(los + shift, type=pa.int64()),  # run_pos: merged
-                    #   doc_lo — unique per term, sorts runs into global
-                    #   docID order (block ranges are disjoint per term)
+                    terms,
+                    pa.array(ids[starts], type=pa.int64()),  # run_pos: the
+                    #   block's first merged docID — unique per term, sorts
+                    #   runs into global docID order (block ranges are
+                    #   disjoint per term and the remap is monotone)
                     pa.array(ns, type=pa.int64()),
                     vb_blocked_arrow(gaps, starts, ends),
-                    t.column("tfs_vb").combine_chunks(),
-                    t.column("dls_vb").combine_chunks(),
+                    tfs_vb,
+                    dls_vb,
                 ],
                 names=["term", "run_pos", "n", "ids_vb", "tfs_vb", "dls_vb"],
             )
@@ -171,13 +254,34 @@ def _blocks_to_runs(shift: int):
     return to_runs
 
 
+def _remap_doc_ids(df: DataFrame, bc_deleted, schema) -> DataFrame:
+    """Drop tombstoned rows of a doc_id-keyed sidecar and remap ``doc_id``
+    to dense survivor ranks — one narrow mapInArrow, no join, no shuffle."""
+    import pyarrow as pa
+
+    def remap(batches):
+        dels = bc_deleted.value
+        for rb in batches:
+            t = pa.Table.from_batches([rb])
+            if t.num_rows == 0:
+                continue
+            keep, new = _survivors(
+                dels, t.column("doc_id").to_numpy().astype(np.int64)
+            )
+            if not keep.any():
+                continue
+            t = t.filter(pa.array(keep))
+            i = t.schema.get_field_index("doc_id")
+            yield from t.set_column(
+                i, "doc_id", pa.array(new[keep], type=pa.int64())
+            ).to_batches()
+
+    return df.mapInArrow(remap, schema)
+
+
 def _leaf_blocks(spark: SparkSession, paths: BlockIndexPaths):
-    read_schema = T.StructType(
-        [f for f in BLOCK_SCHEMA.fields if f.name != "bucket"]
-        + [T.StructField("bucket", T.IntegerType(), True)]  # partition col
-    )
     return (
-        read_table(spark, paths.blocks, schema=read_schema)
+        read_table(spark, paths.blocks, schema=BLOCK_READ_SCHEMA)
         .filter(F.col("kind") == 0)
         .select("term", "doc_lo", "n", "ids_vb", "tfs_vb", "dls_vb")
     )
@@ -197,9 +301,8 @@ def _salt_encode_write_blocks(
     out_p: BlockIndexPaths,
 ) -> None:
     """Hot-term salting → (term, salt) exchange → streaming block encoder
-    → partitioned blocks write. The shared tail of the k-way merge and
-    plans/delete_index.purge_deletes — both feed compressed runs with
-    ABSOLUTE head gaps in per-term docID order.
+    → partitioned blocks write. Its input is the compressed runs of
+    :func:`_blocks_to_runs`: ABSOLUTE head gaps in per-term docID order.
 
     Salt arithmetic: docID width of one salt range is ceil(n_docs/n_salt)
     with n_salt = ceil(df / target_group_size); salt is an int64-safe
@@ -324,14 +427,10 @@ def _finalize_metrics(
 ) -> BuildMetrics:
     """Per-bucket lineage + metrics (same accounting shape as a fresh
     build's checkpoints): column-pruned stats scan, no payload read."""
-    read_schema = T.StructType(
-        [f for f in BLOCK_SCHEMA.fields if f.name != "bucket"]
-        + [T.StructField("bucket", T.IntegerType(), True)]
-    )
     wall_s = time.time() - t0
     per_bucket = {
         r["bucket"]: r
-        for r in read_table(spark, out_p.blocks, schema=read_schema)
+        for r in read_table(spark, out_p.blocks, schema=BLOCK_READ_SCHEMA)
         .filter(F.col("kind") == 0)
         .groupBy("bucket")
         .agg(F.sum("n").alias("n_postings"), F.count(F.lit(1)).alias("n_blocks"))
@@ -435,12 +534,21 @@ def merge_many_block_indexes(
     sidecars' exact corrections, and the output carries no sidecar. This
     is the nightly-compaction shape — absorbing deltas and honoring the
     day's deletes costs ONE rewrite instead of purge-then-merge's two.
-    With the default False, a tombstoned input is refused (merging it
-    verbatim would silently resurrect its deleted docs)."""
+    It also accepts a single input, which is the physical purge
+    (plans/delete_index.purge_deletes); a plain merge needs two. With the
+    default False, a tombstoned input is refused (merging it verbatim
+    would silently resurrect its deleted docs).
+
+    A reused ``out_dir`` loses the previous index's deletes/ and texts/
+    sidecars once the inputs are validated
+    (block_index._clear_stale_deletes)."""
     t0 = time.time()
     input_dirs = list(input_dirs)
-    if len(input_dirs) < 2:
-        raise ValueError("merge needs at least two input indexes")
+    if len(input_dirs) < (1 if purge_tombstones else 2):
+        raise ValueError(
+            "merge needs at least two input indexes (one with "
+            "purge_tombstones=True)"
+        )
 
     def _norm(p: str) -> str:
         # realpath, not abspath: a symlink alias of an input must not evade
@@ -462,17 +570,6 @@ def merge_many_block_indexes(
             "out_dir must be a NEW location: the merge reads its inputs "
             "while writing the output (write to a sibling dir, then swap)"
         )
-    # lazy import: delete_index imports this module
-    from websearchengine_spark.plans.delete_index import (
-        DEL_DF_SCHEMA,
-        DEL_IDS_SCHEMA,
-        DEL_META_SCHEMA,
-        _blocks_to_purged_runs,
-        _remap_doc_ids,
-        delete_paths,
-        has_tombstones,
-    )
-
     if not purge_tombstones:
         # an input with pending tombstones would merge its deleted postings
         # into an output that carries no sidecar — silently resurrecting
@@ -497,32 +594,13 @@ def merge_many_block_indexes(
         raise ValueError("block_size mismatch between input indexes")
     block_size = block_sizes.pop()
     n_buckets = n_buckets or int(metas[0]["n_buckets"])
-    # per-input tombstone state (purge_tombstones=True): sorted deleted-id
-    # broadcast + the sidecar's exact corrections — the merge drops those
-    # postings inline, so deltas are absorbed and deletes purged in the
-    # SAME exchange (see docstring)
-    del_state = []
-    for d, p in zip(input_dirs, in_ps):
-        if purge_tombstones and has_tombstones(d):
-            ids_p, dfc_p, dmeta_p = delete_paths(p, base=live_deletes_dir(d))
-            dm = read_table(spark, dmeta_p, schema=DEL_META_SCHEMA).collect()[0]
-            arr = np.sort(
-                read_table(spark, ids_p, schema=DEL_IDS_SCHEMA)
-                .toPandas()["doc_id"]
-                .to_numpy()
-                .astype(np.int64)
-            )
-            del_state.append(
-                _DelState(
-                    spark.sparkContext.broadcast(arr),
-                    read_table(spark, dfc_p, schema=DEL_DF_SCHEMA),
-                    int(dm["n_deleted"]),
-                    int(dm["deleted_dl"]),
-                    int(dm["total_dl"]),
-                )
-            )
-        else:
-            del_state.append(None)
+    # per-input tombstone state (purge_tombstones=True): the merge drops
+    # those postings inline, so deltas are absorbed and deletes purged in
+    # the SAME exchange (see docstring)
+    del_state = [
+        _load_del_state(spark, d) if purge_tombstones else None
+        for d in input_dirs
+    ]
     counts = [
         int(m["n_docs"]) - (st.n_deleted if st else 0)
         for m, st in zip(metas, del_state)
@@ -564,8 +642,8 @@ def merge_many_block_indexes(
             )
         emit_texts = True
     # inputs validated: only now touch out_dir — a reused out_dir may hold
-    # a previous index's tombstone sidecar, whose stale ids would silently
-    # mask the merged axis
+    # a previous index's deletes/ and texts/ sidecars, keyed by the old
+    # docID axis (texts, when kept, are written again below)
     _clear_stale_deletes(out_p)
 
     # exact avg_dl: integer dl sums from doc_stats — the same number a
@@ -583,7 +661,8 @@ def merge_many_block_indexes(
     avg_dl = (total_dl / n_docs) if n_docs else 0.0
 
     # merged lexicon (disjoint corpora ⇒ dfs/cfs add; tombstoned inputs
-    # contribute LIVE dfs/cfs via their sidecar's exact corrections)
+    # contribute LIVE dfs/cfs via their sidecar's exact corrections). One
+    # input (a purge) is its own merged lexicon: no groupBy, no shuffle.
     lex_parts = []
     for p, st in zip(in_ps, del_state):
         part = read_table(spark, p.lexicon, schema=LEXICON_READ_SCHEMA).select(
@@ -600,25 +679,23 @@ def merge_many_block_indexes(
                 .filter(F.col("df") > 0)
             )
         lex_parts.append(part)
-    lex_union = lex_parts[0]
+    lexicon = lex_parts[0]
     for part in lex_parts[1:]:
-        lex_union = lex_union.unionByName(part)
-    lexicon = (
-        lex_union.groupBy("term")
-        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-    ).persist()
+        lexicon = lexicon.unionByName(part)
+    if len(lex_parts) > 1:
+        lexicon = lexicon.groupBy("term").agg(
+            F.sum("df").alias("df"), F.sum("cf").alias("cf")
+        )
+    lexicon = lexicon.persist()
 
     # blocks → runs (each index shifted), salted like a fresh build but with
     # the salt ranges cut on the MERGED docID axis (monotone in doc_lo ⇒
     # salted sub-lists stay contiguous disjoint ranges that concatenate in
     # order)
     def _input_runs(p, st, shift):
-        lb = _leaf_blocks(spark, p)
-        if st is not None:  # drop tombstoned postings inside the stream
-            return lb.mapInArrow(
-                _blocks_to_purged_runs(st.ids_bc, shift), RUNS_SCHEMA
-            )
-        return lb.mapInArrow(_blocks_to_runs(shift), RUNS_SCHEMA)
+        return _leaf_blocks(spark, p).mapInArrow(
+            _blocks_to_runs(shift, st.ids_bc if st else None), RUNS_SCHEMA
+        )
 
     runs = _input_runs(in_ps[0], del_state[0], 0)
     for p, st, shift in zip(in_ps[1:], del_state[1:], shifts[1:]):
@@ -666,32 +743,23 @@ def merge_many_block_indexes(
     # Even when every input is empty the (fileless) sidecar dir is written:
     # it is the carrier of the store_texts decision that
     # compact_incremental infers the next delta's build from.
-    if not is_table_identifier(out_dir):
-        if emit_texts:
-            with_texts = [
-                (p, st, s)
-                for p, st, s, h in zip(in_ps, del_state, shifts, has_texts)
-                if h
-            ]
-            texts = None
-            for p, st, shift in with_texts:
-                part = _input_ds(
-                    read_table(spark, p.texts, schema=TEXTS_SCHEMA),
-                    st,
-                    shift,
-                    TEXTS_SCHEMA,
-                )
-                texts = part if texts is None else texts.unionByName(part)
-            with _one_file_per_task(spark):
-                write_doc_sidecar(texts, out_p.texts)
-        else:
-            # a reused out_dir may hold a PREVIOUS merge's sidecar; every
-            # other table is mode="overwrite", so a textless (or
-            # drop_texts) re-merge must not leave stale texts keyed by the
-            # old docIDs behind
-            import shutil
-
-            shutil.rmtree(out_p.texts, ignore_errors=True)
+    if emit_texts:
+        with_texts = [
+            (p, st, s)
+            for p, st, s, h in zip(in_ps, del_state, shifts, has_texts)
+            if h
+        ]
+        texts = None
+        for p, st, shift in with_texts:
+            part = _input_ds(
+                read_table(spark, p.texts, schema=TEXTS_SCHEMA),
+                st,
+                shift,
+                TEXTS_SCHEMA,
+            )
+            texts = part if texts is None else texts.unionByName(part)
+        with _one_file_per_task(spark):
+            write_doc_sidecar(texts, out_p.texts)
 
     metrics = _finalize_metrics(
         spark, out_p, build_id, fingerprint, n_docs, avg_dl, t0
