@@ -63,9 +63,9 @@ def kernel_spy(monkeypatch) -> dict:
         note("flat_cut")
         return real_c(self, per, k)
 
-    def accumulate(self, per, need, conjunctive, flat):
+    def accumulate(self, per, conjunctive, flat):
         note(("conj" if conjunctive else "disj", "flat" if flat else "compressed"))
-        return real_a(self, per, need, conjunctive, flat)
+        return real_a(self, per, conjunctive, flat)
 
     monkeypatch.setattr(BlockIndexReader, "_intersect", staticmethod(intersect))
     monkeypatch.setattr(BlockIndexReader, "_flat_cut", flat_cut)

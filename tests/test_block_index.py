@@ -201,6 +201,8 @@ def test_parallel_taat_bitwise_equal_and_threshold_routed(index_dir, fixture):
                 a = serial.search(q, conjunctive=conj, k=10)
                 b = par.search(q, conjunctive=conj, k=10)
                 assert a == b, (q, conj)  # exact — floats included
+                # the shards' summed count and their top docs' freqs
+                assert (b.count, b.freqs) == (a.count, a.freqs), (q, conj)
                 engaged += par.last_parallel
                 g = gated.search(q, conjunctive=conj, k=10)
                 assert a == g, (q, conj)
@@ -415,10 +417,10 @@ def test_shard_cuts_inside_blocks_with_tiny_row_groups(index_dir, fixture):
                 want = r._search_taat(present, lex, 1000, conj)
                 n = r.n_docs
                 for cut in range(1, n, max(1, n // 13)):
-                    d0, s0 = r._taat_range_topk(present, 1000, conj, 0, cut)
-                    d1, s1 = r._taat_range_topk(present, 1000, conj, cut, n)
-                    cand = np.concatenate([d0, d1])
-                    sc = np.concatenate([s0, s1])
+                    h0 = r._taat_range_topk(present, 1000, conj, 0, cut)
+                    h1 = r._taat_range_topk(present, 1000, conj, cut, n)
+                    cand = np.array([d for _, d, _ in h0 + h1], dtype=np.int64)
+                    sc = np.array([v for _, _, v in h0 + h1])
                     cand, sc = r._topk_arrays(cand, sc, 1000)
                     got = [
                         (i + 1, int(d), float(v))
@@ -426,6 +428,11 @@ def test_shard_cuts_inside_blocks_with_tiny_row_groups(index_dir, fixture):
                                                        sc.tolist()))
                     ]
                     assert got == want, (q, conj, cut)
+                    # each shard counts its own matches and gives its own
+                    # top docs' freqs
+                    assert h0.count + h1.count == want.count, (q, conj, cut)
+                    freqs = {**h0.freqs, **h1.freqs}
+                    assert {d: freqs[d] for _, d, _ in want} == want.freqs
     finally:
         r.close()
 
@@ -659,8 +666,8 @@ _FIXTURE_ROUTES = {
 def test_search_full_count_and_freqs_on_every_route(
     reader, fixture, request, monkeypatch
 ):
-    """The TAAT (flat and compressed) and lead routes return count and
-    freqs from the pass that ranked; WAND and parallel TAAT fill them from
+    """The TAAT (flat, compressed and sharded) and lead routes return
+    count and freqs from the pass that ranked; WAND fills them from
     match_count / result_freqs. Either way they must equal the cross-
     check, single-term queries and OOV terms included."""
     reader._result_cache.clear()
@@ -671,6 +678,35 @@ def test_search_full_count_and_freqs_on_every_route(
     _assert_full_matches_cross_check(reader, queries)
     want = _FIXTURE_ROUTES[request.node.callspec.params["reader"]]
     assert {n for n, c in routes.items() if c} == want, routes
+
+
+def test_search_full_falls_back_only_for_wand(
+    reader, fixture, request, monkeypatch
+):
+    """Only a WAND result leaves count and freqs to search_full's
+    match_count / result_freqs fallback: on every other fixture — the
+    doc-range-sharded TAAT included — search_full never calls them."""
+    reader._result_cache.clear()
+    routes = _spy_routes(monkeypatch)
+    calls = []
+    for name in ("match_count", "result_freqs"):
+        real = getattr(BlockIndexReader, name)
+
+        def spy(self, *a, _real=real, _name=name, **kw):
+            calls.append(_name)
+            return _real(self, *a, **kw)
+
+        monkeypatch.setattr(BlockIndexReader, name, spy)
+    for q in list(fixture.queries["query"]) + ["the", "the data value"]:
+        for conj in (True, False):
+            reader.search_full(q, conjunctive=conj)
+    param = request.node.callspec.params["reader"]
+    if param == "wand":
+        assert routes["_search_wand_blocks"] and calls, (routes, calls)
+    else:
+        assert calls == [], (param, calls)
+    if param == "taat_parallel":
+        assert routes["_search_taat_parallel"], routes
 
 
 def test_search_full_count_and_freqs_after_wand_bail_out(
@@ -952,6 +988,44 @@ def test_posting_cache_hit_computes_no_contributions(index_dir, fixture, kw, mon
     for q in queries:
         assert r.search(q, conjunctive=False) == want[q], q
     assert calls["tfc"] > 0  # the counter sees a cold fetch
+
+
+def test_lead_takes_cached_posting_lists_whole(index_dir, fixture, monkeypatch):
+    """The lead route takes a term's whole posting list from the posting
+    cache when a TAAT fetch put it there: no _decode_covering call for a
+    cached term (lead or not), while the uncached terms still decode their
+    covering blocks, and the ranking, count and freqs equal a reader that
+    decodes every term."""
+    from websearchengine_spark.functions.tokenizer import clean_query
+
+    routes = _spy_routes(monkeypatch)
+    decoded = []
+    real = BlockIndexReader._decode_covering
+
+    def spy(self, term, *a):
+        decoded.append((self, term))
+        return real(self, term, *a)
+
+    monkeypatch.setattr(BlockIndexReader, "_decode_covering", spy)
+    cold = BlockIndexReader(index_dir)
+    warm = BlockIndexReader(index_dir)
+    queries = list(fixture.queries["query"]) + ["the data value", "data value"]
+    cached = set()
+    for q in queries:  # cache each query's first term whole (TAAT fetch)
+        terms = clean_query(q)
+        if terms:
+            warm.search(terms[0], conjunctive=False)
+            cached.add(terms[0])
+    assert not decoded
+    for q in queries:
+        cold._posting_cache.clear()
+        want = cold.search(q, conjunctive=True)
+        got = warm.search(q, conjunctive=True)
+        assert (got, got.count, got.freqs) == (want, want.count, want.freqs), q
+    assert routes["_search_lead"], routes
+    warm_terms = {t for r, t in decoded if r is warm}
+    assert not warm_terms & cached, warm_terms & cached
+    assert warm_terms and {t for r, t in decoded if r is cold} & cached
 
 
 def test_serving_reads_never_filter_rows(index_dir, fixture, monkeypatch):

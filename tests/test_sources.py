@@ -98,17 +98,6 @@ def test_qrels_last_wins_across_files(spark, tmp_path):
 # snippets / result freqs (serving side)
 
 
-def test_first_match_pos_and_snippet():
-    text = "alpha beta gamma delta epsilon"
-    assert sn.first_match_pos(text, ["gamma"]) == 12
-    assert sn.first_match_pos(text, ["zeta"]) == 0
-    # FIRST SORTED term wins (main.cpp:520): sorted → beta before delta
-    assert sn.first_match_pos(text, ["delta", "beta"]) == 7
-    snippet = sn.make_snippet(text, 12, 10)
-    assert snippet == text[6:16]  # centered: [off-5, off+5), off = 11
-    assert sn.make_snippet(text, 0, 8) == ""  # no match → no snippet
-
-
 def test_snippet_service_roundtrip(spark, tmp_path):
     from pyspark.sql import functions as F
 
@@ -129,11 +118,14 @@ def test_snippet_service_roundtrip(spark, tmp_path):
     svc = sn.SnippetService(os.path.join(out, "doc_stats"), tpath)
     texts = svc.texts_for([0, 1, 2])
     assert set(texts) == {0, 1, 2}
-    # gate-column snippet semantics over the fetched texts
+    # the reference snippet over the fetched texts: the first sorted term
+    # present anchors a window that holds it; no term → no snippet
     terms = ["box", "fox"]
-    pos = sn.first_match_pos(texts[0], terms)
-    assert pos == 17  # " fox" at 1-based 17 in "the quick brown fox"
-    assert "fox" in sn.make_snippet(texts[0], pos, 12)  # window includes the hit
+    assert texts[0] == "the quick brown fox"
+    assert sn.reference_snippet(texts[0], terms, 12) == "brown fox"
+    assert sn.reference_snippet(texts[1], ["fox"], 12) is None
+    # "box" sorts first, so it anchors although "fox" occurs earlier
+    assert sn.reference_snippet(texts[2], terms, 6) == "nd box"
     # freqs oracle: tf of each query term in the text, sorted-term order
     toks = texts[2].split()
     want = [(t, toks.count(t)) for t in terms if t in toks]

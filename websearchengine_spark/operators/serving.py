@@ -18,9 +18,10 @@ assembly (main.cpp:465-553, 744-831):
   RERANKING re-scores them through the cross-encoder pair seam
   (operators/pair_scorer) over the doc BODIES fetched via SnippetService
   (the read_doc analogue, main.cpp:785-799);
-- results run through the SAME assembly as search_full: reference-exact
-  snippets when transcripts are available, items whose body contains no
-  query term are DROPPED (main.cpp:520-546), ``count`` is the TOTAL
+- results run through the SAME assembly as search_full
+  (wand.assemble_page): reference-exact snippets when transcripts are
+  available, items whose body contains no query term are DROPPED
+  (main.cpp:520-546), ``count`` is the TOTAL
   ranked size — the full candidate list, not the page — forced to 0 when
   ``data`` empties (main.cpp:548-550); transformer items carry no freqs
   (main.cpp:490);
@@ -35,7 +36,11 @@ from __future__ import annotations
 import time
 
 from websearchengine_spark.operators.query_api import QueryType
-from websearchengine_spark.operators.wand import BlockIndexReader, _LRU
+from websearchengine_spark.operators.wand import (
+    BlockIndexReader,
+    _LRU,
+    assemble_page,
+)
 
 
 class ServingEngine:
@@ -151,29 +156,8 @@ class ServingEngine:
                 )
             cache.put(query, ranked)
         elapsed_us = (time.perf_counter() - t0) * 1e6
-        result = {
-            "cached": was_cached,
-            "time": elapsed_us,
-            "count": len(ranked),  # total ranked size (main.cpp:487)
-            "data": [],
-        }
-        page = ranked[:n_results]
-        doc_ids = [d for _, d, _ in page]
-        meta = self.snippets.meta_for(doc_ids) if self.snippets is not None else {}
-        snips = (
-            self.snippets.reference_snippets(query, doc_ids, snippet_len)
-            if self.snippets is not None
-            else {}
+        # count = the total ranked size (main.cpp:487); no freqs (main.cpp:490)
+        return assemble_page(
+            was_cached, elapsed_us, len(ranked), ranked[:n_results], query,
+            snippet_len, self.snippets,
         )
-        for rank, d, score in page:
-            item = {"rank": rank, "score": score}  # no freqs (main.cpp:490)
-            if self.snippets is not None:
-                item.update(meta.get(d, {}))
-                snip = snips.get(d)
-                if snip is None:
-                    continue  # no query term in body → dropped (main.cpp:520-546)
-                item["snippet"] = snip
-            result["data"].append(item)
-        if not result["data"]:
-            result["count"] = 0  # reference quirk (main.cpp:548-550)
-        return result

@@ -24,9 +24,9 @@ Reference behavior (ported exactly — see :func:`reference_snippet`):
   (main.cpp:520-546), and an empty data array forces count = 0.
 
 Gate/DataFrame path: on the gate corpus (pure ``[a-z0-9 ]``) these
-semantics reduce to column expressions — sorted-term-priority first match
-+ the centered character window — mirrored 1:1 in the DuckDB oracle
-(plans/gate_queries.py). The full-Unicode byte semantics are pytest
+semantics reduce to column expressions — the sorted-term-priority first
+match (computed in plans/gate_queries.py) + the centered character window
+(:func:`snippet_col`) — mirrored 1:1 in the DuckDB oracle. The full-Unicode byte semantics are pytest
 property-tested against an independent character-level spec port
 (tests/test_snippets_ref.py).
 
@@ -229,17 +229,6 @@ def reference_snippet(text: str, terms: list[str], snippet_len: int) -> str | No
 # ---------------------------------------------------------------------------
 # gate/DataFrame path (exact on the [a-z0-9 ] gate corpus)
 
-def first_match_pos_col(text: Column, terms: list[str]) -> Column:
-    """1-based char position of the first occurrence of the FIRST sorted
-    term present (0 = none) — the reference's sorted-term priority
-    (main.cpp:520). Word boundary via space-padding — exact for the
-    [a-z0-9 ]-alphabet gate corpus, mirrored verbatim in the SQL oracle."""
-    padded = F.concat(F.lit(" "), F.lower(text), F.lit(" "))
-    locs = [F.when(F.locate(f" {t} ", padded) > 0, F.locate(f" {t} ", padded))
-            for t in sorted(terms)]
-    return F.coalesce(*locs, F.lit(0))
-
-
 def snippet_col(text: Column, pos: Column, length: int) -> Column:
     """Centered window [off − len/2, off + len/2) with off = pos − 1
     (0-based anchor), clamped to the text — the reference's byte window,
@@ -252,26 +241,6 @@ def snippet_col(text: Column, pos: Column, length: int) -> Column:
     return F.when(pos > 0, F.substring(text, begin + 1, end - begin)).otherwise(
         F.lit("")
     )
-
-
-def first_match_pos(text: str, terms: list[str]) -> int:
-    """Python mirror of first_match_pos_col."""
-    padded = f" {text.lower()} "
-    for t in sorted(terms):
-        i = padded.find(f" {t} ")
-        if i >= 0:
-            return i + 1
-    return 0
-
-
-def make_snippet(text: str, pos: int, length: int) -> str:
-    """Python mirror of snippet_col (codepoint-safe slicing)."""
-    if pos <= 0:
-        return ""
-    off = pos - 1
-    begin = max(0, off - length // 2)
-    end = min(len(text), off + length // 2)
-    return text[begin:end]
 
 
 class SnippetService:

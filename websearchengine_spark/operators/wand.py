@@ -9,12 +9,15 @@ upgraded from decode-everything-then-full-sort (main.cpp:584-630) to:
   sorted groups by bisection — no row filter (the analogue of the
   lexicon-offset fseek, main.cpp:120-173);
 - lazy per-block varbyte+delta decode with an LRU posting cache
-  (main.cpp:466 posting cache analogue);
+  (main.cpp:466 posting cache analogue). Every route decodes leaf blocks
+  through ONE site, ``BlockIndexReader._decode_blocks``, which also masks
+  tombstoned postings and computes each posting's BM25 contribution;
 - lead-driven vectorized intersection for selective conjunctive queries
   (main.cpp:599-607's std::set_intersection): the rarest term's postings
   are decoded once, every other term decodes only the leaf blocks whose
   doc range covers a lead docID (superblock → leaf skip by searchsorted
-  over doc_hi), and the lists are intersected before any doc is scored;
+  over doc_hi) — or takes its whole posting list when that is cached —
+  and the lists are intersected before any doc is scored;
 - vectorized term-at-a-time scoring that **scores only what can rank**:
   each cached posting list carries its per-posting BM25 contributions
   (computed once per reader), conjunctions intersect first and sum only
@@ -40,8 +43,9 @@ upgraded from decode-everything-then-full-sort (main.cpp:584-630) to:
 - :meth:`BlockIndexReader.search_full` — the reference's assembled result
   object {cached, time, count, data:[{rank, score, freqs, …, snippet}]}
   (main.cpp:465-553, JSON shape readme.md:205-223), in one index pass:
-  the TAAT and lead scorers return the match count and the top-k's
-  (term, tf) pairs with the ranking (main.cpp:487, 599-618).
+  the TAAT (serial or doc-range-sharded) and lead scorers return the
+  match count and the top-k's (term, tf) pairs with the ranking
+  (main.cpp:487, 599-618); only a WAND result has them filled afterwards.
 """
 
 from __future__ import annotations
@@ -75,11 +79,11 @@ from websearchengine_spark.plans.block_index import (
 )
 
 # BM25 parameters and THE shared tf-component expression (plans/build.py):
-# every scorer here (per-posting ``contrib``, TAAT, range-sharded TAAT, the
-# WAND decode loop) routes through the ONE site the block encoder also uses
-# for its stored bounds — cross-path rank identity and the exactness of
-# strict bound < θ pruning hold at ulp boundaries only while the float
-# expression tree is literally identical everywhere.
+# the serving decode site (BlockIndexReader._decode_blocks, which every
+# route decodes through) evaluates the ONE expression the block encoder
+# also uses for its stored bounds — cross-path rank identity and the
+# exactness of strict bound < θ pruning hold at ulp boundaries only while
+# the float expression tree is literally identical everywhere.
 from websearchengine_spark.plans.build import tf_component as _tf_component
 
 
@@ -393,17 +397,91 @@ class _Leaf:
     dls_vb: list
 
 
-def _decode_blocks(los, ns, ids_vb, tfs_vb, dls_vb):
-    """Leaf blocks (doc_lo, n and each column's varbyte payloads joined
-    in doc order, as bytes or a uint8 array) → concatenated (ids:int64,
-    tfs:f64, dls:f64). The one serving decode site: one segmented
-    vb_decode per column (per-call fixed cost is ~10 µs, so blocks are
-    never decoded one call each); codec.block_ids folds the block-head
-    ``doc_lo - 1`` base back in."""
-    ids = block_ids(vb_decode(ids_vb), ns, los)
-    tfs = vb_decode(tfs_vb).astype(np.float64)
-    dls = vb_decode(dls_vb).astype(np.float64)
-    return ids, tfs, dls
+def _leaf_blocks(leaves: list[_Leaf]) -> tuple:
+    """The blocks of ``leaves`` as one doc-ordered set: (los, his, ns,
+    max_tfc, min_tfc) concatenated, then each block's leaf position and
+    index inside that leaf."""
+    sizes = [len(lf.los) for lf in leaves]
+    owner = np.repeat(np.arange(len(leaves)), sizes)
+    js = np.arange(len(owner)) - (np.cumsum(sizes) - sizes)[owner]
+    return (*(np.concatenate([getattr(lf, f) for lf in leaves])
+              for f in ("los", "his", "ns", "max_tfc", "min_tfc")), owner, js)
+
+
+def _leaf_payloads(blocks: list[tuple[_Leaf, int]]) -> tuple:
+    """(doc_los, ns, ids_vb, tfs_vb, dls_vb) of the given (leaf, block
+    index) pairs, payloads joined in list order: the arguments
+    :meth:`BlockIndexReader._decode_blocks` takes."""
+    return (
+        [lf.los[j] for lf, j in blocks],
+        [lf.ns[j] for lf, j in blocks],
+        b"".join([lf.ids_vb[j] for lf, j in blocks]),
+        b"".join([lf.tfs_vb[j] for lf, j in blocks]),
+        b"".join([lf.dls_vb[j] for lf, j in blocks]),
+    )
+
+
+def _cover(los: np.ndarray, his: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """Index of the block (sorted, disjoint [los, his] ranges) holding each
+    sorted interval start, -1 where none does."""
+    ci = np.searchsorted(his, starts, side="left")
+    cis = np.minimum(ci, len(his) - 1)
+    return np.where((ci < len(his)) & (los[cis] <= starts), cis, -1)
+
+
+def _cover_bounds(blocks: list, starts: np.ndarray) -> tuple:
+    """WAND's cover step at either level: per term's (los, his, ubs, ns)
+    blocks (None: none here) the :func:`_cover` of the interval starts,
+    and per interval Σ_t max(ub, 0) and Σ_t n over the covering blocks.
+    max(·, 0): an absent doc contributes exactly 0 (negative IDF)."""
+    ub = np.zeros(len(starts))
+    cost = np.zeros(len(starts))
+    covers = []
+    for blk in blocks:
+        if blk is None:
+            covers.append(None)
+            continue
+        los, his, ubs, ns = blk
+        c = _cover(los, his, starts)
+        covers.append(c)
+        hit = c >= 0
+        ub += np.where(hit, np.maximum(ubs[c], 0.0), 0.0)
+        cost += np.where(hit, ns[c], 0)
+    return covers, ub, cost
+
+
+def _bound_batches(idx, ub, cost, heap, k, bail_over=None):
+    """WAND's descending-bound batch step at either level: yields batches
+    of the intervals ``idx`` in descending ``ub`` order, each up to a
+    ``cost`` budget growing 4× per batch and, once the ``heap`` holds k,
+    cut after the last bound reaching θ (at least one interval). θ is
+    re-read from the heap the caller fills between batches; stops when
+    the next bound is strictly below θ. With ``bail_over``, yields None
+    and stops once the heap is full and more than ``bail_over`` intervals
+    still reach θ (block bounds do not prune)."""
+    order = idx[np.argsort(-ub[idx], kind="stable")]
+    ub_sorted = ub[order]
+    cum = np.cumsum(cost[order])
+    pos, n = 0, len(order)
+    budget = float(max(64 * k, 1024))
+    while pos < n:
+        full = len(heap) == k
+        theta = heap[0][0] if full else -math.inf
+        if ub_sorted[pos] < theta:
+            return
+        if full and bail_over is not None and (
+            int(np.searchsorted(-ub_sorted, -theta, side="right")) - pos > bail_over
+        ):
+            yield None
+            return
+        tgt = (cum[pos - 1] if pos else 0.0) + budget
+        end = min(max(int(np.searchsorted(cum, tgt, side="left")) + 1, pos + 1), n)
+        if full:
+            cut = int(np.searchsorted(-ub_sorted[pos:end], -theta, side="right"))
+            end = pos + max(cut, 1)
+        yield order[pos:end]
+        pos = end
+        budget *= 4
 
 
 _META = (("doc_lo", np.int64), ("doc_hi", np.int64), ("n", np.int64),
@@ -428,8 +506,9 @@ def _ranked(cand: np.ndarray, s: np.ndarray) -> list[tuple[int, int, float]]:
 class _Hits(list):
     """search()'s ranked top-k [(rank, doc_id, score)], as the result cache
     holds it, plus the exact match ``count`` and the top-k's ``freqs``
-    {doc_id: [(term, tf), ...]} (sorted-term order). TAAT and lead fill
-    both; WAND and parallel TAAT leave None for search_full to fill."""
+    {doc_id: [(term, tf), ...]} (sorted-term order). TAAT (serial or
+    sharded) and lead fill both; only WAND leaves None, for search_full to
+    fill."""
 
     __slots__ = ("count", "freqs")
 
@@ -762,42 +841,44 @@ class BlockIndexReader:
 
         return self._cached("arr", terms, fetch)
 
-    def _with_contrib(self, df: int, ids, tfs, dls) -> tuple:
-        """Decoded postings of a term with document frequency ``df`` →
-        (ids, tfs:uint32, contrib:f64): the BM25 contribution per posting
-        through THE shared float expression tree (see _tf_component), so
-        every scorer sums identical values; tfs shrink to uint32 (they
-        only feed freqs; a tf of 2^32 would need a 4G-token document) to
-        keep the cached triple at the size of the decoded one."""
+    def _decode_blocks(self, df: int, los, ns, ids_vb, tfs_vb, dls_vb) -> tuple:
+        """THE serving decode site, for every route: leaf blocks of one
+        term with document frequency ``df`` (doc_lo, n and each column's
+        varbyte payloads joined in doc order) → (ids:int64, tfs:uint32,
+        contrib:f64), tombstoned postings masked out. One segmented
+        vb_decode per column (~10 µs fixed cost per call); codec.block_ids
+        folds the block-head ``doc_lo - 1`` base back in; contrib goes
+        through the shared expression tree (see _tf_component); tfs only
+        feed freqs, so uint32 keeps the triple at the decoded size."""
+        ids = block_ids(vb_decode(ids_vb), ns, los)
+        tfs = vb_decode(tfs_vb).astype(np.float64)
+        dls = vb_decode(dls_vb).astype(np.float64)
+        keep = self._del_mask(ids)
+        if keep is not None:
+            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
         contrib = self._idf(df) * _tf_component(tfs, dls, self.avg_dl)
         return ids, tfs.astype(np.uint32), contrib
 
     def _decode_posting_table(
         self, runs: dict[str, pa.Table], lex: dict[str, int]
     ) -> dict[str, tuple]:
-        """term → (ids:int64, tfs:uint32, contrib:f64) posting arrays from
-        each term's leaf block rows (columns doc_lo, n, ids_vb, tfs_vb,
-        dls_vb, in doc_lo order), with tombstoned postings masked out and
-        contributions from the (corrected) df in ``lex``. Columnar: one
-        segmented vb_decode per column per term over the payload column's
-        own data buffer. No caching — callers cache (or are one-shot range
-        workers). Terms with no (surviving) rows are simply absent from
-        the result."""
+        """term → (ids, tfs, contrib) (see _decode_blocks) from each term's
+        leaf block rows (columns doc_lo, n, ids_vb, tfs_vb, dls_vb, in
+        doc_lo order), with contributions from the (corrected) df in
+        ``lex``. Columnar: each payload column's own data buffer is decoded
+        whole. No caching — callers cache (or are one-shot range workers).
+        Terms with no (surviving) postings are absent from the result."""
         out: dict[str, tuple] = {}
         for t, tbl in runs.items():
-            ids, tfs, dls = _decode_blocks(
+            arr = self._decode_blocks(
+                int(lex[t]),
                 tbl.column("doc_lo").to_numpy(),
                 tbl.column("n").to_numpy(),
-                concat_binary_column(tbl.column("ids_vb")),
-                concat_binary_column(tbl.column("tfs_vb")),
-                concat_binary_column(tbl.column("dls_vb")),
+                *(concat_binary_column(tbl.column(c))
+                  for c in ("ids_vb", "tfs_vb", "dls_vb")),
             )
-            keep = self._del_mask(ids)
-            if keep is not None:
-                ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                if len(ids) == 0:
-                    continue
-            out[t] = self._with_contrib(int(lex[t]), ids, tfs, dls)
+            if len(arr[0]):
+                out[t] = arr
         return out
 
     def _decode_covering(self, term: str, df: int, sis, docs) -> tuple:
@@ -807,31 +888,15 @@ class BlockIndexReader:
         doc_hi] holds one of them are decoded (leaf skip: searchsorted over
         doc_hi); None decodes every block. ``sis`` must be non-empty."""
         leaves = [self._leaf_for(term, si) for si in sis]
-        llos = np.concatenate([lf.los for lf in leaves])
-        lns = np.concatenate([lf.ns for lf in leaves])
+        los, his, _ns, _mx, _mn, owner, js = _leaf_blocks(leaves)
         if docs is None:
-            bi = np.arange(len(llos))
+            bi = np.arange(len(los))
         else:
-            bi = np.searchsorted(
-                np.concatenate([lf.his for lf in leaves]), docs, side="left"
-            )
-            ok = bi < len(llos)
-            bi = bi[ok]
-            bi = np.unique(bi[llos[bi] <= docs[ok]])
-        sizes = [len(lf.los) for lf in leaves]
-        owner = np.repeat(np.arange(len(leaves)), sizes)[bi]
-        js = bi - (np.cumsum(sizes) - sizes)[owner]
-        blocks = [(leaves[o], j) for o, j in zip(owner.tolist(), js.tolist())]
-        ids, tfs, dls = _decode_blocks(
-            llos[bi], lns[bi],
-            b"".join([lf.ids_vb[j] for lf, j in blocks]),
-            b"".join([lf.tfs_vb[j] for lf, j in blocks]),
-            b"".join([lf.dls_vb[j] for lf, j in blocks]),
-        )
-        keep = self._del_mask(ids)
-        if keep is not None:
-            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        return self._with_contrib(df, ids, tfs, dls)
+            bi = _cover(los, his, docs)
+            bi = np.unique(bi[bi >= 0])
+        return self._decode_blocks(df, *_leaf_payloads(
+            [(leaves[o], j) for o, j in zip(owner[bi].tolist(), js[bi].tolist())]
+        ))
 
     def _search_lead(self, present, lex, k) -> list[tuple[int, int, float]]:
         """Selective conjunctive scorer driven by the LEAD (rarest) term.
@@ -841,31 +906,39 @@ class BlockIndexReader:
         a lead docID, all terms in ONE batched read (a term with at most
         ``prefetch_sbs`` superblocks is fetched whole), and decodes just the
         leaf blocks covering one — a dense term's other superblocks are
-        never read, metadata or payload. Scoring is the shared accumulator
-        keeping docs hit by every term (per-doc sums from 0.0 in sorted-
-        term = oracle order) and the shared top-k comparator, so results
-        are rank- and score-identical to TAAT. Every doc in the intersection
-        is a lead doc and each other term decoded the block covering it, so
-        the intersection — hence the count and the top-k's tfs — is exact."""
-        sbms = self._fetch_superblocks(present)
-        present = [t for t in present if t in sbms]
+        never read, metadata or payload. A term whose whole posting list is
+        in the posting cache (a TAAT fetch put it there) takes that triple
+        instead and fetches and decodes nothing. Scoring is _scored's
+        intersection (per-doc sums from 0.0 in sorted-term = oracle order)
+        and the shared top-k comparator, so results are rank- and
+        score-identical to TAAT. Every doc in the intersection is a lead
+        doc and each other term holds the block covering it, so the
+        intersection — hence the count and the top-k's tfs — is exact."""
+        arrays = {}  # term → (ids, tfs, contrib): cached whole, or decoded
+        for t in present:  # one probe, kept as a direct reference
+            _hit, arr = self._posting_cache.get2(("arr", t))
+            if arr is not None:
+                arrays[t] = arr
+        sbms = self._fetch_superblocks([t for t in present if t not in arrays])
+        present = [t for t in present if t in arrays or t in sbms]
         if not present:
             return _Hits(count=0, freqs={})
         lead = min(present, key=lambda t: int(lex[t]))
-        l_los, l_his = sbms[lead][0], sbms[lead][1]
-        self._fetch_leaf_batch(
-            [(lead, i, int(l_los[i]), int(l_his[i])) for i in range(len(l_los))]
-        )
-        lead_arr = self._decode_covering(
-            lead, int(lex[lead]), range(len(l_los)), None
-        )
-        lead_docs = lead_arr[0]
+        if lead not in arrays:
+            l_los, l_his = sbms[lead][0], sbms[lead][1]
+            self._fetch_leaf_batch(
+                [(lead, i, int(l_los[i]), int(l_his[i])) for i in range(len(l_los))]
+            )
+            arrays[lead] = self._decode_covering(
+                lead, int(lex[lead]), range(len(l_los)), None
+            )
+        lead_docs = arrays[lead][0]
         if len(lead_docs) == 0:
             return _Hits(count=0, freqs={})
         covers: dict[str, list[int]] = {}
         wants = []
         for t in present:
-            if t == lead:
+            if t in arrays:
                 continue
             los, his = sbms[t][0], sbms[t][1]
             cover = np.unique(np.searchsorted(his, lead_docs, side="left"))
@@ -875,11 +948,8 @@ class BlockIndexReader:
             grab = range(len(his)) if len(his) <= self.prefetch_sbs else covers[t]
             wants.extend((t, si, int(los[si]), int(his[si])) for si in grab)
         self._fetch_leaf_batch(wants)
-        arrays = {
-            t: lead_arr if t == lead
-            else self._decode_covering(t, int(lex[t]), covers[t], lead_docs)
-            for t in present
-        }
+        for t, sis in covers.items():
+            arrays[t] = self._decode_covering(t, int(lex[t]), sis, lead_docs)
         return self._scored(arrays, k, True, False)
 
     def _idf(self, df: int) -> float:
@@ -998,7 +1068,7 @@ class BlockIndexReader:
         ):
             cand, s, count = self._flat_cut(per, k)
         else:
-            cand, s = self._accumulate(per, len(per), conjunctive, flat)
+            cand, s = self._accumulate(per, conjunctive, flat)
         top, ts = self._topk_arrays(cand, s, k)
         freqs: dict[int, list[tuple[str, int]]] = {d: [] for d in top.tolist()}
         for t in terms:
@@ -1055,15 +1125,15 @@ class BlockIndexReader:
         cand = np.nonzero(seen & (s >= low))[0]
         return cand, s[cand], int(np.count_nonzero(seen))
 
-    def _accumulate(self, per, need: int, conjunctive: bool, flat: bool):
+    def _accumulate(self, per, conjunctive: bool, flat: bool):
         """The scatter accumulator: sum each doc's per-term contributions
         ``per`` = [(ids, contrib)] in list (= sorted-term = oracle float
-        summation) order → (cand, s). Conjunctive keeps docs hit by ``need``
-        terms. ``flat`` scatters into O(n_docs) arrays (no sort; docIDs are
+        summation) order → (cand, s). Conjunctive keeps docs hit by every
+        list. ``flat`` scatters into O(n_docs) arrays (no sort; docIDs are
         dense [0, n_docs)); otherwise the candidate ids are compressed first
         (np.unique) so peak memory is O(Σ postings), independent of n_docs.
-        Serves dense conjunctions, disjunctions _flat_cut cannot bound, and
-        the range-sharded TAAT."""
+        Serves dense conjunctions and the disjunctions _flat_cut cannot
+        bound."""
         cand = None if flat else np.unique(np.concatenate([ids for ids, _ in per]))
         size = self.n_docs if flat else len(cand)
         s = np.zeros(size)
@@ -1072,7 +1142,7 @@ class BlockIndexReader:
             ix = ids if flat else np.searchsorted(cand, ids)
             s[ix] += contrib  # each doc appears once per term: no races
             cnt[ix] += 1
-        keep = cnt == need if conjunctive else cnt > 0
+        keep = cnt == len(per) if conjunctive else cnt > 0
         return (np.nonzero(keep)[0] if flat else cand[keep]), s[keep]
 
     @staticmethod
@@ -1144,10 +1214,13 @@ class BlockIndexReader:
 
         Exactness: posting lists are doc-sorted, so every doc's postings —
         hence its complete score, summed in the same sorted-term float
-        order — live in exactly one shard; a global top-k doc is therefore
-        in its shard's top-k, and the merge reapplies the one shared
-        comparator. Rank- and score-identical to the single-process TAAT
-        by construction (pinned by the parametrized reader fixtures)."""
+        order, and its (term, tf) pairs — live in exactly one shard; a
+        global top-k doc is therefore in its shard's top-k, and the merge
+        reapplies the one shared comparator. The match count is the sum of
+        the shards' counts (each matching doc counts in its own shard) and
+        the top-k's freqs are the shards'. Rank- and score-identical to
+        the single-process TAAT by construction (pinned by the
+        parametrized reader fixtures)."""
         pool = self._ensure_pool()
         n_shards = min(2 * self.parallel_workers, self.n_docs)
         bounds = np.linspace(0, self.n_docs, n_shards + 1).astype(np.int64)
@@ -1157,24 +1230,30 @@ class BlockIndexReader:
             if hi > lo
         ]
         parts = pool.map(_parallel_taat_worker, args)
-        docs = [p[0] for p in parts if len(p[0])]
-        if not docs:
-            return _Hits(count=0, freqs={})
-        cand = np.concatenate(docs)
-        s = np.concatenate([p[1] for p in parts if len(p[0])])
-        return _Hits(_ranked(*self._topk_arrays(cand, s, k)))
+        hits = [h for part in parts for h in part]
+        top, ts = self._topk_arrays(
+            np.array([d for _, d, _ in hits], dtype=np.int64),
+            np.array([v for _, _, v in hits], dtype=np.float64),
+            k,
+        )
+        freqs = {d: fr for part in parts for d, fr in part.freqs.items()}
+        return _Hits(
+            _ranked(top, ts),
+            sum(part.count for part in parts),
+            {d: freqs[d] for d in top.tolist()},
+        )
 
-    def _taat_range_topk(self, terms, k, conjunctive, doc_lo, doc_hi):
-        """One shard's exact TAAT top-k over docIDs in [doc_lo, doc_hi):
+    def _taat_range_topk(self, terms, k, conjunctive, doc_lo, doc_hi) -> _Hits:
+        """One shard's exact TAAT answer over docIDs in [doc_lo, doc_hi):
         range-pruned leaf read (row groups outside the range never decode —
-        the doc_lo statistics prune within single-term groups), candidate-
-        compressed accumulation in sorted-term order, shared comparator.
-        Returns (docs:int64[], scores:f64[]) ready for the exact merge."""
+        the doc_lo statistics prune within single-term groups), each term's
+        postings cut to the range, then _scored with no flat accumulator:
+        the shard's top-k, its match count and the top-k's freqs, ready
+        for the exact merge. A conjunctive doc must carry every term the
+        lexicon holds, so a shard where one has no postings matches
+        nothing."""
         lex = self.lexicon_rows(terms)
         present = [t for t in terms if t in lex]
-        empty = (np.empty(0, dtype=np.int64), np.empty(0))
-        if not present:
-            return empty
         runs = self._pruned_read(
             self._block_rgs, self.paths.blocks, present,
             kind=0,
@@ -1191,20 +1270,14 @@ class BlockIndexReader:
                 runs[t] = tbl.slice(a, b - a)
             else:
                 del runs[t]
-        arrays = self._decode_posting_table(runs, lex)
-        per = []
-        for t in sorted(arrays):  # sorted-term order = oracle summation order
-            ids, _tfs, contrib = arrays[t]
-            a = int(np.searchsorted(ids, doc_lo, side="left"))
-            b = int(np.searchsorted(ids, doc_hi, side="left"))
+        arrays = {}
+        for t, arr in self._decode_posting_table(runs, lex).items():
+            a, b = np.searchsorted(arr[0], [doc_lo, doc_hi]).tolist()
             if a < b:
-                per.append((ids[a:b], contrib[a:b]))
-        if not per:
-            return empty
-        # a doc must carry ALL present terms GLOBALLY: a term with no
-        # postings in this shard leaves cnt < len(present) for its docs
-        cand, s = self._accumulate(per, len(present), conjunctive, False)
-        return self._topk_arrays(cand, s, k)
+                arrays[t] = tuple(x[a:b] for x in arr)
+        if conjunctive and len(arrays) < len(present):
+            return _Hits(count=0, freqs={})
+        return self._scored(arrays, k, conjunctive, False)
 
     def _search_wand_blocks(self, present, lex, k):
         """Two-level block-max WAND (disjunctive): superblock pruning first,
@@ -1246,72 +1319,49 @@ class BlockIndexReader:
         ~everything must be scored anyway.
         """
         sbms = self._fetch_superblocks(present)
-        metas = []  # (term, idf, los, his, ubs, ns) in sorted-term order
+        metas = []  # (term, df, idf, los, his, ubs, ns) in sorted-term order
         for t in sorted(present):
             sbm = sbms.get(t)
             if sbm is None:
                 continue
             los, his, ns, mx, mn = sbm
-            idf = self._idf(int(lex[t]))
+            df = int(lex[t])
+            idf = self._idf(df)
             # _bf_hi/_bf_lo: tombstone avg_dl drift factors (1.0 when no
             # deletes) — keep stored build-time bounds valid upper bounds
             metas.append((
-                t, idf, los, his,
+                t, df, idf, los, his,
                 np.maximum(idf * mx * self._bf_hi, idf * mn * self._bf_lo),
                 ns,
             ))
         if not metas:
             return _Hits(count=0, freqs={})
         bounds = np.unique(
-            np.concatenate([np.concatenate((m[2], m[3] + 1)) for m in metas])
+            np.concatenate([np.concatenate((m[3], m[4] + 1)) for m in metas])
         )
         starts = bounds[:-1]
         n_int = len(starts)
-        total_ub = np.zeros(n_int)
-        est_cost = np.zeros(n_int)
-        covers = []
-        for _t, idf, los, his, ubs, ns in metas:
-            ci = np.searchsorted(his, starts, side="left")
-            cis = np.minimum(ci, len(his) - 1)
-            covered = (ci < len(his)) & (los[cis] <= starts)
-            covers.append(np.where(covered, cis, -1))
-            total_ub += np.where(covered, np.maximum(ubs[cis], 0.0), 0.0)
-            est_cost += np.where(covered, ns[cis], 0)
-        order = np.argsort(-total_ub, kind="stable")
-        ub_sorted = total_ub[order]
-        cum_cost = np.cumsum(est_cost[order])
+        covers, total_ub, est_cost = _cover_bounds([m[3:] for m in metas], starts)
         heap: list[tuple[float, int]] = []
         in_batch = np.zeros(n_int, dtype=bool)
-        decoded: list[dict] = [dict() for _ in metas]  # (sb, leaf) → arrays
-        pos = 0
-        budget = float(max(64 * k, 1024))
+        # per term, this call's decoded blocks: (sb, leaf) → (ids, contrib)
+        decoded: list[dict] = [dict() for _ in metas]
         scored_postings = 0  # instrumentation: how much pruning bought
-        while pos < n_int:
-            theta = heap[0][0] if len(heap) == k else -math.inf
-            if ub_sorted[pos] < theta:
-                break  # desc order ⇒ everything left is strictly below θ
-            if len(heap) == k:
-                # pruning-effectiveness check: if most intervals survive θ
-                # and a flat accumulator is affordable, TAAT wins — bail
-                # (wasted work so far is bounded by the geometric budget)
-                n_sel = int(np.searchsorted(-ub_sorted, -theta, side="right")) - pos
-                if n_sel > 0.5 * n_int and self.n_docs <= self.dense_docs_max:
-                    return None
-            # batch = next intervals in bound order up to the posting budget
-            tgt = (cum_cost[pos - 1] if pos else 0.0) + budget
-            end = min(max(int(np.searchsorted(cum_cost, tgt, side="left")) + 1, pos + 1), n_int)
-            if len(heap) == k:
-                cut = int(np.searchsorted(-ub_sorted[pos:end], -theta, side="right"))
-                end = pos + max(cut, 1)
-            sel = order[pos:end]
-            pos = end
-            budget *= 4
+        # pruning-effectiveness check: if most intervals survive θ and a
+        # flat accumulator is affordable, TAAT wins — bail (wasted work so
+        # far is bounded by the geometric budget)
+        bail_over = 0.5 * n_int if self.n_docs <= self.dense_docs_max else None
+        for sel in _bound_batches(
+            np.arange(n_int), total_ub, est_cost, heap, k, bail_over
+        ):
+            if sel is None:
+                return None
             in_batch[:] = False
             in_batch[sel] = True
             # ---- leaf fetch: exactly the superblocks covering the batch
             needs = []
             wants = []
-            for (t, _idf, los, his, _ubs, _ns), cover in zip(metas, covers):
+            for (t, _df, _idf, los, his, _ubs, _ns), cover in zip(metas, covers):
                 civ = cover[sel]
                 need = np.unique(civ[civ >= 0])
                 needs.append(need)
@@ -1328,132 +1378,62 @@ class BlockIndexReader:
             # interval i = [bounds[i], bounds[i+1]) — include both edges so
             # no leaf interval straddles a selected-interval boundary
             lb = [bounds[sel], bounds[sel + 1]]
-            leafs = []  # per term: (leaf_los, leaf_his, leaf_ubs, sb_of, j_of)
-            for (t, idf, _los, _his, _ubs, _ns), need in zip(metas, needs):
+            leafs = []  # per term: (los, his, ubs, ns, sb_of, j_of) of its leaves
+            for (t, _df, idf, *_m), need in zip(metas, needs):
                 if need.size == 0:
                     leafs.append(None)
                     continue
-                parts = [self._leaf_for(t, int(si)) for si in need.tolist()]
-                llos = np.concatenate([pt.los for pt in parts])
-                lhis = np.concatenate([pt.his for pt in parts])
-                lubs = np.concatenate(
-                    [
-                        np.maximum(
-                            idf * pt.max_tfc * self._bf_hi,
-                            idf * pt.min_tfc * self._bf_lo,
-                        )
-                        for pt in parts
-                    ]
+                llos, lhis, lns, mx, mn, owner, j_of = _leaf_blocks(
+                    [self._leaf_for(t, int(si)) for si in need.tolist()]
                 )
-                lns = np.concatenate([pt.ns for pt in parts])
-                sb_of = np.repeat(need, [len(pt.los) for pt in parts])
-                j_of = np.concatenate(
-                    [np.arange(len(pt.los), dtype=np.int64) for pt in parts]
-                )
-                leafs.append((llos, lhis, lubs, lns, sb_of, j_of))
+                lubs = np.maximum(idf * mx * self._bf_hi, idf * mn * self._bf_lo)
+                leafs.append((llos, lhis, lubs, lns, need[owner], j_of))
                 lb.append(llos)
                 lb.append(lhis + 1)
             lbounds = np.unique(np.concatenate(lb))
             lstarts = lbounds[:-1]
-            iv = np.searchsorted(bounds, lstarts, side="right") - 1
-            inside = in_batch[iv]
-            l_ub = np.zeros(len(lstarts))
-            l_cost = np.zeros(len(lstarts))
-            lcovers = []
-            for leaf in leafs:
-                if leaf is None:
-                    lcovers.append(None)
-                    continue
-                llos, lhis, lubs, lns, _sb_of, _j_of = leaf
-                ci = np.searchsorted(lhis, lstarts, side="left")
-                cis = np.minimum(ci, len(lhis) - 1)
-                covered = (ci < len(lhis)) & (llos[cis] <= lstarts)
-                lcovers.append(np.where(covered, cis, -1))
-                l_ub += np.where(covered, np.maximum(lubs[cis], 0.0), 0.0)
-                l_cost += np.where(covered, lns[cis], 0.0)
-            # ---- inner leaf-level loop: same descending-bound batching as
-            # the outer loop, but over leaf intervals — θ updates BETWEEN
-            # sub-batches, so leaf-granularity pruning engages even while
-            # the heap is still filling (one-shot scoring of a whole
-            # superblock batch would decode ~16384 postings before the
-            # first θ exists)
-            l_idx = np.nonzero(inside)[0]
-            if len(l_idx) == 0:
-                continue
-            lorder = l_idx[np.argsort(-l_ub[l_idx], kind="stable")]
-            lub_sorted = l_ub[lorder]
-            lcum = np.cumsum(l_cost[lorder])
-            lpos = 0
-            lbudget = float(max(64 * k, 1024))
+            inside = in_batch[np.searchsorted(bounds, lstarts, side="right") - 1]
+            lcovers, l_ub, l_cost = _cover_bounds(
+                [None if lf is None else lf[:4] for lf in leafs], lstarts
+            )
+            # ---- inner leaf-level loop: the same descending-bound batching
+            # over leaf intervals — θ updates BETWEEN sub-batches, so leaf-
+            # granularity pruning engages even while the heap is still
+            # filling (one-shot scoring of a whole superblock batch would
+            # decode ~16384 postings before the first θ exists)
             alive = np.zeros(len(lstarts), dtype=bool)
-            while lpos < len(lorder):
-                theta = heap[0][0] if len(heap) == k else -math.inf
-                if lub_sorted[lpos] < theta:
-                    break
-                ltgt = (lcum[lpos - 1] if lpos else 0.0) + lbudget
-                lend = min(
-                    max(int(np.searchsorted(lcum, ltgt, side="left")) + 1, lpos + 1),
-                    len(lorder),
-                )
-                if len(heap) == k:
-                    cut = int(
-                        np.searchsorted(-lub_sorted[lpos:lend], -theta, side="right")
-                    )
-                    lend = lpos + max(cut, 1)
-                lsel = lorder[lpos:lend]
-                lpos = lend
-                lbudget *= 4
+            for lsel in _bound_batches(np.nonzero(inside)[0], l_ub, l_cost, heap, k):
                 alive[:] = False
                 alive[lsel] = True
                 # ---- decode + gather (sorted-term order)
                 gathered = []  # (ids, contribs) per term
-                for (t, idf, *_m), leaf, lcover, dec in zip(
+                for (t, df, *_m), leaf, lcover, dec in zip(
                     metas, leafs, lcovers, decoded
                 ):
                     if leaf is None:
                         continue
-                    _llos, _lhis, _lubs, _lns, sb_of, j_of = leaf
+                    sb_of, j_of = leaf[4], leaf[5]
                     cb = lcover[lsel]
                     needb = np.unique(cb[cb >= 0])
                     if needb.size == 0:
                         continue
-                    miss = [
-                        ci
-                        for ci in needb.tolist()
-                        if (int(sb_of[ci]), int(j_of[ci])) not in dec
-                    ]
-                    if miss:
-                        # one _decode_blocks call for all missing blocks
-                        mb = [
-                            (self._leaf_for(t, int(sb_of[ci])), int(j_of[ci]))
-                            for ci in miss
-                        ]
-                        mns = np.array([pt.ns[j] for pt, j in mb], dtype=np.int64)
-                        st = np.cumsum(mns) - mns
-                        ids_all, tfs, dls = _decode_blocks(
-                            [pt.los[j] for pt, j in mb], mns,
-                            b"".join([pt.ids_vb[j] for pt, j in mb]),
-                            b"".join([pt.tfs_vb[j] for pt, j in mb]),
-                            b"".join([pt.dls_vb[j] for pt, j in mb]),
-                        )
-                        contrib_all = idf * _tf_component(tfs, dls, self.avg_dl)
-                        dkeep = self._del_mask(ids_all)
-                        for jj, ci in enumerate(miss):
-                            s0, s1 = int(st[jj]), int(st[jj] + mns[jj])
-                            if dkeep is None:
-                                dec[(int(sb_of[ci]), int(j_of[ci]))] = (
-                                    ids_all[s0:s1],
-                                    contrib_all[s0:s1],
-                                )
-                            else:  # tombstoned postings never score
-                                kk = dkeep[s0:s1]
-                                dec[(int(sb_of[ci]), int(j_of[ci]))] = (
-                                    ids_all[s0:s1][kk],
-                                    contrib_all[s0:s1][kk],
-                                )
                     keys = [
                         (int(sb_of[ci]), int(j_of[ci])) for ci in needb.tolist()
                     ]
+                    miss = [ky for ky in keys if ky not in dec]
+                    if miss:
+                        # one decode for all missing blocks; they are doc-
+                        # ordered and disjoint, so each block's surviving
+                        # postings start at the first id >= its doc_lo
+                        mb = [(self._leaf_for(t, sb), j) for sb, j in miss]
+                        ids_m, _tfs, co_m = self._decode_blocks(
+                            df, *_leaf_payloads(mb)
+                        )
+                        cut = np.searchsorted(
+                            ids_m, [lf.los[j] for lf, j in mb]
+                        ).tolist()
+                        for ky, c0, c1 in zip(miss, cut, cut[1:] + [len(ids_m)]):
+                            dec[ky] = (ids_m[c0:c1], co_m[c0:c1])
                     ids = np.concatenate([dec[ky][0] for ky in keys])
                     co = np.concatenate([dec[ky][1] for ky in keys])
                     liv = np.searchsorted(lbounds, ids, side="right") - 1
@@ -1468,7 +1448,9 @@ class BlockIndexReader:
                 for ids, co in gathered:  # sorted-term order = oracle order
                     acc[np.searchsorted(cand, ids)] += co
                 if len(heap) == k:
-                    m = acc >= theta  # strict-< prune; == θ ties still pushed
+                    # θ as the batch step read it (no push since):
+                    # strict-< prune; == θ ties still pushed
+                    m = acc >= heap[0][0]
                     cand, acc = cand[m], acc[m]
                 for d, s in zip(cand.tolist(), acc.tolist()):
                     self._push(heap, k, s, d)
@@ -1492,8 +1474,8 @@ class BlockIndexReader:
         docs, not n_results), from the query terms' whole posting lists:
         the independent cross-check of the count the TAAT and lead routes
         return with their ranking, and search_full's fallback for the
-        WAND and parallel-TAAT routes, which cannot count from their own
-        state. Decoded arrays are LRU-shared with the TAAT scorer."""
+        WAND route, which cannot count from its own state. Decoded arrays
+        are LRU-shared with the TAAT scorer."""
         terms = clean_query(query)
         lex = self.lexicon_rows(terms)
         present = [t for t in terms if t in lex]
@@ -1515,7 +1497,7 @@ class BlockIndexReader:
         — the reference's `freqs` pairs (main.cpp:610-618), looked up in the
         index postings (no text re-read). Like match_count: the cross-check
         of the freqs the TAAT and lead routes return, and search_full's
-        fallback for the WAND and parallel-TAAT routes."""
+        fallback for the WAND route."""
         terms = clean_query(query)
         lex = self.lexicon_rows(terms)
         present = sorted(t for t in terms if t in lex)
@@ -1542,23 +1524,12 @@ class BlockIndexReader:
         snippets=None,
     ) -> dict:
         """The assembled result object of the reference's Searcher::search
-        (main.cpp:465-553; JSON shape readme.md:205-223):
-
-            {cached, time (µs), count, data: [{rank, score,
-              freqs: [[term, tf], ...],           # sorted-term order
-              conv_id, turn_idx, role,            # the `url` analogue (§1.5)
-              snippet}, ...]}
-
-        ``count`` = TOTAL matched docs (main.cpp:487). As in the reference
-        (main.cpp:487, 599-618), count and freqs come with the ranking
-        (:class:`_Hits`; a WAND or parallel-TAAT result runs match_count /
+        for a BM25 query (:func:`assemble_page`, freqs in sorted-term
+        order). ``count`` = TOTAL matched docs (main.cpp:487). As in the
+        reference (main.cpp:487, 599-618), count and freqs come with the
+        ranking (:class:`_Hits`; a WAND result runs match_count /
         result_freqs once) and are cached with it: a hit decodes nothing.
-        ``snippets`` is an optional
-        :class:`operators.snippets.SnippetService`; without it the
-        doc-metadata/snippet fields are omitted (index-only assembly).
-        Reference quirk reproduced: a result whose body contains no query
-        term is dropped from ``data``, and if data ends up empty, count is
-        forced to 0 (main.cpp:547-551)."""
+        ``snippets``: an optional SnippetService (index-only without)."""
         terms = clean_query(query)
         cache_key = (" ".join(terms), conjunctive, n_results)
         t0 = time.perf_counter()
@@ -1575,40 +1546,19 @@ class BlockIndexReader:
         else:
             ranked = self.search(query, conjunctive=conjunctive, k=n_results)
         elapsed_us = (time.perf_counter() - t0) * 1e6
-        result = {"cached": hit, "time": elapsed_us, "count": 0, "data": []}
-        if not ranked:
-            return result
-        doc_ids = [d for _, d, _ in ranked]
         # each read once: a concurrent caller may fill the same cached
-        # result, with the same values
+        # WAND result, with the same values
         count, freqs = ranked.count, ranked.freqs
-        if count is None:
+        if ranked and count is None:
             count = ranked.count = self.match_count(query, conjunctive=conjunctive)
-        if freqs is None:
-            freqs = ranked.freqs = self.result_freqs(query, doc_ids)
-        result["count"] = count
-        meta = snippets.meta_for(doc_ids) if snippets is not None else {}
-        snips = (
-            snippets.reference_snippets(query, doc_ids, snippet_len)
-            if snippets is not None
-            else {}
+        if ranked and freqs is None:
+            freqs = ranked.freqs = self.result_freqs(
+                query, [d for _, d, _ in ranked]
+            )
+        return assemble_page(
+            hit, elapsed_us, count, ranked, query, snippet_len, snippets,
+            freqs=freqs,
         )
-        for rank, d, score in ranked:
-            item = {
-                "rank": rank,
-                "score": score,
-                "freqs": [[t, tf] for t, tf in freqs.get(d, [])],
-            }
-            if snippets is not None:
-                item.update(meta.get(d, {}))
-                snip = snips.get(d)
-                if snip is None:
-                    continue  # no query term in body → dropped (main.cpp:520-546)
-                item["snippet"] = snip
-            result["data"].append(item)
-        if not result["data"]:
-            result["count"] = 0  # reference quirk (main.cpp:548-550)
-        return result
 
     def mrr_at(self, queries, qrels: dict[int, int], n: int = 10) -> float:
         total, cnt = 0.0, 0
@@ -1621,6 +1571,53 @@ class BlockIndexReader:
                     total += 1.0 / rank
                     break
         return total / cnt if cnt else 0.0
+
+
+def assemble_page(
+    cached: bool,
+    elapsed_us: float,
+    count: int,
+    page,
+    query: str,
+    snippet_len: int,
+    snippets=None,
+    freqs: dict | None = None,
+) -> dict:
+    """The reference's result object for one ranked ``page`` [(rank,
+    doc_id, score)] (Searcher::search assembly, main.cpp:465-553; JSON
+    shape readme.md:205-223), for every query type:
+
+        {cached, time (µs), count, data: [{rank, score,
+          freqs: [[term, tf], ...],           # with ``freqs`` only
+          conv_id, turn_idx, role,            # the `url` analogue (§1.5)
+          snippet}, ...]}
+
+    ``snippets`` is an optional :class:`operators.snippets.SnippetService`
+    whose ``meta_for`` and ``reference_snippets`` are called once each for
+    a non-empty page; without it the doc-metadata/snippet fields are
+    omitted. Reference quirk reproduced: a result whose body contains no
+    query term is dropped from ``data`` (main.cpp:520-546), and if data
+    ends up empty, count is forced to 0 (main.cpp:548-550). Transformer
+    items carry no freqs (main.cpp:490)."""
+    result = {"cached": cached, "time": elapsed_us, "count": count, "data": []}
+    doc_ids = [d for _, d, _ in page]
+    if snippets is not None and doc_ids:
+        meta = snippets.meta_for(doc_ids)
+        snips = snippets.reference_snippets(query, doc_ids, snippet_len)
+    for rank, d, score in page:
+        item = {"rank": rank, "score": score}
+        if freqs is not None:
+            item["freqs"] = [[t, tf] for t, tf in freqs.get(d, [])]
+        if snippets is not None:
+            item.update(meta.get(d, {}))
+            snip = snips.get(d)
+            if snip is None:
+                continue  # no query term in body → dropped
+            item["snippet"] = snip
+        result["data"].append(item)
+    if not result["data"]:
+        result["count"] = 0
+    return result
 
 
 # ---- parallel-decode pool workers (module-level: spawn pickles by name) ----
