@@ -39,9 +39,16 @@ def index_dir(spark, fixture, tmp_path_factory):
     return out
 
 
-@pytest.fixture(
-    scope="module", params=["taat", "taat_sparse", "taat_parallel", "wand"]
-)
+# BlockIndexReader options of each serving route the reader fixture covers
+_READER_KW = {
+    "taat": {},
+    "taat_sparse": dict(dense_docs_max=0),
+    "taat_parallel": dict(parallel_workers=2, parallel_df_threshold=0),
+    "wand": dict(taat_threshold=0, dense_docs_max=0),
+}
+
+
+@pytest.fixture(scope="module", params=list(_READER_KW))
 def reader(index_dir, request):
     """All serving paths must be rank-identical to the oracle:
     - taat: vectorized term-at-a-time, flat dense accumulator;
@@ -53,15 +60,7 @@ def reader(index_dir, request):
     - wand: block-at-a-time block-max WAND for disjunctive (taat_threshold=0
       routes everything there; dense_docs_max=0 disables the TAAT bail-out
       so pruning logic is fully exercised) + lead-driven conjunctive."""
-    if request.param == "taat":
-        r = BlockIndexReader(index_dir)
-    elif request.param == "taat_sparse":
-        r = BlockIndexReader(index_dir, dense_docs_max=0)
-    elif request.param == "taat_parallel":
-        r = BlockIndexReader(index_dir, parallel_workers=2,
-                             parallel_df_threshold=0)
-    else:
-        r = BlockIndexReader(index_dir, taat_threshold=0, dense_docs_max=0)
+    r = BlockIndexReader(index_dir, **_READER_KW[request.param])
     yield r
     r.close()
 
@@ -730,11 +729,10 @@ def test_search_full_count_and_freqs_after_wand_bail_out(
     assert any(bailed) and routes["_search_taat"], (bailed, routes)
 
 
-@pytest.fixture(scope="module")
-def ghost_index(index_dir):
-    """index_dir plus a lexicon row for a term with no posting rows (a
-    partially written index): the lexicon says present, the blocks have
-    nothing to fetch."""
+def _with_ghost(index_dir: str, name: str, df: int) -> str:
+    """A copy of index_dir plus a lexicon row ``zzghost`` with document
+    frequency ``df`` and no posting rows (a partially written index): the
+    lexicon says present, the blocks have nothing to fetch."""
     import shutil
 
     import pyarrow as pa
@@ -742,7 +740,7 @@ def ghost_index(index_dir):
 
     from websearchengine_spark.plans.block_index import term_bucket
 
-    out = index_dir + "_ghost"
+    out = f"{index_dir}_{name}"
     if not os.path.isdir(out):
         shutil.copytree(index_dir, out)
         bdir = os.path.join(out, "lexicon", f"bucket={term_bucket('zzghost', 8)}")
@@ -750,11 +748,16 @@ def ghost_index(index_dir):
         path = os.path.join(bdir, fn)
         tbl = pq.read_table(path)
         ghost = pa.table(
-            {"term": ["zzghost"], "df": [1], "cf": [1]}
+            {"term": ["zzghost"], "df": [df], "cf": [df]}
         ).cast(tbl.schema)
         tbl = pa.concat_tables([tbl, ghost]).sort_by("term")
         pq.write_table(tbl, path)
     return out
+
+
+@pytest.fixture(scope="module")
+def ghost_index(index_dir):
+    return _with_ghost(index_dir, "ghost", 1)
 
 
 @pytest.mark.parametrize(
@@ -778,6 +781,59 @@ def test_search_full_counts_with_a_lexicon_term_without_postings(
     assert routes["_search_taat"] + routes["_search_wand_blocks"]
     for q in queries:
         assert r.search_full(q, conjunctive=True)["count"] > 0, q
+
+
+@pytest.mark.parametrize("kind", list(_READER_KW))
+def test_lexicon_term_without_postings_is_dropped_on_every_route(
+    index_dir, kind, monkeypatch
+):
+    """A lexicon term with no posting rows and a large df (so conjunctive
+    queries route TAAT, not lead) is dropped by every route: each query
+    with the ghost answers exactly what the query without it answers on
+    the index without it — ranking, scores, count and freqs. The parallel
+    shards see only their doc range, so the rule is applied before they
+    are asked."""
+    n_docs = BlockIndexReader(index_dir).n_docs
+    ghosted = BlockIndexReader(
+        _with_ghost(index_dir, "bigghost", n_docs * 2 // 5), **_READER_KW[kind]
+    )
+    plain = BlockIndexReader(index_dir, **_READER_KW[kind])
+    routes = _spy_routes(monkeypatch)
+    try:
+        for q in ("the data", "data", "the", "the data value"):
+            for conj in (True, False):
+                got = ghosted.search_full("zzghost " + q, conjunctive=conj)
+                want = plain.search_full(q, conjunctive=conj)
+                assert want["count"] > 0, (q, conj)
+                assert (got["count"], got["data"]) == (
+                    want["count"], want["data"]
+                ), (kind, q, conj)
+    finally:
+        ghosted.close()
+        plain.close()
+    taat = "_search_taat_parallel" if kind == "taat_parallel" else "_search_taat"
+    assert routes[taat], routes
+
+
+def test_lru_clear_empties_the_held_size():
+    """clear() resets the held size with the entries: a cleared full cache
+    holds entries again (OrderedDict.clear alone left ``held`` at the cap,
+    and every put then evicted at once)."""
+    from operator import itemgetter
+
+    from websearchengine_spark.operators.wand import _LRU
+
+    for cache, put in (
+        (_LRU(3), lambda c, i: c.put(i, i)),
+        (_LRU(30, weigh=itemgetter(0)), lambda c, i: c.put(i, (10, i))),
+    ):
+        for i in range(3):
+            put(cache, i)
+        cache.clear()
+        assert (len(cache), cache.held) == (0, 0)
+        put(cache, 7)
+        put(cache, 8)
+        assert list(cache) == [7, 8] and cache.get_(7) is not None
 
 
 def test_search_full_cache_hit_decodes_nothing(reader, fixture, monkeypatch):

@@ -241,3 +241,186 @@ def test_rewrite_blocks_plan(
     assert plan.count("hashpartitioning(") == hash_exchanges, plan
     schemas = re.findall(r"ReadSchema: (.*)", plan)
     assert schemas and not [s for s in schemas if "text" in s], schemas
+
+
+# ---- ingest: Spark job counts and output identity --------------------------
+
+def _spark_jobs(spark, fn) -> tuple[int, int]:
+    """(jobs in a fresh job group, every job the scheduler started) while
+    ``fn()`` runs. The two agree only when every thread ``fn`` starts
+    inherits the caller's job group."""
+    sc = spark.sparkContext
+    group = f"ingest-{id(fn)}"
+    first = sc._jsc.sc().dagScheduler().nextJobId()
+    sc.setJobGroup(group, "ingest job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    started = sc._jsc.sc().dagScheduler().nextJobId() - first
+    return len(sc.statusTracker().getJobIdsForGroup(group)), started
+
+
+@pytest.fixture(scope="module")
+def ingest_lifecycle(spark, fixture, tmp_path_factory):
+    """The ingest entries in order on the fixture: build a (first 50
+    conversations) and b (the other 10) with texts, merge them, tombstone
+    one conversation of the merge, purge it. → (dirs, {step: (jobs in
+    the step's group, jobs started)})."""
+    from websearchengine_spark.plans.block_index import build_block_index
+    from websearchengine_spark.plans.delete_index import (
+        purge_deletes,
+        tombstone_delete,
+    )
+    from websearchengine_spark.plans.merge_index import merge_block_indexes
+
+    root = tmp_path_factory.mktemp("ingest")
+    t = fixture.transcripts
+    convs = sorted(t["conv_id"].unique())
+    frames = {
+        name: spark.createDataFrame(t[t["conv_id"].isin(part)])
+        for name, part in (("a", convs[:50]), ("b", convs[50:]))
+    }
+    d = {n: str(root / n) for n in ("a", "b", "merged", "purged")}
+    kw = dict(resume=False, n_buckets=4, num_partitions=4, store_texts=True)
+    build_block_index(frames["b"], str(root / "warm"), **kw)  # JIT, workers
+    steps = {
+        "build": lambda: build_block_index(frames["a"], d["a"], **kw),
+        "build_b": lambda: build_block_index(frames["b"], d["b"], **kw),
+        "merge": lambda: merge_block_indexes(
+            spark, d["a"], d["b"], d["merged"], num_partitions=4
+        ),
+        "tombstone": lambda: tombstone_delete(
+            spark, d["merged"], conv_ids=[convs[3], convs[52]]
+        ),
+        "purge": lambda: purge_deletes(
+            spark, d["merged"], d["purged"], num_partitions=4
+        ),
+    }
+    return d, {name: _spark_jobs(spark, fn) for name, fn in steps.items()}
+
+
+# Spark jobs per ingest entry on the fixture lifecycle (with AQE on, each
+# shuffle stage is a job of its own). Before the ingest cut (Python-row
+# small tables, schema-inferring meta reads, two tokenize passes per
+# tombstone, serial rewrite tails) the same steps ran build 20, merge 22,
+# tombstone 17, purge 18 jobs. A reintroduced createDataFrame(list), meta
+# read without a schema, second tokenize pass or per-input aggregation
+# shows up here.
+INGEST_JOBS = {"build": 18, "build_b": 18, "merge": 16, "tombstone": 12,
+               "purge": 13}
+
+
+@pytest.mark.parametrize("step", sorted(INGEST_JOBS))
+def test_ingest_job_count(ingest_lifecycle, step):
+    """Each ingest entry runs a pinned number of Spark jobs, and every one
+    of them (the concurrent tail writes' included) runs in the caller's
+    job group."""
+    _dirs, jobs = ingest_lifecycle
+    in_group, started = jobs[step]
+    assert in_group == started, jobs[step]
+    assert in_group == INGEST_JOBS[step], jobs
+
+
+def _table_digest(path: str) -> str:
+    """sha256 of a table's rows in read order: its data files sorted by
+    path relative to the table (partition dir, then part number — one
+    write's files share one uuid), each file's rows in file order. Files
+    without rows are skipped (a write from several partitions leaves one
+    empty file where a one-partition write leaves none)."""
+    import glob
+    import hashlib
+    import os
+
+    import pyarrow.parquet as pq
+
+    h = hashlib.sha256()
+    files = sorted(
+        os.path.relpath(f, path)
+        for f in glob.glob(os.path.join(path, "**", "*.parquet"),
+                           recursive=True)
+    )
+    for rel in files:
+        tbl = pq.read_table(os.path.join(path, rel))
+        if tbl.num_rows:
+            h.update(os.path.dirname(rel).encode())
+            h.update(repr(tbl.to_pydict()).encode())
+    return h.hexdigest()[:16]
+
+
+# _table_digest of each output table of the fixture lifecycle, computed
+# with the code before the ingest cut: the cut changed how the tables are
+# produced, not one row or its place
+INGEST_DIGESTS = {
+    "a": {
+        "blocks": "1484a6329bfe6746",
+        "lexicon": "bfa617c9416d3192",
+        "doc_stats": "5c39efec5e8f61c5",
+        "texts": "49fb8241e5f8be48",
+        "meta": "9f53ad5c7d365997",
+    },
+    "merged": {
+        "blocks": "df66174904c72001",
+        "lexicon": "5766e140f429029c",
+        "doc_stats": "ada6d6ac1837bd0e",
+        "texts": "b7a2ce08e84e1df3",
+        "meta": "eaa7a0695a284617",
+        "deletes/ids": "dbf0b3ed9eb06f50",
+        "deletes/df_corr": "138551b202fe070e",
+        "deletes/meta": "35814e40f8ccfac3",
+    },
+    "purged": {
+        "blocks": "2610848310cc3ded",
+        "lexicon": "5c47ebbd7a21aa45",
+        "doc_stats": "2a5eaf20eedd3f39",
+        "texts": "46494a9b3e9dca0c",
+        "meta": "2b819b99c4b91d02",
+    },
+}
+
+
+@pytest.mark.parametrize("index", sorted(INGEST_DIGESTS))
+def test_ingest_outputs_unchanged(ingest_lifecycle, index):
+    """build, merge, tombstone (the merged index's deletes sidecar) and
+    purge write row- and order-identical tables."""
+    import os
+
+    dirs, _jobs = ingest_lifecycle
+    root = dirs[index]
+    got = {
+        rel: _table_digest(os.path.join(root, rel))
+        for rel in INGEST_DIGESTS[index]
+    }
+    assert got == INGEST_DIGESTS[index]
+
+
+@pytest.mark.parametrize("index", ["a", "merged", "purged"])
+def test_ingest_checkpoints_count_the_written_blocks(ingest_lifecycle, index):
+    """Checkpoint metrics come from the encoder's per-partition counts,
+    not from a re-read of the blocks: per bucket they equal the leaf
+    postings and leaf blocks of the written table, and a build's
+    bytes_compressed equals the bucket's files on disk."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    root = ingest_lifecycle[0][index]
+    leaf = ds.dataset(
+        os.path.join(root, "blocks"), partitioning="hive"
+    ).to_table(filter=pc.field("kind") == 0)
+    want = {}
+    for b, n in zip(leaf.column("bucket").to_pylist(),
+                    leaf.column("n").to_pylist()):
+        npost, nblocks = want.get(b, (0, 0))
+        want[b] = (npost + n, nblocks + 1)
+    cp = ds.dataset(os.path.join(root, "checkpoints")).to_table().to_pylist()
+    assert {r["bucket"]: (r["n_postings"], r["n_blocks"]) for r in cp} == want
+    if index == "a":
+        for r in cp:
+            bdir = os.path.join(root, "blocks", f"bucket={r['bucket']}")
+            assert r["bytes_compressed"] == sum(
+                os.path.getsize(os.path.join(bdir, f))
+                for f in os.listdir(bdir) if not f.startswith(("_", "."))
+            )

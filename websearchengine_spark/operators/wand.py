@@ -380,6 +380,14 @@ class _LRU(OrderedDict):
             while self.held > self.cap:
                 self.held -= size(self.popitem(last=False)[1])
 
+    def clear(self):
+        """Drop every entry and the held size with it (OrderedDict.clear
+        alone would keep ``held`` at its old total, and every later put
+        would evict at once)."""
+        with self._lock:
+            super().clear()
+            self.held = 0
+
 
 @dataclass
 class _Leaf:
@@ -1221,11 +1229,17 @@ class BlockIndexReader:
         the top-k's freqs are the shards'. Rank- and score-identical to
         the single-process TAAT by construction (pinned by the
         parametrized reader fixtures)."""
+        # a lexicon term without posting rows (no superblock) is dropped
+        # here, as serial TAAT, lead and match_count drop it: a shard
+        # sees only its doc range and cannot tell such a term from one
+        # whose postings lie in other shards
+        sbms = self._fetch_superblocks(present)
+        present = [t for t in present if t in sbms]
         pool = self._ensure_pool()
         n_shards = min(2 * self.parallel_workers, self.n_docs)
         bounds = np.linspace(0, self.n_docs, n_shards + 1).astype(np.int64)
         args = [
-            (list(present), k, conjunctive, int(lo), int(hi))
+            (present, k, conjunctive, int(lo), int(hi))
             for lo, hi in zip(bounds[:-1], bounds[1:])
             if hi > lo
         ]
@@ -1249,9 +1263,9 @@ class BlockIndexReader:
         the doc_lo statistics prune within single-term groups), each term's
         postings cut to the range, then _scored with no flat accumulator:
         the shard's top-k, its match count and the top-k's freqs, ready
-        for the exact merge. A conjunctive doc must carry every term the
-        lexicon holds, so a shard where one has no postings matches
-        nothing."""
+        for the exact merge. ``terms`` all have posting rows somewhere
+        (_search_taat_parallel drops the others), so a conjunctive shard
+        where one has no postings in its range matches nothing."""
         lex = self.lexicon_rows(terms)
         present = [t for t in terms if t in lex]
         runs = self._pruned_read(

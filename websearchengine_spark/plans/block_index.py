@@ -44,10 +44,12 @@ import os
 import time
 import zlib
 from collections.abc import Iterable
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -61,6 +63,7 @@ from websearchengine_spark.functions.tokenizer import tokenize_runs_batch
 from websearchengine_spark.plans.build import tf_component
 from websearchengine_spark.sources.catalog import (
     is_table_identifier,
+    local_table,
     read_table,
     write_table,
 )
@@ -100,6 +103,21 @@ BLOCK_READ_SCHEMA = T.StructType(
 
 # leaf blocks summarized per superblock row (~128 · 128 = 16384 postings)
 SUPERBLOCK_FACTOR = 128
+
+# The one-row meta table. A fresh build writes META_SCHEMA; merge and purge
+# add the staging-id watermark (MERGED_META_SCHEMA). load_meta reads every
+# meta with the merged schema, so a build's staged_hwm reads as None.
+META_SCHEMA = (
+    "build_id string, n_docs long, avg_dl double, block_size int, "
+    "n_buckets int, fingerprint string, block_format int"
+)
+MERGED_META_SCHEMA = META_SCHEMA + ", staged_hwm long"
+# per-bucket lineage + metrics rows (build, merge and purge append them)
+CHECKPOINT_SCHEMA = (
+    "build_id string, bucket int, status string, fingerprint string, "
+    "n_postings long, n_blocks long, bytes_compressed long, "
+    "wall_s double, postings_per_sec double, ts double"
+)
 
 
 def term_bucket(term: str, n_buckets: int) -> int:
@@ -264,11 +282,47 @@ def write_doc_sidecar(df: DataFrame, path: str) -> None:
         options={"parquet.block.size": SIDECAR_BLOCK_BYTES},
     )
 
+
+class _PartitionStats(AccumulatorParam):
+    """Accumulator of {encoder partition id: int64 array (3, n_buckets)}
+    — per bucket the leaf postings, leaf blocks and payload bytes that
+    partition encoded. Merging is dict.update, keyed by partition: a task
+    that runs twice (a retry, a recomputed stage) sets its partition's
+    entry again instead of adding to it, so the totals stay exact."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, a, b):
+        a.update(b)
+        return a
+
+
+def bucket_stats(spark: SparkSession):
+    """A fresh accumulator for :func:`_make_stream_encoder`'s ``stats``."""
+    return spark.sparkContext.accumulator({}, _PartitionStats())
+
+
+def bucket_totals(stats) -> dict[int, tuple[int, int, int]]:
+    """{bucket: (leaf postings, leaf blocks, payload bytes)} summed over
+    the encoder partitions of a ``bucket_stats`` accumulator, for the
+    buckets that got at least one leaf block."""
+    parts = list(stats.value.values())
+    if not parts:
+        return {}
+    tot = np.sum(parts, axis=0)
+    return {
+        int(b): (int(tot[0, b]), int(tot[1, b]), int(tot[2, b]))
+        for b in np.nonzero(tot[1])[0]
+    }
+
+
 def _make_stream_encoder(
     avg_dl: float,
     block_size: int,
     n_buckets: int,
     pid_offsets: dict[int, int] | None = None,
+    stats=None,
 ):
     """Partition-streaming run merger + block encoder (mapInArrow body).
 
@@ -302,9 +356,15 @@ def _make_stream_encoder(
     run's head value is its partition-local first docID. A global shift
     leaves the in-run gaps untouched, so absolutization is one vectorized
     add of ``pid_offsets[run_pos >> 32]`` to the run heads before the
-    segmented cumsum."""
+    segmented cumsum.
+
+    ``stats`` (a :func:`bucket_stats` accumulator) receives, per encoder
+    partition, each bucket's leaf postings, leaf blocks and payload bytes:
+    the writers' checkpoint metrics, with no second scan of the blocks
+    they just wrote."""
     import pyarrow as pa
     import pyarrow.compute as pc
+    from pyspark import TaskContext
 
     if pid_offsets:
         off_arr = np.zeros(max(pid_offsets) + 1, dtype=np.uint64)
@@ -328,7 +388,7 @@ def _make_stream_encoder(
         ]
     )
 
-    def encode_table(t: "pa.Table") -> "pa.RecordBatch":
+    def encode_table(t: "pa.Table", counts) -> "pa.RecordBatch":
         tdict = pc.dictionary_encode(t.column("term").combine_chunks())
         run_tcodes = tdict.indices.to_numpy()
         terms = tdict.dictionary  # one entry per distinct term, C++ strings
@@ -393,18 +453,31 @@ def _make_stream_encoder(
         block_tcodes = np.repeat(run_tcodes[g_run_starts], blocks_per_group)
         block_max = np.maximum.reduceat(tfc, starts)
         block_min = np.minimum.reduceat(tfc, starts)
+        block_buckets = dict_buckets[block_tcodes]
+        payloads = [
+            vb_blocked_arrow(gaps, starts, ends),
+            vb_blocked_arrow(tfs.astype(np.uint64), starts, ends),
+            vb_blocked_arrow(dls.astype(np.uint64), starts, ends),
+        ]
+        if counts is not None:
+            for row, w in enumerate((
+                ends - starts,
+                np.ones(len(starts), dtype=np.int64),
+                sum(pc.binary_length(a).to_numpy() for a in payloads),
+            )):
+                counts[row] += np.bincount(
+                    block_buckets, weights=w, minlength=n_buckets
+                ).astype(np.int64)
         leaf = pa.RecordBatch.from_arrays(
             [
                 pc.take(terms, pa.array(block_tcodes)).cast(pa.string()),
                 pa.array(ids[starts], type=pa.int64()),
                 pa.array(ids[ends - 1], type=pa.int64()),
                 pa.array((ends - starts).astype(np.int32), type=pa.int32()),
-                vb_blocked_arrow(gaps, starts, ends),
-                vb_blocked_arrow(tfs.astype(np.uint64), starts, ends),
-                vb_blocked_arrow(dls.astype(np.uint64), starts, ends),
+                *payloads,
                 pa.array(block_max, type=pa.float64()),
                 pa.array(block_min, type=pa.float64()),
-                pa.array(dict_buckets[block_tcodes], type=pa.int32()),
+                pa.array(block_buckets, type=pa.int32()),
                 pa.array(np.zeros(len(starts), dtype=np.int32), type=pa.int32()),
             ],
             schema=out_type,
@@ -445,6 +518,10 @@ def _make_stream_encoder(
         return leaf, supers
 
     def encode_stream(batches):
+        counts = (
+            np.zeros((3, n_buckets), dtype=np.int64) if stats is not None
+            else None
+        )
         carry: "pa.Table | None" = None
         for rb in batches:
             t = pa.Table.from_batches([rb])
@@ -463,9 +540,11 @@ def _make_stream_encoder(
             cut = int(chg[-1]) + 1 if len(chg) else 0
             head, carry = t.slice(0, cut), t.slice(cut)  # zero-copy slices
             if head.num_rows:
-                yield from encode_table(head)
+                yield from encode_table(head, counts)
         if carry is not None and carry.num_rows:
-            yield from encode_table(carry)
+            yield from encode_table(carry, counts)
+        if counts is not None:
+            stats.add({TaskContext.get().partitionId(): counts})
 
     return encode_stream
 
@@ -614,23 +693,22 @@ def build_block_index(
         offsets[pid] = acc
         acc += counts.get(pid, 0)
 
-    doc_stats = (
+    # doc rows with global ids: the (pid, offset) frame is broadcast-joined
+    # by doc_stats and the texts sidecar
+    docs = (
         flat.filter(F.col("term").isNull())
         .withColumn("pid", F.shiftright("run_pos", 32).cast("int"))
         .join(
-            F.broadcast(
-                spark.createDataFrame(
-                    [(p, o) for p, o in offsets.items()] or [(0, 0)],
-                    "pid int, _off long",
-                )
-            ),
+            F.broadcast(local_table(
+                spark, list(offsets.items()) or [(0, 0)], "pid int, _off long"
+            )),
             "pid",
         )
-        .select(
-            (F.col("doc_id") + F.col("_off")).alias("doc_id"),
-            "conv_id", "turn_idx", "role", "tool", "ts",
-            F.col("dl").alias("term_cnt"),
-        )
+        .withColumn("doc_id", F.col("doc_id") + F.col("_off"))
+    )
+    doc_stats = docs.select(
+        "doc_id", "conv_id", "turn_idx", "role", "tool", "ts",
+        F.col("dl").alias("term_cnt"),
     )
 
     # lexicon: df (postings per term == distinct docs per term) + cf
@@ -672,7 +750,7 @@ def build_block_index(
     done: set[int] = set()
     if resume:
         try:
-            cp = read_table(spark, paths.checkpoints)
+            cp = read_table(spark, paths.checkpoints, schema=CHECKPOINT_SCHEMA)
             done = {
                 r["bucket"]
                 for r in cp.filter(
@@ -686,6 +764,7 @@ def build_block_index(
         except Exception:
             done = set()
     fail_buckets = set(fail_buckets)
+    stats = bucket_stats(spark)
     build_buckets = [
         b for b in range(n_buckets) if b not in done and b not in fail_buckets
     ]
@@ -713,7 +792,9 @@ def build_block_index(
             to_build.repartition(n_parts, "term", "salt")
             .sortWithinPartitions("term", "salt", "run_pos")
             .mapInArrow(
-                _make_stream_encoder(avg_dl, block_size, n_buckets, offsets),
+                _make_stream_encoder(
+                    avg_dl, block_size, n_buckets, offsets, stats
+                ),
                 BLOCK_SCHEMA,
             )
         )
@@ -766,16 +847,11 @@ def build_block_index(
             spark.conf.set(batch_key, prev_batch)
             spark.conf.set(ovw_key, prev_ovw)
 
-    # ---- finalization: the bucket-stats job and the three complete-index
-    # table writes are independent of each other, so the writes run on a
-    # thread pool while the main thread does stats + checkpoints — Spark
-    # schedules concurrently submitted jobs across the same executor slots,
-    # so the serial driver tail (job setup + py4j gaps) overlaps instead of
-    # adding up. At 4N cores that tail is a visibly larger fraction of the
-    # (shorter) wall than at N — pure Amdahl loss with no compute to show
-    # for it.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # ---- finalization: the checkpoints and the complete-index table
+    # writes are independent of each other, so the writes run beside the
+    # checkpoint write (``beside``). At 4N cores that tail is a visibly
+    # larger fraction of the (shorter) wall than at N — pure Amdahl loss
+    # with no compute to show for it.
     complete = len(done) + len(build_buckets) == n_buckets
 
     def _write_lexicon():
@@ -797,7 +873,8 @@ def build_block_index(
 
     def _write_meta():
         write_table(
-            spark.createDataFrame(
+            local_table(
+                spark,
                 # block_format 3 = format 2 (block-head gap measured from
                 # doc_lo - 1; format 1 stored the absolute id) + superblock
                 # rows (kind=1) in the blocks table; readers refuse older
@@ -805,8 +882,7 @@ def build_block_index(
                 # missing the two-level metadata
                 [(build_id, n_docs, avg_dl, block_size, n_buckets,
                   fingerprint, 3)],
-                "build_id string, n_docs long, avg_dl double, block_size int, "
-                "n_buckets int, fingerprint string, block_format int",
+                META_SCHEMA,
             ),
             paths.meta,
             mode="overwrite",
@@ -816,113 +892,62 @@ def build_block_index(
         # flat's partitions are contiguous docID ranges with doc-ascending
         # rows, so writing directly (no shuffle, no sort) yields files of
         # contiguous doc_id ranges, cut into bounded row groups
-        write_doc_sidecar(
-            flat.filter(F.col("term").isNull())
-            .withColumn("pid", F.shiftright("run_pos", 32).cast("int"))
-            .join(
-                F.broadcast(
-                    spark.createDataFrame(
-                        [(p, o) for p, o in offsets.items()] or [(0, 0)],
-                        "pid int, _off long",
-                    )
-                ),
-                "pid",
-            )
-            .select((F.col("doc_id") + F.col("_off")).alias("doc_id"), "text"),
-            paths.texts,
-        )
+        write_doc_sidecar(docs.select("doc_id", "text"), paths.texts)
 
     writers = [_write_lexicon, _write_doc_stats, _write_meta] + (
         [_write_texts] if store_texts else []
     )
-    pool = ThreadPoolExecutor(max_workers=len(writers))
-    futures = [pool.submit(f) for f in writers] if complete else []
-
-    # ---- per-partition (bucket) checkpoints with lineage + metrics
-    wall_s = time.time() - t0
-    built_blocks = read_table(
-        spark, paths.blocks, schema=BLOCK_READ_SCHEMA
-    ).filter(
-        (F.col("bucket").isin(build_buckets) if build_buckets else F.lit(False))
-        & (F.col("kind") == 0)  # leaf rows only: superblock summaries would
-        #                         double-count postings in the metrics
-    )
-    # the stats scan touches ONLY (bucket, n) — parquet column pruning keeps
-    # the posting payloads (the bulk of the table) unread. At 100 TB a
-    # checkpoint-accounting pass that re-reads the index it just wrote would
-    # cost a second full-index scan. bytes_compressed is bytes ON DISK
-    # (parquet-encoded payload + footers) from a metadata-only file listing
-    # for filesystem layouts; Iceberg identifiers fall back to a payload
-    # length sum (no filesystem to stat).
-    per_bucket = {
-        r["bucket"]: r
-        for r in built_blocks.groupBy("bucket")
-        .agg(
-            F.sum("n").alias("n_postings"),
-            F.count(F.lit(1)).alias("n_blocks"),
-        )
-        .collect()
-    }
-    if is_table_identifier(out_dir):
-        bucket_bytes = {
-            r["bucket"]: int(r["b"])
-            for r in built_blocks.groupBy("bucket")
-            .agg(
-                F.sum(
-                    F.length("ids_vb") + F.length("tfs_vb") + F.length("dls_vb")
-                ).alias("b")
-            )
-            .collect()
-        }
-    else:
-        bucket_bytes = {}
+    with beside(spark, writers if complete else []):
+        # ---- per-partition (bucket) checkpoints with lineage + metrics
+        wall_s = time.time() - t0
+        # leaf postings, blocks and payload bytes per bucket, counted by
+        # the encoder as it wrote them (bucket_stats): no re-read of the
+        # index just written. bytes_compressed is bytes ON DISK
+        # (parquet-encoded payload + footers) from a metadata-only file
+        # listing for filesystem layouts; Iceberg identifiers fall back to
+        # the payload bytes (no filesystem to stat).
+        per_bucket = bucket_totals(stats)
+        if is_table_identifier(out_dir):
+            bucket_bytes = {b: v[2] for b, v in per_bucket.items()}
+        else:
+            bucket_bytes = {}
+            for bkt in build_buckets:
+                total = 0
+                bdir = os.path.join(paths.blocks, f"bucket={bkt}")
+                if os.path.isdir(bdir):
+                    for dirpath, _dirs, files in os.walk(bdir):
+                        total += sum(
+                            os.path.getsize(os.path.join(dirpath, fn))
+                            for fn in files
+                            if not fn.startswith(("_", "."))
+                        )
+                bucket_bytes[bkt] = total
+        now = time.time()
+        cp_rows = []
         for bkt in build_buckets:
-            total = 0
-            bdir = os.path.join(paths.blocks, f"bucket={bkt}")
-            if os.path.isdir(bdir):
-                for dirpath, _dirs, files in os.walk(bdir):
-                    total += sum(
-                        os.path.getsize(os.path.join(dirpath, fn))
-                        for fn in files
-                        if not fn.startswith(("_", "."))
-                    )
-            bucket_bytes[bkt] = total
-    now = time.time()
-    cp_rows = []
-    for bkt in build_buckets:
-        r = per_bucket.get(bkt)
-        npost = int(r["n_postings"]) if r else 0
-        cp_rows.append(
-            (
-                build_id,
-                int(bkt),
-                "done",
-                fingerprint,
-                npost,
-                int(r["n_blocks"]) if r else 0,
-                int(bucket_bytes.get(bkt, 0)),
-                float(wall_s),
-                float(npost / wall_s) if wall_s > 0 else 0.0,
-                float(now),
+            npost, nblocks, _ = per_bucket.get(bkt, (0, 0, 0))
+            cp_rows.append(
+                (
+                    build_id,
+                    int(bkt),
+                    "done",
+                    fingerprint,
+                    npost,
+                    nblocks,
+                    int(bucket_bytes.get(bkt, 0)),
+                    float(wall_s),
+                    float(npost / wall_s) if wall_s > 0 else 0.0,
+                    float(now),
+                )
             )
-        )
-    if cp_rows:
-        write_table(
-            spark.createDataFrame(
-                cp_rows,
-                "build_id string, bucket int, status string, fingerprint string, "
-                "n_postings long, n_blocks long, bytes_compressed long, "
-                "wall_s double, postings_per_sec double, ts double",
-            ),
-            paths.checkpoints,
-            mode="append",
-        )
+        if cp_rows:
+            write_table(
+                local_table(spark, cp_rows, CHECKPOINT_SCHEMA),
+                paths.checkpoints,
+                mode="append",
+            )
 
-    for fut in futures:
-        fut.result()  # surface any write failure; joins the overlapped tail
-    pool.shutdown(wait=True)
-
-    n_postings = sum(int(r["n_postings"]) for r in per_bucket.values())
+    n_postings = sum(v[0] for v in per_bucket.values())
     flat.unpersist()
     term_agg.unpersist()
     return BuildMetrics(
@@ -937,6 +962,38 @@ def build_block_index(
     )
 
 
+@contextmanager
+def beside(spark: SparkSession, tails):
+    """Run ``tails`` (independent Spark writes) on a thread pool while the
+    ``with`` body runs on the calling thread; leave once every tail
+    finished, re-raising a tail's failure. Spark schedules concurrently
+    submitted jobs across the same executor slots, so the serial driver
+    gaps of small writes (job setup, py4j round trips) overlap instead of
+    adding up. Each tail inherits the caller's Spark local properties
+    (job group and description, pyspark's ``inheritable_thread_target``),
+    so its jobs are counted and labelled as the caller's. Session confs
+    are global, not per thread: a conf a tail needs is set around the
+    whole ``with``."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    pool = ThreadPoolExecutor(max_workers=max(len(tails), 1))
+    try:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(f)) for f in tails
+        ]
+        yield
+        for fut in futures:
+            fut.result()
+    finally:
+        pool.shutdown(wait=True)
+
+
 def load_meta(spark: SparkSession, out_dir: str) -> dict:
-    row = read_table(spark, BlockIndexPaths(out_dir).meta).collect()[0]
-    return row.asDict()
+    """The index's meta row as a dict, read with MERGED_META_SCHEMA: one
+    Spark job, where a schema-inferring read costs a second (footer
+    inference) one. ``staged_hwm`` is None for a fresh build."""
+    return read_table(
+        spark, BlockIndexPaths(out_dir).meta, schema=MERGED_META_SCHEMA
+    ).collect()[0].asDict()

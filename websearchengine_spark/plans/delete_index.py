@@ -60,7 +60,7 @@ import shutil
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from websearchengine_spark.plans.block_index import (
@@ -69,8 +69,10 @@ from websearchengine_spark.plans.block_index import (
     DEL_META_SCHEMA,
     BlockIndexPaths,
     BuildMetrics,
+    beside,
     delete_paths,
     has_tombstones,
+    load_meta,
 )
 from websearchengine_spark.plans.build import tokenize_postings
 from websearchengine_spark.plans.merge_index import (
@@ -80,6 +82,7 @@ from websearchengine_spark.plans.merge_index import (
 )
 from websearchengine_spark.sources.catalog import (
     is_table_identifier,
+    local_table,
     read_table,
     write_table,
 )
@@ -147,28 +150,26 @@ class DeleteMetrics:
 
 
 def _selector(spark: SparkSession, conv_ids, turns) -> tuple[DataFrame, list[str]]:
-    """→ (broadcastable selector frame, join cols). Exactly one of
-    ``conv_ids`` (whole conversations) / ``turns`` ((conv_id, turn_idx)
-    pairs) must be given."""
+    """→ (broadcastable selector frame of distinct keys, join cols).
+    Exactly one of ``conv_ids`` (whole conversations) / ``turns``
+    ((conv_id, turn_idx) pairs) must be given. A DataFrame selector is
+    deduplicated by Spark; a Python collection on the driver, then handed
+    over as an Arrow-backed local table (no Python task, no dedup
+    shuffle)."""
     if (conv_ids is None) == (turns is None):
         raise ValueError("pass exactly one of conv_ids= or turns=")
     if conv_ids is not None:
-        df = (
-            conv_ids
-            if isinstance(conv_ids, DataFrame)
-            else spark.createDataFrame(
-                [(c,) for c in conv_ids], "conv_id string"
-            )
-        )
-        return df.select("conv_id").distinct(), ["conv_id"]
-    df = (
-        turns
-        if isinstance(turns, DataFrame)
-        else spark.createDataFrame(
-            [(c, int(t)) for c, t in turns], "conv_id string, turn_idx int"
-        )
+        cols, ddl, given = ["conv_id"], "conv_id string", conv_ids
+    else:
+        cols = ["conv_id", "turn_idx"]
+        ddl, given = "conv_id string, turn_idx int", turns
+    if isinstance(given, DataFrame):
+        return given.select(*cols).distinct(), cols
+    keys = (
+        {(c,) for c in given} if conv_ids is not None
+        else {(c, int(t)) for c, t in given}
     )
-    return df.select("conv_id", "turn_idx").distinct(), ["conv_id", "turn_idx"]
+    return local_table(spark, sorted(keys), ddl), cols
 
 
 def tombstone_delete(
@@ -200,35 +201,50 @@ def tombstone_delete(
     ids_p, dfc_p, meta_p = delete_paths(paths)
     doc_stats = read_table(spark, paths.doc_stats, schema=DOC_STATS_SCHEMA)
     sel, join_cols = _selector(spark, conv_ids, turns)
-    targeted = doc_stats.join(F.broadcast(sel), join_cols, "left_semi").select(
+    # every doc_stats row, flagged when selected (sel keys are distinct,
+    # so the left join keeps each row once)
+    flagged = doc_stats.join(
+        F.broadcast(sel.withColumn("_sel", F.lit(1))), join_cols, "left"
+    )
+    hit = F.col("_sel").isNotNull()
+    targeted = flagged.filter(hit).select(
         "doc_id", "conv_id", "turn_idx", "term_cnt"
     )
 
     existing = os.path.isdir(meta_p)
     if existing:
+        import pyarrow.dataset as ds
+
         old_ids = read_table(spark, ids_p, schema=DEL_IDS_SCHEMA)
         old_dfc = read_table(spark, dfc_p, schema=DEL_DF_SCHEMA)
-        om = read_table(spark, meta_p, schema=DEL_META_SCHEMA).collect()[0]
+        om = ds.dataset(meta_p).to_table().to_pylist()[0]
         old_n, old_dl, total_dl = (
             int(om["n_deleted"]), int(om["deleted_dl"]), int(om["total_dl"])
         )
+        # re-deleting is a no-op
         targeted = targeted.join(old_ids, "doc_id", "left_anti")
     else:
         old_ids = old_dfc = None
         old_n = old_dl = 0
-        # the one full-table agg, paid once per index (an exact integer —
-        # invariant across deletes, carried forward in the sidecar meta)
-        total_dl = int(
-            doc_stats.agg(F.sum("term_cnt")).collect()[0][0] or 0
-        )
     targeted = targeted.persist()
     try:
-        agg = targeted.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("term_cnt").alias("dl")
-        ).collect()[0]
+        if existing:
+            agg = targeted.agg(
+                F.count(F.lit(1)).alias("n"), F.sum("term_cnt").alias("dl")
+            ).collect()[0]
+        else:
+            # ONE aggregation over the doc_stats scan the selection needs
+            # anyway: this call's count and dl, plus the index's total dl —
+            # an exact integer, invariant across deletes, carried forward
+            # in the sidecar meta from here on
+            agg = flagged.agg(
+                F.count(F.when(hit, 1)).alias("n"),
+                F.sum(F.when(hit, F.col("term_cnt"))).alias("dl"),
+                F.sum("term_cnt").alias("total_dl"),
+            ).collect()[0]
+            total_dl = int(agg["total_dl"] or 0)
         n_new, dl_new = int(agg["n"]), int(agg["dl"] or 0)
-        meta_all = read_table(spark, paths.meta).collect()[0]
-        n_docs = int(meta_all["n_docs"])
+        n_docs = int(load_meta(spark, index_dir)["n_docs"])
         if n_new == 0:
             return DeleteMetrics(
                 0, old_n, n_docs - old_n, old_dl, time.time() - t0
@@ -236,15 +252,15 @@ def tombstone_delete(
 
         # deleted docs' text → exact per-term corrections (ddf = docs lost,
         # dcf = collection frequency lost), via the SAME tokenizer kernel as
-        # the build (functions/tokenizer.py — create_index.cpp:96-115)
-        flat = _deleted_postings(spark, paths, targeted, corpus)
-        n_texts = flat.filter(F.col("term").isNull()).count()
-        if n_texts != n_new:
-            raise ValueError(
-                f"text rows for {n_texts} of {n_new} deleted docs — the "
-                "df corrections would be inexact; supply corpus= covering "
-                "every deleted (conv_id, turn_idx)"
-            )
+        # the build (functions/tokenizer.py — create_index.cpp:96-115). The
+        # texts are tokenized ONCE, by the df_corr write; the doc rows it
+        # sees are counted on the way (an Observation, no job of its own)
+        # and checked before the sidecar swap
+        texts_seen = Observation("tombstone_texts")
+        flat = _deleted_postings(spark, paths, targeted, corpus).observe(
+            texts_seen,
+            F.count(F.when(F.col("term").isNull(), 1)).alias("n_texts"),
+        )
         new_dfc = (
             flat.filter(F.col("term").isNotNull())
             .groupBy("term")
@@ -270,20 +286,32 @@ def tombstone_delete(
         shutil.rmtree(tmp, ignore_errors=True)
         tmp_ids, tmp_dfc, tmp_meta = delete_paths(paths, base=tmp)
         try:
-            write_table(
-                all_ids.coalesce(1).sortWithinPartitions("doc_id"),
-                tmp_ids,
-                mode="overwrite",
-            )
-            write_table(new_dfc, tmp_dfc, mode="overwrite")
-            write_table(
-                spark.createDataFrame(
-                    [(old_n + n_new, old_dl + dl_new, total_dl)],
-                    DEL_META_SCHEMA,
+            # the three sidecar tables are independent writes: ids and
+            # meta run beside the df_corr write (block_index.beside)
+            with beside(spark, [
+                lambda: write_table(
+                    all_ids.coalesce(1).sortWithinPartitions("doc_id"),
+                    tmp_ids,
+                    mode="overwrite",
                 ),
-                tmp_meta,
-                mode="overwrite",
-            )
+                lambda: write_table(
+                    local_table(
+                        spark,
+                        [(old_n + n_new, old_dl + dl_new, total_dl)],
+                        DEL_META_SCHEMA,
+                    ),
+                    tmp_meta,
+                    mode="overwrite",
+                ),
+            ]):
+                write_table(new_dfc, tmp_dfc, mode="overwrite")
+            n_texts = int(texts_seen.get["n_texts"])
+            if n_texts != n_new:
+                raise ValueError(
+                    f"text rows for {n_texts} of {n_new} deleted docs — the "
+                    "df corrections would be inexact; supply corpus= "
+                    "covering every deleted (conv_id, turn_idx)"
+                )
             prev = paths.deletes + ".prev"
             if os.path.isdir(paths.deletes):
                 os.rename(paths.deletes, prev)

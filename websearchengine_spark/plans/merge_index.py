@@ -69,21 +69,26 @@ from websearchengine_spark.functions.codec import (
 from websearchengine_spark.plans.block_index import (
     BLOCK_READ_SCHEMA,
     BLOCK_SCHEMA,
+    CHECKPOINT_SCHEMA,
     DEL_DF_SCHEMA,
-    DEL_IDS_SCHEMA,
-    DEL_META_SCHEMA,
+    MERGED_META_SCHEMA,
     BlockIndexPaths,
     LEXICON_BLOCK_BYTES,
     BuildMetrics,
     _clear_stale_deletes,
     _make_stream_encoder,
+    beside,
+    bucket_stats,
+    bucket_totals,
     delete_paths,
     has_tombstones,
     live_deletes_dir,
+    load_meta,
     write_doc_sidecar,
 )
 from websearchengine_spark.sources.catalog import (
     is_table_identifier,
+    local_table,
     read_table,
     write_table,
 )
@@ -139,19 +144,21 @@ class _DelState(NamedTuple):
 
 def _load_del_state(spark: SparkSession, root: str) -> _DelState | None:
     """The tombstone sidecar of the index at ``root`` (None without one):
-    the deleted ids collected, sorted and broadcast, plus the sidecar's
-    exact df/cf/dl corrections."""
+    the deleted ids sorted and broadcast, plus the sidecar's exact
+    df/cf/dl corrections. The sidecar is filesystem-only and its ids and
+    meta are collected whole anyway, so they are read with pyarrow on the
+    driver, as the serving reader reads them: no Spark job."""
     if not has_tombstones(root):
         return None
+    import pyarrow.dataset as ds
+
     ids_p, dfc_p, meta_p = delete_paths(
         BlockIndexPaths(root), base=live_deletes_dir(root)
     )
-    dm = read_table(spark, meta_p, schema=DEL_META_SCHEMA).collect()[0]
+    dm = ds.dataset(meta_p).to_table().to_pylist()[0]
     ids = np.sort(
-        read_table(spark, ids_p, schema=DEL_IDS_SCHEMA)
-        .toPandas()["doc_id"]
-        .to_numpy()
-        .astype(np.int64)
+        ds.dataset(ids_p).to_table(columns=["doc_id"]).column("doc_id")
+        .to_numpy().astype(np.int64)
     )
     return _DelState(
         spark.sparkContext.broadcast(ids),
@@ -299,9 +306,10 @@ def _salt_encode_write_blocks(
     block_size: int,
     n_buckets: int,
     out_p: BlockIndexPaths,
-) -> None:
+):
     """Hot-term salting → (term, salt) exchange → streaming block encoder
-    → partitioned blocks write. Its input is the compressed runs of
+    → partitioned blocks write → the encoder's per-bucket counts
+    (block_index.bucket_totals). Its input is the compressed runs of
     :func:`_blocks_to_runs`: ABSOLUTE head gaps in per-term docID order.
 
     Salt arithmetic: docID width of one salt range is ceil(n_docs/n_salt)
@@ -324,11 +332,12 @@ def _salt_encode_write_blocks(
     n_exch = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
+    stats = bucket_stats(spark)
     blocks = (
         salted.repartition(n_exch, "term", "salt")
         .sortWithinPartitions("term", "salt", "run_pos")
         .mapInArrow(
-            _make_stream_encoder(avg_dl, block_size, n_buckets, None),
+            _make_stream_encoder(avg_dl, block_size, n_buckets, None, stats),
             BLOCK_SCHEMA,
         )
     )
@@ -352,6 +361,7 @@ def _salt_encode_write_blocks(
         )
     finally:
         spark.conf.set(batch_key, prev_batch)
+    return bucket_totals(stats)
 
 
 @contextmanager
@@ -396,29 +406,28 @@ def _write_meta(
     avg_dl: float,
     block_size: int,
     n_buckets: int,
+    fingerprint: str,
     staged_hwm: int,
-) -> str:
-    """Meta row (block_format 3 + the staging-id watermark) → fingerprint."""
-    fingerprint = f"{n_docs}:{avg_dl:.6f}"
+) -> None:
+    """Meta row (block_format 3 + the staging-id watermark)."""
     write_table(
-        spark.createDataFrame(
+        local_table(
+            spark,
             [(
                 build_id, n_docs, avg_dl, block_size, n_buckets,
                 fingerprint, 3, staged_hwm,
             )],
-            "build_id string, n_docs long, avg_dl double, block_size int, "
-            "n_buckets int, fingerprint string, block_format int, "
-            "staged_hwm long",
+            MERGED_META_SCHEMA,
         ),
         out_p.meta,
         mode="overwrite",
     )
-    return fingerprint
 
 
 def _finalize_metrics(
     spark: SparkSession,
     out_p: BlockIndexPaths,
+    per_bucket: dict,
     build_id: str,
     fingerprint: str,
     n_docs: int,
@@ -426,39 +435,26 @@ def _finalize_metrics(
     t0: float,
 ) -> BuildMetrics:
     """Per-bucket lineage + metrics (same accounting shape as a fresh
-    build's checkpoints): column-pruned stats scan, no payload read."""
+    build's checkpoints) from the encoder's counts: no re-read of the
+    blocks just written."""
     wall_s = time.time() - t0
-    per_bucket = {
-        r["bucket"]: r
-        for r in read_table(spark, out_p.blocks, schema=BLOCK_READ_SCHEMA)
-        .filter(F.col("kind") == 0)
-        .groupBy("bucket")
-        .agg(F.sum("n").alias("n_postings"), F.count(F.lit(1)).alias("n_blocks"))
-        .collect()
-    }
     now = time.time()
     cp_rows = [
         (
-            build_id, int(bkt), "done", fingerprint,
-            int(r["n_postings"]), int(r["n_blocks"]), 0,
+            build_id, bkt, "done", fingerprint, npost, nblocks, 0,
             float(wall_s),
-            float(int(r["n_postings"]) / wall_s) if wall_s > 0 else 0.0,
+            float(npost / wall_s) if wall_s > 0 else 0.0,
             float(now),
         )
-        for bkt, r in per_bucket.items()
+        for bkt, (npost, nblocks, _) in sorted(per_bucket.items())
     ]
     if cp_rows:
         write_table(
-            spark.createDataFrame(
-                cp_rows,
-                "build_id string, bucket int, status string, fingerprint string, "
-                "n_postings long, n_blocks long, bytes_compressed long, "
-                "wall_s double, postings_per_sec double, ts double",
-            ),
+            local_table(spark, cp_rows, CHECKPOINT_SCHEMA),
             out_p.checkpoints,
             mode="append",
         )
-    n_postings = sum(int(r["n_postings"]) for r in per_bucket.values())
+    n_postings = sum(v[0] for v in per_bucket.values())
     return BuildMetrics(
         build_id=build_id,
         n_docs=n_docs,
@@ -584,9 +580,9 @@ def merge_many_block_indexes(
                 )
     in_ps = [BlockIndexPaths(d) for d in input_dirs]
     out_p = BlockIndexPaths(out_dir)
-    metas = [read_table(spark, p.meta).collect()[0].asDict() for p in in_ps]
+    metas = [load_meta(spark, d) for d in input_dirs]
     for m, d in zip(metas, input_dirs):
-        if int(m.get("block_format", 1)) != 3:
+        if int(m["block_format"] or 1) != 3:
             raise ValueError(f"index at {d} is block_format "
                              f"{m.get('block_format')}; merge requires 3")
     block_sizes = {int(m["block_size"]) for m in metas}
@@ -646,18 +642,21 @@ def merge_many_block_indexes(
     # docID axis (texts, when kept, are written again below)
     _clear_stale_deletes(out_p)
 
-    # exact avg_dl: integer dl sums from doc_stats — the same number a
-    # from-scratch build computes (total_dl / n_docs in one float division)
+    # exact avg_dl: integer dl sums — the same number a from-scratch build
+    # computes (total_dl / n_docs in one float division). A tombstoned
+    # input's live dl comes from its sidecar ints; the others' doc_stats
+    # are summed in ONE aggregation over their union
     in_ds = [
         read_table(spark, p.doc_stats, schema=DOC_STATS_SCHEMA) for p in in_ps
     ]
-    total_dl = 0
-    for ds_in, st in zip(in_ds, del_state):
-        if st is not None:
-            # exact live dl from the sidecar ints
-            total_dl += st.total_dl - st.deleted_dl
-        else:
-            total_dl += int(ds_in.agg(F.sum("term_cnt")).collect()[0][0] or 0)
+    total_dl = sum(st.total_dl - st.deleted_dl for st in del_state if st)
+    plain = [ds_in.select("term_cnt")
+             for ds_in, st in zip(in_ds, del_state) if st is None]
+    if plain:
+        union = plain[0]
+        for part in plain[1:]:
+            union = union.unionByName(part)
+        total_dl += int(union.agg(F.sum("term_cnt")).collect()[0][0] or 0)
     avg_dl = (total_dl / n_docs) if n_docs else 0.0
 
     # merged lexicon (disjoint corpora ⇒ dfs/cfs add; tombstoned inputs
@@ -700,14 +699,12 @@ def merge_many_block_indexes(
     runs = _input_runs(in_ps[0], del_state[0], 0)
     for p, st, shift in zip(in_ps[1:], del_state[1:], shifts[1:]):
         runs = runs.unionByName(_input_runs(p, st, shift))
-    _salt_encode_write_blocks(
+    per_bucket = _salt_encode_write_blocks(
         spark, runs, lexicon, n_docs, hot_df_threshold, target_group_size,
         num_partitions, avg_dl, block_size, n_buckets, out_p,
     )
 
     # sidecar tables (same layouts as build_block_index)
-    _write_lexicon(lexicon, out_p, n_buckets)
-
     def _input_ds(ds_in, st, shift, schema):
         if st is not None:  # drop tombstoned rows, remap to survivor ranks
             ds_in = _remap_doc_ids(ds_in, st.ids_bc, schema)
@@ -720,8 +717,6 @@ def merge_many_block_indexes(
         ds_union = ds_union.unionByName(
             _input_ds(ds, st, shift, DOC_STATS_SCHEMA)
         )
-    with _one_file_per_task(spark):
-        write_doc_sidecar(ds_union, out_p.doc_stats)
     # staged_hwm: the cumulative STAGING-id-space watermark this index has
     # absorbed — Σ of each input's watermark (its own staged_hwm, else its
     # n_docs: for an index that never purged, the docID axis IS the
@@ -730,14 +725,18 @@ def merge_many_block_indexes(
     # otherwise the first post-purge compaction would silently re-absorb
     # (duplicate) every batch whose id_lo falls in the purged gap.
     staged_hwm = sum(
-        int(m.get("staged_hwm") or m["n_docs"]) for m in metas
+        int(m["staged_hwm"] or m["n_docs"]) for m in metas
     )
-    fingerprint = _write_meta(
-        spark, out_p, build_id, n_docs, avg_dl, block_size, n_buckets,
-        staged_hwm,
-    )
-    # texts sidecar: policy (emit_texts) was validated eagerly above; the
-    # write happens here so the sidecar lands after the data tables. Files
+    fingerprint = f"{n_docs}:{avg_dl:.6f}"
+    tails = [
+        lambda: _write_lexicon(lexicon, out_p, n_buckets),
+        lambda: write_doc_sidecar(ds_union, out_p.doc_stats),
+        lambda: _write_meta(
+            spark, out_p, build_id, n_docs, avg_dl, block_size, n_buckets,
+            fingerprint, staged_hwm,
+        ),
+    ]
+    # texts sidecar: policy (emit_texts) was validated eagerly above. Files
     # stay contiguous docID ranges because each task scans one input file
     # and each index's shifted ids all sort after the previous index's.
     # Even when every input is empty the (fileless) sidecar dir is written:
@@ -758,12 +757,17 @@ def merge_many_block_indexes(
                 TEXTS_SCHEMA,
             )
             texts = part if texts is None else texts.unionByName(part)
-        with _one_file_per_task(spark):
-            write_doc_sidecar(texts, out_p.texts)
+        tails.append(lambda: write_doc_sidecar(texts, out_p.texts))
 
-    metrics = _finalize_metrics(
-        spark, out_p, build_id, fingerprint, n_docs, avg_dl, t0
-    )
+    # the four table writes are independent: they run beside the
+    # checkpoint write (block_index.beside), all inside ONE
+    # _one_file_per_task scope — the conf is session-global, so concurrent
+    # writes must not toggle it under each other
+    with _one_file_per_task(spark), beside(spark, tails):
+        metrics = _finalize_metrics(
+            spark, out_p, per_bucket, build_id, fingerprint, n_docs, avg_dl,
+            t0,
+        )
     lexicon.unpersist()
     for st in del_state:
         if st is not None:

@@ -5,7 +5,7 @@ snapshot-id lineage, dynamic partition overwrite). This container has no
 Iceberg runtime jar, so the engine runs against Parquet paths through the
 same seam; on a cluster with `spark.sql.catalog.<name>` configured, pass
 ``table="catalog.db.transcripts"`` and everything else is unchanged —
-every reader/writer in the engine goes through these two functions.
+every reader/writer in the engine goes through these functions.
 
 Iceberg specifics already honored by the build even on Parquet:
 - idempotent per-partition commits (`partitionOverwriteMode=dynamic` ≈
@@ -17,6 +17,7 @@ Iceberg specifics already honored by the build even on Parquet:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def is_table_identifier(path_or_table: str) -> bool:
@@ -59,3 +60,24 @@ def write_table(df: DataFrame, path_or_table: str, mode: str = "overwrite",
         writer.format("iceberg").saveAsTable(path_or_table)
     else:
         writer.parquet(path_or_table)
+
+
+def local_table(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``schema`` order; ``schema`` a DDL
+    string or StructType) as a DataFrame, built through Arrow. Spark turns
+    the Arrow batches into a LocalRelation, so writing, joining or
+    broadcasting the frame runs no Python task. ``createDataFrame(list)``
+    instead parallelizes a Python-row RDD, and every job over it starts
+    Python workers (~0.2-0.4 s each on a 4-core host, against ~0.15 s for
+    the whole Arrow-backed write). The one way an index writer hands Spark
+    a small table: meta rows, checkpoints, docID offsets, selectors."""
+    import pyarrow as pa
+
+    struct = schema if isinstance(schema, T.StructType) else (
+        T._parse_datatype_string(schema)
+    )
+    cols = list(zip(*rows)) or [()] * len(struct.fields)
+    tbl = pa.table(
+        [pa.array(list(c)) for c in cols], names=struct.fieldNames()
+    )
+    return spark.createDataFrame(tbl, schema=struct)

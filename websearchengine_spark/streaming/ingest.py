@@ -20,6 +20,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from websearchengine_spark.sources.catalog import local_table
+
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
     "tool string, ts timestamp"
@@ -94,7 +96,8 @@ def make_batch_writer(staging_dir: str):
         )
         release()  # per-micro-batch cache — must not accumulate in a stream
         (
-            spark.createDataFrame(
+            local_table(
+                spark,
                 [(int(n), int(id_lo), int(id_lo + n - 1))],
                 "n_turns long, id_lo long, id_hi long",
             )
@@ -197,17 +200,14 @@ def compact_incremental(
     import shutil
     import tempfile
 
-    from websearchengine_spark.plans.block_index import build_block_index
-    from websearchengine_spark.plans.merge_index import merge_block_indexes
-    from websearchengine_spark.sources.catalog import read_table
-
-    from websearchengine_spark.plans.block_index import BlockIndexPaths
-
-    base_meta = (
-        read_table(spark, BlockIndexPaths(base_index_dir).meta)
-        .collect()[0]
-        .asDict()
+    from websearchengine_spark.plans.block_index import (
+        BlockIndexPaths,
+        build_block_index,
+        load_meta,
     )
+    from websearchengine_spark.plans.merge_index import merge_block_indexes
+
+    base_meta = load_meta(spark, base_index_dir)
     # "absorbed" is judged against the STAGING-id-space watermark, not
     # n_docs: after a purge (tombstoned docs dropped at a compaction) the
     # index's n_docs is smaller than the id space it has absorbed, and
