@@ -802,3 +802,55 @@ def test_compact_incremental_drop_texts(spark, tmp_path):
     )
     assert m is not None and m.n_docs == 24
     assert not os.path.isdir(str(tmp_path / "merged" / "texts"))
+
+
+def test_reused_root_is_replaced_whole(spark, tmp_path):
+    """A rebuild into a root that held a larger-bucketed index, and a merge
+    into a reused ``out_dir``, replace the old blocks and lexicon whole: no
+    ``bucket=K`` dir of the old index survives for the next merge to read,
+    and merging the rebuilt root answers exactly as merging a fresh build."""
+    import os
+
+    from websearchengine_spark.operators.wand import BlockIndexReader
+
+    new_t, delta_t = _tdf(spark, "a", 6), _tdf(spark, "b", 3)
+    kw = dict(resume=False, num_partitions=4)
+    reused, fresh = str(tmp_path / "reused"), str(tmp_path / "fresh")
+    build_block_index(_tdf(spark, "a", 12), reused, n_buckets=8, **kw)
+    build_block_index(new_t, reused, n_buckets=4, **kw)
+    build_block_index(new_t, fresh, n_buckets=4, **kw)
+    build_block_index(delta_t, str(tmp_path / "delta"), n_buckets=4, **kw)
+    # the second out_dir held an 8-bucket index before the merge
+    reused_out = str(tmp_path / "reused_out")
+    build_block_index(_tdf(spark, "c", 12), reused_out, n_buckets=8, **kw)
+    outs = {}
+    for name, base, out in (
+        ("fresh", fresh, str(tmp_path / "m_fresh")),
+        ("rebuilt", reused, str(tmp_path / "m_rebuilt")),
+        ("reused_out", fresh, reused_out),
+    ):
+        merge_block_indexes(spark, base, str(tmp_path / "delta"), out)
+        outs[name] = out
+
+    def bucket_dirs(root, table):
+        return sorted(
+            int(d.split("=")[1]) for d in os.listdir(os.path.join(root, table))
+            if d.startswith("bucket=")
+        )
+
+    for root in (reused, *outs.values()):
+        for table in ("blocks", "lexicon"):
+            assert bucket_dirs(root, table) == list(range(4)), (root, table)
+    want = BlockIndexReader(outs["fresh"])
+    want_lex = _table_rows(os.path.join(outs["fresh"], "lexicon"), ["term"])
+    for name in ("rebuilt", "reused_out"):
+        got = BlockIndexReader(outs[name])
+        assert (got.n_docs, got.avg_dl) == (want.n_docs, want.avg_dl), name
+        assert _table_rows(
+            os.path.join(outs[name], "lexicon"), ["term"]
+        ) == want_lex, name
+        for q in ("the", "spark merge", "the data block", "query run index"):
+            for conj in (True, False):
+                assert got.search(q, conjunctive=conj, k=10) == want.search(
+                    q, conjunctive=conj, k=10
+                ), (name, q, conj)

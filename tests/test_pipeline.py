@@ -148,9 +148,26 @@ def test_dup_groups_chain_convergence(spark):
     assert set(groups.values()) == {0} and len(groups) == 21
 
 
-def test_dup_groups_star_equals_pointer_jump(spark):
-    """The two CC algorithms behind dup_groups must agree: random graphs
-    + the adversarial chain the star variant exists for (VERDICT r2 #9)."""
+def _union_find_groups(pairs_list) -> dict[int, int]:
+    """{doc: min doc of its component} by a plain union-find."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs_list:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_dup_groups_star_equals_union_find(spark):
+    """The large-star/small-star components behind dup_groups equal a
+    pure-Python union-find: random graphs + the adversarial chain the star
+    variant exists for (VERDICT r2 #9)."""
     import random
 
     rng = random.Random(7)
@@ -164,21 +181,11 @@ def test_dup_groups_star_equals_pointer_jump(spark):
         pairs = spark.createDataFrame(
             [(int(a), int(b)) for a, b in pairs_list], "doc_a long, doc_b long"
         )
-        pj = {r["doc_id"]: r["group_id"]
-              for r in dedup.dup_groups(pairs, algorithm="pointer_jump").collect()}
         st = {r["doc_id"]: r["group_id"]
-              for r in dedup.dup_groups(pairs, algorithm="star").collect()}
-        assert st == pj, pairs_list
+              for r in dedup.dup_groups(pairs).collect()}
+        assert st == _union_find_groups(pairs_list), pairs_list
         # group ids are component minima
         assert all(g <= d for d, g in st.items())
-
-
-def test_dup_groups_unknown_algorithm_raises(spark):
-    import pytest as _pytest
-
-    pairs = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
-    with _pytest.raises(ValueError):
-        dedup.dup_groups(pairs, algorithm="nope")
 
 
 def test_curation_pipeline_composed(spark):

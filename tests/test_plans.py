@@ -212,19 +212,19 @@ def test_rewrite_blocks_plan(
     by broadcast, and never scans a text column."""
     import re
 
-    from websearchengine_spark.plans import merge_index
+    from websearchengine_spark.plans import block_index, merge_index
     from websearchengine_spark.plans.delete_index import purge_deletes
 
     root, (a, b) = rewrite_inputs
     plans = []
-    write_table = merge_index.write_table
+    write_table = block_index.write_table  # the one index writer's
 
     def spy(df, path, **kw):
         if path.endswith("blocks"):  # explained as executed: lexicon cached
             plans.append(explain_str(df))
         return write_table(df, path, **kw)
 
-    monkeypatch.setattr(merge_index, "write_table", spy)
+    monkeypatch.setattr(block_index, "write_table", spy)
     out = str(root / f"out_{kind}")
     if kind == "purge":
         purge_deletes(spark, b, out)
@@ -399,8 +399,8 @@ def test_ingest_outputs_unchanged(ingest_lifecycle, index):
 def test_ingest_checkpoints_count_the_written_blocks(ingest_lifecycle, index):
     """Checkpoint metrics come from the encoder's per-partition counts,
     not from a re-read of the blocks: per bucket they equal the leaf
-    postings and leaf blocks of the written table, and a build's
-    bytes_compressed equals the bucket's files on disk."""
+    postings and leaf blocks of the written table, and bytes_compressed
+    equals the bucket's files on disk (build, merge and purge alike)."""
     import os
 
     import pyarrow.compute as pc
@@ -417,10 +417,9 @@ def test_ingest_checkpoints_count_the_written_blocks(ingest_lifecycle, index):
         want[b] = (npost + n, nblocks + 1)
     cp = ds.dataset(os.path.join(root, "checkpoints")).to_table().to_pylist()
     assert {r["bucket"]: (r["n_postings"], r["n_blocks"]) for r in cp} == want
-    if index == "a":
-        for r in cp:
-            bdir = os.path.join(root, "blocks", f"bucket={r['bucket']}")
-            assert r["bytes_compressed"] == sum(
-                os.path.getsize(os.path.join(bdir, f))
-                for f in os.listdir(bdir) if not f.startswith(("_", "."))
-            )
+    for r in cp:
+        bdir = os.path.join(root, "blocks", f"bucket={r['bucket']}")
+        assert r["bytes_compressed"] == sum(
+            os.path.getsize(os.path.join(bdir, f))
+            for f in os.listdir(bdir) if not f.startswith(("_", "."))
+        )

@@ -435,96 +435,14 @@ def simhash_dup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
 # ---------------------------------------------------------------------------
 # duplicate-group resolution (connected components over dup pairs)
 
-def dup_groups(
-    pairs: DataFrame,
-    max_iter: int = 25,
-    algorithm: str = "star",
-    stats: dict | None = None,
-) -> DataFrame:
+def dup_groups(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     """Resolve near-dup PAIRS into duplicate GROUPS: connected components;
     group_id = min doc_id in the component. (doc_id, group_id) for every
     doc appearing in a pair.
 
-    Two interchangeable algorithms behind one API (property-tested equal,
-    tests/test_pipeline.py):
-
-    - ``star`` (default): alternating large-star/small-star (Kiveris et
-      al., "Connected Components in MapReduce and Beyond") — edge-set
-      rewrites whose per-round sizes stay near-linear even on adversarial
-      chain/path-shaped graphs, the safe choice at 10^12-edge scale.
-    - ``pointer_jump``: min-label propagation + label-of-label doubling —
-      O(log diameter) rounds of join+agg.
-
-    Both are iterative and driver-coordinated, but each iteration is a
-    constant number of distributed joins/aggs — no collect of the graph.
-    ``stats``: optional dict, receives {"rounds": n} (scripts/cc_bench.py).
-
-    Head-to-head measurement (scripts/cc_bench.py, BASELINE.md round 4,
-    local[32], identical assignments verified on both graphs): on the
-    REALISTIC regime — 1.14M LSH-style pair edges forming 60k planted
-    shallow clusters — star converges in 6 rounds / 19.9 s vs
-    pointer_jump's 13 rounds / 24.2 s. On an adversarial 60k-node chain
-    pointer_jump's doubling wins wall time (11.1 s / 18 rounds vs 15.0 s /
-    17 rounds) but star's intermediate edge sets stay near-linear in |E|,
-    which is the property that matters at 10^12 edges (pointer_jump's
-    label-of-label join can fan out on mid-collapse hub labels). star
-    wins the production regime and is safer at scale — hence default."""
-    if algorithm == "star":
-        return _dup_groups_star(pairs, max_iter=max(max_iter, 50), stats=stats)
-    if algorithm != "pointer_jump":
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .distinct()
-        .persist()
-    )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()  # truncate lineage: iterative plans otherwise
-        #                     grow superlinearly and blow up analysis
-    )
-    try:
-        for it in range(max_iter):
-            # edge propagation (1 hop) + pointer jumping (label-of-label,
-            # doubles the effective hop distance → O(log diameter) rounds)
-            prop = edges.join(
-                labels, edges.src == labels.node, "inner"
-            ).select(F.col("dst").alias("node"), "label")
-            jump = (
-                labels.alias("x")
-                .join(labels.alias("y"), F.col("x.label") == F.col("y.node"))
-                .select(F.col("x.node").alias("node"), F.col("y.label").alias("label"))
-            )
-            new_labels = (
-                labels.select("node", "label").union(prop).union(jump)
-                .groupBy("node")
-                .agg(F.min("label").alias("label"))
-                .localCheckpoint()
-            )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "node")
-                .filter(F.col("n.label") != F.col("o.label"))
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
-                break
-        if stats is not None:
-            stats["rounds"] = it + 1
-        return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("group_id"))
-    finally:
-        edges.unpersist()
-
-
-def _dup_groups_star(
-    pairs: DataFrame, max_iter: int = 50, stats: dict | None = None
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al. 2014). Operates on the symmetric edge list:
+    Alternating large-star/small-star connected components (Kiveris et
+    al., "Connected Components in MapReduce and Beyond", 2014) over the
+    symmetric edge list:
 
     - large-star: per node u with m = min(N(u) ∪ {u}), rewire every
       neighbor v > u to (v, m);
@@ -532,8 +450,14 @@ def _dup_groups_star(
       {hi}) rewire every small neighbor and hi itself to m.
 
     Converges when the edge set is fixed — then every edge is (node,
-    root). Unlike naive label propagation, intermediate edge sets stay
-    near-linear in the input even on adversarial long-chain graphs."""
+    root). Iterative and driver-coordinated, but each round is a constant
+    number of distributed joins/aggs — no collect of the graph — and,
+    unlike label propagation, intermediate edge sets stay near-linear in
+    the input even on adversarial long-chain graphs, the property that
+    matters at 10^12 edges. Measured against min-label pointer jumping
+    (BASELINE.md round 4, local[32], identical assignments): on 1.14M
+    LSH-style pair edges forming 60k planted shallow clusters star
+    converged in 6 rounds / 19.9 s against 13 rounds / 24.2 s."""
     nodes = (
         pairs.select(F.col("doc_a").alias("node"))
         .union(pairs.select(F.col("doc_b").alias("node")))
@@ -581,7 +505,7 @@ def _dup_groups_star(
         )
 
     try:
-        for it in range(max_iter):
+        for _ in range(max_iter):
             new_edges = _small_star(_large_star(edges)).localCheckpoint()
             converged = new_edges.exceptAll(edges).isEmpty() and edges.exceptAll(
                 new_edges
@@ -589,8 +513,6 @@ def _dup_groups_star(
             edges = new_edges
             if converged:
                 break
-        if stats is not None:
-            stats["rounds"] = it + 1
         # stars: every remaining edge points node → its component root
         roots = edges.groupBy("src").agg(F.min("dst").alias("group_id"))
         return (

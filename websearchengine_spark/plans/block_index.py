@@ -31,11 +31,14 @@ encode group is bounded; salted sub-lists are disjoint ranges and concatenate
 back into sorted order for free. AQE skew handling stays on as a backstop,
 but the salting is the deterministic guarantee.
 
-Resumability (SURVEY.md §4.3): the commit unit is the bucket. Blocks are
-written with dynamic partition overwrite (idempotent per-bucket commits); a
+Resumability (SURVEY.md §4.3): the commit unit is the bucket. A
 ``checkpoints`` table records (build_id, bucket, status, lineage fingerprint,
 n_postings, n_blocks, bytes, postings/sec). A restarted build skips buckets
-already checkpointed for the same build_id + input fingerprint.
+already checkpointed for the same build_id + input fingerprint and writes
+the others with dynamic partition overwrite (idempotent per-bucket
+commits); every other write replaces its table whole (see ``_bucketed``).
+Build and the rewrite path (plans/merge_index.py) write through the one
+``_IndexWriter``.
 """
 
 from __future__ import annotations
@@ -46,9 +49,9 @@ import zlib
 from collections.abc import Iterable
 from contextlib import contextmanager
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
-import pandas as pd
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -298,25 +301,6 @@ class _PartitionStats(AccumulatorParam):
         return a
 
 
-def bucket_stats(spark: SparkSession):
-    """A fresh accumulator for :func:`_make_stream_encoder`'s ``stats``."""
-    return spark.sparkContext.accumulator({}, _PartitionStats())
-
-
-def bucket_totals(stats) -> dict[int, tuple[int, int, int]]:
-    """{bucket: (leaf postings, leaf blocks, payload bytes)} summed over
-    the encoder partitions of a ``bucket_stats`` accumulator, for the
-    buckets that got at least one leaf block."""
-    parts = list(stats.value.values())
-    if not parts:
-        return {}
-    tot = np.sum(parts, axis=0)
-    return {
-        int(b): (int(tot[0, b]), int(tot[1, b]), int(tot[2, b]))
-        for b in np.nonzero(tot[1])[0]
-    }
-
-
 def _make_stream_encoder(
     avg_dl: float,
     block_size: int,
@@ -358,7 +342,7 @@ def _make_stream_encoder(
     add of ``pid_offsets[run_pos >> 32]`` to the run heads before the
     segmented cumsum.
 
-    ``stats`` (a :func:`bucket_stats` accumulator) receives, per encoder
+    ``stats`` (a :class:`_PartitionStats` accumulator) receives, per encoder
     partition, each bucket's leaf postings, leaf blocks and payload bytes:
     the writers' checkpoint metrics, with no second scan of the blocks
     they just wrote."""
@@ -561,6 +545,237 @@ class BuildMetrics:
     postings_per_sec: float
 
 
+@contextmanager
+def session_confs(spark: SparkSession, confs: dict):
+    """Set the session ``confs`` for the ``with`` body and restore each
+    (unset when it was unset) afterwards — the one place the index writers
+    touch session confs. Confs are session-global, not per thread: a conf
+    concurrent tail writes need is set around the whole ``beside`` scope,
+    never toggled inside a tail."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, str(v))
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _bucketed(df: DataFrame, order, block_bytes: int, whole: bool,
+              n_parts: int | None = None):
+    """(frame, write_table kwargs) of a bucket-partitioned index table
+    (blocks, lexicon): ``df`` (with its ``bucket`` column) exchanged by
+    bucket and sorted by ``("bucket", *order)``, row groups bounded by
+    ``block_bytes``. ``bucket`` LEADS the sort: the V1 parquet writer
+    otherwise inserts its own Sort(bucket), a redundant full sort that is
+    NOT stable — measured permuting rows within bucket files and losing
+    the clustering the serving reader's row-group pruning depends on.
+
+    The one place the overwrite mode is decided, from one fact: does the
+    write cover every bucket? A table written whole is written ``static``,
+    so Spark replaces the whole directory and no ``bucket=K`` dir of an
+    index that lived at the root before survives (a later merge of the
+    root would read it). Only a resume that keeps checkpointed buckets
+    writes ``dynamic``, replacing just the buckets it wrote — under static
+    mode it would delete the buckets its checkpoints say are done. A write
+    option, so neither session.get_spark's session-wide dynamic mode nor a
+    concurrent write can change it.
+
+    Returns the write instead of making it, so the write runs in the
+    calling function's frame: perfbench books a Spark stage to the
+    innermost package function on the driver's stack."""
+    return (
+        df.repartition(*([n_parts] if n_parts else []), "bucket")
+        .sortWithinPartitions("bucket", *order),
+        dict(
+            mode="overwrite",
+            partition_by=("bucket",),
+            options={
+                "parquet.block.size": block_bytes,
+                "partitionOverwriteMode": "static" if whole else "dynamic",
+            },
+        ),
+    )
+
+
+@dataclass
+class _IndexWriter:
+    """The one writer of an index's tables — the reference's one final-
+    format sink (merge_index.cpp:169-254, dump_index_* and
+    dump_storage_txt). build_block_index and the rewrite path
+    (merge_index.merge_many_block_indexes, and through it purge_deletes
+    and compact_incremental) both write through it. A caller brings only
+    what differs: its salted runs frame and the buckets it writes (a
+    resume keeps the rest), its doc_id sidecar frames, and a rewrite's
+    staging watermark."""
+
+    spark: SparkSession
+    paths: BlockIndexPaths
+    build_id: str
+    n_docs: int
+    avg_dl: float
+    block_size: int
+    n_buckets: int
+    t0: float
+
+    @property
+    def fingerprint(self) -> str:
+        return f"{self.n_docs}:{self.avg_dl:.6f}"
+
+    def _salt_encode_write_blocks(
+        self, salted: DataFrame, buckets: list[int], n_exch: int,
+        pid_offsets: dict[int, int] | None = None,
+    ) -> dict[int, tuple[int, int, int]]:
+        """Compressed runs (term, salt, run_pos, n, ids_vb, tfs_vb,
+        dls_vb) of ``buckets`` → (term, salt) exchange → streaming block
+        encoder → bucket-partitioned blocks write. Returns {bucket: (leaf
+        postings, leaf blocks, payload bytes)} as the encoder counted
+        them, for the buckets that got a leaf block.
+
+        The shuffle is the k-way merge (merge_index.cpp:394-476 analogue)
+        moving ~1-3 B/posting, and the merger has no per-group overhead
+        and no per-row Python objects (see _make_stream_encoder). Both
+        exchanges take the explicit ``n_exch``: AQE's size-based coalesce
+        targets bytes, not slot packing, so it merges the encode exchange
+        down to a task count that leaves cores idle in the last wave, and
+        the bucket exchange down to ONE task that sorts and writes the
+        whole blocks table. Rows are in (kind, term, doc_lo) order within
+        each bucket file: a bucket's superblock rows (kind=1) cluster into their own
+        trailing row groups, so the serving reader's metadata fetch
+        touches only those, and the leaf region keeps the (term, doc_lo)
+        clustering for range-pruned payload reads; small row groups let
+        its predicate pushdown prune to the few holding the query terms."""
+        if not buckets:
+            return {}
+        stats = self.spark.sparkContext.accumulator({}, _PartitionStats())
+        blocks = (
+            salted.select(
+                "term", "salt", "run_pos", "n", "ids_vb", "tfs_vb", "dls_vb"
+            )
+            .repartition(n_exch, "term", "salt")
+            .sortWithinPartitions("term", "salt", "run_pos")
+            .mapInArrow(
+                _make_stream_encoder(
+                    self.avg_dl, self.block_size, self.n_buckets,
+                    pid_offsets, stats,
+                ),
+                BLOCK_SCHEMA,
+            )
+        )
+        frame, kw = _bucketed(
+            blocks, ("kind", "term", "doc_lo"), 1 << 20,
+            whole=len(buckets) == self.n_buckets, n_parts=n_exch,
+        )
+        # run rows carry whole compressed posting runs, so a moderate batch
+        # amortizes the merger's carry/split overhead while keeping the
+        # decoded per-batch arrays cache-sized
+        batch = {"spark.sql.execution.arrow.maxRecordsPerBatch": 1 << 15}
+        with session_confs(self.spark, batch):
+            write_table(frame, self.paths.blocks, **kw)
+        parts = list(stats.value.values())
+        if not parts:
+            return {}
+        tot = np.sum(parts, axis=0)
+        return {
+            int(b): (int(tot[0, b]), int(tot[1, b]), int(tot[2, b]))
+            for b in np.nonzero(tot[1])[0]
+        }
+
+    def _write_lexicon(self, lexicon: DataFrame) -> None:
+        """(term, df, cf), bucketed like the blocks; always written whole."""
+        frame, kw = _bucketed(
+            lexicon.withColumn(
+                "bucket", (F.crc32(F.col("term")) % self.n_buckets).cast("int")
+            ),
+            ("term",), LEXICON_BLOCK_BYTES, whole=True,
+        )
+        write_table(frame, self.paths.lexicon, **kw)
+
+    def _write_meta(self, staged_hwm: int | None) -> None:
+        """The one-row meta table: META_SCHEMA for a build, plus the
+        staging-id watermark (MERGED_META_SCHEMA) for a rewrite. block_format
+        3 = format 2 (block-head gap measured from doc_lo - 1; format 1
+        stored the absolute id) + superblock rows (kind=1) in the blocks
+        table; readers refuse older dumps rather than silently decoding
+        shifted docIDs or missing the two-level metadata."""
+        row = (self.build_id, self.n_docs, self.avg_dl, self.block_size,
+               self.n_buckets, self.fingerprint, 3)
+        schema = META_SCHEMA
+        if staged_hwm is not None:
+            row, schema = row + (staged_hwm,), MERGED_META_SCHEMA
+        write_table(
+            local_table(self.spark, [row], schema), self.paths.meta,
+            mode="overwrite",
+        )
+
+    def _finalize_metrics(self, per_bucket: dict, buckets: list[int],
+                          n_skipped: int) -> BuildMetrics:
+        """Append one checkpoint row per written bucket — lineage plus the
+        encoder's counts, no re-read of the blocks — and return the
+        metrics. bytes_compressed is bytes ON DISK (parquet-encoded
+        payload + footers) from a metadata-only file listing; Iceberg
+        identifiers have no filesystem to stat and record the payload
+        bytes."""
+        wall_s = time.time() - self.t0
+        per_s = 1.0 / wall_s if wall_s > 0 else 0.0
+        now = time.time()
+        rows = []
+        for bkt in buckets:
+            npost, nblocks, nbytes = per_bucket.get(bkt, (0, 0, 0))
+            if not is_table_identifier(self.paths.root):
+                bdir = os.path.join(self.paths.blocks, f"bucket={bkt}")
+                nbytes = sum(
+                    os.path.getsize(os.path.join(dirpath, fn))
+                    for dirpath, _dirs, files in os.walk(bdir)
+                    for fn in files
+                    if not fn.startswith(("_", "."))
+                )
+            rows.append((
+                self.build_id, int(bkt), "done", self.fingerprint, npost,
+                nblocks, int(nbytes), float(wall_s), npost * per_s,
+                float(now),
+            ))
+        if rows:
+            write_table(
+                local_table(self.spark, rows, CHECKPOINT_SCHEMA),
+                self.paths.checkpoints,
+                mode="append",
+            )
+        n_postings = sum(v[0] for v in per_bucket.values())
+        return BuildMetrics(
+            build_id=self.build_id,
+            n_docs=self.n_docs,
+            avg_dl=self.avg_dl,
+            n_postings=n_postings,
+            n_buckets_built=len(buckets),
+            n_buckets_skipped=n_skipped,
+            wall_s=wall_s,
+            postings_per_sec=n_postings * per_s,
+        )
+
+    def finish(self, per_bucket: dict, buckets: list[int], lexicon: DataFrame,
+               sidecars=(), *, n_skipped: int = 0,
+               staged_hwm: int | None = None) -> BuildMetrics:
+        """Once every bucket is written (``n_skipped`` kept by a resume
+        plus ``buckets``), write the lexicon, the meta row and the
+        ``sidecars`` ((doc_id-clustered frame, path) pairs) beside the
+        checkpoint write; an incomplete index gets its checkpoints only.
+        The writes are independent, so their serial driver gaps overlap
+        (``beside``) instead of adding up."""
+        tails = [
+            lambda: self._write_lexicon(lexicon),
+            lambda: self._write_meta(staged_hwm),
+            *(partial(write_doc_sidecar, df, path) for df, path in sidecars),
+        ]
+        complete = n_skipped + len(buckets) == self.n_buckets
+        with beside(self.spark, tails if complete else []):
+            return self._finalize_metrics(per_bucket, buckets, n_skipped)
+
+
 def build_block_index(
     transcripts: DataFrame,
     out_dir: str,
@@ -746,7 +961,9 @@ def build_block_index(
     )
 
     # ---- resume: skip buckets checkpointed for this build_id + lineage
-    fingerprint = f"{n_docs}:{avg_dl:.6f}"
+    writer = _IndexWriter(
+        spark, paths, build_id, n_docs, avg_dl, block_size, n_buckets, t0
+    )
     done: set[int] = set()
     if resume:
         try:
@@ -756,7 +973,7 @@ def build_block_index(
                 for r in cp.filter(
                     (F.col("build_id") == build_id)
                     & (F.col("status") == "done")
-                    & (F.col("fingerprint") == fingerprint)
+                    & (F.col("fingerprint") == writer.fingerprint)
                 )
                 .select("bucket")
                 .collect()
@@ -764,202 +981,27 @@ def build_block_index(
         except Exception:
             done = set()
     fail_buckets = set(fail_buckets)
-    stats = bucket_stats(spark)
     build_buckets = [
         b for b in range(n_buckets) if b not in done and b not in fail_buckets
     ]
-
-    if build_buckets:
-        # `bucket` exists only for this filter — the encoder re-derives it
-        # from the term, so it stays off the wire
-        to_build = salted.filter(F.col("bucket").isin(build_buckets)).select(
-            "term", "salt", "run_pos", "n", "ids_vb", "tfs_vb", "dls_vb"
-        )
-        # shuffle COMPRESSED RUNS by (term, salt) + in-partition sort by
-        # run_pos (= global docID order), then a STREAMING vectorized
-        # merger (mapInArrow) that concatenates each group's runs and
-        # re-chunks them into fixed-size blocks — the shuffle is the k-way
-        # merge (merge_index.cpp:394-476 analogue) moving ~1-3 B/posting,
-        # and the merger has no per-group overhead and no per-row Python
-        # objects (see _make_stream_encoder)
-        # explicit partition count: AQE's size-based coalesce targets bytes,
-        # not slot packing — after the packed-row diet it merges the encode
-        # exchange down to a handful of partitions, and a task count that is
-        # not a multiple of the executor slots leaves cores idle in the last
-        # wave (7 tasks on 4 slots = 2 waves, one half-empty). Pinning to
-        # num_partitions (callers pass a slot multiple) keeps waves full.
-        blocks = (
-            to_build.repartition(n_parts, "term", "salt")
-            .sortWithinPartitions("term", "salt", "run_pos")
-            .mapInArrow(
-                _make_stream_encoder(
-                    avg_dl, block_size, n_buckets, offsets, stats
-                ),
-                BLOCK_SCHEMA,
-            )
-        )
-        # dynamic partition overwrite → idempotent per-bucket commits.
-        # Blocks are sorted by (term, doc_lo) within each bucket file and
-        # written with small row groups so the serving reader's predicate
-        # pushdown prunes to the few row groups holding the query terms
-        # (parquet min/max stats on `term`) instead of scanning the bucket.
-        # Run rows carry whole compressed posting runs, so a moderate batch
-        # size already amortizes the merger's carry/split overhead while
-        # keeping the decoded per-batch arrays in cache-friendly territory.
-        batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-        prev_batch = spark.conf.get(batch_key, "10000")
-        spark.conf.set(batch_key, str(1 << 15))
-        # CORRECTNESS pin, not an optimization: resume writes ONLY the
-        # unbuilt buckets, and with the default STATIC overwrite mode a
-        # partitioned overwrite first deletes the WHOLE blocks table —
-        # previously checkpointed buckets would vanish while their
-        # checkpoints say done, yielding a valid-looking index that
-        # silently misses every term hashed to them. session.get_spark
-        # sets dynamic globally, but a build driven by a vanilla
-        # SparkSession must not depend on that.
-        ovw_key = "spark.sql.sources.partitionOverwriteMode"
-        prev_ovw = spark.conf.get(ovw_key, "static")
-        spark.conf.set(ovw_key, "dynamic")
-        try:
-            write_table(
-                # kind first: all of a bucket's superblock rows cluster into
-                # their own trailing row groups (sorted by term), so the
-                # serving reader's kind==1 metadata fetch touches only those
-                # row groups and the kind==0 leaf region keeps the
-                # (term, doc_lo) clustering for range-pruned payload reads
-                # bucket LEADS the sort: the V1 parquet writer requires its
-                # output partitioned-ordered by the partition column and
-                # inserts its own Sort(bucket) otherwise — a redundant
-                # second full sort of the largest table, and the
-                # (kind, term, doc_lo) clustering the serving reader's
-                # row-group pruning depends on would then survive only via
-                # that inserted sort's (unspecified) stability. Within each
-                # bucket file the row order is unchanged.
-                blocks.repartition("bucket").sortWithinPartitions(
-                    "bucket", "kind", "term", "doc_lo"
-                ),
-                paths.blocks,
-                mode="overwrite",
-                partition_by=("bucket",),
-                options={"parquet.block.size": 1 << 20},
-            )
-        finally:
-            spark.conf.set(batch_key, prev_batch)
-            spark.conf.set(ovw_key, prev_ovw)
-
-    # ---- finalization: the checkpoints and the complete-index table
-    # writes are independent of each other, so the writes run beside the
-    # checkpoint write (``beside``). At 4N cores that tail is a visibly
-    # larger fraction of the (shorter) wall than at N — pure Amdahl loss
-    # with no compute to show for it.
-    complete = len(done) + len(build_buckets) == n_buckets
-
-    def _write_lexicon():
-        write_table(
-            lexicon.withColumn(
-                "bucket", (F.crc32(F.col("term")) % n_buckets).cast("int")
-            )
-            .repartition("bucket")
-            # bucket leads for the same reason as the blocks write above
-            .sortWithinPartitions("bucket", "term"),
-            paths.lexicon,
-            mode="overwrite",
-            partition_by=("bucket",),
-            options={"parquet.block.size": LEXICON_BLOCK_BYTES},
-        )
-
-    def _write_doc_stats():
-        write_doc_sidecar(doc_stats, paths.doc_stats)
-
-    def _write_meta():
-        write_table(
-            local_table(
-                spark,
-                # block_format 3 = format 2 (block-head gap measured from
-                # doc_lo - 1; format 1 stored the absolute id) + superblock
-                # rows (kind=1) in the blocks table; readers refuse older
-                # dumps rather than silently decoding shifted docIDs or
-                # missing the two-level metadata
-                [(build_id, n_docs, avg_dl, block_size, n_buckets,
-                  fingerprint, 3)],
-                META_SCHEMA,
-            ),
-            paths.meta,
-            mode="overwrite",
-        )
-
-    def _write_texts():
-        # flat's partitions are contiguous docID ranges with doc-ascending
-        # rows, so writing directly (no shuffle, no sort) yields files of
-        # contiguous doc_id ranges, cut into bounded row groups
-        write_doc_sidecar(docs.select("doc_id", "text"), paths.texts)
-
-    writers = [_write_lexicon, _write_doc_stats, _write_meta] + (
-        [_write_texts] if store_texts else []
+    # `bucket` exists only for this filter — the encoder re-derives it from
+    # the term, so it stays off the wire
+    per_bucket = writer._salt_encode_write_blocks(
+        salted.filter(F.col("bucket").isin(build_buckets)), build_buckets,
+        n_parts, offsets,
     )
-    with beside(spark, writers if complete else []):
-        # ---- per-partition (bucket) checkpoints with lineage + metrics
-        wall_s = time.time() - t0
-        # leaf postings, blocks and payload bytes per bucket, counted by
-        # the encoder as it wrote them (bucket_stats): no re-read of the
-        # index just written. bytes_compressed is bytes ON DISK
-        # (parquet-encoded payload + footers) from a metadata-only file
-        # listing for filesystem layouts; Iceberg identifiers fall back to
-        # the payload bytes (no filesystem to stat).
-        per_bucket = bucket_totals(stats)
-        if is_table_identifier(out_dir):
-            bucket_bytes = {b: v[2] for b, v in per_bucket.items()}
-        else:
-            bucket_bytes = {}
-            for bkt in build_buckets:
-                total = 0
-                bdir = os.path.join(paths.blocks, f"bucket={bkt}")
-                if os.path.isdir(bdir):
-                    for dirpath, _dirs, files in os.walk(bdir):
-                        total += sum(
-                            os.path.getsize(os.path.join(dirpath, fn))
-                            for fn in files
-                            if not fn.startswith(("_", "."))
-                        )
-                bucket_bytes[bkt] = total
-        now = time.time()
-        cp_rows = []
-        for bkt in build_buckets:
-            npost, nblocks, _ = per_bucket.get(bkt, (0, 0, 0))
-            cp_rows.append(
-                (
-                    build_id,
-                    int(bkt),
-                    "done",
-                    fingerprint,
-                    npost,
-                    nblocks,
-                    int(bucket_bytes.get(bkt, 0)),
-                    float(wall_s),
-                    float(npost / wall_s) if wall_s > 0 else 0.0,
-                    float(now),
-                )
-            )
-        if cp_rows:
-            write_table(
-                local_table(spark, cp_rows, CHECKPOINT_SCHEMA),
-                paths.checkpoints,
-                mode="append",
-            )
-
-    n_postings = sum(v[0] for v in per_bucket.values())
+    # texts: flat's partitions are contiguous docID ranges with
+    # doc-ascending rows, so writing directly (no shuffle, no sort) yields
+    # files of contiguous doc_id ranges, cut into bounded row groups
+    sidecars = [(doc_stats, paths.doc_stats)] + (
+        [(docs.select("doc_id", "text"), paths.texts)] if store_texts else []
+    )
+    metrics = writer.finish(
+        per_bucket, build_buckets, lexicon, sidecars, n_skipped=len(done)
+    )
     flat.unpersist()
     term_agg.unpersist()
-    return BuildMetrics(
-        build_id=build_id,
-        n_docs=n_docs,
-        avg_dl=avg_dl,
-        n_postings=n_postings,
-        n_buckets_built=len(build_buckets),
-        n_buckets_skipped=len(done),
-        wall_s=wall_s,
-        postings_per_sec=(n_postings / wall_s) if wall_s > 0 else 0.0,
-    )
+    return metrics
 
 
 @contextmanager

@@ -19,12 +19,16 @@ compressed runs and re-runs only the (term, salt) exchange + block encode:
    ``purge_tombstones=True`` the same pass drops tombstoned postings and
    renumbers survivors densely; only batches that lost postings re-encode
    their tf/dl payloads;
-2. the runs take the SAME path as a fresh build's runs: hot-term salting
-   (from the merged lexicon's dfs), a (term, salt) repartition + run_pos
-   sort, and the streaming run merger/encoder of plans.block_index — the
-   shuffle is the k-way merge, moving ~1-3 compressed bytes per posting;
+2. the runs are salted on the merged docID axis (from the merged
+   lexicon's dfs) and handed to the build's own writer,
+   ``block_index._IndexWriter``: the same (term, salt) exchange + run_pos
+   sort, streaming run merger/encoder and blocks write as a fresh build —
+   the shuffle is the k-way merge, moving ~1-3 compressed bytes per
+   posting;
 3. lexicon / doc_stats / meta are unioned or recomputed exactly (integer
-   dl sums → the merged ``avg_dl`` equals a from-scratch build's float).
+   dl sums → the merged ``avg_dl`` equals a from-scratch build's float)
+   and written by that same writer, which replaces each table of a reused
+   ``out_dir`` whole.
 
 docID semantics: merged ids are ARRIVAL-BLOCKED — base keeps its ids,
 delta docs get ``base.n_docs + delta_id`` — i.e. the reference's
@@ -52,7 +56,6 @@ from __future__ import annotations
 
 import os
 import time
-from contextlib import contextmanager
 from typing import NamedTuple
 
 import numpy as np
@@ -68,30 +71,18 @@ from websearchengine_spark.functions.codec import (
 )
 from websearchengine_spark.plans.block_index import (
     BLOCK_READ_SCHEMA,
-    BLOCK_SCHEMA,
-    CHECKPOINT_SCHEMA,
     DEL_DF_SCHEMA,
-    MERGED_META_SCHEMA,
     BlockIndexPaths,
-    LEXICON_BLOCK_BYTES,
     BuildMetrics,
     _clear_stale_deletes,
-    _make_stream_encoder,
-    beside,
-    bucket_stats,
-    bucket_totals,
+    _IndexWriter,
     delete_paths,
     has_tombstones,
     live_deletes_dir,
     load_meta,
-    write_doc_sidecar,
+    session_confs,
 )
-from websearchengine_spark.sources.catalog import (
-    is_table_identifier,
-    local_table,
-    read_table,
-    write_table,
-)
+from websearchengine_spark.sources.catalog import is_table_identifier, read_table
 
 RUNS_SCHEMA = (
     "term string, run_pos long, n long, ids_vb binary, tfs_vb binary, "
@@ -291,179 +282,6 @@ def _leaf_blocks(spark: SparkSession, paths: BlockIndexPaths):
         read_table(spark, paths.blocks, schema=BLOCK_READ_SCHEMA)
         .filter(F.col("kind") == 0)
         .select("term", "doc_lo", "n", "ids_vb", "tfs_vb", "dls_vb")
-    )
-
-
-def _salt_encode_write_blocks(
-    spark: SparkSession,
-    runs,
-    lexicon,
-    n_docs: int,
-    hot_df_threshold: int,
-    target_group_size: int,
-    num_partitions: int | None,
-    avg_dl: float,
-    block_size: int,
-    n_buckets: int,
-    out_p: BlockIndexPaths,
-):
-    """Hot-term salting → (term, salt) exchange → streaming block encoder
-    → partitioned blocks write → the encoder's per-bucket counts
-    (block_index.bucket_totals). Its input is the compressed runs of
-    :func:`_blocks_to_runs`: ABSOLUTE head gaps in per-term docID order.
-
-    Salt arithmetic: docID width of one salt range is ceil(n_docs/n_salt)
-    with n_salt = ceil(df / target_group_size); salt is an int64-safe
-    integer DIVISION of run_pos — the naive run_pos * n_salt / n_docs
-    product overflows int64 at ~10^12 docs × a stopword df, wrapping
-    negative and violating the encoder's runs-in-docID-order precondition
-    (salt must be monotone in run_pos within a term)."""
-    nd = max(n_docs, 1)
-    hot_df = lexicon.filter(F.col("df") > hot_df_threshold).select(
-        "term",
-        F.ceil(
-            F.lit(nd) / F.ceil(F.col("df") / F.lit(target_group_size))
-        ).cast("long").alias("salt_span"),
-    )
-    salted = runs.join(F.broadcast(hot_df), "term", "left").withColumn(
-        "salt",
-        F.expr(f"CAST(run_pos DIV coalesce(salt_span, {nd}L) AS INT)"),
-    ).select("term", "salt", "run_pos", "n", "ids_vb", "tfs_vb", "dls_vb")
-    n_exch = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    stats = bucket_stats(spark)
-    blocks = (
-        salted.repartition(n_exch, "term", "salt")
-        .sortWithinPartitions("term", "salt", "run_pos")
-        .mapInArrow(
-            _make_stream_encoder(avg_dl, block_size, n_buckets, None, stats),
-            BLOCK_SCHEMA,
-        )
-    )
-    batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev_batch = spark.conf.get(batch_key, "10000")
-    spark.conf.set(batch_key, str(1 << 15))
-    try:
-        write_table(
-            # bucket leads the sort (same as build_block_index): without it
-            # the V1 parquet writer inserts its own Sort(bucket), which is
-            # both a redundant full sort and NOT stable — measured
-            # permuting rows within bucket files, degrading the serving
-            # reader's (kind, term, doc_lo) row-group pruning
-            blocks.repartition("bucket").sortWithinPartitions(
-                "bucket", "kind", "term", "doc_lo"
-            ),
-            out_p.blocks,
-            mode="overwrite",
-            partition_by=("bucket",),
-            options={"parquet.block.size": 1 << 20},
-        )
-    finally:
-        spark.conf.set(batch_key, prev_batch)
-    return bucket_totals(stats)
-
-
-@contextmanager
-def _one_file_per_task(spark: SparkSession):
-    """Scan each input file as its own task (a file above the split size
-    as contiguous splits of it) while a sidecar is rewritten from sidecar
-    files. Spark otherwise packs several small files into one task,
-    largest first, so the rewritten doc_id-clustered sidecar gets files
-    that are neither doc_id-ascending nor disjoint (observed on the purge
-    of an 8-file merged index) and row groups whose doc_id range spans
-    other files. An open cost equal to the split size leaves room for one
-    file per task."""
-    key = "spark.sql.files.openCostInBytes"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, spark.conf.get("spark.sql.files.maxPartitionBytes"))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
-
-
-def _write_lexicon(lexicon, out_p: BlockIndexPaths, n_buckets: int) -> None:
-    """Bucketed lexicon write (same layout as build_block_index)."""
-    write_table(
-        lexicon.withColumn(
-            "bucket", (F.crc32(F.col("term")) % n_buckets).cast("int")
-        )
-        .repartition("bucket")
-        .sortWithinPartitions("bucket", "term"),
-        out_p.lexicon,
-        mode="overwrite",
-        partition_by=("bucket",),
-        options={"parquet.block.size": LEXICON_BLOCK_BYTES},
-    )
-
-
-def _write_meta(
-    spark: SparkSession,
-    out_p: BlockIndexPaths,
-    build_id: str,
-    n_docs: int,
-    avg_dl: float,
-    block_size: int,
-    n_buckets: int,
-    fingerprint: str,
-    staged_hwm: int,
-) -> None:
-    """Meta row (block_format 3 + the staging-id watermark)."""
-    write_table(
-        local_table(
-            spark,
-            [(
-                build_id, n_docs, avg_dl, block_size, n_buckets,
-                fingerprint, 3, staged_hwm,
-            )],
-            MERGED_META_SCHEMA,
-        ),
-        out_p.meta,
-        mode="overwrite",
-    )
-
-
-def _finalize_metrics(
-    spark: SparkSession,
-    out_p: BlockIndexPaths,
-    per_bucket: dict,
-    build_id: str,
-    fingerprint: str,
-    n_docs: int,
-    avg_dl: float,
-    t0: float,
-) -> BuildMetrics:
-    """Per-bucket lineage + metrics (same accounting shape as a fresh
-    build's checkpoints) from the encoder's counts: no re-read of the
-    blocks just written."""
-    wall_s = time.time() - t0
-    now = time.time()
-    cp_rows = [
-        (
-            build_id, bkt, "done", fingerprint, npost, nblocks, 0,
-            float(wall_s),
-            float(npost / wall_s) if wall_s > 0 else 0.0,
-            float(now),
-        )
-        for bkt, (npost, nblocks, _) in sorted(per_bucket.items())
-    ]
-    if cp_rows:
-        write_table(
-            local_table(spark, cp_rows, CHECKPOINT_SCHEMA),
-            out_p.checkpoints,
-            mode="append",
-        )
-    n_postings = sum(v[0] for v in per_bucket.values())
-    return BuildMetrics(
-        build_id=build_id,
-        n_docs=n_docs,
-        avg_dl=avg_dl,
-        n_postings=n_postings,
-        n_buckets_built=len(per_bucket),
-        n_buckets_skipped=0,
-        wall_s=wall_s,
-        postings_per_sec=(n_postings / wall_s) if wall_s > 0 else 0.0,
     )
 
 
@@ -690,7 +508,12 @@ def merge_many_block_indexes(
     # blocks → runs (each index shifted), salted like a fresh build but with
     # the salt ranges cut on the MERGED docID axis (monotone in doc_lo ⇒
     # salted sub-lists stay contiguous disjoint ranges that concatenate in
-    # order)
+    # order). One salt range is ceil(n_docs / n_salt) docIDs wide, with
+    # n_salt = ceil(df / target_group_size); salt is an int64-safe integer
+    # DIVISION of run_pos — the naive run_pos * n_salt / n_docs product
+    # overflows int64 at ~10^12 docs × a stopword df, wrapping negative and
+    # breaking the encoder's runs-in-docID-order precondition (salt must be
+    # monotone in run_pos within a term).
     def _input_runs(p, st, shift):
         return _leaf_blocks(spark, p).mapInArrow(
             _blocks_to_runs(shift, st.ids_bc if st else None), RUNS_SCHEMA
@@ -699,9 +522,24 @@ def merge_many_block_indexes(
     runs = _input_runs(in_ps[0], del_state[0], 0)
     for p, st, shift in zip(in_ps[1:], del_state[1:], shifts[1:]):
         runs = runs.unionByName(_input_runs(p, st, shift))
-    per_bucket = _salt_encode_write_blocks(
-        spark, runs, lexicon, n_docs, hot_df_threshold, target_group_size,
-        num_partitions, avg_dl, block_size, n_buckets, out_p,
+    nd = max(n_docs, 1)
+    hot_df = lexicon.filter(F.col("df") > hot_df_threshold).select(
+        "term",
+        F.ceil(
+            F.lit(nd) / F.ceil(F.col("df") / F.lit(target_group_size))
+        ).cast("long").alias("salt_span"),
+    )
+    salted = runs.join(F.broadcast(hot_df), "term", "left").withColumn(
+        "salt",
+        F.expr(f"CAST(run_pos DIV coalesce(salt_span, {nd}L) AS INT)"),
+    )
+    writer = _IndexWriter(
+        spark, out_p, build_id, n_docs, avg_dl, block_size, n_buckets, t0
+    )
+    buckets = list(range(n_buckets))
+    per_bucket = writer._salt_encode_write_blocks(
+        salted, buckets,
+        num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions")),
     )
 
     # sidecar tables (same layouts as build_block_index)
@@ -717,6 +555,23 @@ def merge_many_block_indexes(
         ds_union = ds_union.unionByName(
             _input_ds(ds, st, shift, DOC_STATS_SCHEMA)
         )
+    sidecars = [(ds_union, out_p.doc_stats)]
+    # texts sidecar: policy (emit_texts) was validated eagerly above. Files
+    # stay contiguous docID ranges because each task scans one input file
+    # and each index's shifted ids all sort after the previous index's.
+    # Even when every input is empty the (fileless) sidecar dir is written:
+    # it is the carrier of the store_texts decision that
+    # compact_incremental infers the next delta's build from.
+    if emit_texts:
+        texts = None
+        for p, st, shift, h in zip(in_ps, del_state, shifts, has_texts):
+            if h:
+                part = _input_ds(
+                    read_table(spark, p.texts, schema=TEXTS_SCHEMA),
+                    st, shift, TEXTS_SCHEMA,
+                )
+                texts = part if texts is None else texts.unionByName(part)
+        sidecars.append((texts, out_p.texts))
     # staged_hwm: the cumulative STAGING-id-space watermark this index has
     # absorbed — Σ of each input's watermark (its own staged_hwm, else its
     # n_docs: for an index that never purged, the docID axis IS the
@@ -727,47 +582,22 @@ def merge_many_block_indexes(
     staged_hwm = sum(
         int(m["staged_hwm"] or m["n_docs"]) for m in metas
     )
-    fingerprint = f"{n_docs}:{avg_dl:.6f}"
-    tails = [
-        lambda: _write_lexicon(lexicon, out_p, n_buckets),
-        lambda: write_doc_sidecar(ds_union, out_p.doc_stats),
-        lambda: _write_meta(
-            spark, out_p, build_id, n_docs, avg_dl, block_size, n_buckets,
-            fingerprint, staged_hwm,
-        ),
-    ]
-    # texts sidecar: policy (emit_texts) was validated eagerly above. Files
-    # stay contiguous docID ranges because each task scans one input file
-    # and each index's shifted ids all sort after the previous index's.
-    # Even when every input is empty the (fileless) sidecar dir is written:
-    # it is the carrier of the store_texts decision that
-    # compact_incremental infers the next delta's build from.
-    if emit_texts:
-        with_texts = [
-            (p, st, s)
-            for p, st, s, h in zip(in_ps, del_state, shifts, has_texts)
-            if h
-        ]
-        texts = None
-        for p, st, shift in with_texts:
-            part = _input_ds(
-                read_table(spark, p.texts, schema=TEXTS_SCHEMA),
-                st,
-                shift,
-                TEXTS_SCHEMA,
-            )
-            texts = part if texts is None else texts.unionByName(part)
-        tails.append(lambda: write_doc_sidecar(texts, out_p.texts))
-
-    # the four table writes are independent: they run beside the
-    # checkpoint write (block_index.beside), all inside ONE
-    # _one_file_per_task scope — the conf is session-global, so concurrent
-    # writes must not toggle it under each other
-    with _one_file_per_task(spark), beside(spark, tails):
-        metrics = _finalize_metrics(
-            spark, out_p, per_bucket, build_id, fingerprint, n_docs, avg_dl,
-            t0,
+    # the sidecars are rewritten from sidecar files with each input file
+    # scanned as its own task (a file above the split size as contiguous
+    # splits of it): Spark otherwise packs several small files into one
+    # task, largest first, and the rewritten doc_id-clustered sidecar gets
+    # files that are neither doc_id-ascending nor disjoint (observed on the
+    # purge of an 8-file merged index). An open cost equal to the split
+    # size leaves room for one file per task.
+    one_file_per_task = {
+        "spark.sql.files.openCostInBytes":
+            spark.conf.get("spark.sql.files.maxPartitionBytes"),
+    }
+    with session_confs(spark, one_file_per_task):
+        metrics = writer.finish(
+            per_bucket, buckets, lexicon, sidecars, staged_hwm=staged_hwm
         )
+
     lexicon.unpersist()
     for st in del_state:
         if st is not None:

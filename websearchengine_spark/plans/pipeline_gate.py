@@ -512,18 +512,12 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
 
 def q_dup_groups(spark, sf_dir):
     """Connected-components dup groups over the MinHash-LSH pair set
-    (Spark vs WITH RECURSIVE in the oracle — same fixpoint). The CC
-    algorithm is selectable via WSE_DUP_GROUPS_ALGO (star | pointer_jump)
-    — both are property-tested equal and either passes this gate. Default
-    = star (the measured winner on realistic cluster graphs and the
-    scale-safe variant; scripts/cc_bench.py, BASELINE.md round 4)."""
-    import os
-
+    (Spark's large-star/small-star vs WITH RECURSIVE in the oracle — same
+    fixpoint)."""
     pairs = dedup.minhash_lsh_pairs(
         _docs(spark, sf_dir), num_hashes=16, bands=4, k=3, threshold=0.5
     )
-    algo = os.environ.get("WSE_DUP_GROUPS_ALGO", "star")
-    return dedup.dup_groups(pairs, algorithm=algo)
+    return dedup.dup_groups(pairs)
 
 
 SQL_DUP_GROUPS = f"""
