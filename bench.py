@@ -287,7 +287,7 @@ def _zipf_wand_bench(spark, results: dict) -> None:
     """Block-max pruning on a corpus with REAL tf skew (VERDICT round-2 #6).
 
     The headline bench corpus has near-uniform synthetic tf, where block
-    maxima cannot separate and WAND correctly bails to TAAT (BASELINE.md);
+    maxima cannot separate and the router keeps flat TAAT (BASELINE.md);
     the pruning win was previously proven only in a unit test. This section
     builds a 262k-doc corpus with a Zipf filler vocabulary plus eight
     docID-CLUSTERED "topic" terms — term topic{j} occupies the contiguous
@@ -299,8 +299,7 @@ def _zipf_wand_bench(spark, results: dict) -> None:
     intervals outside a term's range (the dominant regime on transcript
     corpora, where docIDs are dense ranks of (conv_id, turn_idx) and terms
     cluster by conversation topic). Measures the FORCED block-max WAND path
-    (taat_threshold=0, dense_docs_max=0 disables both the cost-router and
-    the bail-out):
+    (taat_threshold=0, dense_docs_max=0 routes every disjunction there):
 
       scored_ratio   = postings actually decoded+scored / total df of the
                        query terms (via the last_wand_scored counter) —
@@ -310,9 +309,9 @@ def _zipf_wand_bench(spark, results: dict) -> None:
     Uniformly-scattered dense disjunctions (e.g. two unclustered stopwords)
     are deliberately NOT in this suite: with BM25's tf ceiling (k1+1) the
     sum-of-maxima bound never drops below θ, so no block-max engine can
-    prune them — which is exactly why the production router costs those to
-    TAAT and why WAND keeps a bail-out (both covered by the headline suite
-    and tests/test_block_index.py)."""
+    prune them — which is exactly why the production router sends those to
+    flat TAAT wherever it fits (covered by the headline suite and
+    tests/test_block_index.py)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F
@@ -380,24 +379,22 @@ def _zipf_wand_bench(spark, results: dict) -> None:
             if [(r, d) for r, d, _ in got] != [(r, d) for r, d, _ in exp]:
                 identical = False
         # ---- superblock-level pruning proof (VERDICT r4 #3) ------------------
-        # The cumulative leaf_fetch_ratio below reads 1.0 on this corpus for two
-        # reasons that have nothing to do with pruning health: terms with ≤
-        # prefetch_sbs superblocks take the whole-term prefetch fast path, and
-        # the single-term queries run first, warming every (term, sb) LRU slot.
-        # This section measures what the verdict asked for — that SB-level
+        # The reader above has served every query before the multi-term ones,
+        # so its cumulative leaf counter says nothing about pruning. This
+        # section measures what the verdict asked for — that SB-level
         # interval cutting provably skips leaf batches: each multi-term query
         # (the docID-clustered regime: consecutive topics overlap 50%, so θ from
         # the double-cover zone must prune the non-overlapping superblocks at
-        # the SUPERBLOCK level, before their leaf metadata is ever read) runs
-        # COLD on a fresh reader with the lazy two-level path forced. A
-        # regression in superblock interval cutting (operators/wand.py
-        # _search_wand_blocks step 1-2) drives this ratio back to 1.0.
+        # the SUPERBLOCK level, before their leaf rows are ever read) runs
+        # COLD on a fresh reader, whose leaf read takes only the superblocks
+        # each batch needs. A regression in superblock interval cutting
+        # (operators/wand.py _search_wand_blocks step 1-2) drives this ratio
+        # back to 1.0.
         multi = [q for q in queries if " " in q]
         sb_fetched = sb_leaf_fetched = sb_leaf_total = 0
         sb_identical = True
         for q in multi:
             r = BlockIndexReader(out_dir, taat_threshold=0, dense_docs_max=0)
-            r.prefetch_sbs = 0  # measure the lazy path the 10^12-doc regime uses
             got = r.search(q, conjunctive=False, k=10)
             exp = taat.search(q, conjunctive=False, k=10)
             if [(rk, d) for rk, d, _ in got] != [(rk, d) for rk, d, _ in exp]:

@@ -58,8 +58,8 @@ def reader(index_dir, request):
       (parallel_df_threshold=0 forces every TAAT-routed query through the
       pool — the dense-cold-query scale path);
     - wand: block-at-a-time block-max WAND for disjunctive (taat_threshold=0
-      routes everything there; dense_docs_max=0 disables the TAAT bail-out
-      so pruning logic is fully exercised) + lead-driven conjunctive."""
+      with dense_docs_max=0 routes everything there: WAND runs only where
+      TAAT is compressed) + lead-driven conjunctive."""
     r = BlockIndexReader(index_dir, **_READER_KW[request.param])
     yield r
     r.close()
@@ -79,9 +79,14 @@ def test_wand_rank_identity_vs_oracle(reader, oracle, fixture, conjunctive, k):
             assert math.isclose(es, asc, rel_tol=1e-9, abs_tol=1e-12), (qid, q)
 
 
+@pytest.mark.parametrize(
+    "reader_kw",
+    [{}, dict(taat_threshold=0, dense_docs_max=0), dict(rg_cache=0)],
+    ids=["default", "wand", "no_rg_cache"],
+)
 @pytest.mark.parametrize("conjunctive", [True, False], ids=["conj", "disj"])
 def test_eviction_pressure_never_changes_results(
-    index_dir, oracle, fixture, conjunctive
+    index_dir, oracle, fixture, conjunctive, reader_kw
 ):
     """Regression: the posting LRU must be a pure optimization. The fetch
     helpers used to read values back THROUGH the cache after putting them;
@@ -92,9 +97,12 @@ def test_eviction_pressure_never_changes_results(
     pressure: 20/367013 rankings differed between two warm readers).
     Pathologically tiny caches force an eviction on nearly every fetch;
     results must still match the oracle on every query, twice (the second
-    pass runs against a fully churned cache)."""
+    pass runs against a fully churned cache). Run with today's routes, with
+    every disjunctive query through WAND, and with no row-group LRU, so
+    the lead and WAND leaf reads are covered under the same churn."""
     r = BlockIndexReader(
-        index_dir, result_cache=0, posting_cache=4, rg_cache=2
+        index_dir, **({"result_cache": 0, "posting_cache": 4, "rg_cache": 2}
+                      | reader_kw)
     )
     queries = list(fixture.queries["query"])
     for _pass in range(2):
@@ -366,7 +374,7 @@ def test_bucket_rgs_rejects_unsorted_row_group(tmp_path, broken):
 
 
 def test_bucket_rgs_decodes_each_group_once(index_dir, monkeypatch):
-    """With the rg LRU on, a term's superblock read, leaf-batch read and
+    """With the rg LRU on, a term's superblock read, ranged leaf read and
     whole-term read share one decoded copy of each row group: every group
     is read from disk once, whichever read touches it first."""
     r = BlockIndexReader(index_dir, rg_cache=128)
@@ -375,7 +383,7 @@ def test_bucket_rgs_decodes_each_group_once(index_dir, monkeypatch):
     calls = _count_row_group_reads(monkeypatch)
     for t in sorted(lex):
         sbm = r._fetch_superblocks([t])[t]
-        r._fetch_leaf_batch([(t, 0, int(sbm[0][0]), int(sbm[1][0]))])
+        assert r._leaf_rows({t: [(int(sbm[0][0]), int(sbm[1][0]))]})[t]
         r._fetch_arrays([t])
     assert calls and all(len(g) == 1 for _, g in calls)
     assert len(calls) == len(set(calls))
@@ -708,25 +716,27 @@ def test_search_full_falls_back_only_for_wand(
         assert routes["_search_taat_parallel"], routes
 
 
-def test_search_full_count_and_freqs_after_wand_bail_out(
-    index_dir, fixture, monkeypatch
-):
-    """WAND that bails out to TAAT (block bounds don't prune) returns the
-    TAAT pass's count and freqs."""
-    r = BlockIndexReader(index_dir, taat_threshold=0)
+def test_wand_runs_only_where_taat_is_compressed(index_dir, fixture, monkeypatch):
+    """Above taat_threshold, a disjunctive query whose flat accumulator is
+    affordable runs flat TAAT, never WAND (flat TAAT measured faster
+    wherever it fits, stopword disjunctions included); WAND runs only
+    where TAAT would be compressed."""
+    from websearchengine_spark.functions.tokenizer import clean_query
+
+    r = BlockIndexReader(index_dir, result_cache=0, taat_threshold=0)
     routes = _spy_routes(monkeypatch)
-    bailed = []
-    real = BlockIndexReader._search_wand_blocks
-
-    def watch(self, *a, **kw):
-        out = real(self, *a, **kw)
-        bailed.append(out is None)
-        return out
-
-    monkeypatch.setattr(BlockIndexReader, "_search_wand_blocks", watch)
-    queries = list(fixture.queries["query"]) + ["the", "the data value"]
-    _assert_full_matches_cross_check(r, queries)
-    assert any(bailed) and routes["_search_taat"], (bailed, routes)
+    n_flat = 0
+    for q in list(fixture.queries["query"]) + ["the", "the data value"]:
+        lex = r.lexicon_rows(clean_query(q))
+        if not lex:
+            continue
+        flat = r._flat_ok(sum(lex.values()))
+        before = dict(routes)
+        r.search(q, conjunctive=False)
+        ran = {n for n, c in routes.items() if c > before[n]}
+        assert ran == {"_search_taat" if flat else "_search_wand_blocks"}, (q, ran)
+        n_flat += flat
+    assert n_flat >= 2 and routes["_search_wand_blocks"], (n_flat, routes)
 
 
 def _with_ghost(index_dir: str, name: str, df: int) -> str:
@@ -1048,21 +1058,32 @@ def test_posting_cache_hit_computes_no_contributions(index_dir, fixture, kw, mon
 
 def test_lead_takes_cached_posting_lists_whole(index_dir, fixture, monkeypatch):
     """The lead route takes a term's whole posting list from the posting
-    cache when a TAAT fetch put it there: no _decode_covering call for a
-    cached term (lead or not), while the uncached terms still decode their
-    covering blocks, and the ranking, count and freqs equal a reader that
-    decodes every term."""
+    cache when a TAAT fetch put it there: the lead route decodes no block
+    of a cached term (lead or not), while the uncached terms still decode
+    their covering blocks, and the ranking, count and freqs equal a reader
+    that decodes every term."""
     from websearchengine_spark.functions.tokenizer import clean_query
 
     routes = _spy_routes(monkeypatch)
     decoded = []
-    real = BlockIndexReader._decode_covering
+    in_lead = []
+    real_lead = BlockIndexReader._search_lead
+    real_decode = BlockIndexReader._decode_posting_table
 
-    def spy(self, term, *a):
-        decoded.append((self, term))
-        return real(self, term, *a)
+    def lead(self, *a):
+        in_lead.append(self)
+        try:
+            return real_lead(self, *a)
+        finally:
+            in_lead.pop()
 
-    monkeypatch.setattr(BlockIndexReader, "_decode_covering", spy)
+    def spy(self, runs, *a):  # the lead route's decode call
+        if in_lead:
+            decoded.extend((self, t) for t in runs)
+        return real_decode(self, runs, *a)
+
+    monkeypatch.setattr(BlockIndexReader, "_search_lead", lead)
+    monkeypatch.setattr(BlockIndexReader, "_decode_posting_table", spy)
     cold = BlockIndexReader(index_dir)
     warm = BlockIndexReader(index_dir)
     queries = list(fixture.queries["query"]) + ["the data value", "data value"]
@@ -1112,7 +1133,8 @@ def test_search_full_16_threads_match_single_thread(index_dir, fixture):
 
     queries = list(fixture.queries["query"]) + ["the", "the data value"]
     kws = (dict(result_cache=8, posting_cache=8, rg_cache=2),
-           dict(result_cache=8, posting_cache=64, taat_threshold=0))
+           dict(result_cache=8, posting_cache=64, taat_threshold=0,
+                dense_docs_max=0))
 
     def strip(res):
         return {k: v for k, v in res.items() if k not in ("time", "cached")}
@@ -1242,9 +1264,9 @@ def test_wand_metadata_fetch_is_bounded_on_hot_term(spark, tmp_path_factory):
     lazily for superblocks that survive pruning. The tf ramp concentrates
     top scores in the highest-docID superblocks, so most superblocks' leaf
     blocks are never fetched at all."""
-    # superblock = 128·8 = 1024 postings; df = 16384 → 16 superblocks,
-    # ABOVE the reader's bounded whole-term prefetch (prefetch_sbs = 8), so
-    # this exercises the genuinely lazy path a 10^12-doc stopword term takes
+    # superblock = 128·8 = 1024 postings; df = 16384 → 16 superblocks, so
+    # this exercises the lazy per-superblock path a 10^12-doc stopword
+    # term takes
     n_docs, bs = 65536, 8
     tdf = _skewed_corpus(spark, n_docs=n_docs)
     out = str(tmp_path_factory.mktemp("sbfetch"))

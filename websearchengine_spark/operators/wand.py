@@ -9,15 +9,19 @@ upgraded from decode-everything-then-full-sort (main.cpp:584-630) to:
   sorted groups by bisection — no row filter (the analogue of the
   lexicon-offset fseek, main.cpp:120-173);
 - lazy per-block varbyte+delta decode with an LRU posting cache
-  (main.cpp:466 posting cache analogue). Every route decodes leaf blocks
-  through ONE site, ``BlockIndexReader._decode_blocks``, which also masks
-  tombstoned postings and computes each posting's BM25 contribution;
+  (main.cpp:466 posting cache analogue). Every route reads leaf block rows
+  through ONE read, ``BlockIndexReader._leaf_rows`` (whole term or doc
+  ranges, zero-copy slices of the row groups the row-group LRU holds
+  decoded: there is no second leaf cache), and decodes them through ONE
+  site, ``BlockIndexReader._decode_blocks``, which also masks tombstoned
+  postings and computes each posting's BM25 contribution;
 - lead-driven vectorized intersection for selective conjunctive queries
   (main.cpp:599-607's std::set_intersection): the rarest term's postings
-  are decoded once, every other term decodes only the leaf blocks whose
-  doc range covers a lead docID (superblock → leaf skip by searchsorted
-  over doc_hi) — or takes its whole posting list when that is cached —
-  and the lists are intersected before any doc is scored;
+  are decoded once, every other term reads only the superblocks covering
+  a lead docID and decodes only the leaf blocks whose doc range covers
+  one (superblock → leaf skip by searchsorted over doc_hi) — or takes its
+  whole posting list when that is cached — and the lists are intersected
+  before any doc is scored;
 - vectorized term-at-a-time scoring that **scores only what can rank**:
   each cached posting list carries its per-posting BM25 contributions
   (computed once per reader), conjunctions intersect first and sum only
@@ -26,9 +30,10 @@ upgraded from decode-everything-then-full-sort (main.cpp:584-630) to:
   O(Σ candidate postings), never O(n_docs) (a flat dense accumulator is
   used only while n_docs is driver-RAM-sized — the 10^12-doc scale path
   is the compressed one);
-- **block-at-a-time block-max WAND** for large disjunctions: candidate
-  blocks are selected from block-max metadata and scored as whole numpy
-  batches — no doc-at-a-time Python loop. Exact under the reference's
+- **block-at-a-time block-max WAND** for large disjunctions where TAAT
+  cannot use the flat accumulator: candidate blocks are selected from
+  block-max metadata and scored as whole numpy batches — no doc-at-a-time
+  Python loop. Exact under the reference's
   quirks (SURVEY.md §4.4):
   - **negative IDF** (no floor, main.cpp:446-450): the bound for a doc not
     known to contain a term is max(block_ub, 0) (absent ⇒ contributes 0);
@@ -58,7 +63,6 @@ import threading
 import time
 from bisect import bisect_left, bisect_right
 from collections import OrderedDict
-from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
@@ -156,10 +160,10 @@ class _BucketRGs:
     term keys) keyed (dir, file, group) — the analogue of the reference's
     mmap + OS page cache (hot row groups stay decoded, cold ones are
     re-read); bounded, so reader memory stays O(cache) at any corpus
-    size. A group is read with every column, so the superblock, leaf-batch
-    and whole-term reads of one group share one decoded copy (superblock
-    rows carry empty payloads, so superblock-only reads decode little
-    extra)."""
+    size. A group is read with every column, so the superblock, ranged-leaf
+    and whole-term reads of one group share one decoded copy, and the
+    reader keeps no second leaf cache (superblock rows carry empty
+    payloads, so superblock-only reads decode little extra)."""
 
     __slots__ = ("files", "parts", "stats", "keys", "rg_cache", "_dir")
 
@@ -389,46 +393,6 @@ class _LRU(OrderedDict):
             self.held = 0
 
 
-@dataclass
-class _Leaf:
-    """One superblock's leaf-block arrays (metadata + raw varbyte payloads),
-    sorted by doc_lo. The unit of lazy fetch: a query touches a superblock →
-    its ≤ SUPERBLOCK_FACTOR leaf blocks arrive in one pruned parquet read."""
-
-    los: np.ndarray       # int64 doc_lo per leaf block
-    his: np.ndarray       # int64 doc_hi
-    ns: np.ndarray        # int64 posting count
-    max_tfc: np.ndarray   # float64 BM25 tf-component block max
-    min_tfc: np.ndarray   # float64 block min (negative-IDF bound support)
-    ids_vb: list          # raw varbyte gap payloads (decoded lazily)
-    tfs_vb: list
-    dls_vb: list
-
-
-def _leaf_blocks(leaves: list[_Leaf]) -> tuple:
-    """The blocks of ``leaves`` as one doc-ordered set: (los, his, ns,
-    max_tfc, min_tfc) concatenated, then each block's leaf position and
-    index inside that leaf."""
-    sizes = [len(lf.los) for lf in leaves]
-    owner = np.repeat(np.arange(len(leaves)), sizes)
-    js = np.arange(len(owner)) - (np.cumsum(sizes) - sizes)[owner]
-    return (*(np.concatenate([getattr(lf, f) for lf in leaves])
-              for f in ("los", "his", "ns", "max_tfc", "min_tfc")), owner, js)
-
-
-def _leaf_payloads(blocks: list[tuple[_Leaf, int]]) -> tuple:
-    """(doc_los, ns, ids_vb, tfs_vb, dls_vb) of the given (leaf, block
-    index) pairs, payloads joined in list order: the arguments
-    :meth:`BlockIndexReader._decode_blocks` takes."""
-    return (
-        [lf.los[j] for lf, j in blocks],
-        [lf.ns[j] for lf, j in blocks],
-        b"".join([lf.ids_vb[j] for lf, j in blocks]),
-        b"".join([lf.tfs_vb[j] for lf, j in blocks]),
-        b"".join([lf.dls_vb[j] for lf, j in blocks]),
-    )
-
-
 def _cover(los: np.ndarray, his: np.ndarray, starts: np.ndarray) -> np.ndarray:
     """Index of the block (sorted, disjoint [los, his] ranges) holding each
     sorted interval start, -1 where none does."""
@@ -458,15 +422,13 @@ def _cover_bounds(blocks: list, starts: np.ndarray) -> tuple:
     return covers, ub, cost
 
 
-def _bound_batches(idx, ub, cost, heap, k, bail_over=None):
+def _bound_batches(idx, ub, cost, heap, k):
     """WAND's descending-bound batch step at either level: yields batches
     of the intervals ``idx`` in descending ``ub`` order, each up to a
     ``cost`` budget growing 4× per batch and, once the ``heap`` holds k,
     cut after the last bound reaching θ (at least one interval). θ is
     re-read from the heap the caller fills between batches; stops when
-    the next bound is strictly below θ. With ``bail_over``, yields None
-    and stops once the heap is full and more than ``bail_over`` intervals
-    still reach θ (block bounds do not prune)."""
+    the next bound is strictly below θ."""
     order = idx[np.argsort(-ub[idx], kind="stable")]
     ub_sorted = ub[order]
     cum = np.cumsum(cost[order])
@@ -476,11 +438,6 @@ def _bound_batches(idx, ub, cost, heap, k, bail_over=None):
         full = len(heap) == k
         theta = heap[0][0] if full else -math.inf
         if ub_sorted[pos] < theta:
-            return
-        if full and bail_over is not None and (
-            int(np.searchsorted(-ub_sorted, -theta, side="right")) - pos > bail_over
-        ):
-            yield None
             return
         tgt = (cum[pos - 1] if pos else 0.0) + budget
         end = min(max(int(np.searchsorted(cum, tgt, side="left")) + 1, pos + 1), n)
@@ -494,10 +451,6 @@ def _bound_batches(idx, ub, cost, heap, k, bail_over=None):
 
 _META = (("doc_lo", np.int64), ("doc_hi", np.int64), ("n", np.int64),
          ("max_tfc", np.float64), ("min_tfc", np.float64))
-_NO_LEAF_ROWS = pa.table(
-    {c: pa.array([], type=pa.int64()) for c, _ in _META}
-    | {c: pa.array([], type=pa.binary()) for c in ("ids_vb", "tfs_vb", "dls_vb")}
-)
 
 
 def _meta_arrays(tbl: pa.Table) -> tuple:
@@ -646,16 +599,9 @@ class BlockIndexReader:
         self._pool_lock = threading.Lock()
         self.last_parallel = False  # instrumentation for tests/bench
         # postings decoded+scored by the LAST block-max WAND evaluation;
-        # -1 = the last query did not complete on the WAND path (TAAT or
-        # lead routing, cache hit, or bail-out) — reset per search()
+        # -1 = the last query did not complete on the WAND path (TAAT
+        # or lead routing, cache hit) — reset per search()
         self.last_wand_scored = -1
-        # terms with at most this many superblocks are leaf-prefetched WHOLE
-        # in the first read that touches them (≤ 8·16384 ≈ 128k postings —
-        # a bounded, scale-safe eager read that collapses the lazy per-
-        # superblock round trips most queries would otherwise pay; a true
-        # stopword term at 10^10+ docs has thousands of superblocks and
-        # stays on the lazy path)
-        self.prefetch_sbs = 8
 
     # ---- index access -----------------------------------------------------
     def _pruned_read(
@@ -760,76 +706,48 @@ class BlockIndexReader:
 
         return self._cached("sbm", terms, fetch)
 
-    def _fetch_leaf_batch(
-        self, wants: list[tuple[str, int, int, int]]
-    ) -> dict[tuple[str, int], "_Leaf"]:
-        """Fetch the leaf blocks (metadata + raw payloads) of the given
-        (term, sb_index, sb_doc_lo, sb_doc_hi) superblocks in ONE pruned
-        parquet read, populating the ("leaf", term, sb_index) LRU slots.
-        Leaf rows belong to exactly one superblock (superblock ranges
-        partition each term's docID axis), so a doc_lo BETWEEN filter is an
-        exact membership test. Returns the leaves fetched THIS call as
-        direct references (callers needing a specific slot must not read it
-        back through the LRU — a later put in the same batch may already
-        have evicted it; see lexicon_rows)."""
-        fetched: dict[tuple[str, int], _Leaf] = {}
-        todo = [w for w in wants if ("leaf", w[0], w[1]) not in self._posting_cache]
-        if not todo:
-            return fetched
-        by_term: dict[str, list[tuple[int, int, int]]] = {}
-        for t, si, lo_, hi_ in todo:
-            by_term.setdefault(t, []).append((si, lo_, hi_))
-        # row groups are pruned by (kind, term, wanted doc ranges); rows of
-        # a wanted term OUTSIDE its wanted ranges can ride along from shared
-        # groups — the per-superblock searchsorted slicing below drops them
+    def _leaf_rows(self, ranges_by_term: dict) -> dict[str, pa.Table]:
+        """THE leaf read, for every route: term → its leaf block rows
+        (kind=0, doc_lo order) overlapping any of its sorted, disjoint doc
+        ranges [(lo, hi), ...], or every row of a term mapped to None, in
+        ONE pruned read. Row groups are pruned by (kind, term, ranges);
+        rows of a wanted term outside its ranges can ride along from shared
+        groups, so each term's run is cut to the overlapping blocks by
+        searchsorted on doc_hi/doc_lo (a term's blocks are doc-ordered and
+        disjoint). The rows are zero-copy slices of the row groups the rg
+        LRU holds decoded (see _BucketRGs) — the reader keeps no second
+        leaf cache; the rows returned count in ``leaf_rows_fetched``.
+        Terms without rows are absent."""
         runs = self._pruned_read(
-            self._block_rgs, self.paths.blocks, sorted(by_term),
+            self._block_rgs, self.paths.blocks, list(ranges_by_term),
             kind=0,
             ranges_by_term={
-                t: [(lo_, hi_) for _si, lo_, hi_ in ranges]
-                for t, ranges in by_term.items()
+                t: r for t, r in ranges_by_term.items() if r is not None
             },
         )
-        for t, ranges in by_term.items():
-            tbl = runs.get(t, _NO_LEAF_ROWS)
-            lo, hi, ns, mx, mn = _meta_arrays(tbl)
-            ids_vb, tfs_vb, dls_vb = (
-                tbl.column(c).to_pylist() for c in ("ids_vb", "tfs_vb", "dls_vb")
-            )
-            for si, sb_lo, sb_hi in ranges:
-                a = int(np.searchsorted(lo, sb_lo, side="left"))
-                b = int(np.searchsorted(lo, sb_hi, side="right"))
-                # the counter measures leaf rows MATERIALIZED into slots —
-                # rows of a wanted term that ride along from shared row
-                # groups are sliced away here and not counted (the row-
-                # group selection above is what bounds the IO itself)
-                self.leaf_rows_fetched += b - a
-                leaf = _Leaf(
-                    lo[a:b], hi[a:b], ns[a:b], mx[a:b], mn[a:b],
-                    ids_vb[a:b], tfs_vb[a:b], dls_vb[a:b],
+        for t, tbl in list(runs.items()):
+            ranges = ranges_by_term[t]
+            if ranges is not None:
+                lo, hi = np.asarray(ranges, dtype=np.int64).reshape(-1, 2).T
+                a = np.searchsorted(tbl.column("doc_hi").to_numpy(), lo)
+                b = np.searchsorted(
+                    tbl.column("doc_lo").to_numpy(), hi, side="right"
                 )
-                self._posting_cache.put(("leaf", t, si), leaf)
-                fetched[(t, si)] = leaf
-        return fetched
-
-    def _leaf_for(self, term: str, sb_idx: int) -> _Leaf:
-        """The leaf blocks of one (term, superblock) — LRU hit or a single
-        on-demand fetch (callers prefetch in batches; this is the miss
-        path). Loop, not a single try: under concurrent readers another
-        thread may have fetched the slot between our miss and our fetch
-        (its presence makes our fetch a no-op), then an eviction can take
-        it before our re-read — the next iteration simply fetches it
-        ourselves and returns the direct reference."""
-        while True:
-            leaf = self._posting_cache.get_(("leaf", term, sb_idx))
-            if leaf is not None:
-                return leaf
-            sbm = self._fetch_superblocks([term]).get(term)
-            got = self._fetch_leaf_batch(
-                [(term, sb_idx, int(sbm[0][sb_idx]), int(sbm[1][sb_idx]))]
-            ).get((term, sb_idx))
-            if got is not None:
-                return got
+                a, b = a[b > a], b[b > a]
+                if len(a) == 0:
+                    del runs[t]
+                    continue
+                # ranges are sorted, so a and b are too: coalesce runs of
+                # touching or overlapping slices into one
+                gap = a[1:] > b[:-1]
+                starts = a[np.concatenate(([True], gap))].tolist()
+                ends = b[np.concatenate((gap, [True]))].tolist()
+                parts = [tbl.slice(s, e - s) for s, e in zip(starts, ends)]
+                tbl = runs[t] = (
+                    parts[0] if len(parts) == 1 else pa.concat_tables(parts)
+                )
+            self.leaf_rows_fetched += tbl.num_rows
+        return runs
 
     def _fetch_arrays(self, terms: list[str]) -> dict[str, tuple]:
         """term → its whole posting list as (ids:int64, tfs:uint32,
@@ -841,24 +759,32 @@ class BlockIndexReader:
         objects, one segmented vb_decode per column."""
 
         def fetch(missing):
-            runs = self._pruned_read(
-                self._block_rgs, self.paths.blocks, missing, kind=0
+            return self._decode_posting_table(
+                self._leaf_rows(dict.fromkeys(missing)),
+                self.lexicon_rows(missing),
             )
-            self.leaf_rows_fetched += sum(t.num_rows for t in runs.values())
-            return self._decode_posting_table(runs, self.lexicon_rows(missing))
 
         return self._cached("arr", terms, fetch)
 
-    def _decode_blocks(self, df: int, los, ns, ids_vb, tfs_vb, dls_vb) -> tuple:
-        """THE serving decode site, for every route: leaf blocks of one
-        term with document frequency ``df`` (doc_lo, n and each column's
-        varbyte payloads joined in doc order) → (ids:int64, tfs:uint32,
-        contrib:f64), tombstoned postings masked out. One segmented
+    def _decode_blocks(self, df: int, rows: pa.Table) -> tuple:
+        """THE serving decode site, for every route: leaf block rows of one
+        term with document frequency ``df`` (columns doc_lo, n, ids_vb,
+        tfs_vb, dls_vb, in doc_lo order) → (ids:int64, tfs:uint32,
+        contrib:f64), tombstoned postings masked out. Columnar: each
+        payload column's data buffer is decoded whole, one segmented
         vb_decode per column (~10 µs fixed cost per call); codec.block_ids
         folds the block-head ``doc_lo - 1`` base back in; contrib goes
         through the shared expression tree (see _tf_component); tfs only
         feed freqs, so uint32 keeps the triple at the decoded size."""
-        ids = block_ids(vb_decode(ids_vb), ns, los)
+        ids_vb, tfs_vb, dls_vb = (
+            concat_binary_column(rows.column(c))
+            for c in ("ids_vb", "tfs_vb", "dls_vb")
+        )
+        ids = block_ids(
+            vb_decode(ids_vb),
+            rows.column("n").to_numpy(),
+            rows.column("doc_lo").to_numpy(),
+        )
         tfs = vb_decode(tfs_vb).astype(np.float64)
         dls = vb_decode(dls_vb).astype(np.float64)
         keep = self._del_mask(ids)
@@ -871,52 +797,26 @@ class BlockIndexReader:
         self, runs: dict[str, pa.Table], lex: dict[str, int]
     ) -> dict[str, tuple]:
         """term → (ids, tfs, contrib) (see _decode_blocks) from each term's
-        leaf block rows (columns doc_lo, n, ids_vb, tfs_vb, dls_vb, in
-        doc_lo order), with contributions from the (corrected) df in
-        ``lex``. Columnar: each payload column's own data buffer is decoded
-        whole. No caching — callers cache (or are one-shot range workers).
-        Terms with no (surviving) postings are absent from the result."""
+        leaf block rows, with contributions from the (corrected) df in
+        ``lex``. No caching — callers cache (or are one-shot). Terms with
+        no (surviving) postings are absent from the result."""
         out: dict[str, tuple] = {}
         for t, tbl in runs.items():
-            arr = self._decode_blocks(
-                int(lex[t]),
-                tbl.column("doc_lo").to_numpy(),
-                tbl.column("n").to_numpy(),
-                *(concat_binary_column(tbl.column(c))
-                  for c in ("ids_vb", "tfs_vb", "dls_vb")),
-            )
+            arr = self._decode_blocks(int(lex[t]), tbl)
             if len(arr[0]):
                 out[t] = arr
         return out
-
-    def _decode_covering(self, term: str, df: int, sis, docs) -> tuple:
-        """(ids, tfs, contrib) of ``term``'s (document frequency ``df``)
-        leaf blocks in superblocks ``sis`` (ascending), tombstoned postings
-        masked. With sorted ``docs``, only the blocks whose [doc_lo,
-        doc_hi] holds one of them are decoded (leaf skip: searchsorted over
-        doc_hi); None decodes every block. ``sis`` must be non-empty."""
-        leaves = [self._leaf_for(term, si) for si in sis]
-        los, his, _ns, _mx, _mn, owner, js = _leaf_blocks(leaves)
-        if docs is None:
-            bi = np.arange(len(los))
-        else:
-            bi = _cover(los, his, docs)
-            bi = np.unique(bi[bi >= 0])
-        return self._decode_blocks(df, *_leaf_payloads(
-            [(leaves[o], j) for o, j in zip(owner[bi].tolist(), js[bi].tolist())]
-        ))
 
     def _search_lead(self, present, lex, k) -> list[tuple[int, int, float]]:
         """Selective conjunctive scorer driven by the LEAD (rarest) term.
         The lead's postings are decoded once (bounded by min_df — the
         router only picks this path when that is small) and are the only
-        candidates. Every other term fetches just the superblocks covering
-        a lead docID, all terms in ONE batched read (a term with at most
-        ``prefetch_sbs`` superblocks is fetched whole), and decodes just the
-        leaf blocks covering one — a dense term's other superblocks are
-        never read, metadata or payload. A term whose whole posting list is
-        in the posting cache (a TAAT fetch put it there) takes that triple
-        instead and fetches and decodes nothing. Scoring is _scored's
+        candidates. Every other term reads just the superblocks covering a
+        lead docID, all terms in ONE leaf read, and decodes just the leaf
+        blocks covering one — a dense term's other superblocks are never
+        read, metadata or payload. A term whose whole posting list is in
+        the posting cache (a TAAT fetch put it there) takes that triple
+        instead and reads and decodes nothing. Scoring is _scored's
         intersection (per-doc sums from 0.0 in sorted-term = oracle order)
         and the shared top-k comparator, so results are rank- and
         score-identical to TAAT. Every doc in the intersection is a lead
@@ -933,31 +833,34 @@ class BlockIndexReader:
             return _Hits(count=0, freqs={})
         lead = min(present, key=lambda t: int(lex[t]))
         if lead not in arrays:
-            l_los, l_his = sbms[lead][0], sbms[lead][1]
-            self._fetch_leaf_batch(
-                [(lead, i, int(l_los[i]), int(l_his[i])) for i in range(len(l_los))]
+            arrays.update(
+                self._decode_posting_table(self._leaf_rows({lead: None}), lex)
             )
-            arrays[lead] = self._decode_covering(
-                lead, int(lex[lead]), range(len(l_los)), None
-            )
+            if lead not in arrays:  # every lead posting is tombstoned
+                return _Hits(count=0, freqs={})
         lead_docs = arrays[lead][0]
-        if len(lead_docs) == 0:
-            return _Hits(count=0, freqs={})
-        covers: dict[str, list[int]] = {}
-        wants = []
+        covers: dict[str, list[tuple[int, int]]] = {}
         for t in present:
             if t in arrays:
                 continue
             los, his = sbms[t][0], sbms[t][1]
             cover = np.unique(np.searchsorted(his, lead_docs, side="left"))
-            covers[t] = cover[cover < len(his)].tolist()
-            if not covers[t]:  # every lead doc lies past this term's list
+            cover = cover[cover < len(his)]
+            if len(cover) == 0:  # every lead doc lies past this term's list
                 return _Hits(count=0, freqs={})
-            grab = range(len(his)) if len(his) <= self.prefetch_sbs else covers[t]
-            wants.extend((t, si, int(los[si]), int(his[si])) for si in grab)
-        self._fetch_leaf_batch(wants)
-        for t, sis in covers.items():
-            arrays[t] = self._decode_covering(t, int(lex[t]), sis, lead_docs)
+            covers[t] = list(zip(los[cover].tolist(), his[cover].tolist()))
+        runs = {}
+        for t, tbl in self._leaf_rows(covers).items():
+            bi = _cover(
+                tbl.column("doc_lo").to_numpy(),
+                tbl.column("doc_hi").to_numpy(),
+                lead_docs,
+            )
+            runs[t] = tbl.take(np.unique(bi[bi >= 0]))
+        decoded = self._decode_posting_table(runs, lex)
+        if len(decoded) < len(covers):  # a term holds no lead doc
+            return _Hits(count=0, freqs={})
+        arrays.update(decoded)
         return self._scored(arrays, k, True, False)
 
     def _idf(self, df: int) -> float:
@@ -998,33 +901,35 @@ class BlockIndexReader:
         #   decodes the lead's postings plus only the other terms' leaf
         #   blocks covering a lead docID (≤ min_df blocks per term);
         # - TAAT while total postings are machine-reasonable (~25 ns/posting
-        #   vectorized; memory O(candidates) via the compressed accumulator);
-        # - block-at-a-time WAND above that (skips whole blocks without
-        #   decode; bails back to TAAT when block bounds cannot prune).
+        #   vectorized; memory O(candidates) via the compressed accumulator),
+        #   and always while the flat accumulator is affordable: flat TAAT
+        #   beat block-max WAND in every configuration measured, stopword
+        #   disjunctions included (ROADMAP direction 3);
+        # - block-at-a-time WAND above that, where TAAT would be compressed
+        #   (skips whole blocks without decode).
         total_df = sum(lex[t] for t in present)
         min_df = min(lex[t] for t in present)
         # 5 µs per candidate·term is the calibration of the doc-at-a-time
         # cursor loop that once served this route; it is kept (not retuned
         # for the vectorized scorer) so the lead-vs-TAAT split is unchanged
         lead_cost = min_df * len(present) * 5e-6
+        flat = self._flat_ok(total_df)
         taat_cost = total_df * 2.5e-8 + (
-            self.n_docs * 1e-8 if self._flat_ok(total_df) else total_df * 6e-8
+            self.n_docs * 1e-8 if flat else total_df * 6e-8
         )
         if conjunctive:
             # lead iff the rarest list is small; a dense conjunction (min_df
             # in the millions) MUST go TAAT — the cursor loop measured
             # 45-55 s/query there on a 5M-doc dense corpus
             path = "lead" if lead_cost < taat_cost else "taat"
-        elif total_df <= self.taat_threshold:
-            path = "taat"
-        else:
+        elif total_df > self.taat_threshold and not flat:
             path = "wand"
+        else:
+            path = "taat"
         if path == "taat":
             out = self._taat_route(present, lex, k, conjunctive, total_df)
         elif path == "wand":
             out = self._search_wand_blocks(present, lex, k)
-            if out is None:  # block bounds don't prune → vectorized TAAT
-                out = self._taat_route(present, lex, k, False, total_df)
         else:
             out = self._search_lead(present, lex, k)
         self._result_cache.put(cache_key, out)
@@ -1268,22 +1173,7 @@ class BlockIndexReader:
         where one has no postings in its range matches nothing."""
         lex = self.lexicon_rows(terms)
         present = [t for t in terms if t in lex]
-        runs = self._pruned_read(
-            self._block_rgs, self.paths.blocks, present,
-            kind=0,
-            ranges_by_term={t: [(doc_lo, doc_hi - 1)] for t in present},
-        )
-        for t, tbl in list(runs.items()):
-            # a term's blocks are doc-ordered and disjoint, so the blocks
-            # overlapping [doc_lo, doc_hi) are one contiguous slice
-            a = int(np.searchsorted(tbl.column("doc_hi").to_numpy(), doc_lo))
-            b = int(np.searchsorted(
-                tbl.column("doc_lo").to_numpy(), doc_hi - 1, side="right"
-            ))
-            if b > a:
-                runs[t] = tbl.slice(a, b - a)
-            else:
-                del runs[t]
+        runs = self._leaf_rows({t: [(doc_lo, doc_hi - 1)] for t in present})
         arrays = {}
         for t, arr in self._decode_posting_table(runs, lex).items():
             a, b = np.searchsorted(arr[0], [doc_lo, doc_hi]).tolist()
@@ -1308,16 +1198,17 @@ class BlockIndexReader:
            because membership is unknown: an absent doc contributes exactly
            0 — which also keeps negative-IDF bounds valid, SURVEY.md §4.4).
         2. Process intervals in DESCENDING bound order in geometrically
-           growing batches. A batch fetches the leaf blocks (metadata +
+           growing batches. A batch reads the leaf block rows (metadata +
            payload) of exactly the superblocks covering its intervals, in
-           ONE range-pruned parquet read (LRU-shared across queries).
+           ONE leaf read (_leaf_rows: slices of the row groups the rg LRU
+           shares across queries).
         3. REFINE within the batch: re-cut the selected intervals at leaf-
            block boundaries and re-bound with leaf maxima; leaf intervals
            whose Σ_t max(leaf_ub, 0) < θ are dropped — exact, because every
            term's covering superblock (hence all its leaf metadata over the
            interval) is in hand, and absent terms contribute 0.
-        4. Decode only leaf blocks covering surviving leaf intervals (once,
-           cached for the call), gather member postings, compress
+        4. Decode only leaf blocks covering surviving leaf intervals (once
+           per call, keyed by block doc_lo), gather member postings, compress
            candidates, scatter-add per term in sorted-term order (= the
            oracle's float summation order), push survivors into the bounded
            heap.
@@ -1327,10 +1218,9 @@ class BlockIndexReader:
            (score, -doc_id) heap yields the exact reference ordering
            (main.cpp:626-630) regardless of push order.
 
-        Returns None to signal "bounds don't prune" (dense query with
-        near-uniform block maxima): the caller falls back to the TAAT
-        scorer, whose flat/compressed accumulator is strictly faster when
-        ~everything must be scored anyway.
+        search() routes here only where TAAT cannot use the flat
+        accumulator: where it can, flat TAAT measured faster even when
+        block bounds prune.
         """
         sbms = self._fetch_superblocks(present)
         metas = []  # (term, df, idf, los, his, ubs, ns) in sorted-term order
@@ -1358,50 +1248,33 @@ class BlockIndexReader:
         covers, total_ub, est_cost = _cover_bounds([m[3:] for m in metas], starts)
         heap: list[tuple[float, int]] = []
         in_batch = np.zeros(n_int, dtype=bool)
-        # per term, this call's decoded blocks: (sb, leaf) → (ids, contrib)
+        # per term, this call's decoded blocks: doc_lo → (ids, contrib)
         decoded: list[dict] = [dict() for _ in metas]
         scored_postings = 0  # instrumentation: how much pruning bought
-        # pruning-effectiveness check: if most intervals survive θ and a
-        # flat accumulator is affordable, TAAT wins — bail (wasted work so
-        # far is bounded by the geometric budget)
-        bail_over = 0.5 * n_int if self.n_docs <= self.dense_docs_max else None
-        for sel in _bound_batches(
-            np.arange(n_int), total_ub, est_cost, heap, k, bail_over
-        ):
-            if sel is None:
-                return None
+        for sel in _bound_batches(np.arange(n_int), total_ub, est_cost, heap, k):
             in_batch[:] = False
             in_batch[sel] = True
-            # ---- leaf fetch: exactly the superblocks covering the batch
-            needs = []
-            wants = []
+            # ---- leaf read: exactly the superblocks covering the batch
+            wants = {}
             for (t, _df, _idf, los, his, _ubs, _ns), cover in zip(metas, covers):
                 civ = cover[sel]
                 need = np.unique(civ[civ >= 0])
-                needs.append(need)
-                grab = (
-                    range(len(los))
-                    if len(los) <= self.prefetch_sbs
-                    else need.tolist()
-                )
-                for si in grab:
-                    if ("leaf", t, si) not in self._posting_cache:
-                        wants.append((t, si, int(los[si]), int(his[si])))
-            self._fetch_leaf_batch(wants)
+                if need.size:
+                    wants[t] = list(zip(los[need].tolist(), his[need].tolist()))
+            rows = self._leaf_rows(wants)
             # ---- leaf-level refinement inside the selected intervals
             # interval i = [bounds[i], bounds[i+1]) — include both edges so
             # no leaf interval straddles a selected-interval boundary
             lb = [bounds[sel], bounds[sel + 1]]
-            leafs = []  # per term: (los, his, ubs, ns, sb_of, j_of) of its leaves
-            for (t, _df, idf, *_m), need in zip(metas, needs):
-                if need.size == 0:
+            leafs = []  # per term: (los, his, ubs, ns, rows) of its blocks
+            for t, _df, idf, *_m in metas:
+                tbl = rows.get(t)
+                if tbl is None:
                     leafs.append(None)
                     continue
-                llos, lhis, lns, mx, mn, owner, j_of = _leaf_blocks(
-                    [self._leaf_for(t, int(si)) for si in need.tolist()]
-                )
+                llos, lhis, lns, mx, mn = _meta_arrays(tbl)
                 lubs = np.maximum(idf * mx * self._bf_hi, idf * mn * self._bf_lo)
-                leafs.append((llos, lhis, lubs, lns, need[owner], j_of))
+                leafs.append((llos, lhis, lubs, lns, tbl))
                 lb.append(llos)
                 lb.append(lhis + 1)
             lbounds = np.unique(np.concatenate(lb))
@@ -1426,27 +1299,22 @@ class BlockIndexReader:
                 ):
                     if leaf is None:
                         continue
-                    sb_of, j_of = leaf[4], leaf[5]
+                    llos, tbl = leaf[0], leaf[4]
                     cb = lcover[lsel]
                     needb = np.unique(cb[cb >= 0])
                     if needb.size == 0:
                         continue
-                    keys = [
-                        (int(sb_of[ci]), int(j_of[ci])) for ci in needb.tolist()
-                    ]
-                    miss = [ky for ky in keys if ky not in dec]
-                    if miss:
+                    keys = llos[needb].tolist()
+                    miss = needb[[ky not in dec for ky in keys]]
+                    if miss.size:
                         # one decode for all missing blocks; they are doc-
                         # ordered and disjoint, so each block's surviving
                         # postings start at the first id >= its doc_lo
-                        mb = [(self._leaf_for(t, sb), j) for sb, j in miss]
-                        ids_m, _tfs, co_m = self._decode_blocks(
-                            df, *_leaf_payloads(mb)
-                        )
-                        cut = np.searchsorted(
-                            ids_m, [lf.los[j] for lf, j in mb]
-                        ).tolist()
-                        for ky, c0, c1 in zip(miss, cut, cut[1:] + [len(ids_m)]):
+                        ids_m, _tfs, co_m = self._decode_blocks(df, tbl.take(miss))
+                        cut = np.searchsorted(ids_m, llos[miss]).tolist()
+                        for ky, c0, c1 in zip(
+                            llos[miss].tolist(), cut, cut[1:] + [len(ids_m)]
+                        ):
                             dec[ky] = (ids_m[c0:c1], co_m[c0:c1])
                     ids = np.concatenate([dec[ky][0] for ky in keys])
                     co = np.concatenate([dec[ky][1] for ky in keys])
