@@ -1199,9 +1199,9 @@ class BlockIndexReader:
            0 — which also keeps negative-IDF bounds valid, SURVEY.md §4.4).
         2. Process intervals in DESCENDING bound order in geometrically
            growing batches. A batch reads the leaf block rows (metadata +
-           payload) of exactly the superblocks covering its intervals, in
-           ONE leaf read (_leaf_rows: slices of the row groups the rg LRU
-           shares across queries).
+           payload) of exactly the superblocks covering its intervals that
+           the call has not read yet, in ONE leaf read (_leaf_rows: slices
+           of the row groups the rg LRU shares across queries).
         3. REFINE within the batch: re-cut the selected intervals at leaf-
            block boundaries and re-bound with leaf maxima; leaf intervals
            whose Σ_t max(leaf_ub, 0) < θ are dropped — exact, because every
@@ -1248,30 +1248,46 @@ class BlockIndexReader:
         covers, total_ub, est_cost = _cover_bounds([m[3:] for m in metas], starts)
         heap: list[tuple[float, int]] = []
         in_batch = np.zeros(n_int, dtype=bool)
-        # per term, this call's decoded blocks: doc_lo → (ids, contrib)
+        # per term, this call's leaf rows: superblock index → its blocks,
+        # and decoded blocks: doc_lo → (ids, contrib)
+        held: list[dict] = [dict() for _ in metas]
         decoded: list[dict] = [dict() for _ in metas]
         scored_postings = 0  # instrumentation: how much pruning bought
         for sel in _bound_batches(np.arange(n_int), total_ub, est_cost, heap, k):
             in_batch[:] = False
             in_batch[sel] = True
-            # ---- leaf read: exactly the superblocks covering the batch
-            wants = {}
-            for (t, _df, _idf, los, his, _ubs, _ns), cover in zip(metas, covers):
+            # ---- leaf read: the superblocks covering the batch, each once
+            # per call (one superblock covers intervals of several batches)
+            needs, wants = [], {}
+            for (t, _df, _idf, los, his, _ubs, _ns), cover, got in zip(
+                metas, covers, held
+            ):
                 civ = cover[sel]
-                need = np.unique(civ[civ >= 0])
-                if need.size:
-                    wants[t] = list(zip(los[need].tolist(), his[need].tolist()))
+                need = np.unique(civ[civ >= 0]).tolist()
+                needs.append(need)
+                unread = [j for j in need if j not in got]
+                if unread:
+                    wants[t] = [(los[j], his[j]) for j in unread]
             rows = self._leaf_rows(wants)
             # ---- leaf-level refinement inside the selected intervals
             # interval i = [bounds[i], bounds[i+1]) — include both edges so
             # no leaf interval straddles a selected-interval boundary
             lb = [bounds[sel], bounds[sel + 1]]
             leafs = []  # per term: (los, his, ubs, ns, rows) of its blocks
-            for t, _df, idf, *_m in metas:
-                tbl = rows.get(t)
-                if tbl is None:
+            for (t, _df, idf, _los, his, *_m), need, got in zip(metas, needs, held):
+                new = rows.get(t)
+                if new is not None:
+                    # a leaf block lies in one superblock: split the new
+                    # rows where their superblock changes
+                    sb = np.searchsorted(his, new.column("doc_lo").to_numpy())
+                    cut = (np.flatnonzero(np.diff(sb)) + 1).tolist()
+                    for a, b in zip([0, *cut], [*cut, new.num_rows]):
+                        got[int(sb[a])] = new.slice(a, b - a)
+                parts = [got[j] for j in need if j in got]
+                if not parts:
                     leafs.append(None)
                     continue
+                tbl = parts[0] if len(parts) == 1 else pa.concat_tables(parts)
                 llos, lhis, lns, mx, mn = _meta_arrays(tbl)
                 lubs = np.maximum(idf * mx * self._bf_hi, idf * mn * self._bf_lo)
                 leafs.append((llos, lhis, lubs, lns, tbl))
