@@ -97,7 +97,7 @@ def test_eviction_pressure_never_changes_results(
     pressure: 20/367013 rankings differed between two warm readers).
     Pathologically tiny caches force an eviction on nearly every fetch;
     results must still match the oracle on every query, twice (the second
-    pass runs against a fully churned cache). Run with today's routes, with
+    pass runs against a fully churned cache). Run with the default routes, with
     every disjunctive query through WAND, and with no row-group LRU, so
     the lead and WAND leaf reads are covered under the same churn."""
     r = BlockIndexReader(
